@@ -1,19 +1,33 @@
 package graft
 
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS
+import org.apache.parquet.hadoop.Footer
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
+import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType, TimestampType}
+import scala.util.control.NonFatal
 
 /** Catalog over the driver-generated parquet tables in an sf dir.
   *
   * Mirrors the reference's source-registry role
   * (reference: src/o2agol/pipeline/source.py:383-395 — parquet URL
   * construction per theme/type): here every table is a parquet
-  * path under one scale-factor directory; reads are plain
-  * `spark.read.parquet` so Catalyst owns pushdown and pruning.
+  * path under one scale-factor directory, read through
+  * [[Tables.parquet]] so Catalyst owns pushdown and pruning.
+  *
+  * Schemas come from footers on the driver: a plain
+  * `spark.read.parquet` runs one Spark job per read just to infer
+  * the schema, which for the small tables of an export call costs
+  * more than reading them. [[Tables.parquet]] reads the footer of
+  * the table's first data file itself and hands Spark the result.
+  * Nothing is cached, so a rewritten table is never read with a
+  * stale schema.
   */
 final case class Tables(spark: SparkSession, dir: String) {
-  def table(name: String): DataFrame = spark.read.parquet(s"$dir/$name.parquet")
+  def table(name: String): DataFrame = Tables.parquet(spark, s"$dir/$name.parquet")
 
   def region: DataFrame     = table("region")
   def nation: DataFrame     = table("nation")
@@ -28,6 +42,55 @@ final case class Tables(spark: SparkSession, dir: String) {
 }
 
 object Tables {
+
+  /** `spark.read.parquet(path)` without the schema-inference job.
+    *
+    * With `mergeSchema` off, Spark infers a parquet schema from one
+    * footer: the first data file by path, unless a `_metadata` or
+    * `_common_metadata` summary file is present. This reads that
+    * same footer on the driver, converts it with Spark's own
+    * converter, and returns `spark.read.schema(s).parquet(path)`:
+    * the same schema and the same plan, minus the job. Every other
+    * case is left to a plain `spark.read.parquet(path)`, so Spark's
+    * own errors and partition discovery stay unchanged: a missing
+    * path, a glob, a directory with subdirectories (hive partitions),
+    * summary files or no data files, `mergeSchema` on, or a footer
+    * that cannot be read.
+    */
+  def parquet(spark: SparkSession, path: String): DataFrame =
+    footerSchema(spark, path) match {
+      case Some(schema) => spark.read.schema(schema).parquet(path)
+      case None         => spark.read.parquet(path)
+    }
+
+  /** The schema Spark would infer for `path`, when it comes from a
+    * single footer (see [[parquet]]); None when Spark must decide.
+    */
+  private[graft] def footerSchema(spark: SparkSession, path: String): Option[StructType] = {
+    val conf = spark.sessionState.conf
+    if (conf.isParquetSchemaMergingEnabled || path.exists("{}[]*?\\".contains(_))) None
+    else try {
+      val hadoopConf = spark.sessionState.newHadoopConf()
+      val root = new Path(path)
+      // A file lists as itself; a missing path throws.
+      val files = root.getFileSystem(hadoopConf).listStatus(root)
+        .filterNot(f => hidden(f.getPath.getName))
+      if (files.exists(f => f.isDirectory || summaryFile(f.getPath.getName))) None
+      else files.sortBy(_.getPath.toString).headOption.map { f =>
+        val meta = ParquetFooterReader.readFooter(HadoopInputFile.fromStatus(f, hadoopConf), SKIP_ROW_GROUPS)
+        ParquetFileFormat.readSchemaFromFooter(
+          new Footer(f.getPath, meta), new ParquetToSparkSchemaConverter(conf))
+      }
+    } catch { case NonFatal(_) => None }
+  }
+
+  // Names Spark's file listing skips (HadoopFSUtils.shouldFilterOutPathName);
+  // it keeps the parquet summary files, which send a read to the fallback.
+  private def hidden(name: String): Boolean =
+    ((name.startsWith("_") && !name.contains("=")) || name.startsWith(".") ||
+      name.endsWith("._COPYING_")) && !summaryFile(name)
+  private def summaryFile(name: String): Boolean =
+    name.startsWith("_metadata") || name.startsWith("_common_metadata")
 
   /** Normalize the `ts` column to session-zone TIMESTAMP whatever
     * physical type the driver's generator wrote it as. The testdata

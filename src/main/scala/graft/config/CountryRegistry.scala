@@ -52,19 +52,20 @@ object CountryRegistry {
   /** Load a registry from a JSON array file:
     * `[{"name":…,"iso2":…,"iso3":…,"bounds":[minx,miny,maxx,maxy],"region":…}]`
     * (the reference keeps the same data in data/countries.json).
+    * Parsed on the driver with no Spark job; malformed JSON, a top
+    * level that is not an array or object, and an entry without
+    * `name`, `iso2`, `iso3` or four numeric `bounds` are a
+    * [[graft.ConfigError]] naming the path and entry.
     */
-  def fromJson(spark: org.apache.spark.sql.SparkSession, path: String): CountryRegistry = {
-    val rows = spark.read.option("multiLine", "true").json(path)
-      .selectExpr("name", "iso2", "iso3",
-        "CAST(bounds[0] AS DOUBLE) AS minx", "CAST(bounds[1] AS DOUBLE) AS miny",
-        "CAST(bounds[2] AS DOUBLE) AS maxx", "CAST(bounds[3] AS DOUBLE) AS maxy",
-        "region")
-      .collect() // registry is dimension-sized (hundreds of rows) by definition
-      .map(r => Country(r.getString(0), r.getString(1), r.getString(2),
-        (r.getDouble(3), r.getDouble(4), r.getDouble(5), r.getDouble(6)),
-        Option(r.getString(7))))
-    new CountryRegistry(rows.toIndexedSeq)
-  }
+  def fromJson(spark: org.apache.spark.sql.SparkSession, path: String): CountryRegistry =
+    new CountryRegistry(JsonConfig.entries(spark, path).map { e =>
+      val bounds = Option(e.node.get("bounds")).filter(b => b.isArray && b.size == 4)
+        .map(b => Seq.tabulate(4)(i => b.get(i).asText.toDoubleOption))
+        .collect { case Seq(Some(a), Some(b), Some(c), Some(d)) => (a, b, c, d) }
+      Country(e.required("name"), e.required("iso2"), e.required("iso3"),
+        bounds.getOrElse(throw e.error("'bounds' must be four numbers [minx, miny, maxx, maxy]")),
+        e.text("region"))
+    })
 
   /** Bbox sanity check (reference: utils.py:376-401 `validate_bbox`). */
   def validateBBox(b: (Double, Double, Double, Double)): Boolean = {

@@ -27,31 +27,31 @@ final case class QueryConfig(
 
 object QueryConfig {
 
-  /** Load a query catalog from a JSON array file (the engine-side
-    * equivalent of the reference's queries.yml; YAML carries no
-    * semantics the JSON form loses).
+  /** Load a query catalog from a JSON file holding an array of
+    * entries or a single entry (the engine-side equivalent of the
+    * reference's queries.yml; YAML carries no semantics the JSON form
+    * loses). Parsed on the driver with no Spark job. Values keep
+    * their own JSON text (`2` → "2", `true` → "true"); booleans may
+    * be written as `true` or `"true"`. Malformed JSON, a top level
+    * that is not an array or object, and an entry without `name` or
+    * `theme` are a [[graft.ConfigError]] naming the path and entry.
     */
-  def catalogFromJson(spark: SparkSession, path: String): Map[String, QueryConfig] = {
-    val df = spark.read.option("multiLine", "true").json(path)
-    val cols = df.columns.toSet
-    def opt(r: org.apache.spark.sql.Row, c: String): Option[String] =
-      if (cols.contains(c)) Option(r.getAs[Any](c)).map(_.toString) else None
-    df.collect().map { r =>
+  def catalogFromJson(spark: SparkSession, path: String): Map[String, QueryConfig] =
+    JsonConfig.entries(spark, path).map { e =>
       val qc = QueryConfig(
-        name = r.getAs[String]("name"),
-        theme = r.getAs[String]("theme"),
-        typeName = opt(r, "type").getOrElse("feature"),
-        filter = opt(r, "filter"),
-        buildingFilter = opt(r, "building_filter"),
-        buildingTheme = opt(r, "building_theme"),
-        isMultilayer = opt(r, "is_multilayer").exists(_.toBoolean),
-        geometrySplit = opt(r, "geometry_split").exists(_.toBoolean),
-        sectorTitle = opt(r, "sector_title"),
-        sectorTag = opt(r, "sector_tag"),
-        upsertKey = opt(r, "upsert_key").getOrElse("id"))
+        name = e.required("name"),
+        theme = e.required("theme"),
+        typeName = e.text("type").getOrElse("feature"),
+        filter = e.text("filter"),
+        buildingFilter = e.text("building_filter"),
+        buildingTheme = e.text("building_theme"),
+        isMultilayer = e.bool("is_multilayer"),
+        geometrySplit = e.bool("geometry_split"),
+        sectorTitle = e.text("sector_title"),
+        sectorTag = e.text("sector_tag"),
+        upsertKey = e.text("upsert_key").getOrElse("id"))
       qc.name -> qc
     }.toMap
-  }
 
   /** Load a query catalog from the reference's own YAML layout
     * (reference: config_loader.py:206 `yaml.safe_load(queries.yml)`

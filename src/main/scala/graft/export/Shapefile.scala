@@ -1,6 +1,6 @@
 package graft.`export`
 
-import java.io.{BufferedOutputStream, FileOutputStream, RandomAccessFile}
+import java.io.{BufferedOutputStream, FileOutputStream, OutputStream, RandomAccessFile}
 import java.nio.{ByteBuffer, ByteOrder}
 
 import org.apache.spark.sql.DataFrame
@@ -165,11 +165,15 @@ object Shapefile {
     var xmin = Double.MaxValue; var ymin = Double.MaxValue
     var xmax = -Double.MaxValue; var ymax = -Double.MaxValue
 
-    val shp = new RandomAccessFile(s"$path.shp", "rw")
-    val shx = new RandomAccessFile(s"$path.shx", "rw")
-    val dbf = new RandomAccessFile(s"$path.dbf", "rw")
+    // Streamed through buffers (a feature is ~17 small writes); the
+    // three headers are back-patched once the streams are closed.
+    def out(ext: String): OutputStream =
+      new BufferedOutputStream(new FileOutputStream(s"$path.$ext"), 1 << 16)
+    val shp = out("shp")
+    val shx = out("shx")
+    val dbf = out("dbf")
+    var shpWords = 50L // header = 50 16-bit words
     try {
-      shp.setLength(0); shx.setLength(0); dbf.setLength(0)
       // Placeholder main headers (patched after streaming).
       shp.write(new Array[Byte](100))
       shx.write(new Array[Byte](100))
@@ -192,8 +196,6 @@ object Shapefile {
       }
       dh.put(0x0D.toByte)
       dbf.write(dh.array())
-
-      var shpWords = 50L // header = 50 16-bit words
 
       val it = df.toLocalIterator()
       while (it.hasNext) {
@@ -276,26 +278,27 @@ object Shapefile {
         }
       }
       dbf.write(0x1A)
-
-      if (rows == 0) { xmin = 0; ymin = 0; xmax = 0; ymax = 0; shapeType = 1 }
-
-      def mainHeader(lenWords: Long): Array[Byte] = {
-        val b = ByteBuffer.allocate(100)
-        b.order(ByteOrder.BIG_ENDIAN)
-        b.putInt(FileCode); b.position(24); b.putInt(lenWords.toInt)
-        b.order(ByteOrder.LITTLE_ENDIAN)
-        b.putInt(Version).putInt(shapeType)
-        b.putDouble(xmin).putDouble(ymin).putDouble(xmax).putDouble(ymax)
-        b.putDouble(0).putDouble(0).putDouble(0).putDouble(0) // Z/M ranges
-        b.array()
-      }
-      shp.seek(0); shp.write(mainHeader(shpWords))
-      shx.seek(0); shx.write(mainHeader(50L + 4L * rows))
-      dbf.seek(4)
-      val rc = ByteBuffer.allocate(4).order(ByteOrder.LITTLE_ENDIAN)
-      rc.putInt(rows.toInt)
-      dbf.write(rc.array())
     } finally { shp.close(); shx.close(); dbf.close() }
+
+    if (rows == 0) { xmin = 0; ymin = 0; xmax = 0; ymax = 0; shapeType = 1 }
+
+    def mainHeader(lenWords: Long): Array[Byte] = {
+      val b = ByteBuffer.allocate(100)
+      b.order(ByteOrder.BIG_ENDIAN)
+      b.putInt(FileCode); b.position(24); b.putInt(lenWords.toInt)
+      b.order(ByteOrder.LITTLE_ENDIAN)
+      b.putInt(Version).putInt(shapeType)
+      b.putDouble(xmin).putDouble(ymin).putDouble(xmax).putDouble(ymax)
+      b.putDouble(0).putDouble(0).putDouble(0).putDouble(0) // Z/M ranges
+      b.array()
+    }
+    def patch(ext: String, pos: Long, bytes: Array[Byte]): Unit = {
+      val f = new RandomAccessFile(s"$path.$ext", "rw")
+      try { f.seek(pos); f.write(bytes) } finally f.close()
+    }
+    patch("shp", 0, mainHeader(shpWords))
+    patch("shx", 0, mainHeader(50L + 4L * rows))
+    patch("dbf", 4, ByteBuffer.allocate(4).order(ByteOrder.LITTLE_ENDIAN).putInt(rows.toInt).array())
 
     val prj = new BufferedOutputStream(new FileOutputStream(s"$path.prj"))
     try prj.write(Wgs84Wkt.getBytes("US-ASCII")) finally prj.close()

@@ -226,4 +226,33 @@ class CliSpec extends SparkSpec {
     assert(graft.`export`.Compactor.dataFileCount(spark, s"$dir/out") == 1)
     assert(spark.read.parquet(s"$dir/out").count() == 2000)
   }
+
+  test("export runs only its data-pass jobs: no catalog or schema-inference job") {
+    val dir = tmp()
+    val catalog = writeCatalog(dir)
+    val group = "cli-job-budget"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          jobs.incrementAndGet()
+    }
+    def jobsOf(args: String*): Int = {
+      org.apache.spark.ListenerBusDrain(spark.sparkContext)
+      jobs.set(0)
+      spark.sparkContext.setJobGroup(group, group, interruptOnCancel = false)
+      try Cli.run(spark, args) finally spark.sparkContext.clearJobGroup()
+      org.apache.spark.ListenerBusDrain(spark.sparkContext)
+      jobs.get
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      assert(jobsOf("export", catalog, "supplier_sites", sfDir, s"$dir/s.gpkg",
+        "--geom=s_acctbal,s_nationkey") == 1)
+      assert(jobsOf("export", catalog, "supplier_sites", sfDir, s"$dir/s.shp",
+        "--geom=s_acctbal,s_nationkey") == 1)
+      assert(jobsOf("export", catalog, "education", sfDir, s"$dir/e.gpkg",
+        "--geom=c_acctbal,c_nationkey") == 2)
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
 }
