@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Time a single registered query: `runMain graft.BenchOne <name> [sfDir] [runs]`.
   * Same session shape as Bench; prints per-run seconds and the min.
@@ -9,16 +8,7 @@ object BenchOne {
     val name = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val runs = if (args.length > 2) args(2).toInt else 3
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.fromEnv("graft-bench-one")
     // Optional per-RUN stage metrics (r14): SPARK_GRAFT_STAGES_OUT=<file>
     // attaches the bench's StageMetricsListener with one group per run,
     // so isolated A/Bs can read jobs/tasks/shuffle instead of trusting

@@ -36,19 +36,6 @@ object Cli {
 
   val Version = "0.2.0"
 
-  /** Build (or reuse) the session; factored out so tests drive the
-    * verbs against their own session.
-    */
-  private def session(): SparkSession =
-    SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[4]"))
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-
   private def flags(args: Seq[String]): (Seq[String], Map[String, String]) = {
     val (f, pos) = args.partition(_.startsWith("--"))
     val kv = f.map { s =>
@@ -361,7 +348,7 @@ object Cli {
   }
 
   def main(args: Array[String]): Unit = {
-    val spark = session()
+    val spark = GraftSession.fromEnv("graft-cli")
     try run(spark, args.toIndexedSeq)
     finally spark.stop()
   }

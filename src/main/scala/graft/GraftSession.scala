@@ -30,8 +30,15 @@ object GraftSession {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
 
-  def local(): SparkSession = {
-    val s = builder().getOrCreate()
+  /** The session every main runs on: `local[SPARK_GRAFT_CPUS]` (default
+    * the core count) with as many shuffle partitions, unless
+    * `SPARK_GRAFT_MASTER` names a master. Log level WARN.
+    */
+  def fromEnv(appName: String): SparkSession = {
+    val cpus = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+      .getOrElse(Runtime.getRuntime.availableProcessors())
+    val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")
+    val s = builder(master, cpus, appName).getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
   }

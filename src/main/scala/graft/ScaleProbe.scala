@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 
 /** Diagnostic main for the §8 scale-knob measurements:
   *
@@ -24,16 +23,7 @@ object ScaleProbe {
     * full sweep is too slow for.
     */
   private def queryMain(names: String, sfDir: String, runs: Int): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.fromEnv("graft-scaleprobe")
     names.split(",").foreach { name =>
       val fn = SparkEntry.queries(name)
       val times = (1 to runs).map { i =>
@@ -54,16 +44,7 @@ object ScaleProbe {
     * §8 streaming fixed-cost table's "irreducible floor" row.
     */
   private def streamFloorMain(sfDir: String, runs: Int): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.fromEnv("graft-scaleprobe")
     val times = (1 to runs).map { i =>
       val t0 = System.nanoTime()
       graft.queries.StreamQueries.stNoopFloor(spark, sfDir).count()
@@ -102,16 +83,7 @@ object ScaleProbe {
     val runs =
       if (isSemantic) { if (args.length > 5) args(5).toInt else 2 }
       else { if (args.length > 4) args(4).toInt else 2 }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.fromEnv("graft-scaleprobe")
     val emb = Tables(spark, sfDir).embeddings
     def pairs() = args(0) match {
       case "semantic" =>

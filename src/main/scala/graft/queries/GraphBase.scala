@@ -23,13 +23,11 @@ import org.apache.spark.sql.functions._
   */
 object GraphBase {
 
-  private val edgeCache = new graft.util.Memo[(SparkSession, String), DataFrame]
-
   /** Weighted undirected-as-canonical (u < v) co-purchase pairs:
     * (u, v, w) with w = co-occurrence count ≥ 2, checkpointed.
     */
   def coPurchasePairs(spark: SparkSession, dir: String): DataFrame =
-    edgeCache.getOrElseUpdate((spark, dir), {
+    graft.util.SessionStage.value(spark, dir, "copurchase_edges") {
       val t = Tables(spark, dir)
       val li = t.lineitem.select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
       li.as("a")
@@ -38,9 +36,7 @@ object GraphBase {
         .agg(count(lit(1)).as("w"))
         .filter(col("w") >= 2)
         .localCheckpoint(true)
-    })
-
-  private val purchaseCache = new graft.util.Memo[(SparkSession, String), DataFrame]
+    }
 
   /** The D94 HITS bipartite edge set — distinct customer→part
     * purchase edges (u = o_custkey, p = l_partkey) from the
@@ -50,12 +46,12 @@ object GraphBase {
     * the HITS chain and must not be re-paid per run).
     */
   def purchaseEdges(spark: SparkSession, dir: String): DataFrame =
-    purchaseCache.getOrElseUpdate((spark, dir), {
+    graft.util.SessionStage.value(spark, dir, "purchase_edges") {
       val t = Tables(spark, dir)
       t.orders
         .join(t.lineitem, col("o_orderkey") === col("l_orderkey"))
         .select(col("o_custkey").as("u"), col("l_partkey").as("p"))
         .distinct()
         .localCheckpoint(true)
-    })
+    }
 }

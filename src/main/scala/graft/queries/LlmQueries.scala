@@ -106,15 +106,6 @@ object LlmQueries {
        |    AS BIGINT) AS simhash
        |FROM h""".stripMargin
 
-  /** Session-scoped materialization of the Jaccard candidate pairs:
-    * three registry queries (E4, E6, E7) consume the same candidate
-    * set, so it is computed once per (session, dir) and stored via
-    * localCheckpoint — the shared-materialized-view pattern a
-    * warehouse would use for a common subexpression. Result rows are
-    * tiny (near-dup pairs only).
-    */
-  private val interCache = new graft.util.Memo[(SparkSession, String), DataFrame]
-
   /** Session-cached UNthresholded shingle intersections (n=3,
     * doc-freq cap 100): one inverted-index build feeds Jaccard (E4
     * and its E6/E7 consumers) AND containment (E16) — the scorers
@@ -122,14 +113,19 @@ object LlmQueries {
     * width is maxDocFreq-bounded, so the checkpoint is pair-sized.
     */
   private[queries] def shingleInter(spark: SparkSession, dir: String): DataFrame =
-    interCache.getOrElseUpdate((spark, dir),
+    graft.util.SessionStage.value(spark, dir, "shingle_inter")(
       Dedup.shingleIntersections(Tables(spark, dir).documents, "text", "doc_id",
         n = 3, maxDocFreq = 100).localCheckpoint(true))
 
-  private val pairsCache = new graft.util.Memo[(SparkSession, String), DataFrame]
-
+  /** Session-scoped materialization of the Jaccard candidate pairs:
+    * three registry queries (E4, E6, E7) consume the same candidate
+    * set, so it is computed once per (session, dir) and stored via
+    * localCheckpoint — the shared-materialized-view pattern a
+    * warehouse would use for a common subexpression. Result rows are
+    * tiny (near-dup pairs only).
+    */
   private[queries] def ngramPairs(spark: SparkSession, dir: String): DataFrame =
-    pairsCache.getOrElseUpdate((spark, dir),
+    graft.util.SessionStage.value(spark, dir, "ngram_pairs")(
       Dedup.scoreJaccard(shingleInter(spark, dir), threshold = 0.5)
         .localCheckpoint(true))
 
@@ -138,10 +134,8 @@ object LlmQueries {
     * once per (session, dir) — same materialized-view semantics as
     * the pairs cache (labels are near-dup-member-sized, tiny).
     */
-  private val ccCache = new graft.util.Memo[(SparkSession, String), DataFrame]
-
   private[queries] def ccLabels(spark: SparkSession, dir: String): DataFrame =
-    ccCache.getOrElseUpdate((spark, dir),
+    graft.util.SessionStage.value(spark, dir, "cc_labels")(
       Dedup.connectedComponents(ngramPairs(spark, dir), "doc_a", "doc_b")
         .localCheckpoint(true))
 
@@ -829,22 +823,16 @@ object LlmQueries {
       |  FROM documents) x
       |WHERE rk <= ceil(n * 0.1)""".stripMargin
 
-  /** Session-scoped like [[ngramPairs]]/[[ccLabels]]; all these
-    * caches assume the sf dir is IMMUTABLE for the session's
-    * lifetime (true for the released-snapshot layout they model —
-    * a refreshed drop lands in a new release dir / session).
-    */
-  private val cleanCache = new graft.util.Memo[(SparkSession, String), DataFrame]
-
   /** M1: end-to-end corpus cleaning — the composed training-data
     * pipeline: score quality → language-ID → threshold filter →
     * exact-dedup survivors. One scan, one dedup shuffle, one
     * survivor semi-join; everything upstream is map-only. The
-    * survivor set (doc ids + two columns) is session-cached: the
-    * flagship M1 row and the M7 manifest both consume it.
+    * survivor set (doc ids + two columns) is session-cached like
+    * [[ngramPairs]]/[[ccLabels]]: the flagship M1 row and the M7
+    * manifest both consume it.
     */
   def pipeCleanCorpus(spark: SparkSession, dir: String): DataFrame =
-    cleanCache.getOrElseUpdate((spark, dir), {
+    graft.util.SessionStage.value(spark, dir, "clean_corpus") {
       val t = Tables(spark, dir)
       val scored = t.documents.select(
         col("doc_id"), col("text"),
@@ -859,7 +847,7 @@ object LlmQueries {
         .join(survivors, Seq("doc_id"), "left_semi")
         .select(col("doc_id"), col("lang_pred"), col("quality"))
         .localCheckpoint(true)
-    })
+    }
 
   val pipeCleanCorpusSql: String =
     s"""WITH q AS ($txQualitySql),

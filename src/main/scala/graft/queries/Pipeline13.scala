@@ -17,8 +17,8 @@ object Pipeline13 {
     * ≈ gzip ratios at snappy-class decode speed) into a scratch
     * dir, read it back, aggregate. The oracle aggregates the
     * ORIGINAL table, so the row is green only if the codec path is
-    * lossless end-to-end. Session-cached scratch (immutable per sf
-    * dir, reaped on JVM exit).
+    * lossless end-to-end. Staged once per (session, dir) in
+    * [[graft.util.SessionStage]].
     */
   def srcCodecRoundtrip(spark: SparkSession, dir: String): DataFrame = {
     val stage = codecStage(spark, dir)
@@ -28,19 +28,13 @@ object Pipeline13 {
         sum(expr("CAST(round(l_quantity * 100) AS BIGINT)")).as("qty_cents"))
   }
 
-  private val codecStageCache =
-    new graft.util.Memo[(SparkSession, String), java.nio.file.Path]
   private def codecStage(spark: SparkSession, dir: String): java.nio.file.Path =
-    codecStageCache.getOrElseUpdate((spark, dir), {
-      val stage = java.nio.file.Files.createTempDirectory("graft_codec_")
+    graft.util.SessionStage.dir(spark, dir, "codec") { stage =>
       Tables(spark, dir).lineitem
         .select(col("l_returnflag"), col("l_quantity"))
         .write.mode("overwrite").option("compression", "zstd")
         .parquet(stage.resolve("li").toString)
-      Runtime.getRuntime.addShutdownHook(
-        new Thread(() => graft.util.Fs.deleteRecursively(stage)))
-      stage.resolve("li")
-    })
+    }.resolve("li")
 
   val srcCodecRoundtripSql: String =
     """SELECT l_returnflag, count(*) AS n_rows,

@@ -11,9 +11,6 @@ import org.apache.spark.sql.functions._
   */
 object Pipeline14 {
 
-  private val lineageStage =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** A19: per-file lineage accounting — every row tagged with its
     * physical source file via `input_file_name()` and rolled up by
     * the partition key EXTRACTED FROM THE PATH (the provenance
@@ -24,16 +21,12 @@ object Pipeline14 {
     * row breaks the match.
     */
   def srcFileLineage(spark: SparkSession, dir: String): DataFrame = {
-    val root = lineageStage.computeIfAbsent(dir, d => {
-      val stage = java.nio.file.Files.createTempDirectory("graft_lineage_")
-      Tables(spark, d).events
+    val root = graft.util.SessionStage.dir(spark, dir, "lineage") { stage =>
+      Tables(spark, dir).events
         .select(col("event_id"), col("value"), col("event_type"))
         .write.partitionBy("event_type").mode("overwrite").parquet(stage.toString)
-      Runtime.getRuntime.addShutdownHook(
-        new Thread(() => graft.util.Fs.deleteRecursively(stage)))
-      stage.toString
-    })
-    spark.read.parquet(root)
+    }
+    spark.read.parquet(root.toString)
       .select(regexp_extract(input_file_name(), "event_type=([^/]+)/", 1)
         .as("event_type"))
       .groupBy(col("event_type"))

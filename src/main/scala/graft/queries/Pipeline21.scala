@@ -264,29 +264,22 @@ object Pipeline21 {
     * bounded per-type aggregate.
     */
   def srcMalformedJsonl(spark: SparkSession, dir: String): DataFrame = {
-    val stage = Pipeline21.synchronized {
-      malformedStageCache.getOrElseUpdate((spark, dir), {
-        val out = java.nio.file.Files
-          .createTempDirectory("graft_src_badjson").toString
-        Tables(spark, dir).events
-          .select(col("event_id"), col("event_type"), col("value"))
-          .select(
-            when(pmod(col("event_id"), lit(7)) === 0,
-              concat(lit("{\"event_id\":"), col("event_id"),
-                lit(",\"event_type\":\"truncated")))
-              .otherwise(to_json(struct(col("event_id"), col("event_type"),
-                col("value")))).as("value"))
-          .write.mode("overwrite").text(out)
-        Runtime.getRuntime.addShutdownHook(new Thread(() =>
-          graft.util.Fs.deleteRecursively(java.nio.file.Paths.get(out))))
-        out
-      })
+    val stage = graft.util.SessionStage.dir(spark, dir, "src_badjson") { out =>
+      Tables(spark, dir).events
+        .select(col("event_id"), col("event_type"), col("value"))
+        .select(
+          when(pmod(col("event_id"), lit(7)) === 0,
+            concat(lit("{\"event_id\":"), col("event_id"),
+              lit(",\"event_type\":\"truncated")))
+            .otherwise(to_json(struct(col("event_id"), col("event_type"),
+              col("value")))).as("value"))
+        .write.mode("overwrite").text(out.toString)
     }
     val read = spark.read
       .schema("event_id BIGINT, event_type STRING, value DOUBLE, _corrupt_record STRING")
       .option("mode", "PERMISSIVE")
       .option("columnNameOfCorruptRecord", "_corrupt_record")
-      .json(stage)
+      .json(stage.toString)
     read
       .select(
         when(col("_corrupt_record").isNotNull, lit("_corrupt"))
@@ -296,9 +289,6 @@ object Pipeline21 {
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n"), round(sum(col("value")), 4).as("total_value"))
   }
-
-  private val malformedStageCache =
-    scala.collection.mutable.Map.empty[(SparkSession, String), String]
 
   /** The oracle restates the corruption rule on the ORIGINAL table:
     * event_id ≡ 0 (mod 7) rows are quarantined, the rest survive

@@ -89,7 +89,7 @@ object Pipeline3 {
     * the iterative CC rounds DO use localCheckpoint — buys nothing.
     * Note: CacheManager matches by plan, so repeat invocations in
     * one session reuse the first materialization — INTENDED, the
-    * same session-materialized-view semantics as the Memo-cached
+    * same session-materialized-view semantics as the SessionStage-held
     * shingle/CC subtrees (E4/E6/M6), and the blocks are disk-only
     * and bounded by one hashed-corpus projection per sf dir.
     */

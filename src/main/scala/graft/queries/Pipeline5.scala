@@ -121,10 +121,8 @@ object Pipeline5 {
     * and the M11 composed report all score under ONE fitted model —
     * fitting it once per (session, dir) instead of per invocation.
     */
-  private val modelCache = new graft.util.Memo[(SparkSession, String), Array[Double]]
-
   private def cachedModel(spark: SparkSession, dir: String): Array[Double] =
-    modelCache.getOrElseUpdate((spark, dir),
+    graft.util.SessionStage.value(spark, dir, "importance_model")(
       importanceModel(
         Tables(spark, dir).documents.filter(length(trim(col("text"))) > 0),
         targetSource = "src0", nBuckets = 64))

@@ -73,18 +73,11 @@ object Pipeline73 {
       |WHERE x IS NOT NULL AND y IS NOT NULL
       |GROUP BY event_type""".stripMargin
 
-  // session-scoped staging (immutable per sf dir, reaped on JVM exit)
-  private val stageCache =
-    new graft.util.Memo[(SparkSession, String, String), java.nio.file.Path]
+  // the written layer is staged once per (session, dir)
   private def stage(spark: SparkSession, dir: String, kind: String)(
       write: (DataFrame, java.nio.file.Path) => Unit): java.nio.file.Path =
-    stageCache.getOrElseUpdate((spark, dir, kind), {
-      val d = java.nio.file.Files.createTempDirectory(s"graft_rt_${kind}_")
-      write(pointLayer(Tables(spark, dir)), d)
-      Runtime.getRuntime.addShutdownHook(
-        new Thread(() => graft.util.Fs.deleteRecursively(d)))
-      d
-    })
+    graft.util.SessionStage.dir(spark, dir, s"rt_$kind")(
+      write(pointLayer(Tables(spark, dir)), _))
 
   /** A22 `exp_geoparquet_roundtrip`: distributed GeoParquet write →
     * Spark parquet read-back → aggregate vs the original table.

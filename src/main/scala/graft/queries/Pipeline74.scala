@@ -25,8 +25,7 @@ object Pipeline74 {
     * IEEE doubles), so the 4-dp fixed-point sums land exactly.
     */
   def expGeojsonseqRoundtrip(spark: SparkSession, dir: String): DataFrame = {
-    val d = gjsCache.getOrElseUpdate((spark, dir), {
-      val p = java.nio.file.Files.createTempDirectory("graft_rt_gjs_")
+    val d = graft.util.SessionStage.dir(spark, dir, "rt_gjs") { p =>
       val t = Tables(spark, dir)
       val layer = t.events.select(
           col("event_id").cast("long").as("event_id"),
@@ -38,10 +37,7 @@ object Pipeline74 {
         layer.select(col("event_id"), col("event_type"), col("x"), col("y")),
         graft.`export`.GeoJson.pointGeometry(col("x"), col("y")),
         p.resolve("layer").toString)
-      Runtime.getRuntime.addShutdownHook(
-        new Thread(() => graft.util.Fs.deleteRecursively(p)))
-      p
-    })
+    }
     val back = spark.read.json(d.resolve("layer").toString)
     back.select(
         col("properties.event_id").cast("long").as("event_id"),
@@ -55,8 +51,6 @@ object Pipeline74 {
         sum(expr("CAST(round(x * 10000) AS BIGINT)")).as("x_4dp"),
         sum(expr("CAST(round(y * 10000) AS BIGINT)")).as("y_4dp"))
   }
-  private val gjsCache =
-    new graft.util.Memo[(SparkSession, String), java.nio.file.Path]
 
   val expGeojsonseqRoundtripSql: String = Pipeline73.roundTripSql
 
@@ -70,24 +64,18 @@ object Pipeline74 {
     * or DuckDB reader ever touches, now oracled end-to-end.
     */
   def expGpkgRoundtrip(spark: SparkSession, dir: String): DataFrame = {
-    val d = gpkgCache.getOrElseUpdate((spark, dir), {
-      val p = java.nio.file.Files.createTempDirectory("graft_rt_gpkg_")
+    val d = graft.util.SessionStage.dir(spark, dir, "rt_gpkg") { p =>
       val layer = Pipeline73.pointLayer(Tables(spark, dir))
         .select(col("event_id").as("fid"), col("event_type"),
           col("geometry").as("geom"))
       graft.`export`.Gpkg.write(layer, p.resolve("layer.gpkg").toString, "layer")
-      Runtime.getRuntime.addShutdownHook(
-        new Thread(() => graft.util.Fs.deleteRecursively(p)))
-      p
-    })
+    }
     val back = graft.sources.GpkgReader
       .readFeatures(spark, d.resolve("layer.gpkg").toString, "layer")
       .select(col("fid").as("event_id"), col("event_type"),
         col("geom").as("geometry"))
     Pipeline73.roundTripAgg(back)
   }
-  private val gpkgCache =
-    new graft.util.Memo[(SparkSession, String), java.nio.file.Path]
 
   val expGpkgRoundtripSql: String = Pipeline73.roundTripSql
 

@@ -33,8 +33,7 @@ object Pipeline79 {
     * Aggregates are map-side-combined; output is group-count-bounded.
     */
   def expGpkgMultilayer(spark: SparkSession, dir: String): DataFrame = {
-    val d = cache.getOrElseUpdate((spark, dir), {
-      val p = java.nio.file.Files.createTempDirectory("graft_rt_gpkgml_")
+    val d = graft.util.SessionStage.dir(spark, dir, "rt_gpkgml") { p =>
       val t = Tables(spark, dir)
       val places = Pipeline73.pointLayer(t)
         .select(col("event_id").as("fid"), col("event_type"),
@@ -47,10 +46,7 @@ object Pipeline79 {
       graft.`export`.Exporter.writeGpkgLayers(
         Seq("places" -> places, "buildings" -> buildings),
         p.resolve("education.gpkg").toString, target = "education")
-      Runtime.getRuntime.addShutdownHook(
-        new Thread(() => graft.util.Fs.deleteRecursively(p)))
-      p
-    })
+    }
     val path = d.resolve("education.gpkg").toString
     def layerAgg(table: String, grpCol: String): DataFrame =
       graft.sources.GpkgReader.readFeatures(spark, path, table)
@@ -67,8 +63,6 @@ object Pipeline79 {
     layerAgg("education_places", "event_type")
       .unionAll(layerAgg("education_buildings", "c_mktsegment"))
   }
-  private val cache =
-    new graft.util.Memo[(SparkSession, String), java.nio.file.Path]
 
   /** A28 `exp_geojson_multilayer`: the reference's OTHER multilayer
     * route (export.py:266-296 `_export_to_geojson(dict)`): all
@@ -83,8 +77,7 @@ object Pipeline79 {
     * metadata contract all sit under the hash.
     */
   def expGeojsonMultilayer(spark: SparkSession, dir: String): DataFrame = {
-    val d = gjCache.getOrElseUpdate((spark, dir), {
-      val p = java.nio.file.Files.createTempDirectory("graft_rt_gjml_")
+    val d = graft.util.SessionStage.dir(spark, dir, "rt_gjml") { p =>
       val t = Tables(spark, dir)
       // Fixed staging panel (ids < 100000, a no-op at the oracle
       // scales): the single-file FeatureCollection is ONE json
@@ -112,10 +105,7 @@ object Pipeline79 {
           ("places", places, graft.`export`.GeoJson.pointGeometry(col("x"), col("y"))),
           ("buildings", buildings, graft.`export`.GeoJson.pointGeometry(col("x"), col("y")))),
         p.resolve("education.geojson").toString, target = "education")
-      Runtime.getRuntime.addShutdownHook(
-        new Thread(() => graft.util.Fs.deleteRecursively(p)))
-      p
-    })
+    }
     val doc = spark.read.option("multiLine", "true")
       .json(d.resolve("education.geojson").toString)
     val f = doc.select(explode(col("features")).as("f"),
@@ -137,8 +127,6 @@ object Pipeline79 {
         sum(expr("CAST(round(y * 10000) AS BIGINT)")).as("y_4dp"),
         min(col("meta_n")).as("meta_n"))
   }
-  private val gjCache =
-    new graft.util.Memo[(SparkSession, String), java.nio.file.Path]
 
   val expGeojsonMultilayerSql: String =
     """WITH plf AS (
@@ -327,8 +315,7 @@ object Pipeline79 {
     */
   def expFeatureUpsert(spark: SparkSession, dir: String): DataFrame = {
     import graft.`export`.{FeatureService, PublishMode}
-    val svc = upsertCache.getOrElseUpdate((spark, dir), {
-      val p = java.nio.file.Files.createTempDirectory("graft_rt_featsvc_")
+    val svc = graft.util.SessionStage.dir(spark, dir, "rt_featsvc") { p =>
       val t = Tables(spark, dir)
       val base = t.orders.select(
         col("o_orderkey").as("id"),
@@ -348,10 +335,7 @@ object Pipeline79 {
         sp, "secondary", PublishMode.Overwrite)
       FeatureService.publish(base.filter(pmod(col("id"), lit(7)) === 3),
         sp, "secondary", PublishMode.Overwrite)
-      Runtime.getRuntime.addShutdownHook(
-        new Thread(() => graft.util.Fs.deleteRecursively(p)))
-      p
-    }).resolve("service").toString
+    }.resolve("service").toString
     def layerAgg(layer: String): DataFrame =
       graft.`export`.FeatureService.readLayer(spark, svc, layer)
         .groupBy(col("status"))
@@ -363,8 +347,6 @@ object Pipeline79 {
           col("id_sum"), col("cents"))
     layerAgg("primary").unionAll(layerAgg("secondary"))
   }
-  private val upsertCache =
-    new graft.util.Memo[(SparkSession, String), java.nio.file.Path]
 
   val expFeatureUpsertSql: String =
     """WITH l1 AS (

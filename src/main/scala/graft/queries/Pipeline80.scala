@@ -168,17 +168,14 @@ object Pipeline80 {
     * cell counts at equal nprobe; iters=2, F5's Lloyd recipe): the
     * three nprobe sweeps probe ONE training run.
     */
-  private val ivfModelCache =
-    new graft.util.Memo[(SparkSession, String), (DataFrame, Seq[Seq[Double]])]
-
   private def trainedModel(spark: SparkSession, dir: String): (DataFrame, Seq[Seq[Double]]) =
-    ivfModelCache.getOrElseUpdate((spark, dir), {
+    graft.util.SessionStage.value(spark, dir, "ivf_model") {
       val t = Tables(spark, dir)
       val (assigned, cents) =
         Similarity.kmeansModel(t.embeddings, "vec_id", "embedding", k = 10, iters = 2)
       (assigned.select(col("cluster"), col("id").as("base_id"), col("vec").as("bv"))
         .localCheckpoint(true), cents)
-    })
+    }
 
   /** F19 `sim_ivf_eval2`: the r12 `sim_ivf_eval` row MEASURED the
     * weakness (label-cell coarse quantization recalls 28% at
@@ -280,9 +277,6 @@ object Pipeline80 {
   // E37 dd_incremental
   // ----------------------------------------------------------------
 
-  private val incCache =
-    new graft.util.Memo[(SparkSession, String), java.nio.file.Path]
-
   /** E37 `dd_incremental`: the incremental MinHash-LSH dedup
     * ([[graft.operators.Dedup.incrementalNearDup]] — the
     * daily-crawl-increment pattern, previously spec-only E21)
@@ -304,8 +298,7 @@ object Pipeline80 {
     * store side reads k·8 B per historical doc, never the corpus.
     */
   def ddIncremental(spark: SparkSession, dir: String): DataFrame = {
-    val staged = incCache.getOrElseUpdate((spark, dir), {
-      val p = java.nio.file.Files.createTempDirectory("graft_rt_incdedup_")
+    val staged = graft.util.SessionStage.dir(spark, dir, "rt_incdedup") { p =>
       val t = Tables(spark, dir)
       val store = p.resolve("sigstore").toString
       def keep(batch: Int): Unit =
@@ -316,10 +309,7 @@ object Pipeline80 {
           .write.parquet(p.resolve(s"kept$batch").toString)
       keep(0)
       keep(1)
-      Runtime.getRuntime.addShutdownHook(
-        new Thread(() => graft.util.Fs.deleteRecursively(p)))
-      p
-    })
+    }
     val t = Tables(spark, dir)
     def keptAgg(batch: Int): DataFrame =
       spark.read.parquet(staged.resolve(s"kept$batch").toString)

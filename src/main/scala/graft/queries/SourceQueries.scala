@@ -203,11 +203,6 @@ object SourceQueries {
       |  SELECT n_nationkey FROM nation JOIN region ON n_regionkey = r_regionkey
       |  WHERE r_name = 'ASIA')""".stripMargin
 
-  // Hive stage dirs, one partitioned copy of events per sf dir per
-  // JVM (the write is setup, not the operator under test; caching it
-  // keeps bench min-of-two timings honest about the READ).
-  private val hiveStage = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** A13: hive-partitioned lake read — the reference's actual S3
     * layout (`theme=…/type=…` directory keys, source.py:418-507).
     * Events are staged once as `event_type=<v>/…parquet`; the read
@@ -216,13 +211,13 @@ object SourceQueries {
     * HivePartitionSpec) instead of scanning and discarding rows.
     */
   def srcHivePartitioned(spark: SparkSession, dir: String): DataFrame = {
-    val root = hiveStage.computeIfAbsent(dir, d => {
-      val stage = java.nio.file.Files.createTempDirectory("graft_hive_events_")
-      Tables(spark, d).events
+    // One partitioned copy of events per (session, dir): the write is
+    // setup, not the operator under test, so re-runs time the READ.
+    val root = graft.util.SessionStage.dir(spark, dir, "hive_events") { stage =>
+      Tables(spark, dir).events
         .select(col("event_id"), col("user_id"), col("value"), col("event_type"))
         .write.partitionBy("event_type").mode("overwrite").parquet(stage.toString)
-      stage.toString
-    })
+    }.toString
     // Explicit schema: no footer inference, and a zero-partition
     // layout (nothing published yet) reads as empty rather than
     // failing schema discovery.
@@ -244,8 +239,6 @@ object SourceQueries {
     """SELECT event_id, user_id, value, event_type
       |FROM events WHERE event_type IN ('click', 'error')""".stripMargin
 
-  private val evoStage = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** A14: schema-evolution read — two release generations of the
     * events table, the older one written BEFORE `event_type` existed
     * (even event_ids), the newer one with it (odd event_ids), read
@@ -254,17 +247,15 @@ object SourceQueries {
     * planning time.
     */
   def srcSchemaEvolution(spark: SparkSession, dir: String): DataFrame = {
-    val root = evoStage.computeIfAbsent(dir, d => {
-      val stage = java.nio.file.Files.createTempDirectory("graft_evo_events_")
-      val events = Tables(spark, d).events
+    val root = graft.util.SessionStage.dir(spark, dir, "evo_events") { stage =>
+      val events = Tables(spark, dir).events
         .select(col("event_id"), col("user_id"), col("value"), col("event_type"))
       events.filter(col("event_id") % 2 === 0)
         .drop("event_type")
         .write.mode("overwrite").parquet(s"$stage/release_a")
       events.filter(col("event_id") % 2 === 1)
         .write.mode("overwrite").parquet(s"$stage/release_b")
-      stage.toString
-    })
+    }
     OvertureReader
       .readMergedSchema(spark, Seq(s"$root/release_a", s"$root/release_b"))
       .select(col("event_id"), col("user_id"), col("value"), col("event_type"))
@@ -367,11 +358,9 @@ object SourceQueries {
     * the fixture is an immutable projection of the events table, so
     * bench/verify re-runs measure the READ path, not fixture writes.
     */
-  private val textStageCache = new graft.util.Memo[(SparkSession, String, String), String]
-
   private def textStage(spark: SparkSession, dir: String, fmt: String): String =
-    textStageCache.getOrElseUpdate((spark, dir, fmt), {
-      val out = java.nio.file.Files.createTempDirectory(s"graft_src_$fmt").toString
+    graft.util.SessionStage.dir(spark, dir, s"src_$fmt") { p =>
+      val out = p.toString
       val slim = Tables(spark, dir).events
         .select(col("event_id"), col("event_type"), col("value"))
       fmt match {
@@ -379,10 +368,7 @@ object SourceQueries {
         case "json" => slim.write.mode("overwrite").json(out)
         case "orc"  => slim.write.mode("overwrite").orc(out)
       }
-      Runtime.getRuntime.addShutdownHook(new Thread(() =>
-        graft.util.Fs.deleteRecursively(java.nio.file.Paths.get(out))))
-      out
-    })
+    }.toString
 
   private val textSchema = "event_id BIGINT, event_type STRING, value DOUBLE"
 

@@ -27,17 +27,18 @@ object StreamQueries {
       df: org.apache.spark.sql.DataFrame,
       dests: Seq[(java.nio.file.Path, Long)]): Unit = {
     val scratch = Files.createTempDirectory("graft_stage_part_")
-    df.coalesce(1).write.mode("overwrite").parquet(scratch.resolve("out").toString)
-    val listing = Files.list(scratch.resolve("out"))
-    val part =
-      try listing.filter(_.getFileName.toString.endsWith(".parquet")).findFirst().get()
-      finally listing.close()
-    dests.foreach { case (dest, mtime) =>
-      Files.copy(part, dest)
-      Files.setLastModifiedTime(dest,
-        java.nio.file.attribute.FileTime.fromMillis(mtime))
-    }
-    deleteRecursively(scratch)
+    try {
+      df.coalesce(1).write.mode("overwrite").parquet(scratch.resolve("out").toString)
+      val listing = Files.list(scratch.resolve("out"))
+      val part =
+        try listing.filter(_.getFileName.toString.endsWith(".parquet")).findFirst().get()
+        finally listing.close()
+      dests.foreach { case (dest, mtime) =>
+        Files.copy(part, dest)
+        Files.setLastModifiedTime(dest,
+          java.nio.file.attribute.FileTime.fromMillis(mtime))
+      }
+    } finally deleteRecursively(scratch)
   }
 
   /** Run `body` with `spark.sql.shuffle.partitions` temporarily
@@ -83,26 +84,12 @@ object StreamQueries {
     else Files.createTempDirectory("graft_ckpt_")
   }
 
-  /** Footer-only events schema, read once per source dir (round-9
-    * streaming fixed-cost pass: fifteen queries each paid this
-    * driver-side footer read per RUN; the schema of an immutable
-    * fixture is a constant).
+  /** The events schema, from the first data file's footer on the
+    * driver (no Spark job).
     */
-  private val eventsSchemaCache =
-    new graft.util.Memo[String, org.apache.spark.sql.types.StructType]
   private def eventsSchema(
       spark: SparkSession, dir: String): org.apache.spark.sql.types.StructType =
-    eventsSchemaCache.getOrElseUpdate(dir,
-      spark.read.parquet(s"$dir/events.parquet").schema)
-
-  /** Register a staged fixture dir for JVM-exit cleanup (the staged
-    * copies are immutable inputs cached for the session; bench and
-    * verify JVMs must not accumulate copies in /tmp).
-    */
-  private def reapOnExit(stage: java.nio.file.Path): java.nio.file.Path = {
-    Runtime.getRuntime.addShutdownHook(new Thread(() => deleteRecursively(stage)))
-    stage
-  }
+    graft.Tables.parquet(spark, s"$dir/events.parquet").schema
 
   /** One staged copy of events.parquet, shared by every query whose
     * source layout is just "a directory holding the backlog once"
@@ -111,27 +98,21 @@ object StreamQueries {
     * and sink every run — only the immutable INPUT staging is
     * shared, the same contract as [[lateStage]]/[[cdcStage]].
     */
-  private val plainStageCache = new graft.util.Memo[String, java.nio.file.Path]
-  private def plainStage(dir: String): java.nio.file.Path =
-    plainStageCache.getOrElseUpdate(dir, {
-      val stage = Files.createTempDirectory("graft_stream_events_")
+  private def plainStage(spark: SparkSession, dir: String): java.nio.file.Path =
+    graft.util.SessionStage.dir(spark, dir, "stream_events") { stage =>
       Files.copy(Paths.get(s"$dir/events.parquet"), stage.resolve("events.parquet"))
-      reapOnExit(stage)
-    })
+    }
 
   /** The doubled-delivery layout (the backlog staged twice, a_ then
     * b_) shared by the at-least-once scenarios (dedup, foreachBatch
     * upsert).
     */
-  private val doubleStageCache = new graft.util.Memo[String, java.nio.file.Path]
-  private def doubleStage(dir: String): java.nio.file.Path =
-    doubleStageCache.getOrElseUpdate(dir, {
-      val stage = Files.createTempDirectory("graft_stream_double_")
+  private def doubleStage(spark: SparkSession, dir: String): java.nio.file.Path =
+    graft.util.SessionStage.dir(spark, dir, "stream_double") { stage =>
       Seq("a", "b").foreach { p =>
         Files.copy(Paths.get(s"$dir/events.parquet"), stage.resolve(s"${p}_events.parquet"))
       }
-      reapOnExit(stage)
-    })
+    }
 
   /** DIAGNOSTIC (not a registry row): the bare StreamingQuery
     * lifecycle — one stateless passthrough micro-batch over the
@@ -145,7 +126,7 @@ object StreamQueries {
     * `ScaleProbe streamfloor <sfDir> [runs]`.
     */
   private[graft] def stNoopFloor(spark: SparkSession, dir: String): DataFrame = {
-    val stage = plainStage(dir)
+    val stage = plainStage(spark, dir)
     val raw = spark.readStream.schema(eventsSchema(spark, dir)).parquet(stage.toString)
     val out = raw.select(col("event_id")).limit(1)
     val qName = "st_noop_floor_" + java.util.UUID.randomUUID().toString.replace("-", "")
@@ -188,7 +169,7 @@ object StreamQueries {
     // are single parquet files — stage a copy (session-shared
     // immutable fixture; at production scale the source would
     // already be a directory of part files).
-    val stage = plainStage(dir)
+    val stage = plainStage(spark, dir)
     val raw = spark.readStream.schema(eventsSchema(spark, dir)).parquet(stage.toString)
     // Same ts normalization Tables.events applies on the batch side
     // (schema-dispatched: nano-long or TIMESTAMP_NTZ → timestamp).
@@ -225,7 +206,7 @@ object StreamQueries {
     * mode + AvailableNow, the I1 drain shape.
     */
   def stSlidingWindow(spark: SparkSession, dir: String): DataFrame = {
-    val stage = plainStage(dir)
+    val stage = plainStage(spark, dir)
     val raw = spark.readStream.schema(eventsSchema(spark, dir)).parquet(stage.toString)
     val events = graft.Tables.normalizeTs(raw)
     val out = EventStream.slidingAgg(events, "2 hours", "1 hour", "1 hour")
@@ -271,53 +252,50 @@ object StreamQueries {
     * a production stream drains — event time, not wall clock, closes
     * sessions.
     */
-  private val sessionStageCache = new graft.util.Memo[String, java.nio.file.Path]
-
   def stSessionAgg(spark: SparkSession, dir: String): DataFrame = {
     // Footer-only read: the schema, not the data.
     val schema = eventsSchema(spark, dir)
-    // Staged once per source dir (immutable fixture: backlog copy +
+    // Staged once per (session, dir) (immutable fixture: backlog copy +
     // guard scan + sentinel write) — the stream below re-runs fully
     // (fresh checkpoint + sink) on every invocation.
-    val stage = sessionStageCache.getOrElseUpdate(dir, reapOnExit {
-    val stage = Files.createTempDirectory("graft_stream_sessions_")
-    Files.copy(Paths.get(s"$dir/events.parquet"), stage.resolve("a_events.parquet"))
-    val baseTime = Files.getLastModifiedTime(stage.resolve("a_events.parquet")).toMillis
-    // Two sentinel files (user −1, fixed far-future ts — 2200-01-01,
-    // beyond any event the generator emits, so no data scan needed to
-    // place it). Micro-batch 1 (events + sentinel 1, via
-    // maxFilesPerTrigger=2) advances max event time to 2200; batch 2
-    // (sentinel 2 — identical bytes, later mtime) then runs its
-    // eviction pass under that advanced watermark, flushing every
-    // real session. The sentinels' own session stays in state (never
-    // emitted) — it is filtered out below anyway. ONE driver-built
-    // single-row write job; its part file is staged twice.
-    val farFutureUs = 7258118400000000L // 2200-01-01T00:00Z, epoch micros
-    // Guard the constant: the sentinel only flushes sessions if it is
-    // BEYOND every real event. One column-pruned scan of the ts
-    // column — cheap, and it fails FAST instead of silently
-    // withholding sessions if the data ever reaches the sentinel era.
-    val tsType = schema("ts").dataType
-    val rawEvents = spark.read.parquet(s"$dir/events.parquet")
-    val maxTsRow = rawEvents
-      .agg(max(graft.Tables.tsMicrosExpr(tsType, col("ts")))).head()
-    // Empty source: any sentinel is trivially beyond the (absent)
-    // data; the stream then emits no real sessions — correct day-one
-    // behavior rather than a null-unboxing crash.
-    val maxTsUs = if (maxTsRow.isNullAt(0)) Long.MinValue else maxTsRow.getLong(0)
-    require(maxTsUs < farFutureUs - 2L * 3600 * 1000 * 1000,
-      s"stSessionAgg sentinel (2200-01-01) is not beyond the data (max ts us $maxTsUs); " +
-        "sessions would be silently withheld")
-    // The sentinel row is written through the SOURCE schema, so its
-    // ts literal must carry the file's physical type.
-    val sentinelTs: Any = tsType match {
-      case org.apache.spark.sql.types.LongType => farFutureUs * 1000L
-      case org.apache.spark.sql.types.TimestampNTZType =>
-        java.time.LocalDateTime.ofEpochSecond(farFutureUs / 1000000L, 0, java.time.ZoneOffset.UTC)
-      case org.apache.spark.sql.types.TimestampType =>
-        java.sql.Timestamp.from(java.time.Instant.ofEpochSecond(farFutureUs / 1000000L))
-      case other => throw new IllegalArgumentException(
-        s"stSessionAgg sentinel: unsupported ts type $other")
+    val stage = graft.util.SessionStage.dir(spark, dir, "stream_sessions") { stage =>
+      Files.copy(Paths.get(s"$dir/events.parquet"), stage.resolve("a_events.parquet"))
+      val baseTime = Files.getLastModifiedTime(stage.resolve("a_events.parquet")).toMillis
+      // Two sentinel files (user −1, fixed far-future ts — 2200-01-01,
+      // beyond any event the generator emits, so no data scan needed to
+      // place it). Micro-batch 1 (events + sentinel 1, via
+      // maxFilesPerTrigger=2) advances max event time to 2200; batch 2
+      // (sentinel 2 — identical bytes, later mtime) then runs its
+      // eviction pass under that advanced watermark, flushing every
+      // real session. The sentinels' own session stays in state (never
+      // emitted) — it is filtered out below anyway. ONE driver-built
+      // single-row write job; its part file is staged twice.
+      val farFutureUs = 7258118400000000L // 2200-01-01T00:00Z, epoch micros
+      // Guard the constant: the sentinel only flushes sessions if it is
+      // BEYOND every real event. One column-pruned scan of the ts
+      // column — cheap, and it fails FAST instead of silently
+      // withholding sessions if the data ever reaches the sentinel era.
+      val tsType = schema("ts").dataType
+      val rawEvents = spark.read.parquet(s"$dir/events.parquet")
+      val maxTsRow = rawEvents
+        .agg(max(graft.Tables.tsMicrosExpr(tsType, col("ts")))).head()
+      // Empty source: any sentinel is trivially beyond the (absent)
+      // data; the stream then emits no real sessions — correct day-one
+      // behavior rather than a null-unboxing crash.
+      val maxTsUs = if (maxTsRow.isNullAt(0)) Long.MinValue else maxTsRow.getLong(0)
+      require(maxTsUs < farFutureUs - 2L * 3600 * 1000 * 1000,
+        s"stSessionAgg sentinel (2200-01-01) is not beyond the data (max ts us $maxTsUs); " +
+          "sessions would be silently withheld")
+      // The sentinel row is written through the SOURCE schema, so its
+      // ts literal must carry the file's physical type.
+      val sentinelTs: Any = tsType match {
+        case org.apache.spark.sql.types.LongType => farFutureUs * 1000L
+        case org.apache.spark.sql.types.TimestampNTZType =>
+          java.time.LocalDateTime.ofEpochSecond(farFutureUs / 1000000L, 0, java.time.ZoneOffset.UTC)
+        case org.apache.spark.sql.types.TimestampType =>
+          java.sql.Timestamp.from(java.time.Instant.ofEpochSecond(farFutureUs / 1000000L))
+        case other => throw new IllegalArgumentException(
+          s"stSessionAgg sentinel: unsupported ts type $other")
     }
     val sentinelRow = org.apache.spark.sql.Row(schema.fields.map { f =>
       f.name match {
@@ -340,8 +318,7 @@ object StreamQueries {
       spark.createDataFrame(java.util.Collections.singletonList(sentinelRow), schema),
       Seq(1, 2).map(i =>
         stage.resolve(s"z_sentinel_$i.parquet") -> (baseTime + i * 60000L)))
-    stage
-    })
+    }
 
     val raw = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", "2")
@@ -379,7 +356,7 @@ object StreamQueries {
     * the segment aggregate. Oracle = the batch twin D12 SQL.
     */
   def stEnrichJoin(spark: SparkSession, dir: String): DataFrame = {
-    val stage = plainStage(dir)
+    val stage = plainStage(spark, dir)
     val raw = spark.readStream.schema(eventsSchema(spark, dir)).parquet(stage.toString)
     val customer = spark.read.parquet(s"$dir/customer.parquet")
     val out = raw
@@ -417,7 +394,7 @@ object StreamQueries {
     * oracle = the same self-join in batch SQL.
     */
   def stStreamStreamJoin(spark: SparkSession, dir: String): DataFrame = {
-    val stage = plainStage(dir)
+    val stage = plainStage(spark, dir)
     val schema = eventsSchema(spark, dir)
     // Two independent file-source streams over the same backlog —
     // the production analogue is two topics (clicks, errors).
@@ -474,45 +451,41 @@ object StreamQueries {
     * result would silently equal the INNER join on the tail. The
     * oracle is the plain batch LEFT JOIN twin.
     */
-  private val ssLoStageCache = new graft.util.Memo[String, java.nio.file.Path]
-
   def stSsLeftOuter(spark: SparkSession, dir: String): DataFrame = {
     val schema = eventsSchema(spark, dir)
     val tsType = schema("ts").dataType
-    // Staged once per source dir (immutable fixture: backlog copy +
+    // Staged once per (session, dir) (immutable fixture: backlog copy +
     // max-ts scan + two sentinel writes); the stream below re-runs
     // fully (fresh checkpoint + sink) per invocation.
-    val stage = ssLoStageCache.getOrElseUpdate(dir, reapOnExit {
-    val stage = Files.createTempDirectory("graft_stream_ss_lo_")
-    val raw = spark.read.parquet(s"$dir/events.parquet")
-    val maxUs = raw.agg(max(graft.Tables.tsMicrosExpr(tsType, col("ts"))))
-      .head().getLong(0)
-    val dayUs = 86400000000L
-    def sentinel(us: Long, idBase: Long) =
-      Seq("click" -> idBase, "error" -> (idBase - 1)).map { case (et, id) =>
-        spark.range(1).select(
-          lit(id).as("event_id"),
-          graft.Tables.tsBoundLit(tsType, us).as("ts"),
-          lit(-1L).as("user_id"),
-          lit(et).as("event_type"),
-          lit(0.0).as("value"),
-          lit("{}").as("props"))
-      }.reduce(_ unionAll _)
-    // Plain Files.copy stamps "now" as mtime, which would sort the
-    // real backlog AFTER the sentinels in the source's mtime-ordered
-    // delivery — the sentinels would advance the watermark first and
-    // every real click would arrive late and be dropped. Pin all
-    // three mtimes explicitly.
-    val base = Files.getLastModifiedTime(Paths.get(s"$dir/events.parquet")).toMillis
-    Files.copy(Paths.get(s"$dir/events.parquet"), stage.resolve("a_events.parquet"))
-    Files.setLastModifiedTime(stage.resolve("a_events.parquet"),
-      java.nio.file.attribute.FileTime.fromMillis(base))
-    stageSinglePart(sentinel(maxUs + 30 * dayUs, -1L),
-      Seq(stage.resolve("y_sentinel1.parquet") -> (base + 30000L)))
-    stageSinglePart(sentinel(maxUs + 60 * dayUs, -3L),
-      Seq(stage.resolve("z_sentinel2.parquet") -> (base + 60000L)))
-    stage
-    })
+    val stage = graft.util.SessionStage.dir(spark, dir, "stream_ss_lo") { stage =>
+      val raw = spark.read.parquet(s"$dir/events.parquet")
+      val maxUs = raw.agg(max(graft.Tables.tsMicrosExpr(tsType, col("ts"))))
+        .head().getLong(0)
+      val dayUs = 86400000000L
+      def sentinel(us: Long, idBase: Long) =
+        Seq("click" -> idBase, "error" -> (idBase - 1)).map { case (et, id) =>
+          spark.range(1).select(
+            lit(id).as("event_id"),
+            graft.Tables.tsBoundLit(tsType, us).as("ts"),
+            lit(-1L).as("user_id"),
+            lit(et).as("event_type"),
+            lit(0.0).as("value"),
+            lit("{}").as("props"))
+        }.reduce(_ unionAll _)
+      // Plain Files.copy stamps "now" as mtime, which would sort the
+      // real backlog AFTER the sentinels in the source's mtime-ordered
+      // delivery — the sentinels would advance the watermark first and
+      // every real click would arrive late and be dropped. Pin all
+      // three mtimes explicitly.
+      val base = Files.getLastModifiedTime(Paths.get(s"$dir/events.parquet")).toMillis
+      Files.copy(Paths.get(s"$dir/events.parquet"), stage.resolve("a_events.parquet"))
+      Files.setLastModifiedTime(stage.resolve("a_events.parquet"),
+        java.nio.file.attribute.FileTime.fromMillis(base))
+      stageSinglePart(sentinel(maxUs + 30 * dayUs, -1L),
+        Seq(stage.resolve("y_sentinel1.parquet") -> (base + 30000L)))
+      stageSinglePart(sentinel(maxUs + 60 * dayUs, -3L),
+        Seq(stage.resolve("z_sentinel2.parquet") -> (base + 60000L)))
+    }
     // r14 state-width pass (guide §2.3/§5): project to ONLY what the
     // join condition and the final aggregate read BEFORE the
     // watermark/state — the click side needs (user, ts), the error
@@ -644,7 +617,7 @@ object StreamQueries {
     * single-copy table.
     */
   def stForeachBatchUpsert(spark: SparkSession, dir: String): DataFrame = {
-    val stage = doubleStage(dir)
+    val stage = doubleStage(spark, dir)
     val service = Files.createTempDirectory("graft_stream_fb_svc_")
     val schema = eventsSchema(spark, dir)
     val raw = spark.readStream.schema(schema)
@@ -696,7 +669,7 @@ object StreamQueries {
     * batch aggregate over the single-copy table iff dedup worked.
     */
   def stDedupStream(spark: SparkSession, dir: String): DataFrame = {
-    val stage = doubleStage(dir)
+    val stage = doubleStage(spark, dir)
     val schema = eventsSchema(spark, dir)
     val raw = spark.readStream.schema(schema).parquet(stage.toString)
     val events = graft.Tables.normalizeTs(raw)
@@ -764,8 +737,6 @@ object StreamQueries {
     * commit the watermark before the stragglers arrive, exactly the
     * cadence of a live stream where data keeps flowing.
     */
-  private val lateStageCache = new graft.util.Memo[(SparkSession, String), java.nio.file.Path]
-
   /** Stage the split backlog once per (session, dir): the three
     * files are immutable inputs (the scenario's "topic"), so
     * repeated runs — bench min-of-two, verify — re-run the STREAM
@@ -773,8 +744,7 @@ object StreamQueries {
     * two filter-write jobs that build the fixture.
     */
   private def lateStage(spark: SparkSession, dir: String): java.nio.file.Path =
-    lateStageCache.getOrElseUpdate((spark, dir), {
-      val stage = Files.createTempDirectory("graft_stream_late_")
+    graft.util.SessionStage.dir(spark, dir, "stream_late") { stage =>
       val splitUs = 1706140800000000L // 2024-01-25T00:00:00Z
       val raw = spark.read.parquet(s"$dir/events.parquet")
       // Bound literal in the RAW column's own physical type: keeps
@@ -810,12 +780,7 @@ object StreamQueries {
         Seq(stage.resolve("m_mid.parquet") -> (base + 30000L)))
       stageSinglePart(raw.filter(col("ts") < splitBound),
         Seq(stage.resolve("z_late.parquet") -> (base + 60000L)))
-      // Cached for the JVM's lifetime (it holds a full copy of the
-      // events table) — reap it on exit so repeated bench/verify
-      // JVMs don't accumulate copies in /tmp.
-      Runtime.getRuntime.addShutdownHook(new Thread(() => deleteRecursively(stage)))
-      stage
-    })
+    }
 
   def stLateDrop(spark: SparkSession, dir: String): DataFrame = {
     val stage = lateStage(spark, dir)
@@ -869,19 +834,15 @@ object StreamQueries {
     * out of order), delivered in mtime order one file per
     * micro-batch.
     */
-  private val cdcStageCache = new graft.util.Memo[(SparkSession, String), java.nio.file.Path]
   private def cdcStage(spark: SparkSession, dir: String): java.nio.file.Path =
-    cdcStageCache.getOrElseUpdate((spark, dir), {
-      val stage = Files.createTempDirectory("graft_stream_cdc_")
+    graft.util.SessionStage.dir(spark, dir, "stream_cdc") { stage =>
       val raw = spark.read.parquet(s"$dir/events.parquet")
       val base = Files.getLastModifiedTime(Paths.get(s"$dir/events.parquet")).toMillis
       (0 until 3).foreach { i =>
         stageSinglePart(raw.filter(pmod(col("event_id"), lit(3)) === i),
           Seq(stage.resolve(s"${('a' + i).toChar}_slice.parquet") -> (base + i * 30000L)))
       }
-      Runtime.getRuntime.addShutdownHook(new Thread(() => deleteRecursively(stage)))
-      stage
-    })
+    }
 
   /** I11: streaming CDC apply — a change stream (upserts from
     * ordinary events, DELETE tombstones from `error` events) applied
@@ -988,7 +949,7 @@ object StreamQueries {
     * mode).
     */
   def stTopkWindowed(spark: SparkSession, dir: String): DataFrame = {
-    val stage = plainStage(dir)
+    val stage = plainStage(spark, dir)
     val raw = spark.readStream.schema(eventsSchema(spark, dir)).parquet(stage.toString)
     val events = graft.Tables.normalizeTs(raw)
     val counts = events
@@ -1029,16 +990,13 @@ object StreamQueries {
     * not on sink-side dedup (I9 proves the complementary
     * idempotent-sink contract).
     */
-  private val resumePartsCache = new graft.util.Memo[String, java.nio.file.Path]
-
   def stCheckpointResume(spark: SparkSession, dir: String): DataFrame = {
     // The two halves of the split backlog are immutable fixtures —
-    // build their part files ONCE per source dir (two filter-write
+    // build their part files ONCE per (session, dir) (two filter-write
     // jobs); each RUN still stages them into a fresh source dir in
     // two steps (A, run, B, run) so the restart semantics under test
     // are untouched, but re-runs pay two file copies, not two jobs.
-    val parts = resumePartsCache.getOrElseUpdate(dir, reapOnExit {
-      val hold = Files.createTempDirectory("graft_stream_resume_parts_")
+    val parts = graft.util.SessionStage.dir(spark, dir, "stream_resume_parts") { hold =>
       val t = graft.Tables(spark, dir)
       val slim = t.events.select(col("event_id"), col("event_type"), col("value"))
       val now = System.currentTimeMillis()
@@ -1046,8 +1004,7 @@ object StreamQueries {
         Seq((hold.resolve("a_events.parquet"), now)))
       stageSinglePart(slim.filter(pmod(col("event_id"), lit(2)) === 1),
         Seq((hold.resolve("b_events.parquet"), now)))
-      hold
-    })
+    }
     val stage = Files.createTempDirectory("graft_stream_resume_")
     val sinkDir = Files.createTempDirectory("graft_stream_resume_sink_")
     val sink = sinkDir.resolve("out").toString
@@ -1121,14 +1078,11 @@ object StreamQueries {
     * (n·x−Σx)² > 9·(n·Σx²−(Σx)²) comparison over a
     * rows-between-preceding window.
     */
-  private val anomStageCache = new graft.util.Memo[String, java.nio.file.Path]
-
   def stAnomalyZscore(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    // Staged once per source dir (two filter-write jobs building the
+    // Staged once per (session, dir) (two filter-write jobs building the
     // old/new split — immutable fixture); fresh stream per run.
-    val stage = anomStageCache.getOrElseUpdate(dir, reapOnExit {
-      val stage = Files.createTempDirectory("graft_stream_anom_")
+    val stage = graft.util.SessionStage.dir(spark, dir, "stream_anom") { stage =>
       val raw0 = spark.read.parquet(s"$dir/events.parquet")
       val splitUs = 1706140800000000L // 2024-01-25T00:00:00Z
       val splitBound = graft.Tables.tsBoundLit(raw0.schema("ts").dataType, splitUs)
@@ -1137,8 +1091,7 @@ object StreamQueries {
         Seq(stage.resolve("a_old.parquet") -> base))
       stageSinglePart(raw0.filter(col("ts") >= splitBound),
         Seq(stage.resolve("z_new.parquet") -> (base + 30000L)))
-      stage
-    })
+    }
     val stream = spark.readStream.schema(eventsSchema(spark, dir))
       .option("maxFilesPerTrigger", "1")
       .parquet(stage.toString)
