@@ -180,7 +180,7 @@ object Cli {
             "tag" -> cfg.sectorTag.getOrElse("")))
           val rep = FeatureService.applyItemMetadata(
             spark, servicePath, cfg.name,
-            FeatureService.parseItemMetadata(spark, rendered))
+            FeatureService.parseItemMetadata(rendered))
           println(s"metadata ${if (rep.updated) "applied" else "unchanged"}: " +
             s"fields=${rep.appliedFields.mkString(",")}" +
             (if (rep.skippedGroups.nonEmpty)

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Count-and-stacktrace smoke for a list of registered queries:
   * `runMain graft.RunCheck <sfDir> <query> [query...]` — the
@@ -10,9 +9,7 @@ import org.apache.spark.sql.SparkSession
   */
 object RunCheck {
   def main(args: Array[String]): Unit = {
-    // one session recipe for the whole repo — a session-level fix
-    // (e.g. a new legacy-parquet flag) must not need remembering here
-    val spark = GraftSession.builder(master = "local[4]", shufflePartitions = 4).getOrCreate()
+    val spark = GraftSession.fromEnv("graft-runcheck")
     spark.sparkContext.setLogLevel("ERROR")
     val dir = args.headOption.getOrElse("/root/testdata/sf0.001")
     for (q <- args.drop(1)) {

@@ -13,17 +13,7 @@ object VerifyOne {
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries(name)(spark, sfDir)
       .coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql.get(name)
-      .map(sql => s"${q(name)}: ${q(sql)}").mkString("{", ",", "}")
+    val json = graft.config.JsonConfig.obj(SparkEntry.oracleSql.get(name).map(name -> _).toSeq: _*)
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
   }

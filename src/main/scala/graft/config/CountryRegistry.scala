@@ -58,7 +58,7 @@ object CountryRegistry {
     * [[graft.ConfigError]] naming the path and entry.
     */
   def fromJson(spark: org.apache.spark.sql.SparkSession, path: String): CountryRegistry =
-    new CountryRegistry(JsonConfig.entries(spark, path).map { e =>
+    new CountryRegistry(JsonConfig.entries(JsonConfig.read(spark, path), path).map { e =>
       val bounds = Option(e.node.get("bounds")).filter(b => b.isArray && b.size == 4)
         .map(b => Seq.tabulate(4)(i => b.get(i).asText.toDoubleOption))
         .collect { case Seq(Some(a), Some(b), Some(c), Some(d)) => (a, b, c, d) }

@@ -27,21 +27,35 @@ final case class QueryConfig(
 
 object QueryConfig {
 
-  /** Load a query catalog from a JSON file holding an array of
-    * entries or a single entry (the engine-side equivalent of the
-    * reference's queries.yml; YAML carries no semantics the JSON form
-    * loses). Parsed on the driver with no Spark job. Values keep
-    * their own JSON text (`2` → "2", `true` → "true"); booleans may
-    * be written as `true` or `"true"`. Malformed JSON, a top level
-    * that is not an array or object, and an entry without `name` or
-    * `theme` are a [[graft.ConfigError]] naming the path and entry.
+  /** Load a query catalog, parsed on the driver with no Spark job.
+    * Two layouts (reference: config_loader.py:206
+    * `yaml.safe_load(queries.yml)` + domain/models.py:30-56):
+    *
+    *   - `.yml`/`.yaml`: the reference's queries.yml, a mapping of
+    *     query name → entry; `type` is required.
+    *   - anything else: JSON, an array of entries or a single entry,
+    *     each with a `name`; `type` defaults to "feature".
+    *
+    * An entry holds `theme`, `filter`, `building_filter`,
+    * `building_theme`, `is_multilayer`, `geometry_split`,
+    * `sector_title`, `sector_tag` and an `agol` block of publish
+    * templates. `upsert_key` is read from `agol` (where queries.yml
+    * keeps it), then the entry, then defaults to "id". Values keep
+    * their own text (`2` → "2", `true` → "true"); booleans may be
+    * written as `true` or `"true"`. A parse error, a wrong top level
+    * and an entry without `name` (JSON), `theme` or `type` (YAML) are
+    * a [[graft.ConfigError]] naming the path and entry.
     */
-  def catalogFromJson(spark: SparkSession, path: String): Map[String, QueryConfig] =
-    JsonConfig.entries(spark, path).map { e =>
+  def catalog(spark: SparkSession, path: String): Map[String, QueryConfig] = {
+    val root = JsonConfig.read(spark, path)
+    val yaml = JsonConfig.isYaml(path)
+    val entries = if (yaml) JsonConfig.namedEntries(root, path) else JsonConfig.entries(root, path)
+    entries.map { e =>
+      val agol = e.map("agol")
       val qc = QueryConfig(
-        name = e.required("name"),
+        name = if (yaml) e.name else e.required("name"),
         theme = e.required("theme"),
-        typeName = e.text("type").getOrElse("feature"),
+        typeName = if (yaml) e.required("type") else e.text("type").getOrElse("feature"),
         filter = e.text("filter"),
         buildingFilter = e.text("building_filter"),
         buildingTheme = e.text("building_theme"),
@@ -49,73 +63,11 @@ object QueryConfig {
         geometrySplit = e.bool("geometry_split"),
         sectorTitle = e.text("sector_title"),
         sectorTag = e.text("sector_tag"),
-        upsertKey = e.text("upsert_key").getOrElse("id"))
+        upsertKey = agol.get("upsert_key").orElse(e.text("upsert_key")).getOrElse("id"),
+        agol = agol)
       qc.name -> qc
     }.toMap
-
-  /** Load a query catalog from the reference's own YAML layout
-    * (reference: config_loader.py:206 `yaml.safe_load(queries.yml)`
-    * + domain/models.py:30-56 field mapping): a top-level map of
-    * query name → {theme, type, filter?, building_filter?,
-    * building_theme?, is_multilayer?, geometry_split?,
-    * sector_title?, sector_tag?, agol: {…}}. `upsert_key` is read
-    * from the `agol` block (where queries.yml keeps it), falling
-    * back to a top-level key, then "id" — matching the reference's
-    * precedence. Missing `theme`/`type` is a ConfigError naming the
-    * entry, not a KeyError three frames later.
-    */
-  def catalogFromYaml(path: String): Map[String, QueryConfig] = {
-    val root = Yaml.parseFile(path) match {
-      case m: Yaml.YMap => m
-      case other => throw new graft.ConfigError(
-        s"queries catalog must be a top-level mapping, got ${other.getClass.getSimpleName}",
-        Map("path" -> path))
-    }
-    root.entries.map { case (name, entryV) =>
-      val entry = entryV match {
-        case m: Yaml.YMap => m
-        case _ => throw new graft.ConfigError(
-          s"catalog entry '$name' must be a mapping", Map("path" -> path))
-      }
-      def str(key: String): Option[String] = entry.get(key) match {
-        case None | Some(Yaml.YNull) => None
-        case Some(v)                 => Some(v.asString)
-      }
-      def bool(key: String): Boolean = entry.get(key) match {
-        case Some(Yaml.YBool(b)) => b
-        case Some(Yaml.YStr(s))  => s.toBoolean
-        case _                   => false
-      }
-      val agol = entry.get("agol") match {
-        case Some(m: Yaml.YMap) => m.entries.map { case (k, v) => k -> v.asString }.toMap
-        case _                  => Map.empty[String, String]
-      }
-      def req(key: String): String = str(key).getOrElse(
-        throw new graft.ConfigError(s"catalog entry '$name' missing required key '$key'",
-          Map("path" -> path)))
-      val qc = QueryConfig(
-        name = name,
-        theme = req("theme"),
-        typeName = req("type"),
-        filter = str("filter"),
-        buildingFilter = str("building_filter"),
-        buildingTheme = str("building_theme"),
-        isMultilayer = bool("is_multilayer"),
-        geometrySplit = bool("geometry_split"),
-        sectorTitle = str("sector_title"),
-        sectorTag = str("sector_tag"),
-        upsertKey = agol.get("upsert_key").orElse(str("upsert_key")).getOrElse("id"),
-        agol = agol)
-      name -> qc
-    }.toMap
   }
-
-  /** Extension-dispatched catalog load: `.yml`/`.yaml` → the YAML
-    * reader (no SparkSession needed), anything else → the JSON form.
-    */
-  def catalog(spark: SparkSession, path: String): Map[String, QueryConfig] =
-    if (path.endsWith(".yml") || path.endsWith(".yaml")) catalogFromYaml(path)
-    else catalogFromJson(spark, path)
 }
 
 /** `{placeholder}` template rendering for publish metadata

@@ -1,5 +1,6 @@
 package graft.`export`
 
+import graft.config.JsonConfig
 import org.apache.hadoop.fs.{FileSystem, Path => HPath}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
@@ -44,9 +45,9 @@ final class CountryCache(spark: SparkSession, basePath: String) {
       org.apache.spark.sql.functions.lit(1)).as("rows"))
       .write.mode("overwrite").parquet(dataPath(key))
     val count = obs.get("rows").asInstanceOf[Long]
-    val meta =
-      s"""{"country":"${key.country}","theme":"${key.theme}","type":"${key.typeName}",""" +
-        s""""release":"${key.release}","features":$count,"cached_at":"$cachedDate"}"""
+    val meta = JsonConfig.obj("country" -> key.country, "theme" -> key.theme,
+      "type" -> key.typeName, "release" -> key.release, "features" -> count,
+      "cached_at" -> cachedDate)
     val out = fs.create(new HPath(metaPath(key)), true)
     try out.write(meta.getBytes("UTF-8"))
     finally out.close()

@@ -1,8 +1,11 @@
 package graft.`export`
 
+import com.fasterxml.jackson.databind.JsonNode
+import graft.config.JsonConfig
 import org.apache.hadoop.fs.{FileSystem, Path => HPath}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
 
 /** Publish modes (reference: src/o2agol/domain/enums.py:10-16). */
 object PublishMode extends Enumeration {
@@ -351,59 +354,34 @@ object FeatureService {
   def metadataPath(servicePath: String, layer: String): String =
     layerPath(servicePath, layer) + ".metadata.json"
 
-  private def jsonStr(s: String): String =
-    "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-
-  private def metadataJson(m: ItemMetadata): String = {
-    val fields = Seq(
-      m.title.map(v => s""""title":${jsonStr(v)}"""),
-      m.snippet.map(v => s""""snippet":${jsonStr(v)}"""),
-      m.description.map(v => s""""description":${jsonStr(v)}"""),
-      m.tags.map(t => s""""tags":[${t.map(jsonStr).mkString(",")}]"""),
-      Some(s""""visibility":${jsonStr(m.visibility)}"""),
-      Some(s""""groups":[${m.groups.map(jsonStr).mkString(",")}]""")
-    ).flatten
-    fields.mkString("{", ",", "}")
-  }
+  private def metadataJson(m: ItemMetadata): String = JsonConfig.obj(
+    (m.title.map("title" -> _) ++ m.snippet.map("snippet" -> _) ++
+      m.description.map("description" -> _) ++ m.tags.map("tags" -> _) ++
+      Seq("visibility" -> m.visibility, "groups" -> m.groups)).toSeq: _*)
 
   /** Parse an ItemMetadata JSON document (a rendered template from
-    * the Cli `--metadata=` flag, or the sidecar itself) with Spark's
-    * real JSON reader — free-form titles/descriptions are legal,
-    * unlike the deliberately-restricted DumpStore metadata.
+    * the Cli `--metadata=` flag) on the driver. Free-form
+    * titles/descriptions are legal; malformed JSON, a top level that
+    * is not an object and a non-array `tags`/`groups` are a
+    * [[graft.ConfigError]].
     */
-  def parseItemMetadata(spark: SparkSession, json: String): ItemMetadata = {
-    import spark.implicits._
-    val df = spark.read.json(Seq(json).toDS())
-    // PERMISSIVE mode degrades malformed JSON to a lone
-    // _corrupt_record column — without this check a broken
-    // --metadata template would silently apply NOTHING and report a
-    // clean no-op.
-    require(df.columns.nonEmpty && !df.columns.contains("_corrupt_record"),
-      s"malformed item metadata JSON: ${json.take(200)}")
-    val cols = df.columns.toSet
-    val r = df.head()
-    def optS(c: String): Option[String] =
-      if (cols.contains(c)) Option(r.getAs[Any](c)).map(_.toString) else None
-    def optL(c: String): Option[Seq[String]] =
-      if (cols.contains(c))
-        Option(r.getAs[Any](c)).map(
-          _.asInstanceOf[scala.collection.Seq[Any]].iterator.map(_.toString).toList)
-      else None
+  def parseItemMetadata(json: String): ItemMetadata =
+    itemMetadata(JsonConfig.parse(json, "item metadata"), "item metadata")
+
+  private def itemMetadata(n: JsonNode, source: String): ItemMetadata = {
+    def fail(msg: String) = new graft.ConfigError(s"item metadata: $msg", Map("path" -> source))
+    if (!n.isObject) throw fail(s"top level must be an object, got ${n.getNodeType}")
+    def list(key: String): Option[Seq[String]] = Option(n.get(key)).filterNot(_.isNull).map { a =>
+      if (!a.isArray) throw fail(s"'$key' must be an array, got ${a.getNodeType}")
+      a.elements.asScala.filterNot(_.isNull).map(_.asText).toList
+    }
     ItemMetadata(
-      title = optS("title"),
-      snippet = optS("snippet"),
-      description = optS("description"),
-      tags = optL("tags"),
-      visibility = normalizeVisibility(optS("visibility").orNull),
-      groups = optL("groups").getOrElse(Nil))
+      title = JsonConfig.text(n, "title"),
+      snippet = JsonConfig.text(n, "snippet"),
+      description = JsonConfig.text(n, "description"),
+      tags = list("tags"),
+      visibility = normalizeVisibility(JsonConfig.text(n, "visibility").orNull),
+      groups = list("groups").getOrElse(Nil))
   }
 
   /** Read the sidecar back (None when never applied). Falls back to
@@ -415,11 +393,7 @@ object FeatureService {
     val live = new HPath(metadataPath(servicePath, layer))
     val backup = new HPath(metadataPath(servicePath, layer) + ".backup")
     val p = if (f.exists(live)) live else if (f.exists(backup)) backup else return None
-    val in = f.open(p)
-    val txt =
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-    Some(parseItemMetadata(spark, txt))
+    Some(itemMetadata(JsonConfig.read(spark, p.toString), p.toString))
   }
 
   /** Apply desired metadata to a published layer's sidecar. Returns

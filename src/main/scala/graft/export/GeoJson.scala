@@ -1,5 +1,6 @@
 package graft.`export`
 
+import graft.config.JsonConfig
 import org.apache.hadoop.fs.{FileSystem, Path => HPath}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
@@ -15,19 +16,6 @@ import org.apache.spark.sql.functions._
   * single-writer bottleneck by format definition).
   */
 object GeoJson {
-
-  /** Minimal JSON string escape for caller-supplied values landing
-    * in the hand-built metadata block (layer names, target).
-    */
-  private def esc(s: String): String = s.flatMap {
-    case '"' => "\\\""
-    case '\\' => "\\\\"
-    case '\n' => "\\n"
-    case '\r' => "\\r"
-    case '\t' => "\\t"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  }
 
   /** Point-geometry builder from coordinate columns. */
   def pointGeometry(x: Column, y: Column): Column =
@@ -86,7 +74,7 @@ object GeoJson {
       }
       val dataType = if (rawExport) "raw_overture" else "normalized"
       writer.write(
-        s"""],"metadata":{"generated":"${esc(generatedAt)}","source":"graft","target":"${esc(target)}","data_type":"$dataType","count":$count}}""")
+        s"""],"metadata":{"generated":${JsonConfig.quote(generatedAt)},"source":"graft","target":${JsonConfig.quote(target)},"data_type":"$dataType","count":$count}}""")
     } finally writer.close()
   }
 
@@ -143,10 +131,10 @@ object GeoJson {
       // Layer names and target are caller-supplied strings headed
       // into a hand-built JSON document — escape them (a quote in a
       // layer name would otherwise emit an invalid document).
-      val layerCounts = counts.map { case (n, c) => s""""${esc(n)}":$c""" }.mkString(",")
+      val layerCounts = counts.map { case (n, c) => s"${JsonConfig.quote(n)}:$c" }.mkString(",")
       val total = counts.map(_._2).sum
       writer.write(
-        s"""],"metadata":{"generated":"${esc(generatedAt)}","source":"graft","target":"${esc(target)}","data_type":"$dataType","layers":{$layerCounts},"total_count":$total}}""")
+        s"""],"metadata":{"generated":${JsonConfig.quote(generatedAt)},"source":"graft","target":${JsonConfig.quote(target)},"data_type":"$dataType","layers":{$layerCounts},"total_count":$total}}""")
     } finally writer.close()
   }
 }

@@ -1,6 +1,8 @@
 package graft.`export`
 
+import graft.config.JsonConfig
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -102,12 +104,9 @@ object GeoParquet {
       primary: String,
       geomTypes: Seq[String],
       bbox: (Double, Double, Double, Double)): String = {
-    def esc(s: String) = s.flatMap {
-      case '"' => "\\\""; case '\\' => "\\\\"; case c => c.toString
-    }
-    val types = geomTypes.map(t => s""""${esc(t)}"""").mkString("[", ", ", "]")
-    s"""{"version": "1.1.0", "primary_column": "${esc(primary)}", """ +
-      s""""columns": {"${esc(primary)}": {"encoding": "WKB", """ +
+    val types = geomTypes.map(JsonConfig.quote).mkString("[", ", ", "]")
+    s"""{"version": "1.1.0", "primary_column": ${JsonConfig.quote(primary)}, """ +
+      s""""columns": {${JsonConfig.quote(primary)}: {"encoding": "WKB", """ +
       s""""geometry_types": $types, """ +
       s""""bbox": [${bbox._1}, ${bbox._2}, ${bbox._3}, ${bbox._4}]}}}"""
   }
@@ -192,8 +191,7 @@ object GeoParquet {
               case BinaryType    =>
                 g.add(name, Binary.fromConstantByteArray(row.getAs[Array[Byte]](i)))
               case DateType      => g.add(name, row.getAs[java.sql.Date](i).toLocalDate.toEpochDay.toInt)
-              case TimestampType => g.add(name, java.util.concurrent.TimeUnit.MILLISECONDS
-                .toMicros(row.getAs[java.sql.Timestamp](i).getTime))
+              case TimestampType | TimestampNTZType => g.add(name, DateTimeUtils.anyToMicros(row.get(i)))
               case other => throw new graft.ExportError(
                 s"unsupported type ${other.simpleString}",
                 Map("format" -> "geoparquet", "column" -> name))

@@ -12,7 +12,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * vote array — plus a 60-long `sequence` — per FEATURE).
   *
   * Semantics are IDENTICAL to
-  * `Dedup.simhashOfHashes(...)` over the unigram ([[graft.operators.Dedup.simhash]])
+  * the HOF vote fold (`HofReference.simhashOfHashes`, test scope) over the unigram ([[graft.operators.Dedup.simhash]])
   * or shingled ([[graft.operators.Dedup.simhashShingled]]) feature
   * hashes, and to the DuckDB oracle SQL:
   *   - tokens: `split(lower(trim(text)), "\s+")` (SQL trim = ASCII

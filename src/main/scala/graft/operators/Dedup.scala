@@ -362,18 +362,10 @@ object Dedup {
     * precedent) — the HOF `aggregate`/`zip_with` formulation
     * allocated a 60-long vote array plus a 60-long `sequence` per
     * FEATURE under interpreted lambdas; the expression is one tight
-    * loop with identical bits ([[simhashHof]] stays as the spec's
-    * reference implementation).
+    * loop with identical bits (the HOF formulation stays in test
+    * scope, `HofReference.simhashHof`, as the spec's reference).
     */
   def simhash(text: Column): Column = graft.functions.SimHash60(text, 1)
-
-  /** HOF reference formulation of [[simhash]] — kept for the
-    * native-vs-HOF equivalence spec only.
-    */
-  private[graft] def simhashHof(text: Column): Column =
-    simhashOfHashes(transform(array_distinct(split(lower(trim(text)), "\\s+")), t =>
-      shiftleft(graft.functions.RollingHash(t), 30)
-        .bitwiseOR(graft.functions.RollingHash(reverse(t)))))
 
   /** SimHash over word n-gram SHINGLES instead of unigrams (r13).
     * On templated/boilerplate corpora the unigram fingerprint
@@ -389,41 +381,8 @@ object Dedup {
   def simhashShingled(text: Column, n: Int = 3): Column = {
     require(n >= 1, "shingle width must be >= 1")
     // r14: native codegen'd expression (see [[simhash]]);
-    // [[simhashShingledHof]] is the spec's reference implementation.
+    // `HofReference.simhashShingledHof` is the spec's reference.
     graft.functions.SimHash60(text, n)
-  }
-
-  /** HOF reference formulation of [[simhashShingled]] — kept for the
-    * native-vs-HOF equivalence spec only.
-    */
-  private[graft] def simhashShingledHof(text: Column, n: Int = 3): Column = {
-    require(n >= 1, "shingle width must be >= 1")
-    val toks = split(lower(trim(text)), "\\s+")
-    val m = size(toks) - (n - 1)
-    val shingles = array_distinct(
-      when(m >= 1, transform(sequence(lit(1), m), i => concat_ws(" ", slice(toks, i, lit(n)))))
-        .otherwise(array().cast("array<string>")))
-    simhashOfHashes(transform(shingles, s =>
-      shiftleft(graft.functions.RollingHash(s), 30)
-        .bitwiseOR(graft.functions.RollingHash(reverse(s)))))
-  }
-
-  /** Shared bit-vote fold: per bit, sum +1/−1 votes across the
-    * (distinct) feature hashes; bit set if the vote is positive.
-    * No shuffle, no UDF.
-    */
-  private def simhashOfHashes(hashes: Column): Column = {
-    val votes = aggregate(
-      hashes,
-      array_repeat(lit(0L), SimhashBits),
-      (acc, h) =>
-        zip_with(acc, sequence(lit(0), lit(SimhashBits - 1)),
-          (a, bit) => a + when(call_function("shiftright", h, bit.cast("int")).bitwiseAND(1) === 1, 1L).otherwise(-1L)))
-    aggregate(
-      zip_with(votes, sequence(lit(0), lit(SimhashBits - 1)),
-        (v, bit) => when(v > 0, call_function("shiftleft", lit(1L), bit.cast("int"))).otherwise(0L)),
-      lit(0L),
-      (acc, b) => acc.bitwiseOR(b))
   }
 
   /** Hamming distance between two simhash fingerprints. */

@@ -26,11 +26,6 @@ object Similarity {
   def norm(a: Column): Column =
     sqrt(aggregate(transform(a, x => x.cast("double") * x.cast("double")), lit(0.0), (acc, v) => acc + v))
 
-  /** HOF formulation — kept as the executable spec the native
-    * expression is pinned against.
-    */
-  def cosineHof(a: Column, b: Column): Column = dot(a, b) / (norm(a) * norm(b))
-
   /** Native codegen'd cosine (identical arithmetic; see CosineSim). */
   def cosine(a: Column, b: Column): Column = graft.functions.CosineSim(a, b)
 

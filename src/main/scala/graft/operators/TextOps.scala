@@ -97,16 +97,7 @@ object TextOps {
   def fingerprint(text: Column): Column =
     graft.functions.RollingHash(normalized(text))
 
-  /** Reference formulation via higher-order built-ins — semantics
-    * identical to [[fingerprint]]; kept as the portable fallback and
-    * the cross-check for the native expression.
-    */
-  def fingerprintHof(text: Column): Column = {
-    val chars = split(normalized(text), "")
-    aggregate(chars, lit(0L), (acc, ch) => (acc * 31 + ascii(ch)) % 1000000007L)
-  }
-
-  private def normalized(text: Column): Column =
+  private[operators] def normalized(text: Column): Column =
     lower(regexp_replace(trim(text), "\\s+", " "))
 
   /** Character-level Shannon entropy (nats) — the gibberish/

@@ -1,5 +1,6 @@
 package graft.sources
 
+import graft.config.JsonConfig
 import org.apache.hadoop.fs.{FileSystem, Path => HPath}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
@@ -62,17 +63,17 @@ final class DumpStore(spark: SparkSession, basePath: String) {
       metaCache.remove((release, theme))
       None
     } else metaCache.get((release, theme)).orElse {
-        val in = fs.open(p)
-        val txt =
-          try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-          finally in.close()
-        def field(k: String): Option[String] =
-          s""""$k"\\s*:\\s*"?([^",}]*)"?""".r.findFirstMatchIn(txt).map(_.group(1))
+        // A sidecar cut short by a crash does not parse: the dump is
+        // incomplete, and the next ensure rewrites it.
+        val meta =
+          try Some(JsonConfig.read(spark, p.toString))
+          catch { case _: graft.ConfigError => None }
+        def field(k: String): Option[String] = meta.flatMap(JsonConfig.text(_, k))
         val entry = for {
           r <- field("release"); t <- field("theme")
-          n <- field("rows"); at <- field("ensured_at")
+          n <- field("rows").flatMap(_.toLongOption); at <- field("ensured_at")
           if field("is_complete").contains("true")
-        } yield DumpEntry(r, t, n.toLong, at)
+        } yield DumpEntry(r, t, n, at)
         entry.foreach(metaCache.put((release, theme), _))
         entry
     }
@@ -89,17 +90,18 @@ final class DumpStore(spark: SparkSession, basePath: String) {
   def ensure(release: String, theme: String, ensuredAt: String, force: Boolean = false)(
       fetch: => DataFrame): String = {
     // Validate at WRITE time: release/theme/ensuredAt are free-form
-    // CLI input embedded in both the metadata JSON (parsed with a
-    // deliberately simple regex) and filesystem paths. A `,`, `}`,
-    // `"` or path separator would make a COMPLETED dump unreadable
-    // to exists()/list() — reject it before any bytes land.
+    // CLI input; release and theme become path segments
+    // (`release=<R>/_dump_theme=<T>.json`), and list() recovers them
+    // from those names. A path separator, `=` or an empty name would
+    // make a COMPLETED dump unreachable — reject it before any bytes
+    // land. ensured_at follows the same rule to stay a plain stamp.
     Seq("release" -> release, "theme" -> theme, "ensured_at" -> ensuredAt).foreach {
       case (what, v) =>
         if (!(v.nonEmpty && v.forall(ch =>
             ch.isLetterOrDigit || ch == '.' || ch == '_' || ch == '-' || ch == ':')))
           throw new graft.ConfigError(
             s"dump $what '$v' must be non-empty [A-Za-z0-9._:-] " +
-              "(it is embedded in metadata JSON and storage paths)",
+              "(it names storage paths)",
             Map("release" -> release, "theme" -> theme, "stage" -> "ensure-dump"))
     }
     val data = dataPath(release, theme)
@@ -114,9 +116,8 @@ final class DumpStore(spark: SparkSession, basePath: String) {
           org.apache.spark.sql.functions.lit(1)).as("rows"))
         .write.mode("overwrite").parquet(data)
       val rows = obs.get("rows").asInstanceOf[Long]
-      val meta =
-        s"""{"release":"$release","theme":"$theme","rows":$rows,""" +
-          s""""is_complete":true,"ensured_at":"$ensuredAt"}"""
+      val meta = JsonConfig.obj("release" -> release, "theme" -> theme, "rows" -> rows,
+        "is_complete" -> true, "ensured_at" -> ensuredAt)
       val out = fs.create(new HPath(metaPath(release, theme)), true)
       try out.write(meta.getBytes("UTF-8"))
       finally out.close()
@@ -185,16 +186,10 @@ final class DumpStore(spark: SparkSession, basePath: String) {
   /** The store-base catalog file, same shape the reference probes. */
   def catalogPath: String = s"$basePath/catalog.json"
 
-  private def catalogLatest(): Option[String] = {
-    val p = new HPath(catalogPath)
-    if (!fs.exists(p)) None
+  private def catalogLatest(): Option[String] =
+    if (!fs.exists(new HPath(catalogPath))) None
     else {
-      val in = fs.open(p)
-      val txt =
-        try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        finally in.close()
-      val latest = """"latest"\s*:\s*"([^"]*)"""".r
-        .findFirstMatchIn(txt).map(_.group(1)).filter(_.nonEmpty)
+      val latest = JsonConfig.text(JsonConfig.read(spark, catalogPath), "latest").filter(_.nonEmpty)
       // Mirror the reference's failure contract: a catalog that omits
       // (or blanks) "latest" is an error, not a silent fallback —
       // settings.py:53-55 raises ValueError.
@@ -204,7 +199,6 @@ final class DumpStore(spark: SparkSession, basePath: String) {
           Map("stage" -> "resolve-release"))
       latest
     }
-  }
 
   /** Newest release with at least one complete theme, or the
     * catalog's pin when one exists.

@@ -1,5 +1,6 @@
 package graft.util
 
+import graft.config.JsonConfig
 import java.io.PrintStream
 
 /**
@@ -65,16 +66,6 @@ final class RunLog(
   private def redact(key: String, value: String): String =
     if (secretKeys.exists(key.toLowerCase.contains)) "[REDACTED]" else value
 
-  private def jsonEscape(s: String): String = s.flatMap {
-    case '"' => "\\\""
-    case '\\' => "\\\\"
-    case '\n' => "\\n"
-    case '\r' => "\\r"
-    case '\t' => "\\t"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  }
-
   private def render(level: String, event: String, fields: Seq[(String, Any)]): String = {
     val all = context ++ fields.map { case (k, v) => k -> String.valueOf(v) }
     (Seq("timestamp" -> clock().toString, "level" -> level, "event" -> event) ++
@@ -82,8 +73,7 @@ final class RunLog(
       .map { case (k, v) =>
         val numeric = v.nonEmpty && v.count(_ == '.') <= 1 &&
           v.exists(_.isDigit) && v.matches("-?\\d+(\\.\\d+)?")
-        "\"" + jsonEscape(k) + "\":" +
-          (if (numeric) v else "\"" + jsonEscape(v) + "\"")
+        JsonConfig.quote(k) + ":" + (if (numeric) v else JsonConfig.quote(v))
       }
       .mkString("{", ",", "}")
   }

@@ -1,5 +1,6 @@
 package graft.util
 
+import graft.config.JsonConfig
 import org.apache.spark.scheduler._
 import scala.collection.concurrent.TrieMap
 
@@ -126,7 +127,7 @@ final class StageMetricsListener extends SparkListener {
           s""""disk_spill_bytes":${a.diskSpillBytes},""" +
           s""""peak_execution_memory":${a.peakExecutionMemory}"""
       }
-      "\"" + g + "\":{" + body + "}"
+      JsonConfig.quote(g) + ":{" + body + "}"
     }
     entries.mkString("{", ",", "}")
   }

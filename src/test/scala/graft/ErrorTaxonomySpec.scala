@@ -12,8 +12,18 @@ import org.apache.spark.sql.functions._
 class ErrorTaxonomySpec extends SparkSpec {
   import spark.implicits._
 
-  private def tmp(): String =
-    java.nio.file.Files.createTempDirectory("graft_errspec_").toString
+  /** Every dir and file the spec creates; deleted when it finishes. */
+  private val created = scala.collection.mutable.ArrayBuffer.empty[java.nio.file.Path]
+
+  private def tmp(): String = {
+    val d = java.nio.file.Files.createTempDirectory("graft_errspec_")
+    created += d
+    d.toString
+  }
+
+  override def afterAll(): Unit =
+    try created.foreach(graft.util.Fs.deleteRecursively)
+    finally super.afterAll()
 
   test("ensure-dump fetch failure raises OvertureError with {release, theme, stage} and the cause") {
     val store = new DumpStore(spark, tmp())
@@ -80,6 +90,7 @@ class ErrorTaxonomySpec extends SparkSpec {
   test("CLI publish enriches a PublishError with {country, command}") {
     val svc = tmp()
     val catalog = java.nio.file.Files.createTempFile("graft_cat_", ".json")
+    created += catalog
     java.nio.file.Files.write(catalog,
       """[{"name": "roads", "theme": "supplier", "type": "site",
         |  "upsert_key": "s_suppkey"}]""".stripMargin.getBytes("UTF-8"))

@@ -4,10 +4,12 @@ import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Keeps the staging policy and the session factory in one place each:
-  * JVM-exit hooks only in `SessionStage`, `SparkSession.builder()` only
-  * in `GraftSession`, and no module-level mutable map in a query module
-  * (query modules stage through `SessionStage` instead).
+/** Keeps the staging policy, the session factory and the JSON/YAML
+  * codec in one place each: JVM-exit hooks only in `SessionStage`,
+  * `SparkSession.builder()` only in `GraftSession`, no module-level
+  * mutable map in a query module (query modules stage through
+  * `SessionStage` instead), and JSON string escaping, Jackson mappers
+  * and config-document parsing only in `config/JsonConfig`.
   */
 class SourceGuardSpec extends AnyFunSuite {
 
@@ -27,6 +29,14 @@ class SourceGuardSpec extends AnyFunSuite {
   private val moduleMap =
     """(?m)^  (?:private(?:\[\w+\])?\s+)?(?:lazy\s+)?val\s+\w+\s*(?::[^=\n]*)?=\s*(?:new\s+)?[\w.]*(?:ConcurrentHashMap|TrieMap|mutable\.\w*Map)\b""".r
 
+  /** A hand-written JSON string escaper's quote case. */
+  private val stringEscaper = """case\s*'"'\s*=>""".r
+  /** Spark's JSON reader over an in-memory document. */
+  private val inMemoryJsonRead =
+    """\.json\(\s*(?:Seq|List|Vector|Array)\s*\(|\.json\([^)\n]*\.toDS\(""".r
+  private val mapper = """\b(?:ObjectMapper|JsonMapper|YAMLMapper|JsonFactory|Yaml)\s*[.(\[]""".r
+  private val codec = "graft/config/JsonConfig.scala"
+
   private def offenders(files: Map[String, String], re: scala.util.matching.Regex): Seq[String] =
     files.collect { case (f, text) if re.findFirstIn(text).isDefined => f }.toSeq.sorted
 
@@ -39,6 +49,12 @@ class SourceGuardSpec extends AnyFunSuite {
     samples.foreach(s => assert(moduleMap.findFirstIn(s).isDefined, s))
     assert(moduleMap.findFirstIn("    val local = TrieMap.empty[Int, Int]\n").isEmpty)
     assert(sessionBuilder.findFirstIn("org.apache.spark.sql.SparkSession.builder()").isDefined)
+    assert(stringEscaper.findFirstIn("      case '\"'  => \"\\\\\\\"\"").isDefined)
+    assert(inMemoryJsonRead.findFirstIn("spark.read.json(Seq(json).toDS())").isDefined)
+    assert(inMemoryJsonRead.findFirstIn("spark.read.json(texts.toDS())").isDefined)
+    assert(inMemoryJsonRead.findFirstIn("""spark.read.json(s"$dir/part")""").isEmpty)
+    assert(mapper.findFirstIn("new ObjectMapper().readTree(in)").isDefined)
+    assert(mapper.findFirstIn("YAMLMapper.builder()").isDefined)
   }
 
   test("sources are where the guard looks") {
@@ -58,5 +74,13 @@ class SourceGuardSpec extends AnyFunSuite {
   test("no query module holds a module-level mutable map") {
     val queries = sources.filter(_._1.startsWith("graft/queries/"))
     assert(offenders(queries, moduleMap).isEmpty)
+  }
+
+  test("JSON/YAML documents are parsed and escaped only in the Jackson codec") {
+    assert(!sources.contains("graft/config/Yaml.scala"))
+    assert(sources.contains(codec))
+    assert(offenders(sources, stringEscaper).isEmpty)
+    assert(offenders(sources, inMemoryJsonRead).isEmpty)
+    assert(offenders(sources, mapper) == Seq(codec))
   }
 }

@@ -38,7 +38,7 @@ class ConfigSpec extends SparkSpec {
         |  "building_filter":"subtype = 'education'",
         |  "is_multilayer":"true","sector_title":"Education Facilities"},
         | {"name":"roads","theme":"transportation","type":"segment"}]""".stripMargin)
-    val cat = QueryConfig.catalogFromJson(spark, f.toString)
+    val cat = QueryConfig.catalog(spark, f.toString)
     assert(cat("education").isMultilayer && cat("education").buildingFilter.isDefined)
     assert(cat("roads").filter.isEmpty && cat("roads").upsertKey == "id")
   }

@@ -6,7 +6,9 @@ import org.apache.spark.sql.{Row, SparkSession}
 
 /** The driver-side JSON loaders against the Spark JSON reader they
   * replaced, which is kept here as the oracle: `spark.read.json`
-  * with `multiLine`, then one QueryConfig / Country per row.
+  * with `multiLine`, then one QueryConfig / Country per row. Test
+  * names say `catalogFromJson` for the JSON layout of
+  * `QueryConfig.catalog`.
   */
 class JsonConfigSpec extends SparkSpec {
 
@@ -72,7 +74,7 @@ class JsonConfigSpec extends SparkSpec {
   for ((label, json) <- catalogs)
     test(s"catalogFromJson matches the Spark JSON reader: $label") {
       val path = file(json)
-      assert(QueryConfig.catalogFromJson(spark, path) == SparkReaderOracle.catalog(spark, path))
+      assert(QueryConfig.catalog(spark, path) == SparkReaderOracle.catalog(spark, path))
     }
 
   test("CountryRegistry.fromJson matches the Spark JSON reader") {
@@ -91,7 +93,7 @@ class JsonConfigSpec extends SparkSpec {
   }
 
   private val loaders = Seq[(String, String => Any)](
-    "catalogFromJson" -> (p => QueryConfig.catalogFromJson(spark, p)),
+    "catalogFromJson" -> (p => QueryConfig.catalog(spark, p)),
     "CountryRegistry.fromJson" -> (p => CountryRegistry.fromJson(spark, p)))
 
   for ((label, load) <- loaders)
@@ -106,12 +108,12 @@ class JsonConfigSpec extends SparkSpec {
     }
 
   test("catalogFromJson: an entry without name or theme raises ConfigError naming the entry") {
-    val noName = configError(p => QueryConfig.catalogFromJson(spark, p),
+    val noName = configError(p => QueryConfig.catalog(spark, p),
       """[{"name":"a","theme":"t"},{"theme":"t"}]""")
     assert(noName.context.get("entry").contains("1") && noName.getMessage.contains("'name'"))
-    val noTheme = configError(p => QueryConfig.catalogFromJson(spark, p), """[{"name":"roads"}]""")
+    val noTheme = configError(p => QueryConfig.catalog(spark, p), """[{"name":"roads"}]""")
     assert(noTheme.context.get("entry").contains("roads") && noTheme.getMessage.contains("'theme'"))
-    val badBool = configError(p => QueryConfig.catalogFromJson(spark, p),
+    val badBool = configError(p => QueryConfig.catalog(spark, p),
       """[{"name":"roads","theme":"t","is_multilayer":"yes"}]""")
     assert(badBool.context.get("entry").contains("roads"))
   }
@@ -127,7 +129,28 @@ class JsonConfigSpec extends SparkSpec {
 
   test("a missing file is a ConfigError naming the path") {
     val path = Files.createTempDirectory("graft-config").resolve("absent.json").toString
-    val e = intercept[ConfigError](QueryConfig.catalogFromJson(spark, path))
+    val e = intercept[ConfigError](QueryConfig.catalog(spark, path))
     assert(e.context.get("path").contains(path))
+  }
+
+  test("a JSON catalog reads the agol block and takes upsert_key from it first") {
+    val cat = QueryConfig.catalog(spark, file(
+      """[{"name":"a","theme":"t","upsert_key":"top","agol":{"upsert_key":"gers_id","tags":"{tags_base}"}},
+        | {"name":"b","theme":"t","upsert_key":"top"}]""".stripMargin))
+    assert(cat("a").upsertKey == "gers_id" && cat("a").agol("tags") == "{tags_base}")
+    assert(cat("b").upsertKey == "top" && cat("b").agol.isEmpty)
+  }
+
+  test("a JSON parse error names the path and line") {
+    val e = configError(p => QueryConfig.catalog(spark, p), "[{\"name\":\"a\",\n\"theme\"}]")
+    assert(e.context.get("line").contains("2"))
+  }
+
+  test("quote escapes quotes, backslashes and every control character") {
+    val raw = "a\"b\\c/\n\r\t\b\f\u0001\u001f é"
+    val q = JsonConfig.quote(raw)
+    assert(q == "\"a\\\"b\\\\c/\\n\\r\\t\\b\\f\\u0001\\u001F é\"")
+    assert(JsonConfig.parse(q, "q.json").asText == raw)
+    assert(!q.exists(_ < ' '))
   }
 }

@@ -1,21 +1,21 @@
 package graft.config
 
-import org.scalatest.funsuite.AnyFunSuite
+import com.fasterxml.jackson.databind.JsonNode
+import graft.{ConfigError, SparkSpec}
 
-import graft.ConfigError
-import graft.config.Yaml._
-
-/** L2 (round 10): the YAML reader loads the reference's own
-  * queries.yml verbatim and drives the same catalog model the JSON
-  * form feeds; unsupported YAML constructs fail as typed
-  * ConfigErrors naming the line.
+/** L2: the catalog loader reads the reference's own queries.yml
+  * verbatim (Jackson's YAML module) and drives the same catalog model
+  * the JSON form feeds; malformed YAML fails as a typed ConfigError
+  * naming the path and line.
   */
-class YamlSpec extends AnyFunSuite {
+class YamlSpec extends SparkSpec {
 
   private val fixture = "src/test/resources/queries.yml"
 
+  private def yaml(src: String): JsonNode = JsonConfig.parse(src, "test.yml")
+
   test("reference queries.yml loads 1:1 into the QueryConfig catalog") {
-    val cat = QueryConfig.catalogFromYaml(fixture)
+    val cat = QueryConfig.catalog(spark, fixture)
     assert(cat.keySet == Set(
       "roads", "buildings", "education", "health", "markets", "places", "power"))
 
@@ -27,6 +27,9 @@ class YamlSpec extends AnyFunSuite {
     assert(roads.upsertKey == "id") // read from the agol block
     assert(roads.agol("item_title") == "{title}")
     assert(roads.agol("tags") == "{tags_base} + ['transportation', 'roads', 'foundational_data']")
+    // every agol block has the same eight templates, item_id commented out
+    assert(cat.values.forall(_.agol.keySet == Set("item_title", "snippet", "description",
+      "service_name", "tags", "access_information", "license_info", "upsert_key")))
 
     val education = cat("education")
     assert(education.theme == "places" && education.typeName == "place")
@@ -44,7 +47,7 @@ class YamlSpec extends AnyFunSuite {
   }
 
   test("catalog entries drive MetadataTemplate exactly as the JSON form") {
-    val cat = QueryConfig.catalogFromYaml(fixture)
+    val cat = QueryConfig.catalog(spark, fixture)
     val vars = Map(
       "title" -> "Afghanistan Road Network",
       "tags_base" -> "['afg']")
@@ -55,7 +58,7 @@ class YamlSpec extends AnyFunSuite {
   }
 
   test("scalar typing: bool/int/float/null/quoted/flow/block lists") {
-    val y = Yaml.parse(
+    val y = yaml(
       """a: 7
         |b: -3.5
         |c: true
@@ -68,23 +71,30 @@ class YamlSpec extends AnyFunSuite {
         |  - key: v
         |    other: 2
         |i: plain with spaces   # trailing comment
-        |""".stripMargin).asInstanceOf[YMap]
-    assert(y.get("a").contains(YLong(7)))
-    assert(y.get("b").contains(YDouble(-3.5)))
-    assert(y.get("c").contains(YBool(true)))
-    assert(y.get("d").contains(YNull))
-    assert(y.get("e").contains(YStr("quoted # not a comment")))
-    assert(y.get("f").contains(YStr("single 'escaped'")))
-    assert(y.get("g").contains(YList(Vector(YLong(1), YStr("two"), YStr("three, four")))))
-    val h = y.get("h").get.asInstanceOf[YList]
-    assert(h.items(0) == YStr("x"))
-    val hm = h.items(1).asInstanceOf[YMap]
-    assert(hm.get("key").contains(YStr("v")) && hm.get("other").contains(YLong(2)))
-    assert(y.get("i").contains(YStr("plain with spaces")))
+        |j: on
+        |k: yes
+        |l: No
+        |""".stripMargin)
+    assert(y.get("a").isInt && y.get("a").asInt == 7)
+    assert(y.get("b").isDouble && y.get("b").asDouble == -3.5)
+    assert(y.get("c").isBoolean && y.get("c").asBoolean)
+    assert(y.get("d").isNull)
+    assert(y.get("e").asText == "quoted # not a comment")
+    assert(y.get("f").asText == "single 'escaped'")
+    val g = y.get("g")
+    assert(g.size == 3 && g.get(0).isInt && g.get(0).asInt == 1 &&
+      g.get(1).asText == "two" && g.get(2).asText == "three, four")
+    val h = y.get("h")
+    assert(h.get(0).asText == "x")
+    assert(h.get(1).get("key").asText == "v" && h.get(1).get("other").asInt == 2)
+    assert(y.get("i").asText == "plain with spaces")
+    // YAML 1.1's boolean words stay the strings they are written as
+    for ((k, v) <- Seq("j" -> "on", "k" -> "yes", "l" -> "No"))
+      assert(y.get(k).isTextual && y.get(k).asText == v, k)
   }
 
   test("multi-line double-quoted scalars fold like agol_metadata.yml templates") {
-    val y = Yaml.parse(
+    val t = yaml(
       """templates:
         |  description: "
         |    First line<br>
@@ -92,33 +102,46 @@ class YamlSpec extends AnyFunSuite {
         |
         |    After blank."
         |  snippet: "one line"
-        |""".stripMargin).asInstanceOf[YMap]
-    val t = y.get("templates").get.asInstanceOf[YMap]
-    assert(t.get("snippet").contains(YStr("one line")))
-    val d = t.get("description").get.asInstanceOf[YStr].v
-    assert(d == " First line<br> second line.<br>\nAfter blank.")
+        |""".stripMargin).get("templates")
+    assert(t.get("snippet").asText == "one line")
+    assert(t.get("description").asText == " First line<br> second line.<br>\nAfter blank.")
   }
 
   test("unsupported constructs raise typed ConfigError naming the line") {
-    def err(src: String): ConfigError = intercept[ConfigError](Yaml.parse(src))
-    assert(err("a:\n\tb: 1").getMessage.contains("tab in indentation"))
-    assert(err("a: &anchor v").getMessage.contains("anchors"))
-    assert(err("a: *anchor").getMessage.contains("anchors"))
-    assert(err("a: !!binary abc").getMessage.contains("tags"))
-    assert(err("a: {k: v}").getMessage.contains("flow mappings"))
-    assert(err("a: |\n  block").getMessage.contains("block scalars"))
-    assert(err("%YAML 1.2\na: 1").getMessage.contains("directives"))
-    assert(err("---\na: 1").getMessage.contains("multi-document"))
-    assert(err("a: \"unterminated").getMessage.contains("unterminated"))
-    val e = err("a: 1\n\tb: 2")
-    assert(e.context.get("line").contains("2"))
+    def err(src: String): ConfigError = intercept[ConfigError](yaml(src))
+    val tab = err("a: 1\n\tb: 2")
+    assert(tab.getMessage.contains("TAB"))
+    assert(tab.context.get("line").contains("2") && tab.context.get("path").contains("test.yml"))
+    assert(err("a:\n\tb: 1").context.get("line").contains("2"))
+    val quote = err("a: 1\nb: \"unterminated")
+    assert(quote.getMessage.contains("end of stream"))
+    assert(quote.context.get("line").contains("2"))
+    // Jackson would read an alias as its anchor's name: refused instead
+    val alias = err("base: &b v\nalias: *b\n")
+    assert(alias.getMessage.contains("aliases") && alias.context.get("line").contains("2"))
+  }
+
+  test("anchors, flow mappings, block scalars and document markers parse") {
+    val y = yaml(
+      """---
+        |base: &b v
+        |flow: {k: v, n: 2}
+        |block: |
+        |  line one
+        |  line two
+        |""".stripMargin)
+    assert(y.get("base").asText == "v")
+    assert(y.get("flow").get("k").asText == "v" && y.get("flow").get("n").asInt == 2)
+    assert(y.get("block").asText == "line one\nline two\n")
   }
 
   test("missing required keys are ConfigErrors naming the entry") {
     val tmp = java.nio.file.Files.createTempFile("cat", ".yml")
-    java.nio.file.Files.write(tmp, "noType:\n  theme: places\n".getBytes)
-    val e = intercept[ConfigError](QueryConfig.catalogFromYaml(tmp.toString))
-    assert(e.getMessage.contains("noType") && e.getMessage.contains("'type'"))
-    java.nio.file.Files.delete(tmp)
+    try {
+      java.nio.file.Files.write(tmp, "noType:\n  theme: places\n".getBytes)
+      val e = intercept[ConfigError](QueryConfig.catalog(spark, tmp.toString))
+      assert(e.getMessage.contains("noType") && e.getMessage.contains("'type'"))
+      assert(e.context.get("entry").contains("noType"))
+    } finally java.nio.file.Files.delete(tmp)
   }
 }

@@ -321,4 +321,32 @@ class ExportSpec extends SparkSpec {
     assert(meta.getString(1) == """t"gt""")
     assert(!parsed.columns.contains("_corrupt_record"))
   }
+
+  test("GeoParquet writes TIMESTAMP and TIMESTAMP_NTZ as exact epoch microseconds") {
+    val df = spark.sql(
+      """SELECT 1L AS id, 1.5D AS x, 2.5D AS y,
+        |  TIMESTAMP'2024-01-02 03:04:05.123456' AS t,
+        |  TIMESTAMP_NTZ'2024-01-02 03:04:05.123456' AS tn,
+        |  TIMESTAMP'1969-12-31 23:59:59.999999' AS neg""".stripMargin)
+      .withColumn("geom", graft.functions.Wkb.wkbFromXY(col("x"), col("y")))
+    val dir = tmpDir() + "/ts.geoparquet"
+    GeoParquet.write(df, "geom", dir)
+    val back = spark.read.parquet(dir).select("t", "tn", "neg").head()
+    // the physical column stays INT64 (no logical annotation): Spark reads a long
+    assert(back.getLong(0) == 1704164645123456L)
+    assert(back.getLong(1) == 1704164645123456L)
+    assert(back.getLong(2) == -1L)
+  }
+
+  test("CountryCache metadata sidecar is valid JSON for any key text") {
+    val base = tmpDir() + "/cache"
+    val cache = new CountryCache(spark, base)
+    val key = CacheKey("A\"F", "pla\\ces", "place", "2026-01")
+    cache.put(key, pointsDf, "2026-01-01T00:00:00")
+    val meta = graft.config.JsonConfig.parse(
+      new String(Files.readAllBytes(Paths.get(base, key.relPath, "metadata.json")), "UTF-8"),
+      "metadata.json")
+    assert(meta.get("country").asText == "A\"F" && meta.get("theme").asText == "pla\\ces")
+    assert(meta.get("features").asLong == 20L && meta.get("cached_at").asText == "2026-01-01T00:00:00")
+  }
 }

@@ -1,7 +1,7 @@
 package graft.functions
 
 import graft.{GraftSession, SparkSpec}
-import graft.operators.TextOps
+import graft.operators.{HofReference, TextOps}
 import org.apache.spark.sql.functions._
 
 class FunctionsSpec extends SparkSpec {
@@ -10,7 +10,7 @@ class FunctionsSpec extends SparkSpec {
   test("RollingHash native expression matches the HOF formulation on real docs") {
     val diff = tables.documents
       .select(TextOps.fingerprint(col("text")).as("native"),
-        TextOps.fingerprintHof(col("text")).as("hof"))
+        HofReference.fingerprintHof(col("text")).as("hof"))
       .filter(col("native") =!= col("hof"))
       .count()
     assert(diff == 0)

@@ -32,14 +32,14 @@ class NativeExprSpec extends SparkSpec {
   }
 
   test("CosineSim matches the HOF fold formulation bit-for-bit") {
-    import graft.operators.Similarity
+    import graft.operators.{HofReference, Similarity}
     val vecs = Seq(
       (Array(1.0f, 2.0f, 3.0f), Array(3.0f, 2.0f, 1.0f)),
       (Array(0.1f, -0.7f, 0.33f), Array(0.9f, 0.02f, -0.5f)),
       (Array(1.0f, 0.0f, 0.0f), Array(1.0f, 0.0f, 0.0f))
     ).toDF("a", "b")
     val out = vecs.select(
-      Similarity.cosineHof($"a", $"b").as("hof"),
+      HofReference.cosineHof($"a", $"b").as("hof"),
       Similarity.cosine($"a", $"b").as("native")).collect()
     out.foreach(r => assert(r.getDouble(0) == r.getDouble(1))) // exact, not approx
   }

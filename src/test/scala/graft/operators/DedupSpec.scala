@@ -112,8 +112,8 @@ class DedupSpec extends SparkSpec {
     ).toDF("doc_id", "text"))
     for (n <- Seq(1, 3)) {
       val hof = mixed.select($"doc_id",
-        (if (n == 1) Dedup.simhashHof(col("text"))
-         else Dedup.simhashShingledHof(col("text"), n)).as("s"))
+        (if (n == 1) HofReference.simhashHof(col("text"))
+         else HofReference.simhashShingledHof(col("text"), n)).as("s"))
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       val native = mixed.select($"doc_id",
         graft.functions.SimHash60(col("text"), n).as("s"))

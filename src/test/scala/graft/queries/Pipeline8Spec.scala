@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.SparkSpec
-import graft.operators.{Geo, Similarity}
+import graft.operators.{Geo, HofReference, Similarity}
 import org.apache.spark.sql.functions._
 
 class Pipeline8Spec extends SparkSpec {
@@ -26,7 +26,7 @@ class Pipeline8Spec extends SparkSpec {
       .partitionBy(col("query_id"))
       .orderBy(col("score").desc, col("base_id"))
     val viaCosine = b.join(broadcast(q), col("base_id") =!= col("query_id"))
-      .withColumn("score", Similarity.cosineHof(col("bv"), col("qv")))
+      .withColumn("score", HofReference.cosineHof(col("bv"), col("qv")))
       .withColumn("rank", row_number().over(w).cast("long"))
       .filter(col("rank") <= 5)
       .select(col("query_id"), col("base_id"), col("rank"))

@@ -136,4 +136,32 @@ class DumpStoreSpec extends SparkSpec {
       graft.Cli.run(spark, Seq("ensure-dump", sfDir, base, "nonsense", Rel))
     }
   }
+
+  test("catalog.json's latest is read from the top level only") {
+    val base = tmp()
+    val store = new DumpStore(spark, base)
+    val catalog = java.nio.file.Paths.get(base, "catalog.json")
+    Files.write(catalog,
+      """{"links": [{"rel": "child", "latest": "1999-01-01.0"}], "latest": "2025-01-01.0"}"""
+        .getBytes("UTF-8"))
+    assert(store.resolveRelease("latest") == "2025-01-01.0")
+    // a nested "latest" alone is not the catalog's pin
+    Files.write(catalog, """{"links": [{"latest": "1999-01-01.0"}]}""".getBytes("UTF-8"))
+    intercept[graft.ConfigError] { store.resolveRelease("latest") }
+  }
+
+  test("a metadata sidecar cut short is an incomplete dump") {
+    val base = tmp()
+    val store = new DumpStore(spark, base)
+    store.ensure(Rel, "region", At)(tables.table("region"))
+    val rel = java.nio.file.Paths.get(base, s"release=$Rel")
+    Files.write(rel.resolve("_dump_theme=region.json"),
+      """{"release":"2026-01","theme":"region","rows":5,"is_compl""".getBytes("UTF-8"))
+    // drop the checksum sidecar so the short file is read, not rejected by its checksum
+    Files.deleteIfExists(rel.resolve("._dump_theme=region.json.crc"))
+    val fresh = new DumpStore(spark, base)
+    assert(!fresh.exists(Rel, "region") && fresh.list().isEmpty)
+    fresh.ensure(Rel, "region", At)(tables.table("region"))
+    assert(fresh.exists(Rel, "region"))
+  }
 }
