@@ -1,12 +1,14 @@
 package graft.`export`
 
 import java.io.{BufferedOutputStream, FileOutputStream}
-import java.nio.{ByteBuffer, ByteOrder}
+import java.nio.ByteBuffer
 
 import com.google.flatbuffers.FlatBufferBuilder
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.types._
+
+import graft.functions.Wkb
 
 /** FlatGeobuf writer — the reference's `fgb` direct-export format
   * (reference: src/o2agol/pipeline/source.py:631 maps 'fgb' →
@@ -60,34 +62,16 @@ object FlatGeobuf {
         Map("format" -> "fgb", "stage" -> "export"))
   }
 
-  private final case class Geom(kind: Int, rings: Array[Array[Double]])
-
-  private def readWkb(bytes: Array[Byte]): Geom = {
-    val buf = ByteBuffer.wrap(bytes)
-    buf.order(if (buf.get() == 0) ByteOrder.BIG_ENDIAN else ByteOrder.LITTLE_ENDIAN)
-    val kind = buf.getInt & 0xffff
-    def readPts(n: Int): Array[Double] = {
-      val a = new Array[Double](2 * n)
-      var i = 0
-      while (i < 2 * n) { a(i) = buf.getDouble; i += 1 }
-      a
-    }
-    kind match {
-      case 1 => Geom(1, Array(readPts(1)))
-      case 2 => Geom(2, Array(readPts(buf.getInt)))
-      case 3 => Geom(3, Array.fill(buf.getInt)(readPts(buf.getInt)))
-      case other =>
-        throw new graft.ExportError(
-          s"flatgeobuf writer supports WKB Point/LineString/Polygon, got type $other",
-          Map("format" -> "fgb", "stage" -> "export"))
-    }
-  }
+  private def readWkb(bytes: Array[Byte]): Wkb.Rings =
+    Wkb.decodeRings(bytes).getOrElse(throw new graft.ExportError(
+      "flatgeobuf writer supports WKB Point/LineString/Polygon; got another type or a malformed blob",
+      Map("format" -> "fgb", "stage" -> "export")))
 
   /** Geometry table: ends (slot 0, [uint], ring end indices — only
     * for multi-ring polygons), xy (slot 1, [double]), type (slot 6,
     * ubyte).
     */
-  private def buildGeometry(b: FlatBufferBuilder, g: Geom): Int = {
+  private def buildGeometry(b: FlatBufferBuilder, g: Wkb.Rings): Int = {
     val xyAll = if (g.rings.length == 1) g.rings(0) else g.rings.flatten
     val nPts = xyAll.length / 2
     // vectors before table; scalar elements added in reverse

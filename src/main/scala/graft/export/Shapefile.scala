@@ -6,6 +6,8 @@ import java.nio.{ByteBuffer, ByteOrder}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.types._
 
+import graft.functions.Wkb
+
 /** ESRI Shapefile writer — pure JVM, from the PUBLIC spec ("ESRI
   * Shapefile Technical Description", ESRI whitepaper, July 1998; the
   * same format GDAL's 'ESRI Shapefile' driver writes). Closes the
@@ -22,7 +24,8 @@ import org.apache.spark.sql.types._
   *
   * Geometry input is the engine's WKB convention (little-endian
   * Point=1 / LineString=2 / Polygon=3, the `graft.functions.Wkb`
-  * encoders). Ring orientation is normalized to the spec's contract
+  * encoders); EWKB SRID and Z/M variants are written as their 2D
+  * projection (`Wkb.decodeRings`). Ring orientation is normalized to the spec's contract
   * (outer rings clockwise, holes counter-clockwise) by signed area.
   *
   * Scale note: a shapefile is a SINGLE seekable file set with
@@ -47,33 +50,10 @@ object Shapefile {
   private val Wgs84Wkt =
     """GEOGCS["GCS_WGS_1984",DATUM["D_WGS_1984",SPHEROID["WGS_1984",6378137.0,298.257223563]],PRIMEM["Greenwich",0.0],UNIT["Degree",0.0174532925199433]]"""
 
-  // ---- WKB reading (driver-side; the writer consumes the engine's
-  // ---- own little-endian encoders but honors the byte-order flag).
-
-  private final case class Geom(kind: Int, rings: Array[Array[Double]])
-
-  private def readWkb(bytes: Array[Byte]): Geom = {
-    val buf = ByteBuffer.wrap(bytes)
-    buf.order(if (buf.get() == 0) ByteOrder.BIG_ENDIAN else ByteOrder.LITTLE_ENDIAN)
-    val kind = buf.getInt & 0xffff
-    def readPts(n: Int): Array[Double] = {
-      val a = new Array[Double](2 * n)
-      var i = 0
-      while (i < 2 * n) { a(i) = buf.getDouble; i += 1 }
-      a
-    }
-    kind match {
-      case 1 => Geom(1, Array(readPts(1)))
-      case 2 => Geom(2, Array(readPts(buf.getInt)))
-      case 3 =>
-        val nRings = buf.getInt
-        Geom(3, Array.fill(nRings)(readPts(buf.getInt)))
-      case other =>
-        throw new graft.ExportError(
-          s"shapefile writer supports WKB Point/LineString/Polygon, got type $other",
-          Map("format" -> "shp", "stage" -> "export"))
-    }
-  }
+  private def readWkb(bytes: Array[Byte]): Wkb.Rings =
+    Wkb.decodeRings(bytes).getOrElse(throw new graft.ExportError(
+      "shapefile writer supports WKB Point/LineString/Polygon; got another type or a malformed blob",
+      Map("format" -> "shp", "stage" -> "export")))
 
   /** 2×signed area (shoelace); > 0 = counter-clockwise. */
   private def signedArea2(ring: Array[Double]): Double = {

@@ -191,6 +191,48 @@ object Wkb {
     }
   }
 
+  /** A geometry as its base type and 2D rings, each ring interleaved
+    * x0, y0, x1, y1, …; a Point or LineString is one ring.
+    */
+  private[graft] final case class Rings(kind: Int, rings: Array[Array[Double]])
+
+  /** Decode a Point / LineString / Polygon blob, every polygon ring
+    * included, for the driver-side file writers (Shapefile,
+    * FlatGeobuf). SRID payloads are skipped and Z/M ordinates dropped
+    * as in [[decodeCoords]]. None on other types or malformed buffers.
+    */
+  private[graft] def decodeRings(bytes: Array[Byte]): Option[Rings] = {
+    if (bytes == null || bytes.length < 5) return None
+    val buf = java.nio.ByteBuffer.wrap(bytes)
+    buf.order(if (bytes(0) == 1) java.nio.ByteOrder.LITTLE_ENDIAN else java.nio.ByteOrder.BIG_ENDIAN)
+    buf.position(1)
+    val packed = parseTypeWord(buf)
+    if (packed < 0) return None
+    val stride = (packed & 7) * 8
+    def count(): Int = { require(buf.remaining >= 4); buf.getInt }
+    def ring(n: Int): Array[Double] = {
+      require(n >= 0 && buf.remaining.toLong >= stride.toLong * n)
+      val a = new Array[Double](2 * n)
+      var i = 0
+      while (i < n) {
+        a(2 * i) = buf.getDouble
+        a(2 * i + 1) = buf.getDouble
+        buf.position(buf.position() + stride - 16)
+        i += 1
+      }
+      a
+    }
+    try (packed >> 3) match {
+      case 1 => Some(Rings(1, Array(ring(1))))
+      case 2 => Some(Rings(2, Array(ring(count()))))
+      case 3 =>
+        val n = count()
+        require(n >= 0 && n <= buf.remaining / 4)
+        Some(Rings(3, Array.fill(n)(ring(count()))))
+      case _ => None
+    } catch { case _: IllegalArgumentException => None }
+  }
+
   /** Column form of [[pathLength]]. */
   def wkbPathLength(c: Column): Column =
     GraftBridge.column(WkbPathLength(GraftBridge.expression(c)))

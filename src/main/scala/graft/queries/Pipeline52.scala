@@ -90,19 +90,9 @@ object Pipeline52 {
   def stProgressTotal(spark: SparkSession, dir: String): DataFrame = {
     val (_, m) = graft.streaming.StreamMetrics.withMetrics(spark) { m =>
       StreamQueries.stWindowedAgg(spark, dir).count()
-      // Listener events arrive on the async bus — quiesce until the
-      // captured total is BOTH non-zero and stable across two
-      // consecutive reads. events.parquet is known non-empty, so a
-      // stable zero only means no QueryProgressEvent has been
-      // delivered yet; exiting there would be a timing flake, not a
-      // drained bus. The 10 s deadline stays as the failure path.
-      var prev = -1L
-      var cur = m.snapshot().map(_.inputRows).sum
-      val deadline = System.nanoTime() + 10000000000L
-      while ((cur == 0L || cur != prev) && System.nanoTime() < deadline) {
-        prev = cur; Thread.sleep(200)
-        cur = m.snapshot().map(_.inputRows).sum
-      }
+      // Every progress event is posted before the stream terminates;
+      // listeners receive them on the async bus, so drain it.
+      org.apache.spark.sql.GraftBridge.drainListenerBus(spark)
     }
     import spark.implicits._
     Seq(m.snapshot().map(_.inputRows).sum).toDF("total_input_rows")

@@ -1,10 +1,11 @@
 package graft.queries
 
 import graft.streaming.EventStream
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.util.Fs
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
-import java.nio.file.{Files, Paths}
+import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
+import java.nio.file.{Files, Path, Paths}
 
 /** Streaming queries registered as CORRECTNESS rows (SURVEY §2 I):
   * the windowed aggregation runs as a REAL Structured Streaming query
@@ -14,9 +15,6 @@ import java.nio.file.{Files, Paths}
   * compare, not only by MemoryStream ScalaTests.
   */
 object StreamQueries {
-
-  private def deleteRecursively(p: java.nio.file.Path): Unit =
-    graft.util.Fs.deleteRecursively(p)
 
   /** Write `df` as ONE parquet part file and hoist it to each
     * (dest, mtime): the file streaming source lists PLAIN files (a
@@ -38,36 +36,24 @@ object StreamQueries {
         Files.setLastModifiedTime(dest,
           java.nio.file.attribute.FileTime.fromMillis(mtime))
       }
-    } finally deleteRecursively(scratch)
+    } finally Fs.deleteRecursively(scratch)
   }
 
-  /** Run `body` with `spark.sql.shuffle.partitions` temporarily
-    * lowered for a streaming query. Stateful streaming fans out one
-    * state-store instance per shuffle partition PER MICRO-BATCH
-    * (each committing a checkpoint delta file); at local scale that
-    * fixed fan-out dwarfs the data. The partition count is pinned
-    * into the checkpoint at first start, so it is a per-query
+  /** Session tuning every stream runs under. Stateful streaming fans
+    * out one state-store instance per shuffle partition PER
+    * MICRO-BATCH (each committing a checkpoint delta file); at local
+    * scale that fixed fan-out dwarfs the data. The partition count is
+    * pinned into the checkpoint at first start, so it is a per-query
     * sizing decision — a production deployment sizes it to state
     * volume (keys/partition), exactly as done here.
     */
-  private def withStreamingShufflePartitions[A](spark: SparkSession, n: Int)(body: => A): A = {
-    // Tuning override for experiments (StreamTune); absent in
-    // normal runs.
-    val eff = sys.props.get("graft.stream.partitions").map(_.toInt).getOrElse(n)
-    val keys = Map(
-      "spark.sql.shuffle.partitions" -> eff.toString,
-      // AvailableNow appends a trailing no-data micro-batch by
-      // default; in these queries it neither emits nor evicts (the
-      // sentinel batches below do the flushing), so it's a pure
-      // state-store/checkpoint round-trip — skip it.
-      "spark.sql.streaming.noDataMicroBatches.enabled" -> "false")
-    val prev = keys.keys.map(k => k -> spark.conf.getOption(k)).toMap
-    keys.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body finally prev.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None)    => spark.conf.unset(k)
-    }
-  }
+  private val StreamConf = Map(
+    "spark.sql.shuffle.partitions" -> "4",
+    // AvailableNow appends a trailing no-data micro-batch by default;
+    // in these queries it neither emits nor evicts (the sentinel
+    // batches below do the flushing), so it's a pure
+    // state-store/checkpoint round-trip — skip it.
+    "spark.sql.streaming.noDataMicroBatches.enabled" -> "false")
 
   /** Checkpoint on the fastest scratch volume available: the state
     * store commits one delta file per partition per micro-batch, so
@@ -75,13 +61,64 @@ object StreamQueries {
     * memory-backed mount (when present) takes the fsync cost out of
     * these bounded correctness/bench runs; a production deployment
     * points this at its durable store instead — the knob is the
-    * same one (`checkpointLocation`).
+    * same one (the checkpoint location option).
     */
-  private def scratchCheckpointDir(): java.nio.file.Path = {
+  private def scratchCheckpointDir(name: String): Path = {
     val shm = Paths.get("/dev/shm")
-    if (Files.isDirectory(shm) && Files.isWritable(shm))
-      Files.createTempDirectory(shm, "graft_ckpt_")
-    else Files.createTempDirectory("graft_ckpt_")
+    val prefix = s"graft_ckpt_${name}_"
+    if (Files.isDirectory(shm) && Files.isWritable(shm)) Files.createTempDirectory(shm, prefix)
+    else Files.createTempDirectory(prefix)
+  }
+
+  /** The one streaming-query lifecycle: `df` drains its backlog under
+    * an AvailableNow trigger into the sink that `sink` configures
+    * (memory sink or `foreachBatch`), under [[StreamConf]]. The query
+    * is stopped, the conf restored and the checkpoint deleted whether
+    * the stream succeeds or fails; a caller that restarts a query on
+    * one checkpoint passes its own and deletes it itself.
+    */
+  private[queries] def run(spark: SparkSession, name: String, df: DataFrame,
+      checkpoint: Option[Path] = None)(
+      sink: DataStreamWriter[Row] => DataStreamWriter[Row]): Unit = {
+    val ckpt = checkpoint.getOrElse(scratchCheckpointDir(name))
+    val prev = StreamConf.keys.map(k => k -> spark.conf.getOption(k)).toMap
+    var query: StreamingQuery = null
+    try {
+      StreamConf.foreach { case (k, v) => spark.conf.set(k, v) }
+      query = sink(df.writeStream)
+        .option("checkpointLocation", ckpt.toString)
+        .trigger(Trigger.AvailableNow())
+        .start()
+      query.awaitTermination()
+    } finally {
+      if (query != null && query.isActive) query.stop()
+      prev.foreach {
+        case (k, Some(v)) => spark.conf.set(k, v)
+        case (k, None)    => spark.conf.unset(k)
+      }
+      if (checkpoint.isEmpty) Fs.deleteRecursively(ckpt)
+    }
+  }
+
+  /** `df` materialized on the driver: the result no longer reads the
+    * sink it came from, so the sink can be released. The rows are
+    * aggregate-sized.
+    */
+  private def collected(spark: SparkSession, df: DataFrame): DataFrame =
+    spark.createDataFrame(java.util.Arrays.asList(df.collect(): _*), df.schema)
+
+  /** Run `df` into a memory sink in `mode` and materialize `read`
+    * over the sink. The sink's temp view is dropped whether or not
+    * that succeeds: these queries run repeatedly (bench, verify), so
+    * sink tables must not accumulate in the session.
+    */
+  private[queries] def toMemory(spark: SparkSession, name: String, df: DataFrame, mode: String)(
+      read: DataFrame => DataFrame = identity): DataFrame = {
+    val view = name + "_" + java.util.UUID.randomUUID().toString.replace("-", "")
+    try {
+      run(spark, name, df)(_.format("memory").queryName(view).outputMode(mode))
+      collected(spark, read(spark.table(view)))
+    } finally spark.catalog.dropTempView(view)
   }
 
   /** The events schema, from the first data file's footer on the
@@ -98,7 +135,7 @@ object StreamQueries {
     * and sink every run — only the immutable INPUT staging is
     * shared, the same contract as [[lateStage]]/[[cdcStage]].
     */
-  private def plainStage(spark: SparkSession, dir: String): java.nio.file.Path =
+  private def plainStage(spark: SparkSession, dir: String): Path =
     graft.util.SessionStage.dir(spark, dir, "stream_events") { stage =>
       Files.copy(Paths.get(s"$dir/events.parquet"), stage.resolve("events.parquet"))
     }
@@ -107,7 +144,7 @@ object StreamQueries {
     * b_) shared by the at-least-once scenarios (dedup, foreachBatch
     * upsert).
     */
-  private def doubleStage(spark: SparkSession, dir: String): java.nio.file.Path =
+  private def doubleStage(spark: SparkSession, dir: String): Path =
     graft.util.SessionStage.dir(spark, dir, "stream_double") { stage =>
       Seq("a", "b").foreach { p =>
         Files.copy(Paths.get(s"$dir/events.parquet"), stage.resolve(s"${p}_events.parquet"))
@@ -128,34 +165,7 @@ object StreamQueries {
   private[graft] def stNoopFloor(spark: SparkSession, dir: String): DataFrame = {
     val stage = plainStage(spark, dir)
     val raw = spark.readStream.schema(eventsSchema(spark, dir)).parquet(stage.toString)
-    val out = raw.select(col("event_id")).limit(1)
-    val qName = "st_noop_floor_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    val ckpt = scratchCheckpointDir()
-    withStreamingShufflePartitions(spark, 4) {
-      val query = out.writeStream
-        .format("memory")
-        .queryName(qName)
-        .option("checkpointLocation", ckpt.toString)
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      query.awaitTermination()
-    }
-    deleteRecursively(ckpt)
-    drainMemorySink(spark, qName)
-  }
-
-  /** Materialize the memory sink's rows and DROP its temp view —
-    * these queries run repeatedly (bench min-of-two, verify), so
-    * sink tables must not accumulate in the session for the rest of
-    * its lifetime. The result rows are aggregate-sized.
-    */
-  private def drainMemorySink(spark: SparkSession, qName: String): DataFrame = {
-    val sink = spark.table(qName)
-    val rows = java.util.Arrays.asList(sink.collect(): _*)
-    val out = spark.createDataFrame(rows, sink.schema)
-    spark.catalog.dropTempView(qName)
-    out
+    toMemory(spark, "st_noop_floor", raw.select(col("event_id")).limit(1), "append")()
   }
 
   /** I1 end-to-end: tumbling 1-hour event-time windows over the
@@ -179,20 +189,7 @@ object StreamQueries {
     // the watermark — matching the batch twin exactly. (Append mode
     // would withhold the trailing windows; the append/eviction
     // behavior is covered by the MemoryStream ScalaTests.)
-    val qName = "st_windowed_agg_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    val ckpt = scratchCheckpointDir()
-    withStreamingShufflePartitions(spark, 4) {
-      val query = out.writeStream
-        .format("memory")
-        .queryName(qName)
-        .option("checkpointLocation", ckpt.toString)
-        .outputMode("complete")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      query.awaitTermination()
-    }
-    deleteRecursively(ckpt)
-    drainMemorySink(spark, qName) // stage is session-cached, not deleted here
+    toMemory(spark, "st_windowed_agg", out, "complete")() // stage is session-cached
   }
 
   /** Oracle: identical to the batch twin D5 (q_events_window). */
@@ -210,20 +207,7 @@ object StreamQueries {
     val raw = spark.readStream.schema(eventsSchema(spark, dir)).parquet(stage.toString)
     val events = graft.Tables.normalizeTs(raw)
     val out = EventStream.slidingAgg(events, "2 hours", "1 hour", "1 hour")
-    val qName = "st_sliding_window_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    val ckpt = scratchCheckpointDir()
-    withStreamingShufflePartitions(spark, 4) {
-      val query = out.writeStream
-        .format("memory")
-        .queryName(qName)
-        .option("checkpointLocation", ckpt.toString)
-        .outputMode("complete")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      query.awaitTermination()
-    }
-    deleteRecursively(ckpt)
-    drainMemorySink(spark, qName) // stage is session-cached, not deleted here
+    toMemory(spark, "st_sliding_window", out, "complete")() // stage is session-cached
   }
 
   /** Oracle: each event contributes to the two hourly-aligned
@@ -325,21 +309,8 @@ object StreamQueries {
       .parquet(stage.toString)
     val events = graft.Tables.normalizeTs(raw)
     val out = EventStream.sessionWindows(events, "30 minutes", "1 hour")
-    val qName = "st_session_agg_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    val ckpt = scratchCheckpointDir()
-    withStreamingShufflePartitions(spark, 4) {
-      val query = out.writeStream
-        .format("memory")
-        .queryName(qName)
-        .option("checkpointLocation", ckpt.toString)
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      query.awaitTermination()
-    }
-    deleteRecursively(ckpt)
     // stage is session-cached, not deleted here
-    drainMemorySink(spark, qName)
+    toMemory(spark, "st_session_agg", out, "append")()
       .filter(col("user_id") =!= -1L)
       .select(col("user_id"),
         unix_micros(col("session_start")).as("session_start_us"),
@@ -363,20 +334,7 @@ object StreamQueries {
       .join(broadcast(customer), col("user_id") === col("c_custkey"))
       .groupBy(col("c_mktsegment"))
       .agg(count(lit(1)).as("n_events"), round(sum(col("value")), 4).as("total_value"))
-    val qName = "st_enrich_join_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    val ckpt = scratchCheckpointDir()
-    withStreamingShufflePartitions(spark, 4) {
-      val query = out.writeStream
-        .format("memory")
-        .queryName(qName)
-        .option("checkpointLocation", ckpt.toString)
-        .outputMode("complete")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      query.awaitTermination()
-    }
-    deleteRecursively(ckpt)
-    drainMemorySink(spark, qName) // stage is session-cached, not deleted here
+    toMemory(spark, "st_enrich_join", out, "complete")() // stage is session-cached
   }
 
   /** Oracle: identical to the batch twin D12 (q_enrich_join). */
@@ -413,28 +371,11 @@ object StreamQueries {
     val pairs = clicks.join(
       errors,
       expr("c_user = e_user AND e_ts >= c_ts AND e_ts <= c_ts + interval 1 hour"))
-    val qName = "st_ss_join_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    val ckpt = scratchCheckpointDir()
-    withStreamingShufflePartitions(spark, 4) {
-      val query = pairs.writeStream
-        .format("memory")
-        .queryName(qName)
-        .option("checkpointLocation", ckpt.toString)
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      query.awaitTermination()
-    }
-    deleteRecursively(ckpt)
-    val agg = spark.table(qName)
-      .groupBy(col("c_user").as("user_id"))
-      .agg(count(lit(1)).as("n_pairs"),
-        round(sum(col("e_value")), 4).as("err_value"))
-    val rows = java.util.Arrays.asList(agg.collect(): _*)
-    val out = spark.createDataFrame(rows, agg.schema)
-    spark.catalog.dropTempView(qName)
     // stage is session-cached, not deleted here
-    out
+    toMemory(spark, "st_ss_join", pairs, "append")(
+      _.groupBy(col("c_user").as("user_id"))
+        .agg(count(lit(1)).as("n_pairs"),
+          round(sum(col("e_value")), 4).as("err_value")))
   }
 
   /** I12: watermarked stream-stream LEFT OUTER join — the semantics
@@ -508,31 +449,14 @@ object StreamQueries {
       side("error", "e", withId = true),
       expr("c_user = e_user AND e_ts >= c_ts AND e_ts <= c_ts + interval 1 hour"),
       "leftOuter")
-    val qName = "st_ss_leftouter_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    val ckpt = scratchCheckpointDir()
-    withStreamingShufflePartitions(spark, 4) {
-      val query = pairs.writeStream
-        .format("memory")
-        .queryName(qName)
-        .option("checkpointLocation", ckpt.toString)
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      query.awaitTermination()
-    }
-    deleteRecursively(ckpt)
-    val agg = spark.table(qName)
-      .filter(col("c_user") >= 0)
-      .groupBy(col("c_user").as("user_id"))
-      .agg(
-        count(lit(1)).as("n_rows"),
-        sum(when(col("e_id").isNotNull, 1L).otherwise(0L)).as("n_matched"),
-        sum(when(col("e_id").isNull, 1L).otherwise(0L)).as("n_unmatched"))
-    val rows = java.util.Arrays.asList(agg.collect(): _*)
-    val out = spark.createDataFrame(rows, agg.schema)
-    spark.catalog.dropTempView(qName)
     // stage is session-cached, not deleted here
-    out
+    toMemory(spark, "st_ss_leftouter", pairs, "append")(
+      _.filter(col("c_user") >= 0)
+        .groupBy(col("c_user").as("user_id"))
+        .agg(
+          count(lit(1)).as("n_rows"),
+          sum(when(col("e_id").isNotNull, 1L).otherwise(0L)).as("n_matched"),
+          sum(when(col("e_id").isNull, 1L).otherwise(0L)).as("n_unmatched")))
   }
 
   /** Batch LEFT JOIN twin: every click row, matched or not. */
@@ -566,26 +490,8 @@ object StreamQueries {
     val counts = graft.Tables.normalizeTs(stream)
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n_events"))
-    val qName = "st_update_agg_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    val ckpt = scratchCheckpointDir()
-    withStreamingShufflePartitions(spark, 4) {
-      val query = counts.writeStream
-        .format("memory")
-        .queryName(qName)
-        .option("checkpointLocation", ckpt.toString)
-        .outputMode("update")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      query.awaitTermination()
-    }
-    deleteRecursively(ckpt)
-    val agg = spark.table(qName)
-      .groupBy(col("event_type"))
-      .agg(max(col("n_events")).as("n_events"))
-    val rows = java.util.Arrays.asList(agg.collect(): _*)
-    val out = spark.createDataFrame(rows, agg.schema)
-    spark.catalog.dropTempView(qName)
-    out
+    toMemory(spark, "st_update_agg", counts, "update")(
+      _.groupBy(col("event_type")).agg(max(col("n_events")).as("n_events")))
   }
 
   /** The final update per key is the plain batch count. */
@@ -617,35 +523,22 @@ object StreamQueries {
     * single-copy table.
     */
   def stForeachBatchUpsert(spark: SparkSession, dir: String): DataFrame = {
-    val stage = doubleStage(spark, dir)
+    val stage = doubleStage(spark, dir) // session-cached, not deleted here
     val service = Files.createTempDirectory("graft_stream_fb_svc_")
-    val schema = eventsSchema(spark, dir)
-    val raw = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(stage.toString)
-    val slim = raw.select(col("event_id"), col("user_id"), col("value"))
-    val ckpt = scratchCheckpointDir()
-    withStreamingShufflePartitions(spark, 4) {
-      val query = slim.writeStream
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-          graft.export.FeatureService.publish(
-            batch.toDF(), service.toString, "events",
-            graft.export.PublishMode.Auto, upsertKey = "event_id")
-        }
-        .option("checkpointLocation", ckpt.toString)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      query.awaitTermination()
-    }
-    deleteRecursively(ckpt)
-    val agg = graft.export.FeatureService.readLayer(spark, service.toString, "events")
-      .groupBy(col("user_id"))
-      .agg(count(lit(1)).as("n_events"), round(sum(col("value")), 4).as("total_value"))
-    val rows = java.util.Arrays.asList(agg.collect(): _*)
-    val out = spark.createDataFrame(rows, agg.schema)
-    // stage is session-cached, not deleted here
-    deleteRecursively(service)
-    out
+    try {
+      val raw = spark.readStream.schema(eventsSchema(spark, dir))
+        .option("maxFilesPerTrigger", "1")
+        .parquet(stage.toString)
+      val slim = raw.select(col("event_id"), col("user_id"), col("value"))
+      run(spark, "st_foreachbatch_upsert", slim)(_.foreachBatch { (batch: Dataset[Row], _: Long) =>
+        graft.export.FeatureService.publish(
+          batch.toDF(), service.toString, "events",
+          graft.export.PublishMode.Auto, upsertKey = "event_id")
+      })
+      collected(spark, graft.export.FeatureService.readLayer(spark, service.toString, "events")
+        .groupBy(col("user_id"))
+        .agg(count(lit(1)).as("n_events"), round(sum(col("value")), 4).as("total_value")))
+    } finally Fs.deleteRecursively(service)
   }
 
   /** Redelivered-but-idempotent: the layer holds one copy per key,
@@ -683,27 +576,10 @@ object StreamQueries {
       .select(col("event_id"), col("ts"), col("user_id"), col("value"))
       .withWatermark("ts", "1 hour")
       .dropDuplicatesWithinWatermark("event_id")
-    val qName = "st_dedup_stream_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    val ckpt = scratchCheckpointDir()
-    withStreamingShufflePartitions(spark, 4) {
-      val query = deduped.writeStream
-        .format("memory")
-        .queryName(qName)
-        .option("checkpointLocation", ckpt.toString)
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      query.awaitTermination()
-    }
-    deleteRecursively(ckpt)
-    val agg = spark.table(qName)
-      .groupBy(col("user_id"))
-      .agg(count(lit(1)).as("n_events"), round(sum(col("value")), 4).as("total_value"))
-    val rows = java.util.Arrays.asList(agg.collect(): _*)
-    val out = spark.createDataFrame(rows, agg.schema)
-    spark.catalog.dropTempView(qName)
     // stage is session-cached, not deleted here
-    out
+    toMemory(spark, "st_dedup_stream", deduped, "append")(
+      _.groupBy(col("user_id"))
+        .agg(count(lit(1)).as("n_events"), round(sum(col("value")), 4).as("total_value")))
   }
 
   /** The deduplicated stream collapses to the plain batch aggregate
@@ -789,21 +665,8 @@ object StreamQueries {
       .parquet(stage.toString)
     val events = graft.Tables.normalizeTs(stream)
     val out = EventStream.windowedAgg(events, "1 hour", "1 hour")
-    val qName = "st_late_drop_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    val ckpt = scratchCheckpointDir()
-    withStreamingShufflePartitions(spark, 4) {
-      val query = out.writeStream
-        .format("memory")
-        .queryName(qName)
-        .option("checkpointLocation", ckpt.toString)
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      query.awaitTermination()
-    }
-    deleteRecursively(ckpt)
     // stage dir is cached per (session, dir) — not deleted here.
-    drainMemorySink(spark, qName)
+    toMemory(spark, "st_late_drop", out, "append")()
       .select(unix_micros(col("window_start")).as("window_start_us"),
         col("event_type"), col("n_events"), col("sum_value"))
   }
@@ -860,42 +723,31 @@ object StreamQueries {
   def stCdcApply(spark: SparkSession, dir: String): DataFrame = {
     val stage = cdcStage(spark, dir)
     val deltas = Files.createTempDirectory("graft_stream_cdc_delta_")
-    val raw = spark.readStream.schema(eventsSchema(spark, dir))
-      .option("maxFilesPerTrigger", "1")
-      .parquet(stage.toString)
-    val cdc = graft.Tables.normalizeTs(raw).select(
-      col("user_id"),
-      when(col("event_type") === "error", lit("D")).otherwise(lit("U")).as("op"),
-      col("value"), col("ts"), col("event_id"))
-    val ckpt = scratchCheckpointDir()
-    withStreamingShufflePartitions(spark, 4) {
-      val query = cdc.writeStream
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-          batch
-            .groupBy(col("user_id"))
-            .agg(max_by(
-              struct(col("op"), col("value"), col("ts"), col("event_id")),
-              struct(col("ts"), col("event_id"))).as("w"))
-            .select(col("user_id"), col("w.op").as("op"), col("w.value").as("value"),
-              col("w.ts").as("ts"), col("w.event_id").as("event_id"))
-            .write.mode("append").parquet(deltas.toString)
-        }
-        .option("checkpointLocation", ckpt.toString)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      query.awaitTermination()
-    }
-    deleteRecursively(ckpt)
-    val served = spark.read.parquet(deltas.toString)
-      .groupBy(col("user_id"))
-      .agg(max_by(struct(col("op"), col("value")),
-        struct(col("ts"), col("event_id"))).as("w"))
-      .filter(col("w.op") === "U")
-      .select(col("user_id"), round(col("w.value"), 4).as("last_value"))
-    val rows = java.util.Arrays.asList(served.collect(): _*)
-    val out = spark.createDataFrame(rows, served.schema)
-    deleteRecursively(deltas)
-    out
+    try {
+      val raw = spark.readStream.schema(eventsSchema(spark, dir))
+        .option("maxFilesPerTrigger", "1")
+        .parquet(stage.toString)
+      val cdc = graft.Tables.normalizeTs(raw).select(
+        col("user_id"),
+        when(col("event_type") === "error", lit("D")).otherwise(lit("U")).as("op"),
+        col("value"), col("ts"), col("event_id"))
+      run(spark, "st_cdc_apply", cdc)(_.foreachBatch { (batch: Dataset[Row], _: Long) =>
+        batch
+          .groupBy(col("user_id"))
+          .agg(max_by(
+            struct(col("op"), col("value"), col("ts"), col("event_id")),
+            struct(col("ts"), col("event_id"))).as("w"))
+          .select(col("user_id"), col("w.op").as("op"), col("w.value").as("value"),
+            col("w.ts").as("ts"), col("w.event_id").as("event_id"))
+          .write.mode("append").parquet(deltas.toString)
+      })
+      collected(spark, spark.read.parquet(deltas.toString)
+        .groupBy(col("user_id"))
+        .agg(max_by(struct(col("op"), col("value")),
+          struct(col("ts"), col("event_id"))).as("w"))
+        .filter(col("w.op") === "U")
+        .select(col("user_id"), round(col("w.value"), 4).as("last_value")))
+    } finally Fs.deleteRecursively(deltas)
   }
 
   /** Latest change per key wins; keys whose latest change is a
@@ -956,20 +808,7 @@ object StreamQueries {
       .groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
       .agg(count(lit(1)).as("n"))
       .select(col("w.start").as("window_start"), col("event_type"), col("n"))
-    val qName = "st_topk_windowed_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    val ckpt = scratchCheckpointDir()
-    withStreamingShufflePartitions(spark, 4) {
-      val query = counts.writeStream
-        .format("memory")
-        .queryName(qName)
-        .option("checkpointLocation", ckpt.toString)
-        .outputMode("complete")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      query.awaitTermination()
-    }
-    deleteRecursively(ckpt)
-    val drained = drainMemorySink(spark, qName) // stage session-cached
+    val drained = toMemory(spark, "st_topk_windowed", counts, "complete")() // stage session-cached
     val rankW = org.apache.spark.sql.expressions.Window
       .partitionBy(col("window_start"))
       .orderBy(col("n").desc, col("event_type"))
@@ -1005,41 +844,33 @@ object StreamQueries {
       stageSinglePart(slim.filter(pmod(col("event_id"), lit(2)) === 1),
         Seq((hold.resolve("b_events.parquet"), now)))
     }
+    val name = "st_checkpoint_resume"
     val stage = Files.createTempDirectory("graft_stream_resume_")
     val sinkDir = Files.createTempDirectory("graft_stream_resume_sink_")
-    val sink = sinkDir.resolve("out").toString
-    val ckpt = scratchCheckpointDir()
-    val base = System.currentTimeMillis() - 120000L
-    Files.copy(parts.resolve("a_events.parquet"), stage.resolve("a_events.parquet"))
-    Files.setLastModifiedTime(stage.resolve("a_events.parquet"),
-      java.nio.file.attribute.FileTime.fromMillis(base))
-    def runOnce(): Unit = withStreamingShufflePartitions(spark, 4) {
-      val raw = spark.readStream
-        .schema("event_id BIGINT, event_type STRING, value DOUBLE")
-        .parquet(stage.toString)
-      val q = raw.writeStream
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
+    val ckpt = scratchCheckpointDir(name) // one checkpoint across both runs
+    try {
+      val sink = sinkDir.resolve("out").toString
+      val base = System.currentTimeMillis() - 120000L
+      Files.copy(parts.resolve("a_events.parquet"), stage.resolve("a_events.parquet"))
+      Files.setLastModifiedTime(stage.resolve("a_events.parquet"),
+        java.nio.file.attribute.FileTime.fromMillis(base))
+      def runOnce(): Unit = {
+        val raw = spark.readStream
+          .schema("event_id BIGINT, event_type STRING, value DOUBLE")
+          .parquet(stage.toString)
+        run(spark, name, raw, Some(ckpt))(_.foreachBatch { (batch: Dataset[Row], _: Long) =>
           batch.write.mode("append").parquet(sink)
-        }
-        .option("checkpointLocation", ckpt.toString)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    runOnce() // backlog = A only; offsets for A commit to the checkpoint
-    Files.copy(parts.resolve("b_events.parquet"), stage.resolve("b_events.parquet"))
-    Files.setLastModifiedTime(stage.resolve("b_events.parquet"),
-      java.nio.file.attribute.FileTime.fromMillis(base + 60000L))
-    runOnce() // restart: must pick up ONLY B
-    val agg = spark.read.parquet(sink)
-      .groupBy(col("event_type"))
-      .agg(count(lit(1)).as("n"), round(sum(col("value")), 4).as("total_value"))
-    val rows = java.util.Arrays.asList(agg.collect(): _*)
-    val out = spark.createDataFrame(rows, agg.schema)
-    deleteRecursively(ckpt)
-    deleteRecursively(stage)
-    deleteRecursively(sinkDir)
-    out
+        })
+      }
+      runOnce() // backlog = A only; offsets for A commit to the checkpoint
+      Files.copy(parts.resolve("b_events.parquet"), stage.resolve("b_events.parquet"))
+      Files.setLastModifiedTime(stage.resolve("b_events.parquet"),
+        java.nio.file.attribute.FileTime.fromMillis(base + 60000L))
+      runOnce() // restart: must pick up ONLY B
+      collected(spark, spark.read.parquet(sink)
+        .groupBy(col("event_type"))
+        .agg(count(lit(1)).as("n"), round(sum(col("value")), 4).as("total_value")))
+    } finally Seq(ckpt, stage, sinkDir).foreach(Fs.deleteRecursively)
   }
 
   /** Every event exactly once across the two runs ⇒ the plain batch
@@ -1101,20 +932,7 @@ object StreamQueries {
         expr("CAST(round(value * 1000000.0, 0) AS BIGINT)").as("fx"))
       .as[graft.streaming.AnomEvent]
     val flags = graft.streaming.EventStream.anomalyZscore(ev)
-    val qName = "st_anomaly_zscore_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    val ckpt = scratchCheckpointDir()
-    withStreamingShufflePartitions(spark, 4) {
-      val query = flags.toDF().writeStream
-        .format("memory")
-        .queryName(qName)
-        .option("checkpointLocation", ckpt.toString)
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      query.awaitTermination()
-    }
-    deleteRecursively(ckpt)
-    drainMemorySink(spark, qName) // stage is session-cached
+    toMemory(spark, "st_anomaly_zscore", flags.toDF(), "append")() // stage is session-cached
   }
 
   /** The stateful stream's flag set equals the batch full-history

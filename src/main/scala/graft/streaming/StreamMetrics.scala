@@ -64,9 +64,9 @@ object StreamMetrics {
     * result, the listener) with the listener REMOVED again — no
     * session-lifetime leakage into later queries (the memory-sink
     * drain lesson). Listener events are delivered asynchronously;
-    * callers that need the final batch's row should drain via
-    * `spark.streams.awaitAnyTermination`/`query.awaitTermination`
-    * before reading, as the specs do.
+    * callers that need the final batch's row wait for the query to
+    * terminate, then drain the bus (`GraftBridge.drainListenerBus`)
+    * before reading, as `st_progress_total` does.
     */
   def withMetrics[A](spark: SparkSession)(body: StreamMetrics => A): (A, StreamMetrics) = {
     val m = new StreamMetrics

@@ -19,4 +19,11 @@ object GraftBridge {
       spark: SparkSession,
       plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
+
+  /** Block until every event posted so far on the session's
+    * (`spark`-package-private) listener bus has reached its listeners,
+    * streaming-query listeners included.
+    */
+  def drainListenerBus(spark: SparkSession): Unit =
+    spark.sparkContext.listenerBus.waitUntilEmpty()
 }

@@ -238,11 +238,11 @@ class CliSpec extends SparkSpec {
           jobs.incrementAndGet()
     }
     def jobsOf(args: String*): Int = {
-      org.apache.spark.ListenerBusDrain(spark.sparkContext)
+      org.apache.spark.sql.GraftBridge.drainListenerBus(spark)
       jobs.set(0)
       spark.sparkContext.setJobGroup(group, group, interruptOnCancel = false)
       try Cli.run(spark, args) finally spark.sparkContext.clearJobGroup()
-      org.apache.spark.ListenerBusDrain(spark.sparkContext)
+      org.apache.spark.sql.GraftBridge.drainListenerBus(spark)
       jobs.get
     }
     spark.sparkContext.addSparkListener(listener)

@@ -4,12 +4,14 @@ import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Keeps the staging policy, the session factory and the JSON/YAML
-  * codec in one place each: JVM-exit hooks only in `SessionStage`,
-  * `SparkSession.builder()` only in `GraftSession`, no module-level
-  * mutable map in a query module (query modules stage through
-  * `SessionStage` instead), and JSON string escaping, Jackson mappers
-  * and config-document parsing only in `config/JsonConfig`.
+/** Keeps the staging policy, the session factory, the JSON/YAML
+  * codec and the streaming-query lifecycle in one place each: JVM-exit
+  * hooks only in `SessionStage`, `SparkSession.builder()` only in
+  * `GraftSession`, no module-level mutable map in a query module
+  * (query modules stage through `SessionStage` instead), JSON string
+  * escaping, Jackson mappers and config-document parsing only in
+  * `config/JsonConfig`, and one start/await/checkpoint site for every
+  * streaming row. No JVM system property steers the program.
   */
 class SourceGuardSpec extends AnyFunSuite {
 
@@ -36,6 +38,7 @@ class SourceGuardSpec extends AnyFunSuite {
     """\.json\(\s*(?:Seq|List|Vector|Array)\s*\(|\.json\([^)\n]*\.toDS\(""".r
   private val mapper = """\b(?:ObjectMapper|JsonMapper|YAMLMapper|JsonFactory|Yaml)\s*[.(\[]""".r
   private val codec = "graft/config/JsonConfig.scala"
+  private val systemProperty = """\bsys\.props\b|System\.getProperty\b""".r
 
   private def offenders(files: Map[String, String], re: scala.util.matching.Regex): Seq[String] =
     files.collect { case (f, text) if re.findFirstIn(text).isDefined => f }.toSeq.sorted
@@ -82,5 +85,19 @@ class SourceGuardSpec extends AnyFunSuite {
     assert(offenders(sources, stringEscaper).isEmpty)
     assert(offenders(sources, inMemoryJsonRead).isEmpty)
     assert(offenders(sources, mapper) == Seq(codec))
+  }
+
+  test("streaming queries start, await and checkpoint in one place") {
+    val queries = sources.filter(_._1.startsWith("graft/queries/")).values
+    Seq(".writeStream", "Trigger.AvailableNow", "checkpointLocation", "awaitTermination(").foreach { call =>
+      val n = queries.map(java.util.regex.Pattern.quote(call).r.findAllMatchIn(_).size).sum
+      assert(n == 1, s"$call appears $n times under graft/queries")
+    }
+  }
+
+  test("no JVM system property is read") {
+    assert(systemProperty.findFirstIn("""sys.props.get("graft.x")""").isDefined)
+    assert(systemProperty.findFirstIn("""System.getProperty("java.io.tmpdir")""").isDefined)
+    assert(offenders(sources, systemProperty).isEmpty)
   }
 }

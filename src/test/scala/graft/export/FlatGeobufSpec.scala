@@ -399,4 +399,32 @@ class FlatGeobufSpec extends SparkSpec {
     assert(keys.distinct.length == keys.length, "hilbert collided on the grid")
     assert(keys.forall(k => k >= 0 && k <= 0xffffffffL))
   }
+
+  /** An EWKB point carrying an SRID word (0x20000001 + 4326). */
+  private def sridPoint(x: Double, y: Double): Array[Byte] =
+    ByteBuffer.allocate(25).order(ByteOrder.LITTLE_ENDIAN)
+      .put(1.toByte).putInt(0x20000001).putInt(4326).putDouble(x).putDouble(y).array()
+
+  /** An EWKB-Z line (0x80000002): 24-byte xyz vertices. */
+  private def ewkbZLine(pts: Seq[(Double, Double, Double)]): Array[Byte] = {
+    val b = ByteBuffer.allocate(9 + 24 * pts.length).order(ByteOrder.LITTLE_ENDIAN)
+    b.put(1.toByte).putInt(0x80000002).putInt(pts.length)
+    pts.foreach { case (x, y, z) => b.putDouble(x).putDouble(y).putDouble(z) }
+    b.array()
+  }
+
+  private def coordsOf(df: org.apache.spark.sql.DataFrame): Seq[(Double, Double)] =
+    df.select(explode(Wkb.wkbCoords($"geometry")).as("p")).collect()
+      .map(r => (r.getStruct(0).getDouble(0), r.getStruct(0).getDouble(1))).toSeq
+
+  test("EWKB SRID and Z geometries are written as their 2D coordinates") {
+    val pt = tmpFile("fgb-srid-point")
+    FlatGeobuf.write(Seq((1L, sridPoint(12.5, -3.25))).toDF("id", "geom"), "geom", pt)
+    val line = tmpFile("fgb-z-line")
+    val pts = Seq((0.0, 1.0, 100.0), (2.0, 3.0, 200.0), (4.0, 5.0, 300.0))
+    FlatGeobuf.write(Seq((1L, ewkbZLine(pts))).toDF("id", "geom"), "geom", line)
+    // both read back before asserting, so a failure shows both
+    val got = (coordsOf(graft.sources.FlatGeobufReader.read(spark, pt)), coordsOf(graft.sources.FlatGeobufReader.read(spark, line)))
+    assert(got == ((Seq((12.5, -3.25)), pts.map(p => (p._1, p._2)))))
+  }
 }

@@ -20,15 +20,9 @@ class StageMetricsListenerSpec extends SparkSpec {
       spark.read.parquet(s"$sfDir/region.parquet").count()
       spark.sparkContext.clearJobGroup()
 
-      // Listener-bus delivery is async (and `listenerBus.waitUntilEmpty`
-      // is private[spark]); poll until both groups' scans are folded in.
-      val deadline = System.nanoTime() + 30e9.toLong
-      def drained(): Boolean = {
-        val s = l.snapshot()
-        s.get("smls_q1").exists(a => a.synchronized(a.inputBytes > 0 && a.shuffleWriteBytes > 0)) &&
-          s.get("smls_q2").exists(a => a.synchronized(a.inputBytes > 0))
-      }
-      while (!drained() && System.nanoTime() < deadline) Thread.sleep(50)
+      // Listener-bus delivery is async: every task-end event is posted
+      // before its job returns, so drain the bus before reading.
+      org.apache.spark.sql.GraftBridge.drainListenerBus(spark)
 
       val snap = l.snapshot()
       assert(snap.contains("smls_q1"), s"groups seen: ${snap.keySet}")
@@ -54,9 +48,7 @@ class StageMetricsListenerSpec extends SparkSpec {
       spark.sparkContext.setJobGroup("run-id-uuid-not-registered", "x", interruptOnCancel = false)
       spark.read.parquet(s"$sfDir/region.parquet").count()
       spark.sparkContext.clearJobGroup()
-      val d2 = System.nanoTime() + 30e9.toLong
-      while (l.snapshot().get("smls_q2").forall(_.jobs <= q2Jobs) && System.nanoTime() < d2)
-        Thread.sleep(50)
+      org.apache.spark.sql.GraftBridge.drainListenerBus(spark)
       assert(!l.snapshot().contains("run-id-uuid-not-registered"))
       assert(l.snapshot()("smls_q2").jobs > q2Jobs)
 
