@@ -98,6 +98,15 @@ object Cli {
       .map(f => graft.config.Settings.loadFile(f, sys.env.toMap))
       .getOrElse(graft.config.Settings.load(env = sys.env.toMap))
     val date = opt.getOrElse("date", settings("publish.date"))
+    /** `--mode`, else the verb's own default. */
+    def publishMode(default: String): PublishMode.Value =
+      opt.getOrElse("mode", default).toLowerCase match {
+        case "auto"      => PublishMode.Auto
+        case "initial"   => PublishMode.Initial
+        case "overwrite" => PublishMode.Overwrite
+        case "append"    => PublishMode.Append
+        case other       => throw new IllegalArgumentException(s"unknown mode: $other")
+      }
     pos match {
       case Seq("export", catalogPath, name, sfDir, outPath) =>
         val cfg = loadEntry(spark, catalogPath, name)
@@ -150,13 +159,7 @@ object Cli {
         val cfg = loadEntry(spark, catalogPath, name)
         val country = opt.getOrElse("country", "AFG")
         val df = runPipeline(spark, cfg, sfDir, country, date)
-        val mode = opt.getOrElse("mode", settings("publish.mode")).toLowerCase match {
-          case "auto"      => PublishMode.Auto
-          case "initial"   => PublishMode.Initial
-          case "overwrite" => PublishMode.Overwrite
-          case "append"    => PublishMode.Append
-          case other       => throw new IllegalArgumentException(s"unknown mode: $other")
-        }
+        val mode = publishMode(settings("publish.mode"))
         // Call-frame enrichment (errors.scala): the engine raised
         // with {service, layer, mode, stage}; only the CLI knows the
         // country and command.
@@ -199,13 +202,7 @@ object Cli {
       // back on the center).
       case Seq("publish-sectors", catalogPath, names, sfDir, servicePath) =>
         val t = Tables(spark, sfDir)
-        val mode = opt.getOrElse("mode", "initial").toLowerCase match {
-          case "auto" => PublishMode.Auto
-          case "initial" => PublishMode.Initial
-          case "overwrite" => PublishMode.Overwrite
-          case "append" => PublishMode.Append
-          case other => throw new IllegalArgumentException(s"unknown mode: $other")
-        }
+        val mode = publishMode("initial")
         val geom = opt.get("geom").map(_.split(",", 2) match {
           case Array(xc, yc) if yc.nonEmpty => (xc, yc)
           case g => throw new IllegalArgumentException(s"--geom expects xCol,yCol (got '${g.mkString(",")}')")

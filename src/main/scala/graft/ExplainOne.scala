@@ -2,40 +2,30 @@ package graft
 import java.nio.file.{Files, Paths}
 
 /** Dump `.explain("formatted")` for registered queries to files:
-  * `runMain graft.ExplainOne <outDir> <sfDir> <query> [query...]`.
-  * Written for the optimization rounds' plan artifacts
-  * (plans/r<N>/<query>_{before,after}.txt): the judge cannot run
-  * Spark, so plan-shape claims in OPTIMIZATION_r<N>.md are checked
-  * against these captures. Same session shape as Bench.
+  * `runMain graft.ExplainOne <outDir> <sfDir> [query...]` (no query
+  * named means every row). Written for the optimization rounds' plan
+  * artifacts (plans/r<N>/<query>_{before,after}.txt): plan-shape
+  * claims in OPTIMIZATION_r<N>.md are checked against these captures
+  * without running Spark. Same session shape as Bench. Any failed
+  * capture exits nonzero, so a stale before/after plan artifact
+  * cannot pass unnoticed.
   */
 object ExplainOne {
   def main(args: Array[String]): Unit = {
     val outDir = args(0)
     val sfDir = args(1)
-    val names = args.drop(2)
+    val rows = SparkEntry.select(args.drop(2).toSeq)
     val suffix = sys.env.getOrElse("SPARK_GRAFT_EXPLAIN_SUFFIX", "")
     val spark = GraftSession.fromEnv("graft-explain")
     spark.sparkContext.setLogLevel("ERROR")
     Files.createDirectories(Paths.get(outDir))
-    // NonFatal only (r14, ADVICE): a fatal error (OOM etc.) must not
-    // be swallowed mid-iteration, and ANY failed capture exits
-    // nonzero so a stale before/after plan artifact cannot pass
-    // unnoticed.
-    var nFailed = 0
-    names.foreach { name =>
-      try {
-        val df = SparkEntry.queries(name)(spark, sfDir)
-        val txt = df.queryExecution.explainString(
-          org.apache.spark.sql.execution.FormattedMode)
-        Files.writeString(Paths.get(outDir, s"$name$suffix.txt"), txt)
-        println(s"[explain] wrote $outDir/$name$suffix.txt")
-      } catch {
-        case scala.util.control.NonFatal(e) =>
-          nFailed += 1
-          println(s"[explain] $name FAILED: ${e.getClass.getName}: ${e.getMessage}")
-      }
+    val failed = SparkEntry.runEach(spark, rows) { q =>
+      val txt = q.fn(spark, sfDir).queryExecution.explainString(
+        org.apache.spark.sql.execution.FormattedMode)
+      Files.writeString(Paths.get(outDir, s"${q.name}$suffix.txt"), txt)
+      println(s"[explain] wrote $outDir/${q.name}$suffix.txt")
     }
     spark.stop()
-    if (nFailed > 0) sys.exit(1)
+    if (failed.nonEmpty) sys.exit(1)
   }
 }

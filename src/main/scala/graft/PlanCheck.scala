@@ -1,7 +1,5 @@
 package graft
 
-import graft.queries.Registry
-
 // Diagnostic main: prints condensed executed-plan facts per query
 // (broadcast usage, pushed filters, shuffle count).
 object PlanCheck {
@@ -77,11 +75,9 @@ object PlanCheck {
   def budgetMain(dir: String): Unit = {
     val spark = GraftSession.builder(master = "local[4]", shufflePartitions = 4).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    Registry.all.filterNot(_.name.startsWith("st_")).foreach { q =>
-      try {
-        val (s, b) = exchangeCounts(q.fn(spark, dir))
-        println(s"BUDGET ${q.name} $s $b")
-      } catch { case e: Throwable => println(s"BUDGET ${q.name} FAILED ${e.getMessage.take(80)}") }
+    SparkEntry.runEach(spark, SparkEntry.select(Nil).filterNot(_.name.startsWith("st_"))) { q =>
+      val (s, b) = exchangeCounts(q.fn(spark, dir))
+      println(s"BUDGET ${q.name} $s $b")
     }
     spark.stop()
   }
@@ -95,19 +91,15 @@ object PlanCheck {
     val spark = GraftSession.builder(master = "local[8]", shufflePartitions = 8).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     println(s"entry rows (sf0.001): ${SparkEntry.entry(spark).count()}")
-    Registry.all.foreach { q =>
-      try {
-        val plan = q.fn(spark, dir).queryExecution.executedPlan.toString
-        val shuffles = "Exchange".r.findAllIn(plan).length -
-          "ReusedExchange".r.findAllIn(plan).length -
-          "BroadcastExchange".r.findAllIn(plan).length
-        val bcasts = "BroadcastExchange|BroadcastQueryStage".r.findAllIn(plan).size
-        val pushed = plan.contains("PushedFilters: [") && !plan.contains("PushedFilters: []")
-        // Spark 4 executedPlan.toString marks codegen stages as
-        // "*(n) Operator"; count distinct stage ids.
-        val wsc = """\*\((\d+)\)""".r.findAllMatchIn(plan).map(_.group(1)).toSet.size
-        println(f"${q.name}%-22s shuffles=$shuffles%-3d bcast=$bcasts%-3d pushedFilters=$pushed%-5s codegenSpans=$wsc")
-      } catch { case e: Throwable => println(s"${q.name} EXPLAIN FAILED: ${e.getMessage.take(100)}") }
+    SparkEntry.runEach(spark, SparkEntry.select(Nil)) { q =>
+      val df = q.fn(spark, dir)
+      val (shuffles, bcasts) = exchangeCounts(df)
+      // Spark 4 executedPlan.toString marks codegen stages as
+      // "*(n) Operator"; count distinct stage ids.
+      val wsc = """\*\((\d+)\)""".r
+        .findAllMatchIn(df.queryExecution.executedPlan.toString).map(_.group(1)).toSet.size
+      println(f"${q.name}%-22s shuffles=$shuffles%-3d bcast=$bcasts%-3d " +
+        f"pushedFilters=${hasPushedFilters(df)}%-5s codegenSpans=$wsc")
     }
     spark.stop()
   }

@@ -9,7 +9,11 @@ package graft
   *   - `runMain graft.ScaleProbe neardup <sfDir> <planes> [threshold] [runs]`
   *     times `Similarity.embeddingNearDup` at a caller-chosen
   *     hyperplane count (the E8 planes ∝ log₂N contract — bucket
-  *     occupancy, hence within-bucket pair work, is N/2^planes).
+  *     occupancy, hence within-bucket pair work, is N/2^planes);
+  *   - `runMain graft.ScaleProbe streamfloor <sfDir> [runs]` times the
+  *     bare StreamingQuery lifecycle (one stateless passthrough
+  *     micro-batch, the registry streams' session tuning): the §8
+  *     streaming fixed-cost table's "irreducible floor" row.
   *
   * Exists to MEASURE the documented scale knobs: both registry rows
   * pin their blocking parameter for oracle determinism; this main is
@@ -17,57 +21,31 @@ package graft
   * (round 6).
   */
 object ScaleProbe {
-  /** `runMain graft.ScaleProbe query <name>[,<name>…] <sfDir> [runs]`
-    * — time any registry query in the Bench session shape (min of
-    * `runs`, default 2). The single-query iteration loop Bench's
-    * full sweep is too slow for.
+  /** Runs `count` `runs` times on the caller's session, printing each
+    * run's seconds and the min.
     */
-  private def queryMain(names: String, sfDir: String, runs: Int): Unit = {
-    val spark = GraftSession.fromEnv("graft-scaleprobe")
-    names.split(",").foreach { name =>
-      val fn = SparkEntry.queries(name)
-      val times = (1 to runs).map { i =>
-        val t0 = System.nanoTime()
-        val n = fn(spark, sfDir).count()
-        val t = (System.nanoTime() - t0) / 1e9
-        println(f"[scaleprobe] $name run $i: $t%.3f s ($n rows)")
-        t
-      }
-      println(f"[scaleprobe] $name min=${times.min}%.3f s")
-    }
-    spark.stop()
-  }
-
-  /** `runMain graft.ScaleProbe streamfloor <sfDir> [runs]` — time the
-    * bare StreamingQuery lifecycle (stateless single-batch
-    * passthrough, the registry streams' exact session tuning). The
-    * §8 streaming fixed-cost table's "irreducible floor" row.
-    */
-  private def streamFloorMain(sfDir: String, runs: Int): Unit = {
-    val spark = GraftSession.fromEnv("graft-scaleprobe")
+  private def timeRuns(label: String, runs: Int)(count: => Long): Unit = {
     val times = (1 to runs).map { i =>
       val t0 = System.nanoTime()
-      graft.queries.StreamQueries.stNoopFloor(spark, sfDir).count()
+      val n = count
       val t = (System.nanoTime() - t0) / 1e9
-      println(f"[scaleprobe] stream_floor run $i: $t%.3f s")
+      println(f"[scaleprobe] $label run $i: $t%.3f s ($n rows)")
       t
     }
-    println(f"[scaleprobe] stream_floor min=${times.min}%.3f s")
-    spark.stop()
+    println(f"[scaleprobe] $label min=${times.min}%.3f s")
   }
 
   def main(args: Array[String]): Unit = {
     if (args.headOption.contains("streamfloor")) {
-      streamFloorMain(args(1), if (args.length > 2) args(2).toInt else 3)
-      return
-    }
-    if (args.headOption.contains("query")) {
-      queryMain(args(1), args(2), if (args.length > 3) args(3).toInt else 2)
+      val spark = GraftSession.fromEnv("graft-scaleprobe")
+      timeRuns("stream_floor", if (args.length > 2) args(2).toInt else 3)(
+        graft.queries.StreamQueries.stNoopFloor(spark, args(1)).count())
+      spark.stop()
       return
     }
     require(args.length >= 3 &&
       Set("semantic", "neardup", "semantic_auto", "neardup_auto", "semantic_hier")(args(0)),
-      "usage: ScaleProbe semantic|neardup|semantic_auto|neardup_auto|semantic_hier <sfDir> <k|planes|target> [...] | query <name> <sfDir> [runs]")
+      "usage: ScaleProbe semantic|neardup|semantic_auto|neardup_auto|semantic_hier <sfDir> <k|planes|target> [...] | streamfloor <sfDir> [runs]")
     val sfDir = args(1)
     // For the *_auto modes this is the TARGET cluster/bucket size
     // (the knob itself derives from the data count).
@@ -104,14 +82,7 @@ object ScaleProbe {
         graft.operators.Similarity.semanticPairsHier(
           emb, "vec_id", "embedding", iters, threshold, targetClusterSize = k)
     }
-    val times = (1 to runs).map { i =>
-      val t0 = System.nanoTime()
-      val n = pairs().count()
-      val t = (System.nanoTime() - t0) / 1e9
-      println(f"[scaleprobe] ${args(0)} k=$k run $i: $t%.3f s ($n pairs)")
-      t
-    }
-    println(f"[scaleprobe] ${args(0)} k=$k min=${times.min}%.3f s")
+    timeRuns(s"${args(0)} k=$k", runs)(pairs().count())
     spark.stop()
   }
 }

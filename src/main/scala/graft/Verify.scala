@@ -1,27 +1,40 @@
 package graft
+
+import graft.queries.QueryDef
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+import org.apache.spark.sql.SparkSession
+
+/** Driver-run correctness dump: `runMain graft.Verify <sfDir> <outDir>
+  * [row[,row…]]` writes each selected row's result to
+  * `<outDir>/<row>` as parquet, plus those rows' oracle SQL as
+  * `oracle_sql.json`, for the DuckDB compare
+  * (`tools/check_oracle.py`). No rows named means every row; a failed
+  * row is reported on stderr and the rest still run.
+  */
 object Verify {
   def main(args: Array[String]): Unit = {
-    // Optional 3rd arg: comma-separated query-name filter for fast
-    // local iteration (the driver passes exactly two args).
     val Array(sfDir, outDir) = args.take(2)
-    val only: Option[Set[String]] =
-      if (args.length > 2) Some(args(2).split(",").toSet) else None
+    val rows = SparkEntry.select(args.drop(2).toSeq.flatMap(_.split(",")))
     val spark = GraftSession.fromEnv("graft-verify")
-    new java.io.File(outDir).mkdirs()
-    SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      }
-    }
-    val json = graft.config.JsonConfig.obj(SparkEntry.oracleSql.toSeq: _*)
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    dump(spark, rows, sfDir, outDir)
     spark.stop()
+  }
+
+  /** Writes `rows`' results and oracle SQL under `outDir`; returns the
+    * failed rows.
+    */
+  private[graft] def dump(
+      spark: SparkSession,
+      rows: Seq[QueryDef],
+      sfDir: String,
+      outDir: String
+  ): Seq[(QueryDef, Throwable)] = {
+    Files.createDirectories(Paths.get(outDir))
+    val failed = SparkEntry.runEach(spark, rows) { q =>
+      q.fn(spark, sfDir).coalesce(1).write.mode("overwrite").parquet(s"$outDir/${q.name}")
+    }
+    val oracle = rows.flatMap(q => q.oracle.map(q.name -> _))
+    Files.writeString(Paths.get(outDir, "oracle_sql.json"), graft.config.JsonConfig.obj(oracle: _*))
+    failed
   }
 }

@@ -59,19 +59,12 @@ object Settings {
 
   private[config] val secretMarkers = Seq("password", "secret", "token", "key_id", "credential")
 
-  /** Built-in defaults (reference dataclass defaults): relative store
-    * paths under the working directory, auto publish, the engine's
-    * local[32] processing shape.
+  /** Built-in defaults (reference dataclass defaults) for the keys
+    * the Cli reads: auto publish and the fixed metadata date.
     */
   val defaults: Map[String, String] = Map(
-    "dump.base" -> "dumps",
-    "dump.release" -> "latest",
-    "service.base" -> "services",
     "publish.mode" -> "auto",
-    "publish.upsert_key" -> "id",
-    "publish.date" -> "1970-01-01T00:00:00",
-    "processing.shuffle_partitions" -> "32",
-    "processing.memory_budget_mb" -> "512"
+    "publish.date" -> "1970-01-01T00:00:00"
   )
 
   /** `dump.base` → `GRAFT_DUMP_BASE`. */

@@ -168,17 +168,6 @@ object Exporter {
         Map("path" -> path, "format" -> "GeoJson", "stage" -> "export"), e)
   }
 
-  /** Incremental partitioned export with DYNAMIC partition
-    * overwrite: only the partitions present in `df` are replaced;
-    * every other partition of the target survives untouched. This
-    * is the incremental-publish write shape (reference publish.py
-    * truncate-and-append per layer, generalized to keyed
-    * partitions): a 100 TB lake refreshes one country/day partition
-    * without rewriting — or even listing — the rest. The mode rides
-    * as a per-write OPTION (it takes precedence over the session
-    * conf, SPARK-25556), so concurrent writes on one session can
-    * never observe each other's mode or leak it.
-    */
   /** Z-order clustered parquet write — the 2-D extension of
     * `FeatureService.writeRangeSorted`: rows are range-partitioned
     * AND sorted by their Morton key (`Geo.mortonKey` over x/y), so
@@ -251,6 +240,17 @@ object Exporter {
       .filter(col(xCol).between(bboxXLo, bboxXHi) && col(yCol).between(bboxYLo, bboxYHi))
   }
 
+  /** Incremental partitioned export with DYNAMIC partition
+    * overwrite: only the partitions present in `df` are replaced;
+    * every other partition of the target survives untouched. This
+    * is the incremental-publish write shape (reference publish.py
+    * truncate-and-append per layer, generalized to keyed
+    * partitions): a 100 TB lake refreshes one country/day partition
+    * without rewriting — or even listing — the rest. The mode rides
+    * as a per-write OPTION (it takes precedence over the session
+    * conf, SPARK-25556), so concurrent writes on one session can
+    * never observe each other's mode or leak it.
+    */
   def writePartitioned(df: DataFrame, path: String, partitionCol: String): Unit =
     df.write.mode("overwrite")
       .option("partitionOverwriteMode", "dynamic")

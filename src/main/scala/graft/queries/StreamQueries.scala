@@ -158,8 +158,8 @@ object StreamQueries {
     * AvailableNow, no-data batch off). What this measures is the
     * per-row IRREDUCIBLE floor the §8 streaming fixed-cost table
     * quotes: plan analysis + query start/stop + one source listing +
-    * one offset/commit WAL round-trip + sink drain. Run via
-    * `ScaleProbe query` is impossible (unregistered); use
+    * one offset/commit WAL round-trip + sink drain. It is not a
+    * registry row, so `graft.Bench` cannot time it; use
     * `ScaleProbe streamfloor <sfDir> [runs]`.
     */
   private[graft] def stNoopFloor(spark: SparkSession, dir: String): DataFrame = {

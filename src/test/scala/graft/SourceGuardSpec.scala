@@ -11,7 +11,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * (query modules stage through `SessionStage` instead), JSON string
   * escaping, Jackson mappers and config-document parsing only in
   * `config/JsonConfig`, and one start/await/checkpoint site for every
-  * streaming row. No JVM system property steers the program.
+  * streaming row. No JVM system property steers the program, and no
+  * `Throwable` catch swallows a fatal error.
   */
 class SourceGuardSpec extends AnyFunSuite {
 
@@ -40,6 +41,9 @@ class SourceGuardSpec extends AnyFunSuite {
   private val codec = "graft/config/JsonConfig.scala"
   private val systemProperty = """\bsys\.props\b|System\.getProperty\b""".r
 
+  /** A catch case typed `Throwable`; it must rethrow on its line. */
+  private val throwableCase = """case\s+\w+\s*:\s*Throwable\s*=>""".r
+
   private def offenders(files: Map[String, String], re: scala.util.matching.Regex): Seq[String] =
     files.collect { case (f, text) if re.findFirstIn(text).isDefined => f }.toSeq.sorted
 
@@ -58,6 +62,8 @@ class SourceGuardSpec extends AnyFunSuite {
     assert(inMemoryJsonRead.findFirstIn("""spark.read.json(s"$dir/part")""").isEmpty)
     assert(mapper.findFirstIn("new ObjectMapper().readTree(in)").isDefined)
     assert(mapper.findFirstIn("YAMLMapper.builder()").isDefined)
+    assert(throwableCase.findFirstIn("catch { case _: Throwable => return -1.0 }").isDefined)
+    assert(throwableCase.findFirstIn("case NonFatal(e) => log(e)").isEmpty)
   }
 
   test("sources are where the guard looks") {
@@ -99,5 +105,14 @@ class SourceGuardSpec extends AnyFunSuite {
     assert(systemProperty.findFirstIn("""sys.props.get("graft.x")""").isDefined)
     assert(systemProperty.findFirstIn("""System.getProperty("java.io.tmpdir")""").isDefined)
     assert(offenders(sources, systemProperty).isEmpty)
+  }
+
+  test("every Throwable catch in src/main rethrows") {
+    val swallowing = for {
+      (f, text) <- sources.toSeq.sorted
+      (line, i) <- text.linesIterator.zipWithIndex
+      if throwableCase.findFirstIn(line).isDefined && !line.contains("throw ")
+    } yield s"$f:${i + 1}"
+    assert(swallowing.isEmpty)
   }
 }
