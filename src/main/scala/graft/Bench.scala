@@ -56,9 +56,9 @@ object Bench {
     }
   }
 
-  /** Two timed runs per row on one session: `cold` is the first (codegen,
-    * JIT and GC debt included), `steady` the min of both. A row whose
-    * second run fails keeps its cold time.
+  /** Two timed runs per row: `cold` is the first (codegen, JIT and GC
+    * debt included), `steady` the min of both. A row whose second run
+    * fails keeps its cold time.
     */
   private[graft] def score(
       spark: SparkSession,
@@ -70,9 +70,9 @@ object Bench {
     val failed = SparkEntry.runEach(spark, rows) { q =>
       System.gc()
       listener.registerGroup(q.name)
-      val cold = timed(q.fn(spark, sfDir).count())._2
+      val cold = run(spark, q, sfDir)._2
       times(q.name) = (cold, -1.0)
-      times(q.name) = (cold, math.min(cold, timed(q.fn(spark, sfDir).count())._2))
+      times(q.name) = (cold, math.min(cold, run(spark, q, sfDir)._2))
     }.map { case (q, e) => q.name -> SparkEntry.cause(e) }.toMap
     rows.map { q =>
       val (cold, steady) = times.getOrElse(q.name, (-1.0, -1.0))
@@ -106,7 +106,7 @@ object Bench {
         // run's jobs fold into this latest registration.
         val group = s"${q.name}#$i"
         listener.registerGroup(group)
-        val (n, secs) = timed(q.fn(spark, sfDir).count())
+        val (n, secs) = run(spark, q, sfDir)
         GraftBridge.drainListenerBus(spark)
         val (jobs, tasks, shuffle) = listener.snapshot().get(group)
           .fold((0, 0, 0L))(a => (a.jobs, a.tasks, a.shuffleWriteBytes))
@@ -115,10 +115,16 @@ object Bench {
       }
     }.isEmpty
 
-  private def timed[A](run: => A): (A, Double) = {
+  /** One timed run of `q` (its row count and seconds) on a new session
+    * of the same SparkContext, so a row that stages an artifact through
+    * `SessionStage` builds it in every run instead of reading the
+    * previous run's.
+    */
+  private def run(spark: SparkSession, q: QueryDef, sfDir: String): (Long, Double) = {
+    val session = spark.newSession()
     val t0 = System.nanoTime()
-    val a = run
-    (a, (System.nanoTime() - t0) / 1e9)
+    val n = q.fn(session, sfDir).count()
+    (n, (System.nanoTime() - t0) / 1e9)
   }
 
   private def fmt(v: Double): String =

@@ -10,27 +10,24 @@ import org.apache.spark.sql.{Column, DataFrame}
 object ExportFormat extends Enumeration {
   val GeoJson, GeoJsonSeq, Parquet, Csv, Json, Gpkg, Fgdb, GeoParquetFmt, Shp, Fgb = Value
 
+  /** Each format's file extension. Tabular JSON uses .jsonl (what
+    * Spark's json writer emits), keeping the filename ↔ format
+    * round-trip unambiguous.
+    */
+  val extension: Map[Value, String] = Map(
+    GeoJson -> "geojson", GeoJsonSeq -> "geojsonseq", Parquet -> "parquet", Csv -> "csv",
+    Json -> "jsonl", Gpkg -> "gpkg", Fgdb -> "gdb", GeoParquetFmt -> "geoparquet",
+    Shp -> "shp", Fgb -> "fgb")
+
+  // .json → GeoJson mirrors the reference (export.py:48-49)
+  private val byExtension = extension.map(_.swap) ++ Map("json" -> GeoJson, "fgdb" -> Fgdb)
+
   /** Infer from a file extension (reference export.py:45-55). */
   def fromPath(path: String): ExportFormat.Value = {
     val ext = path.substring(path.lastIndexOf('.') + 1).toLowerCase
-    ext match {
-      // .json → GeoJson mirrors the reference (export.py:48-49);
-      // tabular JSON uses .jsonl (what Spark's json writer emits),
-      // keeping the filename ↔ format round-trip unambiguous.
-      case "geojson" | "json" => GeoJson
-      case "geojsonseq"       => GeoJsonSeq
-      case "jsonl"            => Json
-      case "parquet"          => Parquet
-      case "geoparquet"       => GeoParquetFmt
-      case "csv"              => Csv
-      case "gpkg"             => Gpkg
-      case "gdb" | "fgdb"     => Fgdb
-      case "shp"              => Shp
-      case "fgb"              => Fgb
-      case other              => throw new graft.ExportError(
-        s"unknown export extension: $other",
-        Map("format" -> other, "stage" -> "export"))
-    }
+    byExtension.getOrElse(ext, throw new graft.ExportError(
+      s"unknown export extension: $ext",
+      Map("format" -> ext, "stage" -> "export")))
   }
 }
 
@@ -39,6 +36,19 @@ object ExportFormat extends Enumeration {
   * geometry column; tabular formats write the frame as-is.
   */
 object Exporter {
+
+  /** Typed seam (reference errors.py ExportError): driver errors,
+    * missing geometry columns and writer failures surface with
+    * {path, format, stage} context.
+    */
+  private def typed(path: String, format: ExportFormat.Value)(body: => Unit): Unit =
+    try body catch {
+      case e: graft.GraftError => throw e
+      case scala.util.control.NonFatal(e) =>
+        throw new graft.ExportError(
+          s"export failed: ${e.getMessage}",
+          Map("path" -> path, "format" -> format.toString, "stage" -> "export"), e)
+    }
 
   def write(
       df: DataFrame,
@@ -49,71 +59,50 @@ object Exporter {
       generatedAt: String = "1970-01-01T00:00:00",
       geometryWkb: Option[Column] = None,
       raw: Boolean = false
-  ): Unit = try { format match {
-    case ExportFormat.GeoJson =>
-      val geom = geometryJson.getOrElse(
-        throw new IllegalArgumentException("GeoJSON export needs a geometry column"))
-      GeoJson.writeFeatureCollection(df, geom, path, target, generatedAt, rawExport = raw)
-    case ExportFormat.GeoJsonSeq =>
-      val geom = geometryJson.getOrElse(
-        throw new IllegalArgumentException("GeoJSONSeq export needs a geometry column"))
-      GeoJson.writeSeq(df, geom, path)
-    case ExportFormat.Parquet => df.write.mode("overwrite").parquet(path)
-    case ExportFormat.Csv =>
-      df.write.mode("overwrite").option("header", "true").csv(path)
-    case ExportFormat.Json => df.write.mode("overwrite").json(path)
-    case ExportFormat.Gpkg =>
-      // Self-contained GeoPackage (no GDAL/sqlite dependency): the
-      // pure-JVM SQLite writer in Gpkg.scala — the reference CLI's
-      // default format (cli.py:1163).
-      val wkb = geometryWkb.getOrElse(
-        throw new IllegalArgumentException(
-          "GPKG export needs a WKB geometry column (geometryWkb)"))
-      Gpkg.write(df.withColumn("geom", wkb), path, target)
-    case ExportFormat.GeoParquetFmt =>
-      // Distributed geo export (public GeoParquet v1.1.0 spec) —
-      // the scale path the single-file GPKG/GeoJSON writers defer
-      // huge exports to.
-      val wkb = geometryWkb.getOrElse(
-        throw new IllegalArgumentException(
-          "GeoParquet export needs a WKB geometry column (geometryWkb)"))
-      GeoParquet.write(df.withColumn("geometry", wkb), "geometry", path)
-    case ExportFormat.Shp =>
-      // Pure-JVM ESRI Shapefile (public 1998 spec) — the reference's
-      // 'shp' direct-export route (source.py:626). Single-file
-      // format ⇒ driver-streamed (the GPKG convention); the path's
-      // .shp extension is stripped to the sidecar-set basename.
-      val wkb = geometryWkb.getOrElse(
-        throw new IllegalArgumentException(
-          "Shapefile export needs a WKB geometry column (geometryWkb)"))
-      // Strip the extension case-insensitively — fromPath routes
-      // LAYER.SHP here too, and the sidecar set must not be
-      // named LAYER.SHP.shp/.shx/.dbf.
-      Shapefile.write(df.withColumn("geom", wkb), "geom",
-        if (path.toLowerCase.endsWith(".shp")) path.dropRight(4) else path)
-    case ExportFormat.Fgb =>
-      // FlatGeobuf (public spec, real flatbuffers runtime) — the
-      // reference's 'fgb' direct-export route (source.py:631).
-      val wkb = geometryWkb.getOrElse(
-        throw new IllegalArgumentException(
-          "FlatGeobuf export needs a WKB geometry column (geometryWkb)"))
-      FlatGeobuf.write(df.withColumn("geom", wkb), "geom", path)
-    case ExportFormat.Fgdb =>
+  ): Unit = {
+    // A capability statement, not a failure of an attempted export:
+    // it stays outside the typed seam.
+    if (format == ExportFormat.Fgdb)
       throw new UnsupportedOperationException(
         s"$format is a proprietary ESRI container with no public spec; " +
           "unsupported by design (documented in SURVEY.md §6)")
-  } } catch {
-    // Typed seam (reference errors.py ExportError): driver errors,
-    // missing geometry columns, and format routing all surface with
-    // {path, format, stage} context; the UnsupportedOperationException
-    // for FGDB intentionally stays untyped — it is a capability
-    // statement, not a failure of an attempted export.
-    case e: graft.GraftError                 => throw e
-    case e: UnsupportedOperationException    => throw e
-    case scala.util.control.NonFatal(e) =>
-      throw new graft.ExportError(
-        s"export failed: ${e.getMessage}",
-        Map("path" -> path, "format" -> format.toString, "stage" -> "export"), e)
+    def geometry(column: Option[Column], param: String): Column = column.getOrElse(
+      throw new IllegalArgumentException(s"$format export needs a geometry column ($param)"))
+    def wkb(name: String): DataFrame = df.withColumn(name, geometry(geometryWkb, "geometryWkb"))
+    typed(path, format) { format match {
+      case ExportFormat.GeoJson =>
+        GeoJson.writeFeatureCollection(df, geometry(geometryJson, "geometryJson"), path, target,
+          generatedAt, rawExport = raw)
+      case ExportFormat.GeoJsonSeq =>
+        GeoJson.writeSeq(df, geometry(geometryJson, "geometryJson"), path)
+      case ExportFormat.Parquet => df.write.mode("overwrite").parquet(path)
+      case ExportFormat.Csv =>
+        df.write.mode("overwrite").option("header", "true").csv(path)
+      case ExportFormat.Json => df.write.mode("overwrite").json(path)
+      case ExportFormat.Gpkg =>
+        // Self-contained GeoPackage (no GDAL/sqlite dependency): the
+        // pure-JVM SQLite writer in Gpkg.scala — the reference CLI's
+        // default format (cli.py:1163).
+        Gpkg.write(wkb("geom"), path, target)
+      case ExportFormat.GeoParquetFmt =>
+        // Distributed geo export (public GeoParquet v1.1.0 spec) —
+        // the scale path the single-file GPKG/GeoJSON writers defer
+        // huge exports to.
+        GeoParquet.write(wkb("geometry"), "geometry", path)
+      case ExportFormat.Shp =>
+        // Pure-JVM ESRI Shapefile (public 1998 spec) — the reference's
+        // 'shp' direct-export route (source.py:626). Single-file
+        // format ⇒ driver-streamed (the GPKG convention). The
+        // extension is stripped case-insensitively to the sidecar-set
+        // basename — fromPath routes LAYER.SHP here too, and the
+        // sidecar set must not be named LAYER.SHP.shp/.shx/.dbf.
+        Shapefile.write(wkb("geom"), "geom",
+          if (path.toLowerCase.endsWith(".shp")) path.dropRight(4) else path)
+      case ExportFormat.Fgb =>
+        // FlatGeobuf (public spec, real flatbuffers runtime) — the
+        // reference's 'fgb' direct-export route (source.py:631).
+        FlatGeobuf.write(wkb("geom"), "geom", path)
+    } }
   }
 
   /** Multi-layer single-file GeoPackage — the reference's multilayer
@@ -131,18 +120,12 @@ object Exporter {
       path: String,
       target: String,
       raw: Boolean = false
-  ): Unit = try {
+  ): Unit = typed(path, ExportFormat.Gpkg) {
     require(data.nonEmpty, "GPKG multilayer export needs at least one layer")
     val layers = data.map { case (layerName, df) =>
       Gpkg.Layer(df, if (raw) layerName else s"${target}_$layerName")
     }
     Gpkg.writeLayers(layers, path)
-  } catch {
-    case e: graft.GraftError => throw e
-    case scala.util.control.NonFatal(e) =>
-      throw new graft.ExportError(
-        s"export failed: ${e.getMessage}",
-        Map("path" -> path, "format" -> "Gpkg", "stage" -> "export"), e)
   }
 
   /** Multi-layer GeoJSON — the reference's dict route for the
@@ -158,14 +141,8 @@ object Exporter {
       target: String,
       generatedAt: String = "1970-01-01T00:00:00",
       raw: Boolean = false
-  ): Unit = try {
+  ): Unit = typed(path, ExportFormat.GeoJson) {
     GeoJson.writeFeatureCollectionLayers(data, path, target, generatedAt, raw)
-  } catch {
-    case e: graft.GraftError => throw e
-    case scala.util.control.NonFatal(e) =>
-      throw new graft.ExportError(
-        s"export failed: ${e.getMessage}",
-        Map("path" -> path, "format" -> "GeoJson", "stage" -> "export"), e)
   }
 
   /** Z-order clustered parquet write — the 2-D extension of
@@ -266,19 +243,7 @@ object Exporter {
       format: ExportFormat.Value,
       raw: Boolean = false
   ): String = {
-    val ext = format match {
-      case ExportFormat.GeoJson    => "geojson"
-      case ExportFormat.GeoJsonSeq => "geojsonseq"
-      case ExportFormat.Parquet    => "parquet"
-      case ExportFormat.Csv        => "csv"
-      case ExportFormat.Json       => "jsonl"
-      case ExportFormat.Gpkg          => "gpkg"
-      case ExportFormat.Fgdb          => "gdb"
-      case ExportFormat.Shp           => "shp"
-      case ExportFormat.Fgb           => "fgb"
-      case ExportFormat.GeoParquetFmt => "geoparquet"
-    }
     val suffix = if (raw) "_raw" else ""
-    s"${iso3.toLowerCase}_$query$suffix.$ext"
+    s"${iso3.toLowerCase}_$query$suffix.${ExportFormat.extension(format)}"
   }
 }

@@ -56,16 +56,12 @@ object FlatGeobuf {
     case FloatType => 9
     case DoubleType => 10
     case StringType => 11
+    case TimestampType | TimestampNTZType => 13 // DateTime: ISO-8601 text
     case other =>
       throw new graft.ExportError(
         s"flatgeobuf: unsupported attribute type ${other.simpleString}",
         Map("format" -> "fgb", "stage" -> "export"))
   }
-
-  private def readWkb(bytes: Array[Byte]): Wkb.Rings =
-    Wkb.decodeRings(bytes).getOrElse(throw new graft.ExportError(
-      "flatgeobuf writer supports WKB Point/LineString/Polygon; got another type or a malformed blob",
-      Map("format" -> "fgb", "stage" -> "export")))
 
   /** Geometry table: ends (slot 0, [uint], ring end indices — only
     * for multi-ring polygons), xy (slot 1, [double]), type (slot 6,
@@ -126,6 +122,7 @@ object FlatGeobuf {
       w.write((v >> 16) & 0xff); w.write((v >> 24) & 0xff)
     }
     def le64(v: Long): Unit = { (0 until 8).foreach(i => w.write(((v >> (8 * i)) & 0xff).toInt)) }
+    def text(s: String): Unit = { val bs = s.getBytes("UTF-8"); u32(bs.length); w.write(bs) }
     attrs.zipWithIndex.foreach { case ((f, ri), ci) =>
       if (!row.isNullAt(ri)) {
         f.dataType match {
@@ -136,9 +133,8 @@ object FlatGeobuf {
           case LongType => u16(ci); le64(row.getLong(ri))
           case FloatType => u16(ci); u32(java.lang.Float.floatToIntBits(row.getFloat(ri)))
           case DoubleType => u16(ci); le64(java.lang.Double.doubleToLongBits(row.getDouble(ri)))
-          case StringType =>
-            val bs = row.getString(ri).getBytes("UTF-8")
-            u16(ci); u32(bs.length); w.write(bs)
+          case StringType => u16(ci); text(row.getString(ri))
+          case TimestampType | TimestampNTZType => u16(ci); text(Writers.isoMicros(row.get(ri)))
           case other => throw new IllegalStateException(s"unreachable: $other")
         }
       }
@@ -165,13 +161,23 @@ object FlatGeobuf {
 
   def write(df: DataFrame, wkbCol: String, path: String, indexNodeSize: Int): WriteResult = {
     val schema = df.schema
-    val gIdx = schema.fieldIndex(wkbCol)
-    if (schema(gIdx).dataType != BinaryType)
-      throw new graft.ExportError(
-        s"geometry column '$wkbCol' must be WKB binary, is ${schema(gIdx).dataType.simpleString}",
-        Map("format" -> "fgb", "stage" -> "export"))
+    val gIdx = Writers.wkbColumn(schema, wkbCol, "fgb")
     val attrs = schema.fields.zipWithIndex.filter(_._2 != gIdx)
     attrs.foreach { case (f, _) => columnType(f.dataType) } // validate up front
+
+    // Every input column plus the feature's bbox (_minx, _miny,
+    // _maxx, _maxy at nBase..nBase+3): the header pre-pass aggregates
+    // it, the Hilbert path sorts and indexes by it.
+    import org.apache.spark.sql.functions._
+    val base = schema.fields.map(f => col(f.name))
+    val nBase = schema.fields.length
+    val bboxed = df
+      .select(base :+ Wkb.wkbCoords(col(wkbCol)).as("_ps"): _*)
+      .select(base :+
+        array_min(transform(col("_ps"), p => p("x"))).as("_minx") :+
+        array_min(transform(col("_ps"), p => p("y"))).as("_miny") :+
+        array_max(transform(col("_ps"), p => p("x"))).as("_maxx") :+
+        array_max(transform(col("_ps"), p => p("y"))).as("_maxy"): _*)
 
     // Bounded pre-pass (the H17 convention): count, envelope, and
     // the uniform geometry type for the header — ONE aggregate over
@@ -181,15 +187,10 @@ object FlatGeobuf {
     // features_count/envelope from each other. The feature stream
     // below is still a second evaluation: the header is a pre-pass
     // snapshot (determinism assumption documented on `write`).
-    import org.apache.spark.sql.functions._
-    val stats = df
-      .select(graft.functions.Wkb.wkbGeometryType(col(wkbCol)).as("gt"),
-        graft.functions.Wkb.wkbCoords(col(wkbCol)).as("ps"))
-      .agg(collect_set(col("gt")).as("types"),
-        min(array_min(transform(col("ps"), p => p("x")))).as("xmin"),
-        min(array_min(transform(col("ps"), p => p("y")))).as("ymin"),
-        max(array_max(transform(col("ps"), p => p("x")))).as("xmax"),
-        max(array_max(transform(col("ps"), p => p("y")))).as("ymax"),
+    val stats = bboxed
+      .agg(collect_set(Wkb.wkbGeometryType(col(wkbCol))).as("types"),
+        min(col("_minx")).as("xmin"), min(col("_miny")).as("ymin"),
+        max(col("_maxx")).as("xmax"), max(col("_maxy")).as("ymax"),
         count(lit(1)).as("n"))
       .head()
     val typeIds = stats.getAs[scala.collection.Seq[Int]](0)
@@ -247,7 +248,7 @@ object FlatGeobuf {
         val fb = new FlatBufferBuilder(512)
         val props = encodeProps(row, attrs)
         val propsOff = if (props.isEmpty) 0 else fb.createByteVector(props)
-        val geomOff = buildGeometry(fb, readWkb(row.getAs[Array[Byte]](gIdx)))
+        val geomOff = buildGeometry(fb, Writers.rings(row.getAs[Array[Byte]](gIdx), "fgb"))
         fb.startTable(3)
         fb.addOffset(0, geomOff, 0)
         if (propsOff != 0) fb.addOffset(1, propsOff, 0)
@@ -269,16 +270,6 @@ object FlatGeobuf {
         // the driver streams the sorted rows once, spooling feature
         // bytes to a temp file while recording 40 bytes of node
         // state per feature (same order as the .shx offset table).
-        import org.apache.spark.sql.functions._
-        val base = schema.fields.map(f => col(f.name))
-        val bboxed = df
-          .select(base :+ graft.functions.Wkb.wkbCoords(col(wkbCol)).as("_ps"): _*)
-          .select(base :+
-            array_min(transform(col("_ps"), p => p("x"))).as("_minx") :+
-            array_min(transform(col("_ps"), p => p("y"))).as("_miny") :+
-            array_max(transform(col("_ps"), p => p("x"))).as("_maxx") :+
-            array_max(transform(col("_ps"), p => p("y"))).as("_maxy"): _*)
-        val nBase = schema.fields.length
         val ext = bbox
         // A geometry with no coordinates has no bbox (array_min/max
         // null) and cannot be Hilbert-ordered; the unindexed path can

@@ -55,28 +55,7 @@ object GeoJson {
       target: String,
       generatedAt: String,
       rawExport: Boolean = false
-  ): Unit = {
-    val features = df.select(featureColumn(df, geometryJson).as("value"))
-    val spark = df.sparkSession
-    val fs = FileSystem.get(new java.net.URI(path), spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(new HPath(path), true)
-    val writer = new java.io.BufferedWriter(new java.io.OutputStreamWriter(out, "UTF-8"), 1 << 20)
-    try {
-      writer.write("""{"type":"FeatureCollection","features":[""")
-      var first = true
-      var count = 0L
-      val it = features.toLocalIterator()
-      while (it.hasNext) {
-        if (!first) writer.write(",")
-        writer.write(it.next().getString(0))
-        first = false
-        count += 1
-      }
-      val dataType = if (rawExport) "raw_overture" else "normalized"
-      writer.write(
-        s"""],"metadata":{"generated":${JsonConfig.quote(generatedAt)},"source":"graft","target":${JsonConfig.quote(target)},"data_type":"$dataType","count":$count}}""")
-    } finally writer.close()
-  }
+  ): Unit = writeCollection(Seq((None, df, geometryJson)), path, target, generatedAt, rawExport)
 
   /** Multi-layer single-file FeatureCollection — the reference's
     * dict route (export.py:266-296): all layers' features combine
@@ -105,6 +84,22 @@ object GeoJson {
         s"GeoJSON multilayer: layer '$name' already has a 'layer' column — " +
           "rename it before export (the writer injects the layer id there)")
     }
+    writeCollection(layers.map { case (name, df, g) => (Some(name), df, g) },
+      path, target, generatedAt, rawExport)
+  }
+
+  /** Stream every layer's features into one FeatureCollection. A
+    * named layer tags each feature's `layer` property and the
+    * metadata block counts per layer; the one unnamed layer gets the
+    * single-layer `count`.
+    */
+  private def writeCollection(
+      layers: Seq[(Option[String], DataFrame, Column)],
+      path: String,
+      target: String,
+      generatedAt: String,
+      rawExport: Boolean
+  ): Unit = {
     val spark = layers.head._2.sparkSession
     val fs = FileSystem.get(new java.net.URI(path), spark.sparkContext.hadoopConfiguration)
     val out = fs.create(new HPath(path), true)
@@ -115,7 +110,7 @@ object GeoJson {
       val counts = layers.map { case (name, df, geometryJson) =>
         // the layer id rides as a property of every feature,
         // exactly as the reference injects it post-serialization
-        val tagged = df.withColumn("layer", lit(name))
+        val tagged = name.fold(df)(n => df.withColumn("layer", lit(n)))
         val features = tagged.select(featureColumn(tagged, geometryJson).as("value"))
         var count = 0L
         val it = features.toLocalIterator()
@@ -131,10 +126,14 @@ object GeoJson {
       // Layer names and target are caller-supplied strings headed
       // into a hand-built JSON document — escape them (a quote in a
       // layer name would otherwise emit an invalid document).
-      val layerCounts = counts.map { case (n, c) => s"${JsonConfig.quote(n)}:$c" }.mkString(",")
-      val total = counts.map(_._2).sum
+      val tally = counts match {
+        case Seq((None, c)) => s""""count":$c"""
+        case _ =>
+          val layerCounts = counts.collect { case (Some(n), c) => s"${JsonConfig.quote(n)}:$c" }
+          s""""layers":{${layerCounts.mkString(",")}},"total_count":${counts.map(_._2).sum}"""
+      }
       writer.write(
-        s"""],"metadata":{"generated":${JsonConfig.quote(generatedAt)},"source":"graft","target":${JsonConfig.quote(target)},"data_type":"$dataType","layers":{$layerCounts},"total_count":$total}}""")
+        s"""],"metadata":{"generated":${JsonConfig.quote(generatedAt)},"source":"graft","target":${JsonConfig.quote(target)},"data_type":"$dataType",$tally}}""")
     } finally writer.close()
   }
 }

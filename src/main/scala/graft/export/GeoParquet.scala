@@ -49,13 +49,7 @@ object GeoParquet {
     * spec; they simply don't contribute to bbox/types).
     */
   def write(df: DataFrame, wkbCol: String, path: String): WriteResult = {
-    val field = df.schema.fields.find(_.name == wkbCol).getOrElse(
-      throw new graft.ExportError(s"geometry column '$wkbCol' not in schema",
-        Map("format" -> "geoparquet", "stage" -> "export")))
-    if (field.dataType != BinaryType)
-      throw new graft.ExportError(
-        s"geometry column '$wkbCol' must be WKB binary, is ${field.dataType.simpleString}",
-        Map("format" -> "geoparquet", "stage" -> "export"))
+    Writers.wkbColumn(df.schema, wkbCol, "geoparquet")
 
     // Bounded pre-pass: global bbox over every vertex + the distinct
     // geometry-type set, one map-side-combining aggregation.

@@ -6,23 +6,19 @@ import scala.collection.mutable.ArrayBuffer
 
 /** Minimal self-contained SQLite 3 file writer — enough of the file
   * format (https://sqlite.org/fileformat2.html, public spec) to emit
-  * a valid database readable by any stock sqlite3: table b-trees
-  * (leaf + interior levels), INDEX b-trees (leaf 0x0A / interior
-  * 0x02, record keys with promoted separators), the record
-  * serial-type format, varints, payload overflow chains, and the
-  * sqlite_master catalog on page 1.
+  * a GeoPackage any stock sqlite3 reads: table b-trees (leaf +
+  * interior levels), the record serial-type format, varints, payload
+  * overflow chains, and the sqlite_master catalog on page 1.
   *
-  * Scope (documented, enforced): rowid tables, plus single-column
-  * UNIQUE autoindexes (enough for GPKG id-column constraints — an
-  * INTEGER PRIMARY KEY is a rowid alias and needs no index);
-  * WAL/freelist/vacuum never apply to a write-once file.
+  * Scope (documented, enforced): rowid tables only. Every table the
+  * GeoPackage writer emits keys on an INTEGER PRIMARY KEY, which is
+  * the rowid alias, so no index b-tree is needed; WAL/freelist/vacuum
+  * never apply to a write-once file.
   *
-  * Table pages stream to a RandomAccessFile as they fill — driver
-  * memory stays O(page) for feature payloads; index ENTRIES
-  * (key + rowid only) are buffered and sorted in memory, which is
-  * the export-sized trade the single-file format already implies.
+  * Table pages stream to a RandomAccessFile as they fill, so driver
+  * memory stays O(page).
   */
-private[export] final class SqliteWriter(path: String, pageSize: Int = 4096) {
+private[export] final class SqliteWriter(path: String) {
 
   import SqliteWriter._
 
@@ -30,51 +26,29 @@ private[export] final class SqliteWriter(path: String, pageSize: Int = 4096) {
   raf.setLength(0)
 
   private var pageCount = 1 // page 1 = header + sqlite_master root
-  // (type, name, tbl_name, root, sql — None for autoindexes)
-  private val masterRows = ArrayBuffer[(String, String, String, Int, Option[String])]()
+  private val masterRows = ArrayBuffer[(String, Int, String)]() // (table, root page, DDL)
 
   private def allocPage(): Int = { pageCount += 1; pageCount }
 
   private def writePage(n: Int, data: Array[Byte]): Unit = {
-    require(data.length == pageSize)
-    raf.seek((n - 1L) * pageSize)
+    require(data.length == PageSize)
+    raf.seek((n - 1L) * PageSize)
     raf.write(data)
   }
 
   /** Usable bytes; reserved-space-per-page is 0. */
-  private val U = pageSize
+  private val U = PageSize
   private val X = U - 35                    // max local payload, table leaf
-  private val XI = (U - 12) * 64 / 255 - 23 // max local payload, index pages
   private val M = (U - 12) * 32 / 255 - 23  // min local payload
 
   /** Build one table b-tree from STRICTLY ASCENDING rowid rows
     * (validated while streaming — the b-tree's binary search silently
-    * corrupts on unordered or duplicate keys); registers the table in
-    * sqlite_master and returns the root page. The master-page fit is
-    * checked BEFORE any data streams, so a too-wide DDL fails fast
-    * instead of at close() after a full export.
+    * corrupts on unordered or duplicate keys) and register it in
+    * sqlite_master. `sql` is read once the rows have streamed, so a
+    * DDL that depends on the data can be settled then: sqlite_master
+    * is only rendered at [[close]].
     */
-  private def masterRecord(row: (String, String, String, Int, Option[String])): Array[Byte] = {
-    val (typ, n, t, r, s) = row
-    record(Seq(SqlText(typ), SqlText(n), SqlText(t), SqlInt(r.toLong),
-      s.map(SqlText).getOrElse(SqlNull)))
-  }
-
-  /** Fail fast if adding `row` would overflow sqlite_master on page 1
-    * (root not yet known — a 4-byte-int serial is the upper bound).
-    */
-  private def probeMasterFit(row: (String, String, String, Int, Option[String]), what: String): Unit = {
-    val probeCells = (masterRows.toSeq :+ row).zipWithIndex.map { case (r, i) =>
-      makeProbeCell(i + 1L, masterRecord(r))
-    }
-    val masterBytes = 8 + probeCells.map(c => 2 + c).sum
-    require(100 + masterBytes <= pageSize,
-      s"sqlite_master would overflow page 1 (${100 + masterBytes} > $pageSize bytes) — " +
-        s"$what has too wide a schema for this writer")
-  }
-
-  def createTable(name: String, sql: String, rows: Iterator[(Long, Array[Byte])]): Int = {
-    probeMasterFit(("table", name, name, Int.MaxValue, Some(sql)), s"table '$name'")
+  def createTable(name: String, sql: => String, rows: Iterator[(Long, Array[Byte])]): Unit = {
     var prev = Long.MinValue
     val validated = rows.map { case (rowid, payload) =>
       require(rowid > prev,
@@ -84,134 +58,8 @@ private[export] final class SqliteWriter(path: String, pageSize: Int = 4096) {
       (rowid, payload)
     }
     val root = buildTree(validated)
-    masterRows += (("table", name, name, root, Some(sql)))
-    root
+    masterRows += ((name, root, sql))
   }
-
-  /** Build one INDEX b-tree from entries whose LAST value is the
-    * rowid (the SQLite index-record shape). Entries are validated
-    * strictly ascending under SQLite BINARY record collation while
-    * streaming; with `unique` set, equal non-null KEY prefixes (all
-    * values but the rowid) fail — NULL keys stay duplicable, the
-    * SQL UNIQUE semantics. `sql` None registers an autoindex row
-    * (sqlite_master sql IS NULL), Some(ddl) a named index.
-    */
-  def createIndex(
-      name: String,
-      table: String,
-      sql: Option[String],
-      unique: Boolean,
-      entries: Iterator[Seq[SqlValue]]): Int = {
-    probeMasterFit(("index", name, table, Int.MaxValue, sql), s"index '$name'")
-
-    // ---- leaves, with between-leaf entries promoted upward ----
-    var children = Vector.empty[Int]          // finished pages, this level
-    var seps = Vector.empty[Array[Byte]]      // promoted records between them
-    val cells = ArrayBuffer[Array[Byte]]()
-    var cellBytes = 0
-
-    def flushLeaf(): Unit = {
-      val pn = allocPage()
-      writePage(pn, renderPage(0x0A, cells.toSeq, base = 0, rightChild = 0))
-      children :+= pn
-      cells.clear(); cellBytes = 0
-    }
-
-    var prev: Seq[SqlValue] = null
-    var pendingPromote: Array[Byte] = null // record held back for the parent level
-    while (entries.hasNext) {
-      val e = entries.next()
-      if (prev != null) {
-        val cmp = compareRecords(prev, e)
-        require(cmp < 0,
-          s"index '$name': entries must be strictly ascending (record collation), " +
-            s"got $e after $prev")
-        if (unique && compareRecords(prev.dropRight(1), e.dropRight(1)) == 0 &&
-            !e.dropRight(1).contains(SqlNull))
-          throw new IllegalArgumentException(
-            s"index '$name': UNIQUE violation on key ${e.dropRight(1)}")
-      }
-      prev = e
-      val payload = record(e)
-      if (pendingPromote != null) { seps :+= pendingPromote; pendingPromote = null }
-      // Size WITHOUT materializing: makeIndexCell writes overflow
-      // chains as a side effect, so it must run exactly once per
-      // cell that actually lands on a page — a sized-then-discarded
-      // cell would leak orphaned overflow pages (integrity_check
-      // reports them as "never used").
-      val cellSize = indexCellSize(payload.length)
-      if (cells.nonEmpty && 8 + 2 * (cells.size + 1) + cellBytes + cellSize > U) {
-        // close this leaf; THIS entry separates it from the next one,
-        // so it moves up a level instead of into any leaf — unless it
-        // turns out to be the final entry, in which case it becomes
-        // its own leaf (a separator needs a right sibling).
-        flushLeaf()
-        pendingPromote = payload
-      } else {
-        require(8 + 2 + cellSize <= U, s"index '$name': single cell exceeds page capacity")
-        cells += makeIndexCell(payload); cellBytes += cellSize
-      }
-    }
-    if (pendingPromote != null) { // promoted entry with no right sibling
-      cells += makeIndexCell(pendingPromote)
-      flushLeaf()
-    } else if (cells.nonEmpty || children.isEmpty) {
-      flushLeaf() // final partial leaf, or the empty-index single leaf
-    }
-
-    // ---- interior levels: cells are (leftChild, separator record) ----
-    while (children.size > 1) {
-      require(seps.size == children.size - 1,
-        s"index '$name': internal build invariant broke (${children.size} children, ${seps.size} seps)")
-      var nextChildren = Vector.empty[Int]
-      var nextSeps = Vector.empty[Array[Byte]]
-      var i = 0
-      while (i < children.size) {
-        // Greedily take children i.. with their separators until the
-        // page fills; always ≥ 2 children (≥ 1 cell + right pointer).
-        var bytes = 0
-        var last = i // children(i..last) on this page
-        var n = 0
-        var stop = false
-        while (!stop && last < children.size - 1) {
-          // Pure sizing — materialization happens once, below, only
-          // for cells that stay on this page (see leaf-level note).
-          val cell = 4 + indexCellSize(seps(last).length)
-          if (n > 0 && 12 + 2 * (n + 1) + bytes + cell > U) stop = true
-          else {
-            bytes += cell; n += 1; last += 1
-          }
-        }
-        // An interior page needs ≥ 1 cell + a right child (≥ 2
-        // children): if closing here would orphan exactly one child
-        // at the tail, give it back one of ours. Index cells are
-        // overflow-bounded (≤ ~XI + overhead), so a full page always
-        // holds ≥ 3 — the giveback can never empty this page.
-        if (children.size - (last + 1) == 1 && last > i + 1) last -= 1
-        require(last > i && children.size - (last + 1) != 1,
-          s"index '$name': cannot rebalance tail interior page")
-        val pageCells = (i until last).map(t => be32(children(t)) ++ makeIndexCell(seps(t)))
-        val pn = allocPage()
-        writePage(pn, renderPage(0x02, pageCells, base = 0, rightChild = children(last)))
-        nextChildren :+= pn
-        i = last + 1
-        if (i < children.size) { nextSeps :+= seps(last); /* consumed by promotion */ }
-      }
-      children = nextChildren
-      seps = nextSeps
-    }
-    val root = children.head
-    masterRows += (("index", name, table, root, sql))
-    root
-  }
-
-  /** Worst-case inline cell size for the page-fit probe (payloads
-    * under the overflow threshold, which master records with DDL of
-    * page-1 scale always are).
-    */
-  private def makeProbeCell(rowid: Long, payload: Array[Byte]): Int =
-    varint(payload.length.toLong).length + varint(rowid).length +
-      math.min(payload.length, X) + (if (payload.length > X) 4 else 0)
 
   /** cellBytes = varint(P) ++ varint(rowid) ++ local-payload
     * [++ be32(firstOverflowPage)]; overflow pages are written
@@ -228,51 +76,13 @@ private[export] final class SqliteWriter(path: String, pageSize: Int = 4096) {
       val nums = chunks.map(_ => allocPage())
       var i = 0
       while (i < chunks.length) {
-        val pg = new Array[Byte](pageSize)
+        val pg = new Array[Byte](PageSize)
         putBE32(pg, 0, if (i + 1 < nums.length) nums(i + 1) else 0)
         System.arraycopy(chunks(i), 0, pg, 4, chunks(i).length)
         writePage(nums(i), pg)
         i += 1
       }
       varint(p.toLong) ++ varint(rowid) ++ payload.take(local) ++ be32(nums(0))
-    }
-  }
-
-  /** Exact byte size [[makeIndexCell]] will produce, WITHOUT the
-    * side effect of writing overflow pages — use this for all
-    * page-fit probing.
-    */
-  private def indexCellSize(p: Int): Int =
-    if (p <= XI) varint(p.toLong).length + p
-    else {
-      val k = M + ((p - M) % (U - 4))
-      val local = if (k <= XI) k else M
-      varint(p.toLong).length + local + 4
-    }
-
-  /** Index cell: varint(P) ++ local-payload [++ be32(overflow)] — no
-    * rowid field (the rowid is the record's last column); index
-    * pages use the smaller XI local-payload maximum. SIDE EFFECT:
-    * allocates and writes the overflow chain — call exactly once per
-    * cell that is actually placed ([[indexCellSize]] for probing).
-    */
-  private def makeIndexCell(payload: Array[Byte]): Array[Byte] = {
-    val p = payload.length
-    if (p <= XI) varint(p.toLong) ++ payload
-    else {
-      val k = M + ((p - M) % (U - 4))
-      val local = if (k <= XI) k else M
-      val chunks = payload.drop(local).grouped(U - 4).toArray
-      val nums = chunks.map(_ => allocPage())
-      var i = 0
-      while (i < chunks.length) {
-        val pg = new Array[Byte](pageSize)
-        putBE32(pg, 0, if (i + 1 < nums.length) nums(i + 1) else 0)
-        System.arraycopy(chunks(i), 0, pg, 4, chunks(i).length)
-        writePage(nums(i), pg)
-        i += 1
-      }
-      varint(p.toLong) ++ payload.take(local) ++ be32(nums(0))
     }
   }
 
@@ -337,20 +147,23 @@ private[export] final class SqliteWriter(path: String, pageSize: Int = 4096) {
   }
 
   /** Finalize: render sqlite_master into page 1 and the 100-byte
-    * header, then close. `applicationId`/`userVersion` parameterized
-    * so GPKG can brand the container.
+    * header, branded GeoPackage 1.3 (application_id "GPKG",
+    * user_version 10300), then close.
     */
-  def close(applicationId: Int = 0, userVersion: Int = 0): Unit = {
-    val page1 = new Array[Byte](pageSize)
-    val masterCells = masterRows.zipWithIndex.map { case (row, i) =>
-      makeCell(i + 1L, masterRecord(row))
+  def close(): Unit = try {
+    val masterCells = masterRows.toSeq.zipWithIndex.map { case ((name, root, sql), i) =>
+      makeCell(i + 1L, record(Seq(SqlText("table"), SqlText(name), SqlText(name),
+        SqlInt(root.toLong), SqlText(sql))))
     }
-    val rendered = renderPage(0x0D, masterCells.toSeq, base = 100, rightChild = 0)
-    System.arraycopy(rendered, 0, page1, 0, pageSize)
+    val used = 100 + 8 + masterCells.map(2 + _.length).sum
+    require(used <= PageSize,
+      s"sqlite_master would overflow page 1 ($used > $PageSize bytes): " +
+        s"the schema of ${masterRows.map(_._1).mkString(", ")} is too wide for this writer")
+    val page1 = renderPage(0x0D, masterCells, base = 100, rightChild = 0)
 
     // 100-byte header (offsets per the file-format spec)
     System.arraycopy("SQLite format 3\u0000".getBytes("ISO-8859-1"), 0, page1, 0, 16)
-    putBE16(page1, 16, pageSize)
+    putBE16(page1, 16, PageSize)
     page1(18) = 1; page1(19) = 1          // file format write/read version: legacy
     page1(20) = 0                         // reserved space
     page1(21) = 64; page1(22) = 32; page1(23) = 32
@@ -362,26 +175,25 @@ private[export] final class SqliteWriter(path: String, pageSize: Int = 4096) {
     putBE32(page1, 48, 0)                 // default cache size
     putBE32(page1, 52, 0)                 // largest root (vacuum off)
     putBE32(page1, 56, 1)                 // text encoding UTF-8
-    putBE32(page1, 60, userVersion)
+    putBE32(page1, 60, 10300)             // user_version: GeoPackage 1.3
     putBE32(page1, 64, 0)                 // incremental vacuum off
-    putBE32(page1, 68, applicationId)
+    putBE32(page1, 68, 0x47504B47)        // application_id "GPKG"
     putBE32(page1, 92, 1)                 // version-valid-for
     putBE32(page1, 96, 3045000)           // sqlite version number stamp
     writePage(1, page1)
-    raf.close()
-  }
+  } finally raf.close()
 
   /** Render one b-tree page: header, cell pointer array (key order),
     * cell content packed from the page end downward.
     */
   private def renderPage(pageType: Int, cells: Seq[Array[Byte]], base: Int, rightChild: Int): Array[Byte] = {
-    val page = new Array[Byte](pageSize)
-    val interior = pageType == 0x05 || pageType == 0x02
+    val page = new Array[Byte](PageSize)
+    val interior = pageType == 0x05
     val headerLen = if (interior) 12 else 8
     page(base) = pageType.toByte
     putBE16(page, base + 1, 0) // first freeblock
     putBE16(page, base + 3, cells.size)
-    var off = pageSize
+    var off = PageSize
     val ptrBase = base + headerLen
     cells.zipWithIndex.foreach { case (c, i) =>
       off -= c.length
@@ -389,7 +201,7 @@ private[export] final class SqliteWriter(path: String, pageSize: Int = 4096) {
       putBE16(page, ptrBase + 2 * i, off)
     }
     require(ptrBase + 2 * cells.size <= off, "page overflow (cells collide with pointer array)")
-    putBE16(page, base + 5, if (off == 65536) 0 else off)
+    putBE16(page, base + 5, off)
     page(base + 7) = 0 // fragmented free bytes
     if (interior) putBE32(page, base + 8, rightChild)
     page
@@ -397,6 +209,8 @@ private[export] final class SqliteWriter(path: String, pageSize: Int = 4096) {
 }
 
 private[export] object SqliteWriter {
+
+  val PageSize = 4096
 
   sealed trait SqlValue
   case object SqlNull extends SqlValue
@@ -464,57 +278,6 @@ private[export] object SqliteWriter {
     varint(hdrLen.toLong) ++ serials ++ parts.flatMap(_._2)
   }
 
-  /** SQLite value comparison under BINARY collation: storage-class
-    * rank NULL < numeric < TEXT < BLOB; INT and REAL compare
-    * numerically across classes; text/blob compare bytewise
-    * unsigned, shorter prefix first.
-    */
-  def compareValues(a: SqlValue, b: SqlValue): Int = {
-    def rank(v: SqlValue): Int = v match {
-      case SqlNull                => 0
-      case _: SqlInt | _: SqlReal => 1
-      case _: SqlText             => 2
-      case _: SqlBlob             => 3
-    }
-    val r = Integer.compare(rank(a), rank(b))
-    if (r != 0) r
-    else (a, b) match {
-      case (SqlNull, SqlNull)       => 0
-      case (SqlInt(x), SqlInt(y))   => java.lang.Long.compare(x, y)
-      case (SqlReal(x), SqlReal(y)) => java.lang.Double.compare(x, y)
-      case (SqlInt(x), SqlReal(y)) =>
-        java.math.BigDecimal.valueOf(x).compareTo(new java.math.BigDecimal(y))
-      case (SqlReal(x), SqlInt(y)) =>
-        new java.math.BigDecimal(x).compareTo(java.math.BigDecimal.valueOf(y))
-      case (SqlText(x), SqlText(y)) => compareBytes(x.getBytes("UTF-8"), y.getBytes("UTF-8"))
-      case (SqlBlob(x), SqlBlob(y)) => compareBytes(x, y)
-      case _                        => 0 // unreachable: ranks differ
-    }
-  }
-
-  private def compareBytes(x: Array[Byte], y: Array[Byte]): Int = {
-    var i = 0
-    val n = math.min(x.length, y.length)
-    while (i < n) {
-      val c = Integer.compare(x(i) & 0xFF, y(i) & 0xFF)
-      if (c != 0) return c
-      i += 1
-    }
-    Integer.compare(x.length, y.length)
-  }
-
-  /** Record comparison: column by column, shorter record first. */
-  def compareRecords(a: Seq[SqlValue], b: Seq[SqlValue]): Int = {
-    var i = 0
-    val n = math.min(a.length, b.length)
-    while (i < n) {
-      val c = compareValues(a(i), b(i))
-      if (c != 0) return c
-      i += 1
-    }
-    Integer.compare(a.length, b.length)
-  }
-
   def be32(v: Int): Array[Byte] =
     Array(((v >> 24) & 0xFF).toByte, ((v >> 16) & 0xFF).toByte, ((v >> 8) & 0xFF).toByte, (v & 0xFF).toByte)
 
@@ -544,6 +307,10 @@ object Gpkg {
 
   import SqliteWriter._
 
+  private val SrsId = 4326
+  private val LastChange = "2026-01-01T00:00:00.000Z"
+  private val GeomCol = "geom"
+
   private val Wgs84Wkt =
     "GEOGCS[\"WGS 84\",DATUM[\"WGS_1984\",SPHEROID[\"WGS 84\",6378137,298.257223563]]," +
       "PRIMEM[\"Greenwich\",0],UNIT[\"degree\",0.0174532925199433]]"
@@ -554,6 +321,7 @@ object Gpkg {
     case StringType                                    => "TEXT"
     case BinaryType                                    => "BLOB"
     case BooleanType                                   => "BOOLEAN"
+    case TimestampType | TimestampNTZType              => "DATETIME"
     case other =>
       throw new IllegalArgumentException(s"GPKG: unsupported column type $other")
   }
@@ -569,6 +337,8 @@ object Gpkg {
     case x: Float      => SqlReal(x.toDouble)
     case x: String     => SqlText(x)
     case x: Array[Byte] => SqlBlob(x)
+    case x @ (_: java.sql.Timestamp | _: java.time.Instant | _: java.time.LocalDateTime) =>
+      SqlText(Writers.isoMillisUtc(x))
     case other =>
       throw new IllegalArgumentException(s"GPKG: unsupported value $other")
   }
@@ -576,47 +346,47 @@ object Gpkg {
   /** GeoPackage geometry blob: "GP", version 0, flags 0x01
     * (little-endian header, no envelope), srs_id, then the WKB.
     */
-  def geometryBlob(wkb: Array[Byte], srsId: Int): Array[Byte] = {
+  private def geometryBlob(wkb: Array[Byte]): Array[Byte] = {
     val out = new Array[Byte](8 + wkb.length)
     out(0) = 'G'; out(1) = 'P'; out(2) = 0; out(3) = 0x01
-    out(4) = (srsId & 0xFF).toByte
-    out(5) = ((srsId >> 8) & 0xFF).toByte
-    out(6) = ((srsId >> 16) & 0xFF).toByte
-    out(7) = ((srsId >> 24) & 0xFF).toByte
+    out(4) = (SrsId & 0xFF).toByte
+    out(5) = ((SrsId >> 8) & 0xFF).toByte
+    out(6) = ((SrsId >> 16) & 0xFF).toByte
+    out(7) = ((SrsId >> 24) & 0xFF).toByte
     System.arraycopy(wkb, 0, out, 8, wkb.length)
     out
   }
 
-  /** Write `df` as a single-table GeoPackage. `geomCol` must be a
-    * BINARY column holding raw WKB (e.g. from the Wkb encoders); a
-    * LONG `fid` column, when present, becomes the rowid. Columns in
-    * `uniqueCols` get a SQL UNIQUE constraint backed by a real
-    * `sqlite_autoindex` b-tree (validated by stock sqlite3's
-    * integrity_check, which cross-checks index vs table content);
-    * duplicate non-null values fail the export. Index entries
-    * (key + fid only) buffer in driver memory — feature payloads
-    * still stream at O(page).
+  /** Base WKB type of a blob (EWKB flags and ISO Z/M offsets
+    * stripped); -1 for a blob too short to carry one.
     */
-  def write(
-      df: DataFrame,
-      path: String,
-      table: String,
-      geomCol: String = "geom",
-      geometryTypeName: String = "POINT",
-      srsId: Int = 4326,
-      lastChange: String = "2026-01-01T00:00:00.000Z",
-      uniqueCols: Seq[String] = Seq.empty
-  ): Unit =
-    writeLayers(Seq(Layer(df, table, geomCol, geometryTypeName, uniqueCols)),
-      path, srsId, lastChange)
+  private def wkbType(wkb: Array[Byte]): Int =
+    if (wkb.length < 5) -1
+    else {
+      val buf = java.nio.ByteBuffer.wrap(wkb, 1, 4).order(
+        if (wkb(0) == 1) java.nio.ByteOrder.LITTLE_ENDIAN else java.nio.ByteOrder.BIG_ENDIAN)
+      (buf.getInt & 0x0FFFFFFF) % 1000
+    }
+
+  /** `geometry_type_name` of a layer whose non-null geometries have
+    * the WKB types `kinds`: the one type's name, else GEOMETRY.
+    */
+  private def geometryTypeName(kinds: Set[Int]): String = kinds.toSeq match {
+    case Seq(1) => "POINT"
+    case Seq(2) => "LINESTRING"
+    case Seq(3) => "POLYGON"
+    case _      => "GEOMETRY"
+  }
+
+  /** Write `df` as a single-table GeoPackage. `geom` must be a BINARY
+    * column holding raw WKB (e.g. from the Wkb encoders); a LONG
+    * `fid` column, when present, becomes the rowid.
+    */
+  def write(df: DataFrame, path: String, table: String): Unit =
+    writeLayers(Seq(Layer(df, table)), path)
 
   /** One feature table of a (possibly multi-layer) GeoPackage. */
-  final case class Layer(
-      df: DataFrame,
-      table: String,
-      geomCol: String = "geom",
-      geometryTypeName: String = "POINT",
-      uniqueCols: Seq[String] = Seq.empty)
+  final case class Layer(df: DataFrame, table: String)
 
   /** Multi-layer single-file GeoPackage — the reference's GPKG
     * contract (export.py:80 "GPKG: Single file with layers",
@@ -628,12 +398,7 @@ object Gpkg {
     * CALLER's concern ([[Exporter.writeGpkgLayers]] applies the
     * reference's `{target}_{layer}` rule).
     */
-  def writeLayers(
-      layers: Seq[Layer],
-      path: String,
-      srsId: Int = 4326,
-      lastChange: String = "2026-01-01T00:00:00.000Z"
-  ): Unit = {
+  def writeLayers(layers: Seq[Layer], path: String): Unit = {
     require(layers.nonEmpty, "GPKG: at least one layer")
     require(layers.map(_.table).distinct.size == layers.size,
       s"GPKG: duplicate layer table names in ${layers.map(_.table)}")
@@ -652,7 +417,7 @@ object Gpkg {
         id -> record(Seq(SqlText(sname), SqlNull, SqlText(org), SqlInt(orgId), SqlText(defn), SqlNull))
       })
 
-    layers.foreach(l => writeFeatureTable(w, l, srsId))
+    val typeNames = layers.map(l => writeFeatureTable(w, l))
 
     // ---- gpkg_contents + gpkg_geometry_columns (one row per layer) ----
     w.createTable("gpkg_contents",
@@ -661,25 +426,24 @@ object Gpkg {
         "min_x DOUBLE, min_y DOUBLE, max_x DOUBLE, max_y DOUBLE, srs_id INTEGER)",
       layers.iterator.zipWithIndex.map { case (l, i) =>
         (i + 1).toLong -> record(Seq(SqlText(l.table), SqlText("features"), SqlText(l.table),
-          SqlText(""), SqlText(lastChange), SqlNull, SqlNull, SqlNull, SqlNull, SqlInt(srsId.toLong)))
+          SqlText(""), SqlText(LastChange), SqlNull, SqlNull, SqlNull, SqlNull, SqlInt(SrsId.toLong)))
       })
     w.createTable("gpkg_geometry_columns",
       "CREATE TABLE gpkg_geometry_columns (table_name TEXT NOT NULL, column_name TEXT NOT NULL, " +
         "geometry_type_name TEXT NOT NULL, srs_id INTEGER NOT NULL, z TINYINT NOT NULL, m TINYINT NOT NULL)",
-      layers.iterator.zipWithIndex.map { case (l, i) =>
-        (i + 1).toLong -> record(Seq(SqlText(l.table), SqlText(l.geomCol), SqlText(l.geometryTypeName),
-          SqlInt(srsId.toLong), SqlInt(0L), SqlInt(0L)))
+      layers.iterator.zip(typeNames).zipWithIndex.map { case ((l, typeName), i) =>
+        (i + 1).toLong -> record(Seq(SqlText(l.table), SqlText(GeomCol), SqlText(typeName),
+          SqlInt(SrsId.toLong), SqlInt(0L), SqlInt(0L)))
       })
 
-    // application_id "GPKG", user_version 10300 (GeoPackage 1.3)
-    w.close(applicationId = 0x47504B47, userVersion = 10300)
+    w.close()
   }
 
-  /** Stream one layer's feature table (and its UNIQUE autoindex
-    * b-trees) through the page writer.
+  /** Stream one layer's feature table through the page writer and
+    * return its `geometry_type_name`, read from the rows written.
     */
-  private def writeFeatureTable(w: SqliteWriter, layer: Layer, srsId: Int): Unit = {
-    val Layer(df, table, geomCol, geometryTypeName, uniqueCols) = layer
+  private def writeFeatureTable(w: SqliteWriter, layer: Layer): String = {
+    val Layer(df, table) = layer
     // A 'fid' column becomes the rowid: narrower integral types are
     // widened to long; anything non-integral is an error rather than
     // a silent drop-and-renumber.
@@ -694,31 +458,14 @@ object Gpkg {
       }
     } else df
     val schema = input.schema
-    require(schema.fieldNames.contains(geomCol), s"GPKG: missing geometry column '$geomCol'")
-    require(schema(geomCol).dataType == BinaryType, s"GPKG: '$geomCol' must be BINARY (WKB)")
-    val attrFields = schema.fields.filter(f => f.name != geomCol && f.name != "fid")
+    val geomIdx = Writers.wkbColumn(schema, GeomCol, "gpkg")
+    val attrFields = schema.fields.filter(f => f.name != GeomCol && f.name != "fid")
     val hasFid = schema.fieldNames.contains("fid")
 
-    uniqueCols.foreach { c =>
-      require(attrFields.exists(_.name == c),
-        s"GPKG: unique column '$c' must be a non-geometry, non-fid attribute column")
-    }
-    val attrDdl = attrFields.map { f =>
-      val unique = if (uniqueCols.contains(f.name)) " UNIQUE" else ""
-      s""""${f.name}" ${sqlType(f.dataType)}$unique"""
-    }.mkString(", ")
-    val ddl = s"""CREATE TABLE "$table" ("fid" INTEGER PRIMARY KEY, "$geomCol" $geometryTypeName""" +
-      (if (attrDdl.nonEmpty) s", $attrDdl)" else ")")
-    val geomIdx = schema.fieldIndex(geomCol)
+    val attrDdl = attrFields.map(f => s""""${f.name}" ${sqlType(f.dataType)}""").mkString(", ")
     val fidIdx = if (hasFid) schema.fieldIndex("fid") else -1
     val attrIdx = attrFields.map(f => schema.fieldIndex(f.name))
-    // (key, rowid) per unique column, buffered for the autoindex
-    // b-trees; sorted after the table streams (driver-sized: two
-    // scalars per row, not feature payloads).
-    val uniqueOrder = attrFields.map(_.name).filter(uniqueCols.contains)
-    val indexEntries = uniqueOrder.map(c =>
-      c -> scala.collection.mutable.ArrayBuffer.empty[(SqlValue, Long)]).toMap
-    val uniqueIdx = uniqueOrder.map(c => c -> schema.fieldIndex(c)).toMap
+    var kinds = Set.empty[Int]
     var rowNum = 0L
     // The b-tree needs strictly ascending rowids: a user fid column
     // drives an explicit global sort (toLocalIterator on an unsorted
@@ -727,37 +474,30 @@ object Gpkg {
     // createTable's ascending check / here.
     val ordered = if (hasFid) input.orderBy(org.apache.spark.sql.functions.col("fid")) else input
     val featureRows = ordered.toLocalIterator()
-    w.createTable(table, ddl, new Iterator[(Long, Array[Byte])] {
-      def hasNext: Boolean = featureRows.hasNext
-      def next(): (Long, Array[Byte]) = {
-        val r = featureRows.next()
-        rowNum += 1
-        val fid =
-          if (!hasFid) rowNum
-          else if (r.isNullAt(fidIdx))
-            throw new IllegalArgumentException(s"GPKG: null fid at input row $rowNum")
-          else r.getLong(fidIdx)
-        val geom =
-          if (r.isNullAt(geomIdx)) SqlNull
-          else SqlBlob(geometryBlob(r.getAs[Array[Byte]](geomIdx), srsId))
-        val attrs = attrIdx.map(i => if (r.isNullAt(i)) SqlNull else toSqlValue(r.get(i)))
-        uniqueOrder.foreach { c =>
-          val i = uniqueIdx(c)
-          indexEntries(c) += ((if (r.isNullAt(i)) SqlNull else toSqlValue(r.get(i))) -> fid)
+    w.createTable(table,
+      s"""CREATE TABLE "$table" ("fid" INTEGER PRIMARY KEY, "$GeomCol" ${geometryTypeName(kinds)}""" +
+        (if (attrDdl.nonEmpty) s", $attrDdl)" else ")"),
+      new Iterator[(Long, Array[Byte])] {
+        def hasNext: Boolean = featureRows.hasNext
+        def next(): (Long, Array[Byte]) = {
+          val r = featureRows.next()
+          rowNum += 1
+          val fid =
+            if (!hasFid) rowNum
+            else if (r.isNullAt(fidIdx))
+              throw new IllegalArgumentException(s"GPKG: null fid at input row $rowNum")
+            else r.getLong(fidIdx)
+          val geom =
+            if (r.isNullAt(geomIdx)) SqlNull
+            else {
+              val wkb = r.getAs[Array[Byte]](geomIdx)
+              kinds += wkbType(wkb)
+              SqlBlob(geometryBlob(wkb))
+            }
+          val attrs = attrIdx.map(i => if (r.isNullAt(i)) SqlNull else toSqlValue(r.get(i)))
+          fid -> record(SqlNull +: geom +: attrs.toSeq)
         }
-        fid -> record(SqlNull +: geom +: attrs.toSeq)
-      }
-    })
-
-    // ---- autoindex b-trees for the UNIQUE constraints ----
-    // sqlite names them sqlite_autoindex_<table>_<n> in constraint
-    // (= DDL column) order; their sqlite_master sql is NULL.
-    uniqueOrder.zipWithIndex.foreach { case (c, i) =>
-      val sorted = indexEntries(c)
-        .map { case (k, fid) => Seq(k, SqlInt(fid)) }
-        .sortWith(compareRecords(_, _) < 0)
-      w.createIndex(s"sqlite_autoindex_${table}_${i + 1}", table,
-        sql = None, unique = true, entries = sorted.iterator)
-    }
+      })
+    geometryTypeName(kinds)
   }
 }

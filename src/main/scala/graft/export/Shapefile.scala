@@ -6,8 +6,6 @@ import java.nio.{ByteBuffer, ByteOrder}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.types._
 
-import graft.functions.Wkb
-
 /** ESRI Shapefile writer — pure JVM, from the PUBLIC spec ("ESRI
   * Shapefile Technical Description", ESRI whitepaper, July 1998; the
   * same format GDAL's 'ESRI Shapefile' driver writes). Closes the
@@ -50,11 +48,6 @@ object Shapefile {
   private val Wgs84Wkt =
     """GEOGCS["GCS_WGS_1984",DATUM["D_WGS_1984",SPHEROID["WGS_1984",6378137.0,298.257223563]],PRIMEM["Greenwich",0.0],UNIT["Degree",0.0174532925199433]]"""
 
-  private def readWkb(bytes: Array[Byte]): Wkb.Rings =
-    Wkb.decodeRings(bytes).getOrElse(throw new graft.ExportError(
-      "shapefile writer supports WKB Point/LineString/Polygon; got another type or a malformed blob",
-      Map("format" -> "shp", "stage" -> "export")))
-
   /** 2×signed area (shoelace); > 0 = counter-clockwise. */
   private def signedArea2(ring: Array[Double]): Double = {
     var s = 0.0
@@ -88,6 +81,8 @@ object Shapefile {
     case StringType => DbfField(f.name.take(10), 'C', 64, 0)
     case LongType | IntegerType | ShortType | ByteType => DbfField(f.name.take(10), 'N', 18, 0)
     case DoubleType | FloatType => DbfField(f.name.take(10), 'N', 19, 6)
+    // dBASE has no date-time type: ISO-8601 text, 27 = the widest form
+    case TimestampType | TimestampNTZType => DbfField(f.name.take(10), 'C', 27, 0)
     case other =>
       throw new graft.ExportError(
         s"shapefile attribute '${f.name}': unsupported type ${other.simpleString}",
@@ -99,6 +94,8 @@ object Shapefile {
       case null => ""
       case d: Double => { val t = f"$d%.6f"; if (t.length > fd.len) "*" * fd.len else t }
       case f1: Float => { val t = f"${f1.toDouble}%.6f"; if (t.length > fd.len) "*" * fd.len else t }
+      case t @ (_: java.sql.Timestamp | _: java.time.Instant | _: java.time.LocalDateTime) =>
+        Writers.isoMicros(t)
       // Integers overflow the same way doubles do: a value wider than
       // the field gets the dBASE asterisk-fill overflow marker, never
       // a silent truncation of the most-significant digits.
@@ -123,11 +120,7 @@ object Shapefile {
     */
   def write(df: DataFrame, wkbCol: String, path: String): WriteResult = {
     val schema = df.schema
-    val gIdx = schema.fieldIndex(wkbCol)
-    if (schema(gIdx).dataType != BinaryType)
-      throw new graft.ExportError(
-        s"geometry column '$wkbCol' must be WKB binary, is ${schema(gIdx).dataType.simpleString}",
-        Map("format" -> "shp", "stage" -> "export"))
+    val gIdx = Writers.wkbColumn(schema, wkbCol, "shp")
     val attrs = schema.fields.zipWithIndex.filter(_._2 != gIdx)
     val fields = attrs.map { case (f, _) => dbfField(f) }
     // dBASE caps field names at 10 chars; two columns sharing a
@@ -180,7 +173,7 @@ object Shapefile {
       val it = df.toLocalIterator()
       while (it.hasNext) {
         val row = it.next()
-        val g = readWkb(row.getAs[Array[Byte]](gIdx))
+        val g = Writers.rings(row.getAs[Array[Byte]](gIdx), "shp")
         val st = g.kind match { case 1 => 1; case 2 => 3; case 3 => 5 }
         if (shapeType == -1) shapeType = st
         else if (shapeType != st)
@@ -197,6 +190,20 @@ object Shapefile {
             }
           else g.rings
 
+        // record bbox, one walk over the rings; the file bbox folds it
+        var rxmin = Double.MaxValue; var rymin = Double.MaxValue
+        var rxmax = -Double.MaxValue; var rymax = -Double.MaxValue
+        rings.foreach { r =>
+          var i = 0
+          while (i < r.length) {
+            if (r(i) < rxmin) rxmin = r(i); if (r(i) > rxmax) rxmax = r(i)
+            if (r(i + 1) < rymin) rymin = r(i + 1); if (r(i + 1) > rymax) rymax = r(i + 1)
+            i += 2
+          }
+        }
+        if (rxmin < xmin) xmin = rxmin; if (rxmax > xmax) xmax = rxmax
+        if (rymin < ymin) ymin = rymin; if (rymax > ymax) ymax = rymax
+
         val pts = rings.map(_.length / 2).sum
         val content = g.kind match {
           case 1 =>
@@ -204,16 +211,6 @@ object Shapefile {
             b.putInt(1).putDouble(rings(0)(0)).putDouble(rings(0)(1))
             b.array()
           case _ =>
-            var rxmin = Double.MaxValue; var rymin = Double.MaxValue
-            var rxmax = -Double.MaxValue; var rymax = -Double.MaxValue
-            rings.foreach { r =>
-              var i = 0
-              while (i < r.length) {
-                if (r(i) < rxmin) rxmin = r(i); if (r(i) > rxmax) rxmax = r(i)
-                if (r(i + 1) < rymin) rymin = r(i + 1); if (r(i + 1) > rymax) rymax = r(i + 1)
-                i += 2
-              }
-            }
             val b = ByteBuffer.allocate(4 + 32 + 8 + 4 * rings.length + 16 * pts)
               .order(ByteOrder.LITTLE_ENDIAN)
             b.putInt(shapeType)
@@ -225,14 +222,6 @@ object Shapefile {
             b.array()
         }
         rows += 1
-        rings.foreach { r =>
-          var i = 0
-          while (i < r.length) {
-            if (r(i) < xmin) xmin = r(i); if (r(i) > xmax) xmax = r(i)
-            if (r(i + 1) < ymin) ymin = r(i + 1); if (r(i + 1) > ymax) ymax = r(i + 1)
-            i += 2
-          }
-        }
 
         // record header (big-endian): number, content words
         val rh = ByteBuffer.allocate(8).order(ByteOrder.BIG_ENDIAN)

@@ -218,15 +218,20 @@ object TransformQueries {
     // inside whole-stage codegen — the WkbRingStats precedent, scoped
     // to this row (the r13 staged-projection attempt was a proven
     // plan no-op; this is the "real fix" it deferred).
-    val stats = graft.functions.RingStats(raw)
-    val area = stats.getField("area")
-    val nValid = stats.getField("n_valid")
-    rings.select(
-      col("user_id"),
-      size(raw).cast("long").as("n_raw"),
-      nValid.cast("long").as("n_valid"),
-      round(abs(area), 4).as("area_abs"),
-      (nValid >= 3 && abs(area) > 1e-9).cast("int").cast("long").as("is_valid"))
+    // The struct is projected once and its fields read from that
+    // column: RingStats is not cheap, so the optimizer keeps the two
+    // projections apart instead of inlining one call per field read.
+    val area = col("s.area")
+    val nValid = col("s.n_valid")
+    rings
+      .select(col("user_id"), size(raw).cast("long").as("n_raw"),
+        graft.functions.RingStats(raw).as("s"))
+      .select(
+        col("user_id"),
+        col("n_raw"),
+        nValid.cast("long").as("n_valid"),
+        round(abs(area), 4).as("area_abs"),
+        (nValid >= 3 && abs(area) > 1e-9).cast("int").cast("long").as("is_valid"))
   }
 
   val trGeometryRulesSql: String = {

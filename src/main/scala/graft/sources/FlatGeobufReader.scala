@@ -133,7 +133,7 @@ object FlatGeobufReader {
     case 7 => LongType
     case 9 => FloatType
     case 10 => DoubleType
-    case 11 => StringType
+    case 11 | 13 => StringType // 13 = DateTime, ISO-8601 text
     case other =>
       throw new graft.ExportError(s"flatgeobuf reader: unsupported ColumnType $other",
         Map("format" -> "fgb", "stage" -> "import"))
@@ -227,7 +227,7 @@ object FlatGeobufReader {
           case 7 => values(ci) = f.bb.getLong(p); p += 8
           case 9 => values(ci) = f.bb.getFloat(p); p += 4
           case 10 => values(ci) = f.bb.getDouble(p); p += 8
-          case 11 =>
+          case 11 | 13 =>
             val len = f.bb.getInt(p); p += 4
             val arr = new Array[Byte](len)
             val d = f.bb.duplicate(); d.position(p); d.get(arr)

@@ -36,6 +36,16 @@ class BenchSpec extends SparkSpec {
     assert(!full.get("queries").get("ok").has("error"))
   }
 
+  test("a row that stages through SessionStage builds its artifact in every timed run") {
+    var builds = 0
+    val staged = row("staged")((s, dir) => {
+      graft.util.SessionStage.dir(s, dir, "bench_spec_staged")(_ => builds += 1)
+      s.range(1).toDF()
+    })
+    val Seq(score) = Bench.score(spark, Seq(staged), sfDir, new StageMetricsListener)
+    assert(score.error.isEmpty && builds == 2)
+  }
+
   test("the totals fields keep their keys and order") {
     val t = Bench.totals(Seq(
       Bench.Score("a", 2.0, 1.5, None),

@@ -227,6 +227,42 @@ class CliSpec extends SparkSpec {
     assert(spark.read.parquet(s"$dir/out").count() == 2000)
   }
 
+  test("export writes the same bytes for the same input and --date") {
+    val dir = tmp()
+    val catalog = writeCatalog(dir)
+    def export(name: String, out: String, geom: String): Unit =
+      Cli.run(spark, Seq("export", catalog, name, sfDir, s"$dir/$out", s"--geom=$geom",
+        "--date=2026-01-01"))
+    Seq("fgb", "gpkg", "shp", "geojson", "geojsonseq")
+      .foreach(ext => export("supplier_sites", s"s.$ext", "s_acctbal,s_nationkey"))
+    Seq("gpkg", "geojson").foreach(ext => export("education", s"e.$ext", "c_acctbal,c_nationkey"))
+    def sha256(files: Seq[java.nio.file.Path]): String = {
+      val md = java.security.MessageDigest.getInstance("SHA-256")
+      files.foreach(f => md.update(Files.readAllBytes(f)))
+      md.digest().map(b => f"$b%02x").mkString
+    }
+    val singles = Seq("s.fgb", "s.gpkg", "s.shp", "s.shx", "s.dbf", "s.prj", "s.cpg",
+      "s.geojson", "e.gpkg", "e.geojson")
+    // the GeoJSONSeq output is a directory: its part files in name order
+    val seqParts = Files.list(Paths.get(dir, "s.geojsonseq")).toArray
+      .map(_.asInstanceOf[java.nio.file.Path])
+      .filter(_.getFileName.toString.startsWith("part-")).sortBy(_.getFileName.toString).toSeq
+    val got = singles.map(f => f -> sha256(Seq(Paths.get(dir, f)))).toMap +
+      ("s.geojsonseq" -> sha256(seqParts))
+    assert(got == Map(
+      "s.fgb" -> "f8e8e0d25c5af5638f199455097505daa24ffebce9961c07ffce2c04a6aa2a0d",
+      "s.gpkg" -> "52f38d02b2d1e122a0aaf6303cf147f2d1e4f0a722310e1b2596d4daeb6751a8",
+      "s.shp" -> "cdf94c4fc439af87570089e7a4305485db5099e4219ff9f7fcadb77e93157013",
+      "s.shx" -> "5b242bdab189342ec9b3155589360a985c0c4c5db77ce44cf45f81932d35f292",
+      "s.dbf" -> "5ef5308aec6c81d757f8704d3bace51731cfcdb15cef68f0cce455a8fa32eb54",
+      "s.prj" -> "a02a27b1d1982c8516d83398e85a3c8b1aef1713c13ef4d84d7bde17430c07c4",
+      "s.cpg" -> "3ad3031f5503a4404af825262ee8232cc04d4ea6683d42c5dd0a2f2a27ac9824",
+      "s.geojson" -> "a5898b1240099fd9b3194e8006a92c1b68b247eba7f269f65fa6eee4685ddce8",
+      "s.geojsonseq" -> "d56bdac936c8c5453d3d78f3af8c5ae6d1d917d98c5e78b7c294eb33ad725ca0",
+      "e.gpkg" -> "8b458f1ec96ff25ec0becd39acf66d3882cea0aaf060e89d153385fa34a4f44b",
+      "e.geojson" -> "c1c9e26cf21a8b27bab233fd6cd7543e24f62ec76f57fb1c62ff357ecd33fb0d"))
+  }
+
   test("export runs only its data-pass jobs: no catalog or schema-inference job") {
     val dir = tmp()
     val catalog = writeCatalog(dir)

@@ -10,9 +10,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * `GraftSession`, no module-level mutable map in a query module
   * (query modules stage through `SessionStage` instead), JSON string
   * escaping, Jackson mappers and config-document parsing only in
-  * `config/JsonConfig`, and one start/await/checkpoint site for every
-  * streaming row. No JVM system property steers the program, and no
-  * `Throwable` catch swallows a fatal error.
+  * `config/JsonConfig`, one start/await/checkpoint site for every
+  * streaming row, and one geometry-column check and ring decoder for
+  * the geo file writers. No JVM system property steers the program,
+  * and no `Throwable` catch swallows a fatal error.
   */
 class SourceGuardSpec extends AnyFunSuite {
 
@@ -105,6 +106,14 @@ class SourceGuardSpec extends AnyFunSuite {
     assert(systemProperty.findFirstIn("""sys.props.get("graft.x")""").isDefined)
     assert(systemProperty.findFirstIn("""System.getProperty("java.io.tmpdir")""").isDefined)
     assert(offenders(sources, systemProperty).isEmpty)
+  }
+
+  test("the geo writers check the geometry column and decode rings in one place") {
+    val exporters = sources.filter(_._1.startsWith("graft/export/")).values
+    Seq("must be WKB binary", "Wkb.decodeRings(").foreach { call =>
+      val n = exporters.map(java.util.regex.Pattern.quote(call).r.findAllMatchIn(_).size).sum
+      assert(n == 1, s"$call appears $n times under graft/export")
+    }
   }
 
   test("every Throwable catch in src/main rethrows") {

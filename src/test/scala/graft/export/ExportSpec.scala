@@ -338,6 +338,31 @@ class ExportSpec extends SparkSpec {
     assert(back.getLong(2) == -1L)
   }
 
+  test("TIMESTAMP and TIMESTAMP_NTZ export to fgb, gpkg and shp as ISO-8601 text") {
+    val df = spark.sql(
+      """SELECT 1L AS id, 1.5D AS x, 2.5D AS y,
+        |  TIMESTAMP'2024-01-02 03:04:05.123456' AS t,
+        |  TIMESTAMP_NTZ'2024-01-02 03:04:05.123456' AS tn""".stripMargin)
+    val dir = tmpDir()
+    def export(ext: String): String = {
+      val path = s"$dir/ts.$ext"
+      Exporter.write(df, path, ExportFormat.fromPath(path),
+        geometryWkb = Some(graft.functions.Wkb.wkbFromXY(col("x"), col("y"))))
+      path
+    }
+    def texts(back: org.apache.spark.sql.DataFrame) = {
+      val r = back.select("t", "tn").head()
+      (r.getString(0), r.getString(1))
+    }
+    val micros = ("2024-01-02T03:04:05.123456Z", "2024-01-02T03:04:05.123456")
+    assert(texts(graft.sources.FlatGeobufReader.read(spark, export("fgb"))) == micros)
+    assert(texts(graft.sources.ShapefileReader.read(spark, export("shp").stripSuffix(".shp")))
+      == micros)
+    // GeoPackage DATETIME is UTC to the millisecond by spec
+    assert(texts(graft.sources.GpkgReader.readFeatures(spark, export("gpkg"), "features"))
+      == (("2024-01-02T03:04:05.123Z", "2024-01-02T03:04:05.123Z")))
+  }
+
   test("CountryCache metadata sidecar is valid JSON for any key text") {
     val base = tmpDir() + "/cache"
     val cache = new CountryCache(spark, base)

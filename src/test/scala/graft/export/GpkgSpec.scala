@@ -155,101 +155,28 @@ class GpkgSpec extends SparkSpec {
     assert(sqliteQuery(path, "SELECT count(*) FROM t WHERE geom IS NULL") == Seq("1"))
   }
 
-  test("UNIQUE column is backed by a real autoindex b-tree sqlite3 trusts") {
-    val path = tmp() + "/uniq.gpkg"
-    Gpkg.write(pointsDf(100), path, "pts", uniqueCols = Seq("name"))
-
-    // integrity_check cross-validates every index against its table —
-    // a wrong or missing index entry reports "row ... missing from index".
+  test("geometry_type_name is read from the data: line, polygon, mixed and empty layers") {
+    val pts = Seq((1L, Seq((0.0, 0.0), (1.0, 0.0), (1.0, 1.0)))).toDF("fid", "pts")
+    val coords = transform($"pts", p => struct(p.getField("_1").as("x"), p.getField("_2").as("y")))
+    val lines = pts.select($"fid", Wkb.wkbLineFromCoords(coords).as("geom"))
+    val mixed = lines.union(Seq((2L, Wkb.encodePoint((1.0, 2.0)))).toDF("fid", "geom"))
+    val want = Seq("lines" -> "LINESTRING", "polys" -> "POLYGON", "mixed" -> "GEOMETRY",
+      "empty" -> "GEOMETRY")
+    val path = tmp() + "/types.gpkg"
+    Gpkg.writeLayers(Seq(
+      Gpkg.Layer(lines, "lines"),
+      Gpkg.Layer(pts.select($"fid", Wkb.wkbPolygonFromCoords(coords).as("geom")), "polys"),
+      Gpkg.Layer(mixed, "mixed"),
+      Gpkg.Layer(lines.limit(0), "empty")), path)
     assert(sqliteQuery(path, "PRAGMA integrity_check") == Seq("ok"))
     assert(sqliteQuery(path,
-      "SELECT name, tbl_name FROM sqlite_master WHERE type = 'index'")
-      == Seq("sqlite_autoindex_pts_1|pts"))
-    // autoindex rows carry NULL sql (they derive from the table DDL)
-    assert(sqliteQuery(path,
-      "SELECT sql IS NULL FROM sqlite_master WHERE type = 'index'") == Seq("1"))
-    // the UNIQUE lookup goes THROUGH the index (no table scan)
-    assert(sqliteQuery(path,
-      "EXPLAIN QUERY PLAN SELECT fid FROM pts WHERE name = 'feature_42'")
-      .exists(l => l.contains("sqlite_autoindex_pts_1")))
-    assert(sqliteQuery(path,
-      "SELECT fid, score FROM pts WHERE name = 'feature_42'") == Seq("42|63.0"))
-    // rows arriving in fid order are NOT in name order ("feature_10" <
-    // "feature_2"), proving the index got its own record-collation sort
-    assert(sqliteQuery(path,
-      "SELECT name FROM pts WHERE name > 'feature_98'") == Seq("feature_99"))
-  }
-
-  test("multi-level index b-tree: interior index pages verify clean") {
-    val path = tmp() + "/uniqbig.gpkg"
-    // wide text keys force many index leaf pages → interior 0x02 level
-    val rows = (1 to 4000).map { i =>
-      (i.toLong, f"key_$i%06d_" + ("p" * 60), Wkb.encodePoint((i * 1.0, 0.0)))
+      "SELECT table_name, geometry_type_name FROM gpkg_geometry_columns ORDER BY rowid")
+      == want.map { case (t, g) => s"$t|$g" })
+    // each feature table's DDL declares the same type
+    want.foreach { case (t, g) =>
+      assert(sqliteQuery(path, s"SELECT type FROM pragma_table_info('$t') WHERE name = 'geom'")
+        == Seq(g), t)
     }
-    Gpkg.write(rows.toDF("fid", "name", "geom"), path, "big", uniqueCols = Seq("name"))
-    assert(sqliteQuery(path, "PRAGMA integrity_check") == Seq("ok"))
-    assert(sqliteQuery(path, "SELECT count(*) FROM big") == Seq("4000"))
-    assert(sqliteQuery(path,
-      s"SELECT fid FROM big WHERE name = 'key_003456_${"p" * 60}'") == Seq("3456"))
-    assert(sqliteQuery(path,
-      s"SELECT fid FROM big WHERE name = 'key_004000_${"p" * 60}'") == Seq("4000"))
-    // regress-proof the 0x02 path: the index ROOT must literally be
-    // an interior index page (first byte of the root page = 0x02)
-    val root = sqliteQuery(path,
-      "SELECT rootpage FROM sqlite_master WHERE type='index'").head.toInt
-    val bytes = Files.readAllBytes(Paths.get(path))
-    assert(bytes((root - 1) * 4096) == 0x02,
-      s"index root page $root is type ${bytes((root - 1) * 4096)}, expected interior 0x02")
-  }
-
-  test("overflowing index keys across many leaves leave no orphan pages") {
-    // Keys > XI (~1002 B at 4096 page) force overflow chains on
-    // EVERY index cell, and enough of them force leaf boundaries and
-    // interior levels — the exact scenario where a sized-then-
-    // discarded cell would leak its already-written overflow chain.
-    // integrity_check reports leaked pages as "Page N is never used".
-    val path = tmp() + "/bigkeys.gpkg"
-    val rows = (1 to 60).map { i =>
-      (i.toLong, f"k_$i%04d_" + ("q" * 2000), Wkb.encodePoint((i * 1.0, 0.0)))
-    }
-    Gpkg.write(rows.toDF("fid", "name", "geom"), path, "t", uniqueCols = Seq("name"))
-    assert(sqliteQuery(path, "PRAGMA integrity_check") == Seq("ok"))
-    assert(sqliteQuery(path, s"SELECT fid FROM t WHERE name = 'k_0042_${"q" * 2000}'")
-      == Seq("42"))
-    assert(sqliteQuery(path, "SELECT count(*) FROM t") == Seq("60"))
-  }
-
-  test("duplicate UNIQUE values fail the export; NULLs stay duplicable") {
-    val dup = Seq((1L, "same"), (2L, "same"))
-      .map { case (i, s) => (i, s, Wkb.encodePoint((0.0, 0.0))) }
-      .toDF("fid", "name", "geom")
-    val err = intercept[IllegalArgumentException] {
-      Gpkg.write(dup, tmp() + "/dupuniq.gpkg", "t", uniqueCols = Seq("name"))
-    }
-    assert(err.getMessage.contains("UNIQUE violation"))
-
-    // SQL UNIQUE semantics: any number of NULL keys is fine
-    val path = tmp() + "/nulluniq.gpkg"
-    val nulls = Seq((1L, Option.empty[String]), (2L, Option.empty[String]), (3L, Some("x")))
-      .map { case (i, s) => (i, s, Some(Wkb.encodePoint((0.0, 0.0)))) }
-      .toDF("fid", "name", "geom")
-    Gpkg.write(nulls, path, "t", uniqueCols = Seq("name"))
-    assert(sqliteQuery(path, "PRAGMA integrity_check") == Seq("ok"))
-    assert(sqliteQuery(path, "SELECT count(*) FROM t WHERE name IS NULL") == Seq("2"))
-  }
-
-  test("two UNIQUE columns get two autoindexes in DDL order") {
-    val path = tmp() + "/uniq2.gpkg"
-    val df = (1 to 50).map { i =>
-      (i.toLong, s"n_$i", i * 10L, Wkb.encodePoint((i * 1.0, 0.0)))
-    }.toDF("fid", "name", "code", "geom")
-    Gpkg.write(df, path, "t", uniqueCols = Seq("name", "code"))
-    assert(sqliteQuery(path, "PRAGMA integrity_check") == Seq("ok"))
-    assert(sqliteQuery(path,
-      "SELECT name FROM sqlite_master WHERE type='index' ORDER BY name")
-      == Seq("sqlite_autoindex_t_1", "sqlite_autoindex_t_2"))
-    // INTEGER-keyed index lookup (numeric record collation path)
-    assert(sqliteQuery(path, "SELECT fid FROM t WHERE code = 340") == Seq("34"))
   }
 
   // ---- round 11: independent GpkgReader (sources) ----

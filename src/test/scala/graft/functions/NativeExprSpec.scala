@@ -135,6 +135,12 @@ class NativeExprSpec extends SparkSpec {
     assert(hof == native)
   }
 
+  test("tr_geometry_rules evaluates RingStats once per ring") {
+    val plan = graft.queries.TransformQueries.trGeometryRules(spark, sfDir)
+      .queryExecution.executedPlan.toString
+    assert("ringstats\\(".r.findAllMatchIn(plan).size == 1, plan)
+  }
+
   test("WkbFromXY round-trips through WkbPointXY") {
     val pts = Seq((1.5, -2.25), (0.0, 0.0), (-179.9, 89.9)).toDF("x", "y")
     val rt = pts
