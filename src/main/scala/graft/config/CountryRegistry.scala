@@ -33,9 +33,6 @@ final class CountryRegistry(countries: Seq[Country]) {
   }
 
   def all: Seq[Country] = countries
-
-  def boundingBoxes: Map[String, (Double, Double, Double, Double)] =
-    countries.map(c => c.iso2 -> c.bounds).toMap
 }
 
 object CountryRegistry {

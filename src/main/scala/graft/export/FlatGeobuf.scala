@@ -5,6 +5,8 @@ import java.nio.ByteBuffer
 
 import com.google.flatbuffers.FlatBufferBuilder
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.types._
 
@@ -23,12 +25,12 @@ import graft.functions.Wkb
   * type=1).
   *
   * Layout written: 8-byte magic `fgb\x03fgb\x01`, size-prefixed
-  * Header flatbuffer (features_count + envelope from a bounded
-  * pre-pass; index_node_size = 0 — the spatial index is optional by
-  * spec and a streaming writer that must not buffer the feature set
-  * skips it), then one size-prefixed Feature flatbuffer per row with
-  * the spec's properties encoding (LE u16 column index + fixed-width
-  * value / u32-length-prefixed UTF-8).
+  * Header flatbuffer (features_count, envelope and geometry type
+  * folded from the features as they stream to a spool, so no
+  * pre-pass reads the input; index_node_size = 0 unless the caller
+  * asks for the optional index), then one size-prefixed Feature
+  * flatbuffer per row with the spec's properties encoding (LE u16
+  * column index + fixed-width value / u32-length-prefixed UTF-8).
   *
   * Scale note: single-file format with a global header ⇒ driver-
   * streamed `toLocalIterator` (the H6/H18 convention); the
@@ -43,10 +45,7 @@ object FlatGeobuf {
   val Magic: Array[Byte] =
     Array(0x66, 0x67, 0x62, 0x03, 0x66, 0x67, 0x62, 0x01).map(_.toByte)
 
-  // spec geometry-type ids (= WKB base ids for the types we emit)
-  private val GtPoint = 1
-  private val GtLineString = 2
-  private val GtPolygon = 3
+  private val GtPolygon = 3 // spec geometry-type id (= the WKB base id)
 
   // spec ColumnType ids
   private[export] def columnType(dt: DataType): Byte = dt match {
@@ -63,36 +62,136 @@ object FlatGeobuf {
         Map("format" -> "fgb", "stage" -> "export"))
   }
 
-  /** Geometry table: ends (slot 0, [uint], ring end indices — only
-    * for multi-ring polygons), xy (slot 1, [double]), type (slot 6,
-    * ubyte).
+  /** Encodes rows as size-prefixed Feature flatbuffers into one reused
+    * builder and properties buffer; folds the header's count, geometry
+    * type and envelope over them.
     */
-  private def buildGeometry(b: FlatBufferBuilder, g: Wkb.Rings): Int = {
-    val xyAll = if (g.rings.length == 1) g.rings(0) else g.rings.flatten
-    val nPts = xyAll.length / 2
-    // vectors before table; scalar elements added in reverse
-    val xyOff = {
-      b.startVector(8, xyAll.length, 8)
-      var i = xyAll.length - 1
-      while (i >= 0) { b.addDouble(xyAll(i)); i -= 1 }
-      b.endVector()
+  private final class Features(attrs: Array[(StructField, Int)], gIdx: Int) {
+    private val fb = new FlatBufferBuilder(512)
+    private var props = ByteBuffer.allocate(256).order(java.nio.ByteOrder.LITTLE_ENDIAN)
+
+    var count = 0L
+    var geometryType = 0
+    // envelope of the exterior rings (the `wkbCoords` points) under
+    // Spark's double ordering, where NaN is the greatest value
+    private var hasEnvelope = false
+    private val env = new Array[Double](4)
+
+    def bbox: (Double, Double, Double, Double) =
+      if (hasEnvelope) (env(0), env(1), env(2), env(3)) else (0.0, 0.0, 0.0, 0.0)
+
+    /** Encode `row` into `out`; returns the bytes written. */
+    def write(row: org.apache.spark.sql.Row, out: java.io.OutputStream): Int = {
+      val g = Writers.rings(row.getAs[Array[Byte]](gIdx), "fgb")
+      fb.clear()
+      encodeProps(row)
+      val propsOff = if (props.position() == 0) 0 else fb.createByteVector(props.array(), 0, props.position())
+      val geomOff = buildGeometry(g)
+      fb.startTable(3)
+      fb.addOffset(0, geomOff, 0)
+      if (propsOff != 0) fb.addOffset(1, propsOff, 0)
+      fb.finishSizePrefixed(fb.endTable())
+      fold(g)
+      writeBuf(out, fb.dataBuffer())
     }
-    val endsOff =
-      if (g.kind == GtPolygon && g.rings.length > 1) {
-        val ends = new Array[Int](g.rings.length)
-        var acc = 0
-        g.rings.indices.foreach { i => acc += g.rings(i).length / 2; ends(i) = acc }
-        b.startVector(4, ends.length, 4)
-        var i = ends.length - 1
-        while (i >= 0) { b.addInt(ends(i)); i -= 1 }
-        b.endVector()
-      } else 0
-    require(nPts > 0, "empty geometry")
-    b.startTable(8)
-    if (endsOff != 0) b.addOffset(0, endsOff, 0)
-    b.addOffset(1, xyOff, 0)
-    b.addByte(6, g.kind.toByte, 0)
-    b.endTable()
+
+    private def fold(g: Wkb.Rings): Unit = {
+      if (count == 0) geometryType = g.kind
+      else if (g.kind != geometryType)
+        throw new graft.ExportError(
+          s"flatgeobuf: mixed geometry types $geometryType and ${g.kind} (spec header declares ONE)",
+          Map("format" -> "fgb", "stage" -> "export"))
+      count += 1
+      if (g.rings.nonEmpty) {
+        val r = g.rings(0)
+        var i = 0
+        while (i < r.length) {
+          val x = r(i); val y = r(i + 1)
+          if (!hasEnvelope) { env(0) = x; env(1) = y; env(2) = x; env(3) = y; hasEnvelope = true }
+          else {
+            if (before(x, env(0))) env(0) = x
+            if (before(y, env(1))) env(1) = y
+            if (before(env(2), x)) env(2) = x
+            if (before(env(3), y)) env(3) = y
+          }
+          i += 2
+        }
+      }
+    }
+
+    private def before(a: Double, b: Double): Boolean = !a.isNaN && (b.isNaN || a < b)
+
+    /** Geometry table: ends (slot 0, [uint], ring end indices — only
+      * for multi-ring polygons), xy (slot 1, [double]), type (slot 6,
+      * ubyte).
+      */
+    private def buildGeometry(g: Wkb.Rings): Int = {
+      val rings = g.rings
+      var nXy = 0
+      rings.foreach(r => nXy += r.length)
+      // vectors before table; scalar elements added in reverse
+      fb.startVector(8, nXy, 8)
+      var r = rings.length - 1
+      while (r >= 0) {
+        var i = rings(r).length - 1
+        while (i >= 0) { fb.addDouble(rings(r)(i)); i -= 1 }
+        r -= 1
+      }
+      val xyOff = fb.endVector()
+      val endsOff =
+        if (g.kind == GtPolygon && rings.length > 1) {
+          fb.startVector(4, rings.length, 4)
+          var end = nXy / 2
+          var i = rings.length - 1
+          while (i >= 0) { fb.addInt(end); end -= rings(i).length / 2; i -= 1 }
+          fb.endVector()
+        } else 0
+      require(nXy > 0, "empty geometry")
+      fb.startTable(8)
+      if (endsOff != 0) fb.addOffset(0, endsOff, 0)
+      fb.addOffset(1, xyOff, 0)
+      fb.addByte(6, g.kind.toByte, 0)
+      fb.endTable()
+    }
+
+    /** Spec properties encoding: LE u16 column index, then the value
+      * (fixed width for scalars, u32-len-prefixed UTF-8 for strings);
+      * null columns simply absent.
+      */
+    private def encodeProps(row: org.apache.spark.sql.Row): Unit = {
+      props.clear()
+      var ci = 0
+      while (ci < attrs.length) {
+        val (f, ri) = attrs(ci)
+        if (!row.isNullAt(ri)) {
+          room(2 + 8)
+          props.putShort(ci.toShort)
+          f.dataType match {
+            case BooleanType => props.put((if (row.getBoolean(ri)) 1 else 0).toByte)
+            case IntegerType => props.putInt(row.getInt(ri))
+            case ShortType => props.putInt(row.getShort(ri))
+            case ByteType => props.putInt(row.getByte(ri))
+            case LongType => props.putLong(row.getLong(ri))
+            case FloatType => props.putInt(java.lang.Float.floatToIntBits(row.getFloat(ri)))
+            case DoubleType => props.putLong(java.lang.Double.doubleToLongBits(row.getDouble(ri)))
+            case StringType => text(row.getString(ri))
+            case TimestampType | TimestampNTZType => text(Writers.isoMicros(row.get(ri)))
+            case other => throw new IllegalStateException(s"unreachable: $other")
+          }
+        }
+        ci += 1
+      }
+    }
+
+    private def text(s: String): Unit = {
+      val bs = s.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+      room(4 + bs.length)
+      props.putInt(bs.length).put(bs)
+    }
+
+    private def room(n: Int): Unit = if (props.remaining < n)
+      props = ByteBuffer.allocate(2 * (props.position() + n)).order(java.nio.ByteOrder.LITTLE_ENDIAN)
+        .put(props.flip())
   }
 
   /** Column table: name (slot 0), type (slot 1, ubyte, default 0 =
@@ -107,54 +206,18 @@ object FlatGeobuf {
     b.endTable()
   }
 
-  /** Spec properties encoding: LE u16 column index, then the value
-    * (fixed width for scalars, u32-len-prefixed UTF-8 for strings);
-    * null columns simply absent.
-    */
-  private def encodeProps(
-      row: org.apache.spark.sql.Row,
-      attrs: Array[(StructField, Int)]): Array[Byte] = {
-    val out = new java.io.ByteArrayOutputStream()
-    val w = new java.io.DataOutputStream(out)
-    def u16(v: Int): Unit = { w.write(v & 0xff); w.write((v >> 8) & 0xff) }
-    def u32(v: Int): Unit = {
-      w.write(v & 0xff); w.write((v >> 8) & 0xff)
-      w.write((v >> 16) & 0xff); w.write((v >> 24) & 0xff)
-    }
-    def le64(v: Long): Unit = { (0 until 8).foreach(i => w.write(((v >> (8 * i)) & 0xff).toInt)) }
-    def text(s: String): Unit = { val bs = s.getBytes("UTF-8"); u32(bs.length); w.write(bs) }
-    attrs.zipWithIndex.foreach { case ((f, ri), ci) =>
-      if (!row.isNullAt(ri)) {
-        f.dataType match {
-          case BooleanType => u16(ci); w.write(if (row.getBoolean(ri)) 1 else 0)
-          case IntegerType => u16(ci); u32(row.getInt(ri))
-          case ShortType => u16(ci); u32(row.getShort(ri).toInt)
-          case ByteType => u16(ci); u32(row.getByte(ri).toInt)
-          case LongType => u16(ci); le64(row.getLong(ri))
-          case FloatType => u16(ci); u32(java.lang.Float.floatToIntBits(row.getFloat(ri)))
-          case DoubleType => u16(ci); le64(java.lang.Double.doubleToLongBits(row.getDouble(ri)))
-          case StringType => u16(ci); text(row.getString(ri))
-          case TimestampType | TimestampNTZType => u16(ci); text(Writers.isoMicros(row.get(ri)))
-          case other => throw new IllegalStateException(s"unreachable: $other")
-        }
-      }
-    }
-    out.toByteArray
-  }
-
   /** Write `df` (binary WKB column `wkbCol`, uniform geometry type)
-    * as a FlatGeobuf file at `path`.
+    * as a FlatGeobuf file at `path`, reading `df` once: features
+    * stream to a spool beside `path` while the header's count,
+    * envelope and type are folded from them, then the magic, header,
+    * optional index and spool are written to `path`.
     *
-    * `indexNodeSize` > 0 additionally writes the spec's OPTIONAL
-    * packed Hilbert R-tree between header and features (node size
-    * per the spec default 16): features are Hilbert-sorted by a
-    * DISTRIBUTED Spark sort on the curve key (only the key and the
-    * row shuffle — the driver never holds more than one feature
-    * plus 40 bytes of node state per row, the same order as the
-    * .shx table), streamed to a data section, and the bounded node
-    * array is emitted from the recorded (bbox, offset) items. A
-    * reader can then seek features by bbox without scanning
-    * ([[graft.sources.FlatGeobufReader]]).
+    * `indexNodeSize` > 0 also writes the spec's OPTIONAL packed
+    * Hilbert R-tree (spec default node size 16): an extent aggregate
+    * places each bbox center on the curve, a DISTRIBUTED Spark sort
+    * orders the rows by it, and the driver keeps 40 bytes of node
+    * state per feature (the .shx table's order of size), so a reader
+    * can seek features by bbox ([[graft.sources.FlatGeobufReader]]).
     */
   def write(df: DataFrame, wkbCol: String, path: String): WriteResult =
     write(df, wkbCol, path, 0)
@@ -165,10 +228,81 @@ object FlatGeobuf {
     val attrs = schema.fields.zipWithIndex.filter(_._2 != gIdx)
     attrs.foreach { case (f, _) => columnType(f.dataType) } // validate up front
 
-    // Every input column plus the feature's bbox (_minx, _miny,
-    // _maxx, _maxy at nBase..nBase+3): the header pre-pass aggregates
-    // it, the Hilbert path sorts and indexes by it.
+    val target = java.nio.file.Paths.get(path).toAbsolutePath
+    val spool = java.nio.file.Files.createTempFile(target.getParent, s".${target.getFileName}.", ".spool")
+    try {
+      val features = new Features(attrs, gIdx)
+      val items = scala.collection.mutable.ArrayBuffer.empty[PackedRTree.Item]
+      val data = new BufferedOutputStream(new FileOutputStream(spool.toFile), 1 << 16)
+      val nBase = schema.fields.length
+      try {
+        val rows =
+          if (indexNodeSize == 0) df.toLocalIterator().asScala
+          else hilbertSorted(df, wkbCol).toLocalIterator
+        var offset = 0L
+        while (rows.hasNext) {
+          val row = rows.next()
+          val len = features.write(row, data)
+          // 40 bytes of node state per feature (same order as the .shx offset table)
+          if (indexNodeSize != 0) items += PackedRTree.Item(row.getDouble(nBase),
+            row.getDouble(nBase + 1), row.getDouble(nBase + 2), row.getDouble(nBase + 3), offset)
+          offset += len
+        }
+      } catch {
+        // Spark wraps the Hilbert mapper's typed error, at the sort's
+        // sampling job and at the stream alike
+        case t: Throwable => throw unwrapExportError(t)
+      } finally data.close()
+
+      // index only makes sense with features to index
+      val nodeSize = if (features.count > 0) indexNodeSize else 0
+      val out = new BufferedOutputStream(new FileOutputStream(path), 1 << 16)
+      try {
+        out.write(Magic)
+        writeBuf(out, header(target, attrs, features, nodeSize))
+        if (nodeSize > 0) out.write(PackedRTree.build(items.toIndexedSeq, nodeSize))
+        java.nio.file.Files.copy(spool, out)
+      } finally out.close()
+      WriteResult(path, features.count, features.bbox, features.geometryType)
+    } finally java.nio.file.Files.deleteIfExists(spool)
+  }
+
+  /** The size-prefixed Header flatbuffer. */
+  private def header(
+      target: java.nio.file.Path, attrs: Array[(StructField, Int)],
+      features: Features, nodeSize: Int): ByteBuffer = {
+    val hb = new FlatBufferBuilder(1024)
+    val nameOff = hb.createString(target.getFileName.toString.stripSuffix(".fgb"))
+    val envOff = {
+      val (xmin, ymin, xmax, ymax) = features.bbox
+      hb.startVector(8, 4, 8)
+      Seq(ymax, xmax, ymin, xmin).foreach(hb.addDouble)
+      hb.endVector()
+    }
+    val colOffs = attrs.map { case (f, _) => buildColumn(hb, f.name, columnType(f.dataType)) }
+    val colsVec = {
+      hb.startVector(4, colOffs.length, 4)
+      colOffs.reverseIterator.foreach(o => hb.addOffset(o))
+      hb.endVector()
+    }
+    hb.startTable(14)
+    hb.addOffset(0, nameOff, 0)
+    hb.addOffset(1, envOff, 0)
+    hb.addByte(2, features.geometryType.toByte, 0)
+    hb.addOffset(7, colsVec, 0)
+    hb.addLong(8, features.count, 0)
+    hb.addShort(9, nodeSize.toShort, 16) // 0 = no index; spec default 16
+    hb.finishSizePrefixed(hb.endTable())
+    hb.dataBuffer()
+  }
+
+  /** `df`'s rows plus their bbox (_minx, _miny, _maxx, _maxy after
+    * the input columns), sorted on the Hilbert key of the bbox center
+    * over the extent of all bboxes.
+    */
+  private def hilbertSorted(df: DataFrame, wkbCol: String): org.apache.spark.rdd.RDD[org.apache.spark.sql.Row] = {
     import org.apache.spark.sql.functions._
+    val schema = df.schema
     val base = schema.fields.map(f => col(f.name))
     val nBase = schema.fields.length
     val bboxed = df
@@ -178,154 +312,33 @@ object FlatGeobuf {
         array_min(transform(col("_ps"), p => p("y"))).as("_miny") :+
         array_max(transform(col("_ps"), p => p("x"))).as("_maxx") :+
         array_max(transform(col("_ps"), p => p("y"))).as("_maxy"): _*)
-
-    // Bounded pre-pass (the H17 convention): count, envelope, and
-    // the uniform geometry type for the header — ONE aggregate over
-    // ONE evaluation of df (per-feature array HOFs instead of a
-    // coord explode, so the same pass counts features), so a
-    // non-deterministic input can't fork the header's
-    // features_count/envelope from each other. The feature stream
-    // below is still a second evaluation: the header is a pre-pass
-    // snapshot (determinism assumption documented on `write`).
-    val stats = bboxed
-      .agg(collect_set(Wkb.wkbGeometryType(col(wkbCol))).as("types"),
-        min(col("_minx")).as("xmin"), min(col("_miny")).as("ymin"),
-        max(col("_maxx")).as("xmax"), max(col("_maxy")).as("ymax"),
-        count(lit(1)).as("n"))
-      .head()
-    val typeIds = stats.getAs[scala.collection.Seq[Int]](0)
-    val gType = typeIds.toList match {
-      case Nil => 0
-      case t :: Nil => t
-      case many =>
-        throw new graft.ExportError(
-          s"flatgeobuf: mixed geometry types $many (spec header declares ONE)",
-          Map("format" -> "fgb", "stage" -> "export"))
-    }
-    val rowCount = stats.getLong(5)
-    val bbox =
-      if (stats.isNullAt(1)) (0.0, 0.0, 0.0, 0.0)
-      else (stats.getDouble(1), stats.getDouble(2), stats.getDouble(3), stats.getDouble(4))
-
-    val out = new BufferedOutputStream(new FileOutputStream(path), 1 << 16)
-    try {
-      out.write(Magic)
-
-      // ---- header flatbuffer (size-prefixed)
-      val hb = new FlatBufferBuilder(1024)
-      val nameOff = hb.createString(
-        new java.io.File(path).getName.stripSuffix(".fgb"))
-      val envOff = {
-        val env = Array(bbox._1, bbox._2, bbox._3, bbox._4)
-        hb.startVector(8, 4, 8)
-        var i = 3
-        while (i >= 0) { hb.addDouble(env(i)); i -= 1 }
-        hb.endVector()
+    val e = bboxed.agg(min(col("_minx")), min(col("_miny")), max(col("_maxx")), max(col("_maxy"))).head()
+    val ext =
+      if (e.isNullAt(0)) (0.0, 0.0, 0.0, 0.0)
+      else (e.getDouble(0), e.getDouble(1), e.getDouble(2), e.getDouble(3))
+    // A geometry with no coordinates has no bbox (array_min/max
+    // null) and cannot be Hilbert-ordered; the unindexed path can
+    // carry it, so rather than forking behavior silently, refuse
+    // with the writer's typed error. The check rides INSIDE the
+    // Hilbert-key mapper (not a separate filter+head pre-pass,
+    // which would re-scan the whole input just for the common
+    // all-valid case).
+    val keyName = schema.fields.head.name
+    bboxed.rdd
+      .map { row =>
+        if (row.isNullAt(nBase))
+          throw new graft.ExportError(
+            "flatgeobuf indexed write: geometry with no coordinates has no " +
+              "bbox and cannot be placed in the Hilbert index; write with " +
+              "indexNodeSize=0 or drop the row",
+            Map("format" -> "fgb", "stage" -> "export",
+              "row" -> s"$keyName=${row.get(0)}"))
+        val key = PackedRTree.hilbertOf(row.getDouble(nBase), row.getDouble(nBase + 1),
+          row.getDouble(nBase + 2), row.getDouble(nBase + 3), ext)
+        (key, row)
       }
-      val colOffs = attrs.map { case (f, _) =>
-        buildColumn(hb, f.name, columnType(f.dataType))
-      }
-      val colsVec = {
-        hb.startVector(4, colOffs.length, 4)
-        var i = colOffs.length - 1
-        while (i >= 0) { hb.addOffset(colOffs(i)); i -= 1 }
-        hb.endVector()
-      }
-      // index only makes sense with features to index
-      val nodeSize = if (rowCount > 0) indexNodeSize else 0
-      hb.startTable(14)
-      hb.addOffset(0, nameOff, 0)
-      hb.addOffset(1, envOff, 0)
-      hb.addByte(2, gType.toByte, 0)
-      hb.addOffset(7, colsVec, 0)
-      hb.addLong(8, rowCount, 0)
-      hb.addShort(9, nodeSize.toShort, 16) // 0 = no index; spec default 16
-      val headerRoot = hb.endTable()
-      hb.finishSizePrefixed(headerRoot)
-      writeBuf(out, hb.dataBuffer())
-
-      def featureBytes(row: org.apache.spark.sql.Row): Array[Byte] = {
-        val fb = new FlatBufferBuilder(512)
-        val props = encodeProps(row, attrs)
-        val propsOff = if (props.isEmpty) 0 else fb.createByteVector(props)
-        val geomOff = buildGeometry(fb, Writers.rings(row.getAs[Array[Byte]](gIdx), "fgb"))
-        fb.startTable(3)
-        fb.addOffset(0, geomOff, 0)
-        if (propsOff != 0) fb.addOffset(1, propsOff, 0)
-        val root = fb.endTable()
-        fb.finishSizePrefixed(root)
-        val buf = fb.dataBuffer()
-        val arr = new Array[Byte](buf.remaining())
-        buf.duplicate().get(arr)
-        arr
-      }
-
-      if (nodeSize == 0) {
-        // ---- features, one size-prefixed flatbuffer each
-        val it = df.toLocalIterator()
-        while (it.hasNext) out.write(featureBytes(it.next()))
-      } else {
-        // ---- packed Hilbert R-tree + Hilbert-ordered features.
-        // The sort on the curve key is DISTRIBUTED (Spark sortByKey);
-        // the driver streams the sorted rows once, spooling feature
-        // bytes to a temp file while recording 40 bytes of node
-        // state per feature (same order as the .shx offset table).
-        val ext = bbox
-        // A geometry with no coordinates has no bbox (array_min/max
-        // null) and cannot be Hilbert-ordered; the unindexed path can
-        // carry it, so rather than forking behavior silently, refuse
-        // with the writer's typed error. The check rides INSIDE the
-        // Hilbert-key mapper (not a separate filter+head pre-pass,
-        // which would re-scan the whole input just for the common
-        // all-valid case); Spark wraps executor exceptions, so the
-        // driver unwraps the cause chain back to the typed error.
-        val keyName = schema.fields.head.name
-        // sortByKey's range-partitioner sampling job can surface the
-        // mapper's error too — unwrap at both job sites.
-        val sorted = try {
-          bboxed.rdd
-            .map { row =>
-              if (row.isNullAt(nBase))
-                throw new graft.ExportError(
-                  "flatgeobuf indexed write: geometry with no coordinates has no " +
-                    "bbox and cannot be placed in the Hilbert index; write with " +
-                    "indexNodeSize=0 or drop the row",
-                  Map("format" -> "fgb", "stage" -> "export",
-                    "row" -> s"$keyName=${row.get(0)}"))
-              val key = PackedRTree.hilbertOf(row.getDouble(nBase), row.getDouble(nBase + 1),
-                row.getDouble(nBase + 2), row.getDouble(nBase + 3), ext)
-              (key, row)
-            }
-            .sortByKey()
-        } catch {
-          case t: Throwable => throw unwrapExportError(t)
-        }
-        val tmp = java.nio.file.Files.createTempFile("graft_fgb_data_", ".bin")
-        try {
-          val items = scala.collection.mutable.ArrayBuffer.empty[PackedRTree.Item]
-          val data = new BufferedOutputStream(
-            new FileOutputStream(tmp.toFile), 1 << 16)
-          var offset = 0L
-          try {
-            val it = sorted.map(_._2).toLocalIterator
-            while (it.hasNext) {
-              val row = it.next()
-              val bytes = featureBytes(row)
-              data.write(bytes)
-              items += PackedRTree.Item(row.getDouble(nBase), row.getDouble(nBase + 1),
-                row.getDouble(nBase + 2), row.getDouble(nBase + 3), offset)
-              offset += bytes.length
-            }
-          } catch {
-            case t: Throwable => throw unwrapExportError(t)
-          } finally data.close()
-          out.write(PackedRTree.build(items.toIndexedSeq, nodeSize))
-          java.nio.file.Files.copy(tmp, out)
-        } finally java.nio.file.Files.deleteIfExists(tmp)
-      }
-    } finally out.close()
-
-    WriteResult(path, rowCount, bbox, gType)
+      .sortByKey()
+      .map(_._2)
   }
 
   /** Walk a (possibly Spark-wrapped) cause chain back to the typed
@@ -343,9 +356,9 @@ object FlatGeobuf {
     t
   }
 
-  private def writeBuf(out: java.io.OutputStream, buf: ByteBuffer): Unit = {
-    val arr = new Array[Byte](buf.remaining())
-    buf.duplicate().get(arr)
-    out.write(arr)
+  /** Write a builder's finished bytes without a copy; returns their length. */
+  private def writeBuf(out: java.io.OutputStream, buf: ByteBuffer): Int = {
+    out.write(buf.array(), buf.arrayOffset() + buf.position(), buf.remaining())
+    buf.remaining()
   }
 }

@@ -31,7 +31,6 @@ private[export] final class SqliteWriter(path: String) {
   private def allocPage(): Int = { pageCount += 1; pageCount }
 
   private def writePage(n: Int, data: Array[Byte]): Unit = {
-    require(data.length == PageSize)
     raf.seek((n - 1L) * PageSize)
     raf.write(data)
   }
@@ -41,87 +40,110 @@ private[export] final class SqliteWriter(path: String) {
   private val X = U - 35                    // max local payload, table leaf
   private val M = (U - 12) * 32 / 255 - 23  // min local payload
 
-  /** Build one table b-tree from STRICTLY ASCENDING rowid rows
-    * (validated while streaming — the b-tree's binary search silently
-    * corrupts on unordered or duplicate keys) and register it in
-    * sqlite_master. `sql` is read once the rows have streamed, so a
+  // The b-tree page being filled: cells packed from the page end
+  // downward, their pointers in key order after the page header.
+  private val page = new Array[Byte](PageSize)
+  private var cells = 0
+  private var top = PageSize
+
+  /** Build one table b-tree and register it in sqlite_master. `rows`
+    * fills `rec` and passes each row's rowid to its argument, in
+    * STRICTLY ascending order (validated while streaming — the
+    * b-tree's binary search silently corrupts on unordered or
+    * duplicate keys). `sql` is read once the rows have streamed, so a
     * DDL that depends on the data can be settled then: sqlite_master
     * is only rendered at [[close]].
     */
-  def createTable(name: String, sql: => String, rows: Iterator[(Long, Array[Byte])]): Unit = {
+  def createTable(name: String, sql: => String, rec: Record)(rows: (Long => Unit) => Unit): Unit = {
+    val leaves = ArrayBuffer[(Int, Long)]() // (page, max rowid)
     var prev = Long.MinValue
-    val validated = rows.map { case (rowid, payload) =>
+    def flushLeaf(): Unit = {
+      val pn = allocPage()
+      flushPage(pn, 0x0D, base = 0, rightChild = 0)
+      leaves += ((pn, prev))
+    }
+    val full: Int => Unit = _ => flushLeaf()
+    rows { rowid =>
       require(rowid > prev,
         s"table '$name': rowids must be strictly ascending and unique " +
           s"(got $rowid after $prev) — sort by the fid column and dedupe first")
+      addCell(rowid, rec, base = 0)(full)
       prev = rowid
-      (rowid, payload)
     }
-    val root = buildTree(validated)
-    masterRows += ((name, root, sql))
+    if (cells > 0 || leaves.isEmpty) flushLeaf() // an empty table is one empty leaf
+    masterRows += ((name, interiorLevels(leaves.toVector), sql))
   }
 
-  /** cellBytes = varint(P) ++ varint(rowid) ++ local-payload
-    * [++ be32(firstOverflowPage)]; overflow pages are written
-    * immediately.
+  /** Add `rec` under `rowid` to the page being filled as a table-leaf
+    * cell: varint(P), varint(rowid), the local payload and, when it
+    * spills, the first overflow page (overflow pages are written at
+    * once). `full` runs first, with the bytes the page would use, when
+    * the page has cells and this one does not fit.
     */
-  private def makeCell(rowid: Long, payload: Array[Byte]): Array[Byte] = {
-    val p = payload.length
-    if (p <= X)
-      varint(p.toLong) ++ varint(rowid) ++ payload
-    else {
-      val k = M + ((p - M) % (U - 4))
-      val local = if (k <= X) k else M
-      val chunks = payload.drop(local).grouped(U - 4).toArray
-      val nums = chunks.map(_ => allocPage())
-      var i = 0
-      while (i < chunks.length) {
+  private def addCell(rowid: Long, rec: Record, base: Int)(full: Int => Unit): Unit = {
+    val p = rec.size()
+    val local =
+      if (p <= X) p
+      else { val k = M + ((p - M) % (U - 4)); if (k <= X) k else M }
+    val spilled = if (local < p) new Array[Byte](p) else null
+    val firstOverflow = pageCount + 1
+    if (local < p) {
+      rec.write(spilled, 0)
+      val n = (p - local + U - 5) / (U - 4)
+      (0 until n).foreach { i =>
         val pg = new Array[Byte](PageSize)
-        putBE32(pg, 0, if (i + 1 < nums.length) nums(i + 1) else 0)
-        System.arraycopy(chunks(i), 0, pg, 4, chunks(i).length)
-        writePage(nums(i), pg)
-        i += 1
+        putBE32(pg, 0, if (i + 1 < n) firstOverflow + i + 1 else 0)
+        val from = local + i * (U - 4)
+        System.arraycopy(spilled, from, pg, 4, math.min(U - 4, p - from))
+        writePage(firstOverflow + i, pg)
       }
-      varint(p.toLong) ++ varint(rowid) ++ payload.take(local) ++ be32(nums(0))
+      pageCount += n
+    }
+    val len = varintLen(p) + varintLen(rowid) + local + (if (local < p) 4 else 0)
+    val used = base + 8 + 2 * (cells + 1) + (PageSize - top) + len
+    if (cells > 0 && used > PageSize) full(used)
+    require(base + 8 + 2 + len <= PageSize, "single cell exceeds page capacity")
+    var o = reserve(len, base + 8)
+    o += putVarint(page, o, p)
+    o += putVarint(page, o, rowid)
+    if (local == p) rec.write(page, o)
+    else {
+      System.arraycopy(spilled, 0, page, o, local)
+      putBE32(page, o + local, firstOverflow)
     }
   }
 
-  /** Pack rowid-ordered cells into leaf pages, then interior levels
-    * bottom-up until one root remains.
+  /** Reserve the next `len`-byte cell of the page being filled, whose
+    * pointer array starts at `ptrBase`; returns the cell's offset.
     */
-  private def buildTree(rows: Iterator[(Long, Array[Byte])]): Int = {
-    // ---- leaves ----
-    var leaves = Vector.empty[(Int, Long)] // (page, max rowid)
-    val cells = ArrayBuffer[Array[Byte]]()
-    var cellBytes = 0
-    var maxRowid = 0L
+  private def reserve(len: Int, ptrBase: Int): Int = {
+    top -= len
+    require(ptrBase + 2 * (cells + 1) <= top, "page overflow (cells collide with pointer array)")
+    putBE16(page, ptrBase + 2 * cells, top)
+    cells += 1
+    top
+  }
 
-    def flushLeaf(): Unit = {
-      if (cells.nonEmpty) {
-        val pn = allocPage()
-        writePage(pn, renderPage(0x0D, cells.toSeq, base = 0, rightChild = 0))
-        leaves :+= (pn, maxRowid)
-        cells.clear(); cellBytes = 0
-      }
-    }
+  /** Write the page being filled as page `n` (b-tree header at
+    * `base`) and start an empty one.
+    */
+  private def flushPage(n: Int, pageType: Int, base: Int, rightChild: Int): Unit = {
+    page(base) = pageType.toByte
+    putBE16(page, base + 1, 0) // first freeblock
+    putBE16(page, base + 3, cells)
+    putBE16(page, base + 5, top)
+    page(base + 7) = 0 // fragmented free bytes
+    if (pageType == 0x05) putBE32(page, base + 8, rightChild)
+    writePage(n, page)
+    java.util.Arrays.fill(page, 0.toByte)
+    cells = 0
+    top = PageSize
+  }
 
-    while (rows.hasNext) {
-      val (rowid, payload) = rows.next()
-      val cell = makeCell(rowid, payload)
-      if (cells.nonEmpty && 8 + 2 * (cells.size + 1) + cellBytes + cell.length > U)
-        flushLeaf()
-      require(8 + 2 + cell.length <= U, "single cell exceeds page capacity")
-      cells += cell; cellBytes += cell.length; maxRowid = rowid
-    }
-    flushLeaf()
-
-    if (leaves.isEmpty) { // empty table: one empty leaf
-      val pn = allocPage()
-      writePage(pn, renderPage(0x0D, Seq.empty, base = 0, rightChild = 0))
-      return pn
-    }
-
-    // ---- interior levels ----
+  /** Interior levels over the leaves, bottom-up until one root
+    * remains; returns the root page.
+    */
+  private def interiorLevels(leaves: Vector[(Int, Long)]): Int = {
     // Conservative fan-out (ptr 2 + child 4 + rowid varint ≤ 9 per
     // cell): still ~270 children/page. The last group is rebalanced
     // to ≥ 2 children so no interior page ends up cell-less.
@@ -138,8 +160,12 @@ private[export] final class SqliteWriter(path: String) {
       level = groups.map { group =>
         // last child becomes the rightmost pointer, the rest cells
         val pn = allocPage()
-        val cs = group.dropRight(1).map { case (child, maxId) => be32(child) ++ varint(maxId) }
-        writePage(pn, renderPage(0x05, cs, base = 0, rightChild = group.last._1))
+        group.init.foreach { case (child, maxId) =>
+          val o = reserve(4 + varintLen(maxId), ptrBase = 12)
+          putBE32(page, o, child)
+          putVarint(page, o + 4, maxId)
+        }
+        flushPage(pn, 0x05, base = 0, rightChild = group.last._1)
         (pn, group.last._2)
       }
     }
@@ -151,135 +177,167 @@ private[export] final class SqliteWriter(path: String) {
     * user_version 10300), then close.
     */
   def close(): Unit = try {
-    val masterCells = masterRows.toSeq.zipWithIndex.map { case ((name, root, sql), i) =>
-      makeCell(i + 1L, record(Seq(SqlText("table"), SqlText(name), SqlText(name),
-        SqlInt(root.toLong), SqlText(sql))))
-    }
-    val used = 100 + 8 + masterCells.map(2 + _.length).sum
-    require(used <= PageSize,
+    val rec = new Record(5)
+    val full: Int => Unit = used => require(used <= PageSize,
       s"sqlite_master would overflow page 1 ($used > $PageSize bytes): " +
         s"the schema of ${masterRows.map(_._1).mkString(", ")} is too wide for this writer")
-    val page1 = renderPage(0x0D, masterCells, base = 100, rightChild = 0)
+    masterRows.zipWithIndex.foreach { case ((name, root, sql), i) =>
+      Seq("table", name, name, root, sql).copyToArray(rec.values)
+      addCell(i + 1L, rec, base = 100)(full)
+    }
 
     // 100-byte header (offsets per the file-format spec)
-    System.arraycopy("SQLite format 3\u0000".getBytes("ISO-8859-1"), 0, page1, 0, 16)
-    putBE16(page1, 16, PageSize)
-    page1(18) = 1; page1(19) = 1          // file format write/read version: legacy
-    page1(20) = 0                         // reserved space
-    page1(21) = 64; page1(22) = 32; page1(23) = 32
-    putBE32(page1, 24, 1)                 // file change counter
-    putBE32(page1, 28, pageCount)         // database size in pages
-    putBE32(page1, 32, 0); putBE32(page1, 36, 0) // freelist
-    putBE32(page1, 40, 1)                 // schema cookie
-    putBE32(page1, 44, 4)                 // schema format 4
-    putBE32(page1, 48, 0)                 // default cache size
-    putBE32(page1, 52, 0)                 // largest root (vacuum off)
-    putBE32(page1, 56, 1)                 // text encoding UTF-8
-    putBE32(page1, 60, 10300)             // user_version: GeoPackage 1.3
-    putBE32(page1, 64, 0)                 // incremental vacuum off
-    putBE32(page1, 68, 0x47504B47)        // application_id "GPKG"
-    putBE32(page1, 92, 1)                 // version-valid-for
-    putBE32(page1, 96, 3045000)           // sqlite version number stamp
-    writePage(1, page1)
+    System.arraycopy("SQLite format 3\u0000".getBytes("ISO-8859-1"), 0, page, 0, 16)
+    putBE16(page, 16, PageSize)
+    page(18) = 1; page(19) = 1            // file format write/read version: legacy
+    page(20) = 0                          // reserved space
+    page(21) = 64; page(22) = 32; page(23) = 32
+    putBE32(page, 24, 1)                  // file change counter
+    putBE32(page, 28, pageCount)          // database size in pages
+    putBE32(page, 32, 0); putBE32(page, 36, 0) // freelist
+    putBE32(page, 40, 1)                  // schema cookie
+    putBE32(page, 44, 4)                  // schema format 4
+    putBE32(page, 48, 0)                  // default cache size
+    putBE32(page, 52, 0)                  // largest root (vacuum off)
+    putBE32(page, 56, 1)                  // text encoding UTF-8
+    putBE32(page, 60, 10300)              // user_version: GeoPackage 1.3
+    putBE32(page, 64, 0)                  // incremental vacuum off
+    putBE32(page, 68, 0x47504B47)         // application_id "GPKG"
+    putBE32(page, 92, 1)                  // version-valid-for
+    putBE32(page, 96, 3045000)            // sqlite version number stamp
+    flushPage(1, 0x0D, base = 100, rightChild = 0)
   } finally raf.close()
 
-  /** Render one b-tree page: header, cell pointer array (key order),
-    * cell content packed from the page end downward.
-    */
-  private def renderPage(pageType: Int, cells: Seq[Array[Byte]], base: Int, rightChild: Int): Array[Byte] = {
-    val page = new Array[Byte](PageSize)
-    val interior = pageType == 0x05
-    val headerLen = if (interior) 12 else 8
-    page(base) = pageType.toByte
-    putBE16(page, base + 1, 0) // first freeblock
-    putBE16(page, base + 3, cells.size)
-    var off = PageSize
-    val ptrBase = base + headerLen
-    cells.zipWithIndex.foreach { case (c, i) =>
-      off -= c.length
-      System.arraycopy(c, 0, page, off, c.length)
-      putBE16(page, ptrBase + 2 * i, off)
-    }
-    require(ptrBase + 2 * cells.size <= off, "page overflow (cells collide with pointer array)")
-    putBE16(page, base + 5, off)
-    page(base + 7) = 0 // fragmented free bytes
-    if (interior) putBE32(page, base + 8, rightChild)
-    page
-  }
+  /** Close and delete the file: the failure path of a write. */
+  def discard(): Unit =
+    try raf.close() finally java.nio.file.Files.deleteIfExists(java.nio.file.Paths.get(path))
 }
 
 private[export] object SqliteWriter {
 
   val PageSize = 4096
 
-  sealed trait SqlValue
-  case object SqlNull extends SqlValue
-  final case class SqlInt(v: Long) extends SqlValue
-  final case class SqlReal(v: Double) extends SqlValue
-  final case class SqlText(s: String) extends SqlValue
-  final case class SqlBlob(b: Array[Byte]) extends SqlValue
-
-  /** SQLite varint: 1-8 bytes of 7 bits (high bit = continuation),
-    * or 9 bytes where the last carries a full 8 bits (also the
-    * negative-rowid form).
+  /** GeoPackage geometry blob header: "GP", version 0, flags 0x01
+    * (little-endian, no envelope), srs_id 4326 (LE).
     */
-  def varint(value: Long): Array[Byte] =
-    if (value < 0L || value > ((1L << 56) - 1)) {
-      val out = new Array[Byte](9)
-      var v = value
-      out(8) = (v & 0xFF).toByte
-      v >>>= 8
-      var i = 7
-      while (i >= 0) { out(i) = ((v & 0x7F) | 0x80).toByte; v >>>= 7; i -= 1 }
-      out
-    } else {
-      var v = value
-      var out = List((v & 0x7F).toByte)
-      v >>>= 7
-      while (v != 0) { out = ((v & 0x7F) | 0x80).toByte :: out; v >>>= 7 }
-      out.toArray
+  private val GpHeader = Array[Byte]('G', 'P', 0, 0x01, 0xE6.toByte, 0x10, 0, 0)
+
+  /** One record (https://sqlite.org/fileformat2.html#record_format),
+    * encoded from the reused `values` of one row at a time: null, an
+    * integral or Boolean (INTEGER), Double or Float (REAL), String or
+    * timestamp (TEXT), Array[Byte] (BLOB). Column `gpCol`'s blob is a
+    * GeoPackage geometry: the 8-byte GP header, then the WKB.
+    */
+  final class Record(width: Int, gpCol: Int = -1) {
+    val values = new Array[Any](width)
+    private val types = new Array[Long](width)
+    private val nums = new Array[Long](width) // INTEGER value or REAL bits
+    private val bytes = new Array[Array[Byte]](width)
+    private var hdrLen = 0
+
+    /** Settle each value's serial type; returns the record's length. */
+    def size(): Int = {
+      var serials = 0
+      var body = 0
+      var i = 0
+      while (i < width) {
+        val t = values(i) match {
+          case null                  => 0L
+          case x: Long               => integer(i, x)
+          case x: Int                => integer(i, x.toLong)
+          case x: Short              => integer(i, x.toLong)
+          case x: Byte               => integer(i, x.toLong)
+          case x: Boolean            => integer(i, if (x) 1L else 0L)
+          case x: Double             => nums(i) = java.lang.Double.doubleToLongBits(x); 7L
+          case x: Float              => nums(i) = java.lang.Double.doubleToLongBits(x.toDouble); 7L
+          case x: String             => text(i, x)
+          case x: Array[Byte] if i == gpCol => bytes(i) = x; 12L + 2 * (8 + x.length)
+          case x: Array[Byte]        => bytes(i) = x; 12L + 2 * x.length
+          case x @ (_: java.sql.Timestamp | _: java.time.Instant | _: java.time.LocalDateTime) =>
+            text(i, Writers.isoMillisUtc(x))
+          case other =>
+            throw new IllegalArgumentException(s"GPKG: unsupported value $other")
+        }
+        types(i) = t
+        serials += varintLen(t)
+        body += bodyLen(t)
+        i += 1
+      }
+      // the header-size varint includes itself; sizes here never need
+      // more than a 2-byte varint (header < 2^14 bytes)
+      hdrLen = if (serials + 1 <= 127) serials + 1 else serials + 2
+      varintLen(hdrLen) + serials + body
     }
 
-  private def intBody(v: Long, bytes: Int): Array[Byte] = {
-    val out = new Array[Byte](bytes)
-    var i = bytes - 1
+    /** Write the record [[size]] settled at `dst(off)`. */
+    def write(dst: Array[Byte], off: Int): Unit = {
+      var o = off + putVarint(dst, off, hdrLen)
+      var i = 0
+      while (i < width) { o += putVarint(dst, o, types(i)); i += 1 }
+      i = 0
+      while (i < width) {
+        val t = types(i)
+        if (t >= 12) {
+          if (i == gpCol) { System.arraycopy(GpHeader, 0, dst, o, 8); o += 8 }
+          System.arraycopy(bytes(i), 0, dst, o, bytes(i).length)
+          o += bytes(i).length
+        } else {
+          val n = bodyLen(t)
+          var k = n - 1
+          var x = nums(i)
+          while (k >= 0) { dst(o + k) = x.toByte; x >>= 8; k -= 1 }
+          o += n
+        }
+        i += 1
+      }
+    }
+
+    /** Smallest serial type for an integer. */
+    private def integer(i: Int, v: Long): Long = {
+      nums(i) = v
+      if (v == 0L) 8L
+      else if (v == 1L) 9L
+      else if (v >= Byte.MinValue && v <= Byte.MaxValue) 1L
+      else if (v >= Short.MinValue && v <= Short.MaxValue) 2L
+      else if (v >= -(1L << 23) && v < (1L << 23)) 3L
+      else if (v >= Int.MinValue && v <= Int.MaxValue) 4L
+      else if (v >= -(1L << 47) && v < (1L << 47)) 5L
+      else 6L
+    }
+
+    private def text(i: Int, s: String): Long = {
+      bytes(i) = s.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+      13L + 2 * bytes(i).length
+    }
+  }
+
+  /** Body bytes of a serial type. */
+  private val FixedLen = Array(0, 1, 2, 3, 4, 6, 8, 8, 0, 0)
+  private def bodyLen(t: Long): Int = if (t >= 12) ((t - 12) / 2).toInt else FixedLen(t.toInt)
+
+  /** Length of a SQLite varint: 1-8 bytes of 7 bits (high bit =
+    * continuation), or 9 bytes where the last carries a full 8 bits
+    * (also the negative-rowid form).
+    */
+  def varintLen(v: Long): Int =
+    if (v < 0L || v > ((1L << 56) - 1)) 9
+    else {
+      var n = 1
+      var x = v >>> 7
+      while (x != 0) { n += 1; x >>>= 7 }
+      n
+    }
+
+  /** Write `v` as a varint at `a(off)`; returns its length. */
+  def putVarint(a: Array[Byte], off: Int, v: Long): Int = {
+    val n = varintLen(v)
     var x = v
-    while (i >= 0) { out(i) = (x & 0xFF).toByte; x >>= 8; i -= 1 }
-    out
+    var i = n - 1
+    if (n == 9) { a(off + 8) = x.toByte; x >>>= 8; i = 7 }
+    else { a(off + i) = (x & 0x7F).toByte; x >>>= 7; i -= 1 }
+    while (i >= 0) { a(off + i) = ((x & 0x7F) | 0x80).toByte; x >>>= 7; i -= 1 }
+    n
   }
-
-  /** Smallest serial type + body for an integer. */
-  private def intSerial(v: Long): (Long, Array[Byte]) = v match {
-    case 0L => (8L, Array.emptyByteArray)
-    case 1L => (9L, Array.emptyByteArray)
-    case _ if v >= Byte.MinValue && v <= Byte.MaxValue     => (1L, intBody(v, 1))
-    case _ if v >= Short.MinValue && v <= Short.MaxValue   => (2L, intBody(v, 2))
-    case _ if v >= -(1L << 23) && v < (1L << 23)           => (3L, intBody(v, 3))
-    case _ if v >= Int.MinValue && v <= Int.MaxValue       => (4L, intBody(v, 4))
-    case _ if v >= -(1L << 47) && v < (1L << 47)           => (5L, intBody(v, 6))
-    case _                                                 => (6L, intBody(v, 8))
-  }
-
-  /** Encode one record (row payload): header of serial types, then
-    * the value bodies.
-    */
-  def record(values: Seq[SqlValue]): Array[Byte] = {
-    val parts = values.map {
-      case SqlNull    => (0L, Array.emptyByteArray)
-      case SqlInt(v)  => intSerial(v)
-      case SqlReal(v) => (7L, intBody(java.lang.Double.doubleToLongBits(v), 8))
-      case SqlText(s) => val b = s.getBytes("UTF-8"); (13L + 2 * b.length, b)
-      case SqlBlob(b) => (12L + 2 * b.length, b)
-    }
-    val serials = parts.flatMap(p => varint(p._1)).toArray
-    // the header-size varint includes itself; sizes here never need
-    // more than a 2-byte varint (header < 2^14 bytes)
-    val hdrLen = if (serials.length + 1 <= 127) serials.length + 1 else serials.length + 2
-    varint(hdrLen.toLong) ++ serials ++ parts.flatMap(_._2)
-  }
-
-  def be32(v: Int): Array[Byte] =
-    Array(((v >> 24) & 0xFF).toByte, ((v >> 16) & 0xFF).toByte, ((v >> 8) & 0xFF).toByte, (v & 0xFF).toByte)
 
   def putBE32(a: Array[Byte], off: Int, v: Int): Unit = {
     a(off) = ((v >> 24) & 0xFF).toByte; a(off + 1) = ((v >> 16) & 0xFF).toByte
@@ -326,56 +384,29 @@ object Gpkg {
       throw new IllegalArgumentException(s"GPKG: unsupported column type $other")
   }
 
-  private def toSqlValue(v: Any): SqlValue = v match {
-    case null          => SqlNull
-    case x: Long       => SqlInt(x)
-    case x: Int        => SqlInt(x.toLong)
-    case x: Short      => SqlInt(x.toLong)
-    case x: Byte       => SqlInt(x.toLong)
-    case x: Boolean    => SqlInt(if (x) 1L else 0L)
-    case x: Double     => SqlReal(x)
-    case x: Float      => SqlReal(x.toDouble)
-    case x: String     => SqlText(x)
-    case x: Array[Byte] => SqlBlob(x)
-    case x @ (_: java.sql.Timestamp | _: java.time.Instant | _: java.time.LocalDateTime) =>
-      SqlText(Writers.isoMillisUtc(x))
-    case other =>
-      throw new IllegalArgumentException(s"GPKG: unsupported value $other")
-  }
-
-  /** GeoPackage geometry blob: "GP", version 0, flags 0x01
-    * (little-endian header, no envelope), srs_id, then the WKB.
+  /** Bit of a blob's base WKB type (EWKB flags and ISO Z/M offsets
+    * stripped) in a layer's kind mask: 1 << type for Point,
+    * LineString and Polygon, bit 0 for any other type or a blob too
+    * short to carry one.
     */
-  private def geometryBlob(wkb: Array[Byte]): Array[Byte] = {
-    val out = new Array[Byte](8 + wkb.length)
-    out(0) = 'G'; out(1) = 'P'; out(2) = 0; out(3) = 0x01
-    out(4) = (SrsId & 0xFF).toByte
-    out(5) = ((SrsId >> 8) & 0xFF).toByte
-    out(6) = ((SrsId >> 16) & 0xFF).toByte
-    out(7) = ((SrsId >> 24) & 0xFF).toByte
-    System.arraycopy(wkb, 0, out, 8, wkb.length)
-    out
-  }
-
-  /** Base WKB type of a blob (EWKB flags and ISO Z/M offsets
-    * stripped); -1 for a blob too short to carry one.
-    */
-  private def wkbType(wkb: Array[Byte]): Int =
-    if (wkb.length < 5) -1
+  private def kindBit(wkb: Array[Byte]): Int =
+    if (wkb.length < 5) 1
     else {
-      val buf = java.nio.ByteBuffer.wrap(wkb, 1, 4).order(
-        if (wkb(0) == 1) java.nio.ByteOrder.LITTLE_ENDIAN else java.nio.ByteOrder.BIG_ENDIAN)
-      (buf.getInt & 0x0FFFFFFF) % 1000
+      val raw =
+        if (wkb(0) == 1) (wkb(1) & 0xFF) | (wkb(2) & 0xFF) << 8 | (wkb(3) & 0xFF) << 16 | (wkb(4) & 0xFF) << 24
+        else (wkb(4) & 0xFF) | (wkb(3) & 0xFF) << 8 | (wkb(2) & 0xFF) << 16 | (wkb(1) & 0xFF) << 24
+      val t = (raw & 0x0FFFFFFF) % 1000
+      if (t >= 1 && t <= 3) 1 << t else 1
     }
 
-  /** `geometry_type_name` of a layer whose non-null geometries have
-    * the WKB types `kinds`: the one type's name, else GEOMETRY.
+  /** `geometry_type_name` of a layer whose non-null geometries set
+    * the bits `kinds`: the one type's name, else GEOMETRY.
     */
-  private def geometryTypeName(kinds: Set[Int]): String = kinds.toSeq match {
-    case Seq(1) => "POINT"
-    case Seq(2) => "LINESTRING"
-    case Seq(3) => "POLYGON"
-    case _      => "GEOMETRY"
+  private def geometryTypeName(kinds: Int): String = kinds match {
+    case 2 => "POINT"
+    case 4 => "LINESTRING"
+    case 8 => "POLYGON"
+    case _ => "GEOMETRY"
   }
 
   /** Write `df` as a single-table GeoPackage. `geom` must be a BINARY
@@ -403,40 +434,44 @@ object Gpkg {
     require(layers.map(_.table).distinct.size == layers.size,
       s"GPKG: duplicate layer table names in ${layers.map(_.table)}")
     val w = new SqliteWriter(path)
+    try {
+      // ---- gpkg_spatial_ref_sys (srs_id is the rowid) ----
+      fixedTable(w, "gpkg_spatial_ref_sys",
+        "CREATE TABLE gpkg_spatial_ref_sys (srs_name TEXT NOT NULL, srs_id INTEGER PRIMARY KEY, " +
+          "organization TEXT NOT NULL, organization_coordsys_id INTEGER NOT NULL, " +
+          "definition TEXT NOT NULL, description TEXT)",
+        Seq(
+          -1L -> Seq("Undefined cartesian SRS", null, "NONE", -1L, "undefined", null),
+          0L -> Seq("Undefined geographic SRS", null, "NONE", 0L, "undefined", null),
+          4326L -> Seq("WGS 84 geodetic", null, "EPSG", 4326L, Wgs84Wkt, null)))
 
-    // ---- gpkg_spatial_ref_sys (srs_id is the rowid) ----
-    val srsRows = Seq(
-      (-1L, "Undefined cartesian SRS", "NONE", -1L, "undefined"),
-      (0L, "Undefined geographic SRS", "NONE", 0L, "undefined"),
-      (4326L, "WGS 84 geodetic", "EPSG", 4326L, Wgs84Wkt))
-    w.createTable("gpkg_spatial_ref_sys",
-      "CREATE TABLE gpkg_spatial_ref_sys (srs_name TEXT NOT NULL, srs_id INTEGER PRIMARY KEY, " +
-        "organization TEXT NOT NULL, organization_coordsys_id INTEGER NOT NULL, " +
-        "definition TEXT NOT NULL, description TEXT)",
-      srsRows.iterator.map { case (id, sname, org, orgId, defn) =>
-        id -> record(Seq(SqlText(sname), SqlNull, SqlText(org), SqlInt(orgId), SqlText(defn), SqlNull))
-      })
+      val typeNames = layers.map(l => writeFeatureTable(w, l))
 
-    val typeNames = layers.map(l => writeFeatureTable(w, l))
+      // ---- gpkg_contents + gpkg_geometry_columns (one row per layer) ----
+      fixedTable(w, "gpkg_contents",
+        "CREATE TABLE gpkg_contents (table_name TEXT NOT NULL, data_type TEXT NOT NULL, " +
+          "identifier TEXT, description TEXT DEFAULT '', last_change DATETIME NOT NULL, " +
+          "min_x DOUBLE, min_y DOUBLE, max_x DOUBLE, max_y DOUBLE, srs_id INTEGER)",
+        layers.zipWithIndex.map { case (l, i) =>
+          (i + 1L) -> Seq(l.table, "features", l.table, "", LastChange, null, null, null, null, SrsId)
+        })
+      fixedTable(w, "gpkg_geometry_columns",
+        "CREATE TABLE gpkg_geometry_columns (table_name TEXT NOT NULL, column_name TEXT NOT NULL, " +
+          "geometry_type_name TEXT NOT NULL, srs_id INTEGER NOT NULL, z TINYINT NOT NULL, m TINYINT NOT NULL)",
+        layers.zip(typeNames).zipWithIndex.map { case ((l, typeName), i) =>
+          (i + 1L) -> Seq(l.table, GeomCol, typeName, SrsId, 0, 0)
+        })
 
-    // ---- gpkg_contents + gpkg_geometry_columns (one row per layer) ----
-    w.createTable("gpkg_contents",
-      "CREATE TABLE gpkg_contents (table_name TEXT NOT NULL, data_type TEXT NOT NULL, " +
-        "identifier TEXT, description TEXT DEFAULT '', last_change DATETIME NOT NULL, " +
-        "min_x DOUBLE, min_y DOUBLE, max_x DOUBLE, max_y DOUBLE, srs_id INTEGER)",
-      layers.iterator.zipWithIndex.map { case (l, i) =>
-        (i + 1).toLong -> record(Seq(SqlText(l.table), SqlText("features"), SqlText(l.table),
-          SqlText(""), SqlText(LastChange), SqlNull, SqlNull, SqlNull, SqlNull, SqlInt(SrsId.toLong)))
-      })
-    w.createTable("gpkg_geometry_columns",
-      "CREATE TABLE gpkg_geometry_columns (table_name TEXT NOT NULL, column_name TEXT NOT NULL, " +
-        "geometry_type_name TEXT NOT NULL, srs_id INTEGER NOT NULL, z TINYINT NOT NULL, m TINYINT NOT NULL)",
-      layers.iterator.zip(typeNames).zipWithIndex.map { case ((l, typeName), i) =>
-        (i + 1).toLong -> record(Seq(SqlText(l.table), SqlText(GeomCol), SqlText(typeName),
-          SqlInt(SrsId.toLong), SqlInt(0L), SqlInt(0L)))
-      })
+      w.close()
+    } catch { case t: Throwable => w.discard(); throw t }
+  }
 
-    w.close()
+  /** A metadata table of `(rowid, column values)` rows. */
+  private def fixedTable(w: SqliteWriter, name: String, sql: String, rows: Seq[(Long, Seq[Any])]): Unit = {
+    val rec = new Record(rows.head._2.length)
+    w.createTable(name, sql, rec) { add =>
+      rows.foreach { case (rowid, values) => values.copyToArray(rec.values); add(rowid) }
+    }
   }
 
   /** Stream one layer's feature table through the page writer and
@@ -465,7 +500,7 @@ object Gpkg {
     val attrDdl = attrFields.map(f => s""""${f.name}" ${sqlType(f.dataType)}""").mkString(", ")
     val fidIdx = if (hasFid) schema.fieldIndex("fid") else -1
     val attrIdx = attrFields.map(f => schema.fieldIndex(f.name))
-    var kinds = Set.empty[Int]
+    var kinds = 0
     var rowNum = 0L
     // The b-tree needs strictly ascending rowids: a user fid column
     // drives an explicit global sort (toLocalIterator on an unsorted
@@ -473,31 +508,29 @@ object Gpkg {
     // order gets sequential rowids. Duplicate/null fids fail fast in
     // createTable's ascending check / here.
     val ordered = if (hasFid) input.orderBy(org.apache.spark.sql.functions.col("fid")) else input
-    val featureRows = ordered.toLocalIterator()
+    // column 0 is the fid (the rowid alias, stored NULL), 1 the geometry
+    val rec = new Record(2 + attrIdx.length, gpCol = 1)
     w.createTable(table,
       s"""CREATE TABLE "$table" ("fid" INTEGER PRIMARY KEY, "$GeomCol" ${geometryTypeName(kinds)}""" +
         (if (attrDdl.nonEmpty) s", $attrDdl)" else ")"),
-      new Iterator[(Long, Array[Byte])] {
-        def hasNext: Boolean = featureRows.hasNext
-        def next(): (Long, Array[Byte]) = {
-          val r = featureRows.next()
-          rowNum += 1
-          val fid =
-            if (!hasFid) rowNum
-            else if (r.isNullAt(fidIdx))
-              throw new IllegalArgumentException(s"GPKG: null fid at input row $rowNum")
-            else r.getLong(fidIdx)
-          val geom =
-            if (r.isNullAt(geomIdx)) SqlNull
-            else {
-              val wkb = r.getAs[Array[Byte]](geomIdx)
-              kinds += wkbType(wkb)
-              SqlBlob(geometryBlob(wkb))
-            }
-          val attrs = attrIdx.map(i => if (r.isNullAt(i)) SqlNull else toSqlValue(r.get(i)))
-          fid -> record(SqlNull +: geom +: attrs.toSeq)
-        }
-      })
+      rec) { add =>
+      val it = ordered.toLocalIterator()
+      while (it.hasNext) {
+        val r = it.next()
+        rowNum += 1
+        val fid =
+          if (!hasFid) rowNum
+          else if (r.isNullAt(fidIdx))
+            throw new IllegalArgumentException(s"GPKG: null fid at input row $rowNum")
+          else r.getLong(fidIdx)
+        val wkb = r.get(geomIdx)
+        if (wkb != null) kinds |= kindBit(wkb.asInstanceOf[Array[Byte]])
+        rec.values(1) = wkb
+        var i = 0
+        while (i < attrIdx.length) { rec.values(2 + i) = r.get(attrIdx(i)); i += 1 }
+        add(fid)
+      }
+    }
     geometryTypeName(kinds)
   }
 }

@@ -61,18 +61,6 @@ object Shapefile {
     s
   }
 
-  private def reversed(ring: Array[Double]): Array[Double] = {
-    val n = ring.length / 2
-    val out = new Array[Double](ring.length)
-    var i = 0
-    while (i < n) {
-      out(2 * i) = ring(2 * (n - 1 - i))
-      out(2 * i + 1) = ring(2 * (n - 1 - i) + 1)
-      i += 1
-    }
-    out
-  }
-
   // ---- attribute (.dbf) model: fixed-width ASCII fields.
 
   private final case class DbfField(name: String, typ: Char, len: Int, dec: Int)
@@ -89,7 +77,10 @@ object Shapefile {
         Map("format" -> "shp", "stage" -> "export"))
   }
 
-  private def renderField(fd: DbfField, v: Any): Array[Byte] = {
+  /** Render `v` into its field of a .dbf record, at `rec(at)`; the
+    * field holds spaces already.
+    */
+  private def putField(rec: Array[Byte], at: Int, fd: DbfField, v: Any): Unit = {
     val s = v match {
       case null => ""
       case d: Double => { val t = f"$d%.6f"; if (t.length > fd.len) "*" * fd.len else t }
@@ -103,15 +94,13 @@ object Shapefile {
         val t = other.toString
         if (fd.typ == 'N' && t.length > fd.len) "*" * fd.len else t
     }
-    val out = Array.fill[Byte](fd.len)(' ')
     if (fd.typ == 'N') { // right-justified
       val t = s.takeRight(fd.len).getBytes("US-ASCII")
-      System.arraycopy(t, 0, out, fd.len - t.length, t.length)
+      System.arraycopy(t, 0, rec, at + fd.len - t.length, t.length)
     } else { // left-justified, truncate
       val t = s.take(fd.len).getBytes("US-ASCII")
-      System.arraycopy(t, 0, out, 0, math.min(t.length, fd.len))
+      System.arraycopy(t, 0, rec, at, math.min(t.length, fd.len))
     }
-    out
   }
 
   /** Write `df` (with binary WKB column `wkbCol`; all geometries the
@@ -138,8 +127,9 @@ object Shapefile {
     var xmin = Double.MaxValue; var ymin = Double.MaxValue
     var xmax = -Double.MaxValue; var ymax = -Double.MaxValue
 
-    // Streamed through buffers (a feature is ~17 small writes); the
-    // three headers are back-patched once the streams are closed.
+    // Streamed through buffers, each feature encoded into reused
+    // record buffers; the three headers are back-patched once the
+    // streams are closed.
     def out(ext: String): OutputStream =
       new BufferedOutputStream(new FileOutputStream(s"$path.$ext"), 1 << 16)
     val shp = out("shp")
@@ -170,6 +160,11 @@ object Shapefile {
       dh.put(0x0D.toByte)
       dbf.write(dh.array())
 
+      val record = new Array[Byte](recordSize) // deletion flag, then the fields
+      val fieldAt = fields.scanLeft(1)(_ + _.len)
+      var content = ByteBuffer.allocate(1 << 12).order(ByteOrder.LITTLE_ENDIAN)
+      val entry = ByteBuffer.allocate(8).order(ByteOrder.BIG_ENDIAN) // record header, index entry
+
       val it = df.toLocalIterator()
       while (it.hasNext) {
         val row = it.next()
@@ -181,70 +176,62 @@ object Shapefile {
             s"mixed shape types in one shapefile: $shapeType vs $st",
             Map("format" -> "shp", "stage" -> "export"))
 
-        // normalize polygon ring orientation: outer CW, holes CCW
-        val rings =
-          if (g.kind == 3)
-            g.rings.zipWithIndex.map { case (r, i) =>
-              val ccw = signedArea2(r) > 0
-              if ((i == 0 && ccw) || (i > 0 && !ccw)) reversed(r) else r
-            }
-          else g.rings
-
-        // record bbox, one walk over the rings; the file bbox folds it
+        // Points go straight to their place in the content, each
+        // polygon ring walked backwards when its orientation is wrong
+        // (outer CW, holes CCW); the record bbox folds them in written
+        // order, the file bbox folds the record bbox.
+        val rings = g.rings
+        val pts = rings.foldLeft(0)(_ + _.length / 2)
+        val size = if (g.kind == 1) 4 + 16 else 4 + 32 + 8 + 4 * rings.length + 16 * pts
+        if (content.capacity < size) content = ByteBuffer.allocate(2 * size).order(ByteOrder.LITTLE_ENDIAN)
+        var at = size - 16 * pts
         var rxmin = Double.MaxValue; var rymin = Double.MaxValue
         var rxmax = -Double.MaxValue; var rymax = -Double.MaxValue
-        rings.foreach { r =>
-          var i = 0
-          while (i < r.length) {
+        var ri = 0
+        while (ri < rings.length) {
+          val r = rings(ri)
+          val n = r.length / 2
+          val ccw = g.kind == 3 && signedArea2(r) > 0
+          val backwards = g.kind == 3 && ((ri == 0 && ccw) || (ri > 0 && !ccw))
+          if (g.kind != 1) content.putInt(44 + 4 * ri, (at - size + 16 * pts) / 16)
+          var k = 0
+          while (k < n) {
+            val i = 2 * (if (backwards) n - 1 - k else k)
             if (r(i) < rxmin) rxmin = r(i); if (r(i) > rxmax) rxmax = r(i)
             if (r(i + 1) < rymin) rymin = r(i + 1); if (r(i + 1) > rymax) rymax = r(i + 1)
-            i += 2
+            content.putDouble(at, r(i)).putDouble(at + 8, r(i + 1))
+            at += 16; k += 1
           }
+          ri += 1
         }
         if (rxmin < xmin) xmin = rxmin; if (rxmax > xmax) xmax = rxmax
         if (rymin < ymin) ymin = rymin; if (rymax > ymax) ymax = rymax
-
-        val pts = rings.map(_.length / 2).sum
-        val content = g.kind match {
-          case 1 =>
-            val b = ByteBuffer.allocate(4 + 16).order(ByteOrder.LITTLE_ENDIAN)
-            b.putInt(1).putDouble(rings(0)(0)).putDouble(rings(0)(1))
-            b.array()
-          case _ =>
-            val b = ByteBuffer.allocate(4 + 32 + 8 + 4 * rings.length + 16 * pts)
-              .order(ByteOrder.LITTLE_ENDIAN)
-            b.putInt(shapeType)
-            b.putDouble(rxmin).putDouble(rymin).putDouble(rxmax).putDouble(rymax)
-            b.putInt(rings.length).putInt(pts)
-            var start = 0
-            rings.foreach { r => b.putInt(start); start += r.length / 2 }
-            rings.foreach { r => r.foreach(b.putDouble) }
-            b.array()
-        }
+        content.putInt(0, if (g.kind == 1) 1 else shapeType)
+        if (g.kind != 1)
+          content.putDouble(4, rxmin).putDouble(12, rymin).putDouble(20, rxmax).putDouble(28, rymax)
+            .putInt(36, rings.length).putInt(40, pts)
         rows += 1
 
-        // record header (big-endian): number, content words
-        val rh = ByteBuffer.allocate(8).order(ByteOrder.BIG_ENDIAN)
-        rh.putInt(rows.toInt).putInt(content.length / 2)
-        // index entry: offset words (BE), content words (BE)
-        val ix = ByteBuffer.allocate(8).order(ByteOrder.BIG_ENDIAN)
-        ix.putInt(shpWords.toInt).putInt(content.length / 2)
-        if ((shpWords + 4 + content.length / 2) * 2 > MaxFileBytes)
+        if ((shpWords + 4 + size / 2) * 2 > MaxFileBytes)
           throw new graft.ExportError(
             "shapefile 2 GB format limit exceeded — use GeoParquet for exports this size",
             Map("format" -> "shp", "stage" -> "export"))
-        shp.write(rh.array()); shp.write(content)
-        shx.write(ix.array())
-        shpWords += 4 + content.length / 2
+        // record header (big-endian): number, content words
+        shp.write(entry.putInt(0, rows.toInt).putInt(4, size / 2).array())
+        shp.write(content.array(), 0, size)
+        // index entry: offset words (BE), content words (BE)
+        shx.write(entry.putInt(0, shpWords.toInt).putInt(4, size / 2).array())
+        shpWords += 4 + size / 2
 
         // .dbf record
-        dbf.write(' '.toInt)
+        java.util.Arrays.fill(record, ' '.toByte)
         var fi = 0
         while (fi < attrs.length) {
           val i = attrs(fi)._2
-          dbf.write(renderField(fields(fi), if (row.isNullAt(i)) null else row.get(i)))
+          putField(record, fieldAt(fi), fields(fi), if (row.isNullAt(i)) null else row.get(i))
           fi += 1
         }
+        dbf.write(record)
       }
       dbf.write(0x1A)
     } finally { shp.close(); shx.close(); dbf.close() }

@@ -287,6 +287,8 @@ class CliSpec extends SparkSpec {
         "--geom=s_acctbal,s_nationkey") == 1)
       assert(jobsOf("export", catalog, "supplier_sites", sfDir, s"$dir/s.shp",
         "--geom=s_acctbal,s_nationkey") == 1)
+      assert(jobsOf("export", catalog, "supplier_sites", sfDir, s"$dir/s.fgb",
+        "--geom=s_acctbal,s_nationkey") == 1)
       assert(jobsOf("export", catalog, "education", sfDir, s"$dir/e.gpkg",
         "--geom=c_acctbal,c_nationkey") == 2)
     } finally spark.sparkContext.removeSparkListener(listener)

@@ -363,6 +363,70 @@ class ExportSpec extends SparkSpec {
       == (("2024-01-02T03:04:05.123Z", "2024-01-02T03:04:05.123Z")))
   }
 
+  test("fgb, gpkg, layered gpkg and shp write pinned bytes for a mixed-value fixture") {
+    // Three partitions; nulls in every attribute type; non-ASCII and
+    // over-64-char text; both timestamp types; a negative and a
+    // beyond-2^47 integer. Lines carry one NaN vertex and one line
+    // long enough to overflow a GPKG page; polygons carry holes, one
+    // of which pokes out of its shell.
+    import PinFixture._
+    val lineOf = udf { (id: Long) =>
+      val n = if (id == 7) 300 else 4
+      wkb(2, Seq((0 until n).map { k =>
+        (if (id == 5 && k == 1) Double.NaN else id + k * 0.5, id * 2.0 - k)
+      }))
+    }
+    val polyOf = udf { (id: Long) =>
+      val shell = square(id * 10.0, -id * 3.0, 8.0)
+      val hole = if (id == 6) square(id * 10.0 + 6, -id * 3.0 + 2, 4.0) else square(id * 10.0 + 2, -id * 3.0 + 2, 3.0)
+      wkb(3, if (id % 3 == 0) Seq(shell) else Seq(shell, hole.reverse))
+    }
+    val attrs = spark.range(0, 12, 1, 3).select(
+      col("id"),
+      expr("""CASE id % 4 WHEN 1 THEN NULL WHEN 2 THEN 'Zürich – 東京 🚀 ünïcødé'
+             |  WHEN 3 THEN repeat('long-text-', 8) ELSE concat('site-', id) END""".stripMargin)
+        .as("name"),
+      expr("CASE id WHEN 0 THEN -42L WHEN 1 THEN NULL WHEN 2 THEN 140737488355333L ELSE id * 1000 END")
+        .as("big"),
+      (col("id").cast("int") - 6).as("small"),
+      expr("CASE WHEN id % 5 = 0 THEN NULL ELSE CAST(id AS DOUBLE) * 1.25D - 3.0D END").as("score"),
+      expr("CASE WHEN id = 3 THEN NULL ELSE timestamp_micros(1704164645123456L + id * 86400123457L) END")
+        .as("ts"),
+      expr("CASE WHEN id = 4 THEN NULL ELSE " +
+        "CAST(timestamp_micros(1704164645123456L - id * 3600654321L) AS TIMESTAMP_NTZ) END").as("tn"))
+    val lines = attrs.withColumn("geom", lineOf(col("id")))
+    val polys = attrs.withColumn("geom", polyOf(col("id")))
+    val dir = tmpDir()
+    Seq("l" -> lines, "p" -> polys).foreach { case (name, df) =>
+      FlatGeobuf.write(df, "geom", s"$dir/${name}0.fgb", 0)
+      FlatGeobuf.write(df, "geom", s"$dir/${name}16.fgb", 16)
+      Gpkg.write(df, s"$dir/$name.gpkg", name)
+      Shapefile.write(df, "geom", s"$dir/$name")
+    }
+    Gpkg.writeLayers(Seq(
+      Gpkg.Layer(lines.withColumn("fid", lit(100L) - col("id") * 37), "lines"),
+      Gpkg.Layer(polys, "polys")), s"$dir/layers.gpkg")
+    def sha256(f: String): String = java.security.MessageDigest.getInstance("SHA-256")
+      .digest(Files.readAllBytes(Paths.get(dir, f))).map(b => f"$b%02x").mkString
+    val files = Seq("l0.fgb", "l16.fgb", "l.gpkg", "l.shp", "l.shx", "l.dbf",
+      "p0.fgb", "p16.fgb", "p.gpkg", "p.shp", "p.shx", "p.dbf", "layers.gpkg")
+    val got = files.map(f => f -> sha256(f)).toMap
+    assert(got == Map(
+      "l0.fgb" -> "014c00e8824e20f8bcc9570d77ebe23598ad767e42163b25429717e6141bbf46",
+      "l16.fgb" -> "7adc48ffe430800974bee09f1e1aeb2c83abdbc37f35f91cd80940f9a15aefa0",
+      "l.gpkg" -> "22929e182e38597f297401c358a85d51bdf3a875da59461eeb14568c62992371",
+      "l.shp" -> "c8eb895c11e0d683446c2eafe1cdab8c7ec7059943d1f370fac026809cd1a1eb",
+      "l.shx" -> "41934e10110f0f03f93c5241070199254ee3cab6ca4fc231b02941456fe9bc1f",
+      "l.dbf" -> "286250dbf498073127b0eaf46f00f34a4bebb9b060e4243c589eeffd431cd6ed",
+      "p0.fgb" -> "cfd96b1806bb24831e00710aa57ad3839a886ab06011adf372ba43664718759e",
+      "p16.fgb" -> "67ff1f2534ef70f19e50b86d992b11026e64140840e36f67c606534fd4693ae0",
+      "p.gpkg" -> "dd4c49c7ac9a1eb3b83dcd7c346385ae131ba4087e2bd953820c5e86d94c3520",
+      "p.shp" -> "58ee65bd30be652c7a6c8deca7570a8b1db94b4d1a88fdee71a383c3cf3f9947",
+      "p.shx" -> "7fb1f53d6b9a2f6eebd45f4d4484dd334be37303450d3e915934d6f617f2dd5d",
+      "p.dbf" -> "286250dbf498073127b0eaf46f00f34a4bebb9b060e4243c589eeffd431cd6ed",
+      "layers.gpkg" -> "cb305bcd6f957971d46b4fb0b83d0c9b2b826cc3c9e4eb3245293b6ba9d07a2e"))
+  }
+
   test("CountryCache metadata sidecar is valid JSON for any key text") {
     val base = tmpDir() + "/cache"
     val cache = new CountryCache(spark, base)
@@ -374,4 +438,24 @@ class ExportSpec extends SparkSpec {
     assert(meta.get("country").asText == "A\"F" && meta.get("theme").asText == "pla\\ces")
     assert(meta.get("features").asLong == 20L && meta.get("cached_at").asText == "2026-01-01T00:00:00")
   }
+}
+
+/** WKB builders for the byte-pin fixture (outside the spec class, so
+  * the UDFs that call them serialize).
+  */
+private object PinFixture {
+
+  /** Little-endian WKB LineString, or Polygon with the given rings. */
+  def wkb(kind: Int, rings: Seq[Seq[(Double, Double)]]): Array[Byte] = {
+    val pts = rings.map(_.length).sum
+    val bb = java.nio.ByteBuffer.allocate(5 + (if (kind == 3) 4 + 4 * rings.length else 4) + 16 * pts)
+      .order(java.nio.ByteOrder.LITTLE_ENDIAN)
+    bb.put(1.toByte).putInt(kind)
+    if (kind == 3) bb.putInt(rings.length)
+    rings.foreach { r => bb.putInt(r.length); r.foreach { case (x, y) => bb.putDouble(x).putDouble(y) } }
+    bb.array()
+  }
+
+  def square(x0: Double, y0: Double, side: Double): Seq[(Double, Double)] =
+    Seq((x0, y0), (x0, y0 + side), (x0 + side, y0 + side), (x0 + side, y0), (x0, y0))
 }

@@ -320,13 +320,32 @@ class FlatGeobufSpec extends SparkSpec {
     }
     val bad = Seq((1L, line(Seq((1.0, 2.0), (3.0, 4.0)))), (2L, line(Seq.empty)))
       .toDF("id", "geom")
+    val out = tmpFile("fgb-empty")
     val e = intercept[graft.ExportError] {
-      FlatGeobuf.write(bad, "geom", tmpFile("fgb-empty"), indexNodeSize = 16)
+      FlatGeobuf.write(bad, "geom", out, indexNodeSize = 16)
     }
     assert(e.getMessage.contains("no coordinates"))
+    // neither the target nor the spool beside it is left behind
+    assert(Paths.get(out).getParent.toFile.list().isEmpty)
     val tmpDir = new java.io.File(System.getProperty("java.io.tmpdir"))
     val spools = tmpDir.listFiles((_, n) => n.startsWith("graft_fgb_data_"))
     assert(spools == null || spools.isEmpty, "spool files must not leak")
+  }
+
+  test("header count and envelope agree with the features when the input changes between evaluations") {
+    // Each evaluation of the frame sees a different row set: only the
+    // first five filter calls in this JVM pass (local mode runs the
+    // UDF in the driver's JVM, so the counter is shared).
+    FgbEvalCounter.calls.set(0)
+    val firstFive = udf((_: Long) => FgbEvalCounter.calls.incrementAndGet() <= 5).asNondeterministic()
+    val df = spark.range(0, 10, 1, 1).filter(firstFive(col("id")))
+      .select(col("id"), Wkb.wkbFromXY(col("id").cast("double"), lit(1.0)).as("geom"))
+    val out = tmpFile("fgb-nondet")
+    FlatGeobuf.write(df, "geom", out)
+    val header = graft.sources.FlatGeobufReader.readHeader(out)
+    val ids = graft.sources.FlatGeobufReader.read(spark, out).select($"id").as[Long].collect().toSeq
+    assert(header.featuresCount == ids.length)
+    assert(ids.nonEmpty && header.envelope == Some((ids.min.toDouble, 1.0, ids.max.toDouble, 1.0)))
   }
 
   test("unindexed read is distributed: prefix-scan ranges ship to executors; truncation is typed") {
@@ -427,4 +446,9 @@ class FlatGeobufSpec extends SparkSpec {
     val got = (coordsOf(graft.sources.FlatGeobufReader.read(spark, pt)), coordsOf(graft.sources.FlatGeobufReader.read(spark, line)))
     assert(got == ((Seq((12.5, -3.25)), pts.map(p => (p._1, p._2)))))
   }
+}
+
+/** A JVM-wide call counter for the changing-input test's UDF. */
+private object FgbEvalCounter {
+  val calls = new java.util.concurrent.atomic.AtomicInteger
 }

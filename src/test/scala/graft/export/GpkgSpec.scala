@@ -4,6 +4,7 @@ import graft.SparkSpec
 import graft.functions.Wkb
 import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
 import scala.sys.process._
 
 /** The GPKG writer is validated two ways: structural assertions on
@@ -119,6 +120,19 @@ class GpkgSpec extends SparkSpec {
       Gpkg.write(dup, tmp() + "/dup.gpkg", "t")
     }
     assert(err.getMessage.contains("strictly ascending"))
+  }
+
+  test("a failed write closes its file and leaves nothing at the target") {
+    val path = tmp() + "/dup.gpkg"
+    val dup = Seq((1L, "a"), (1L, "b"))
+      .map { case (i, s) => (i, s, Wkb.encodePoint((0.0, 0.0))) }
+      .toDF("fid", "name", "geom")
+    intercept[IllegalArgumentException](Gpkg.write(dup, path, "t"))
+    assert(!Files.exists(Paths.get(path)))
+    val fds = Files.list(Paths.get("/proc/self/fd"))
+    val open = try fds.iterator.asScala.flatMap(fd => scala.util.Try(Files.readSymbolicLink(fd)).toOption)
+      .filter(_.toString == path).size finally fds.close()
+    assert(open == 0, s"$open descriptors still open on $path")
   }
 
   test("narrow integral fid is widened to rowid; non-integral fid is rejected") {
