@@ -2,7 +2,7 @@ package graft
 
 import graft.config.JsonConfig.quote
 import graft.queries.QueryDef
-import graft.util.StageMetricsListener
+import graft.util.{SessionStage, StageMetricsListener}
 import java.nio.file.{Files, Path, Paths}
 import org.apache.spark.sql.{GraftBridge, SparkSession}
 import scala.util.control.NonFatal
@@ -118,13 +118,13 @@ object Bench {
   /** One timed run of `q` (its row count and seconds) on a new session
     * of the same SparkContext, so a row that stages an artifact through
     * `SessionStage` builds it in every run instead of reading the
-    * previous run's.
+    * previous run's; the session's staging is released after the run.
     */
   private def run(spark: SparkSession, q: QueryDef, sfDir: String): (Long, Double) = {
     val session = spark.newSession()
     val t0 = System.nanoTime()
-    val n = q.fn(session, sfDir).count()
-    (n, (System.nanoTime() - t0) / 1e9)
+    try (q.fn(session, sfDir).count(), (System.nanoTime() - t0) / 1e9)
+    finally SessionStage.release(session)
   }
 
   private def fmt(v: Double): String =

@@ -1,7 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** Deduplication suite for document corpora: exact, MinHash+LSH,
   * SimHash, and n-gram Jaccard.
@@ -222,8 +223,6 @@ object Dedup {
       rowsPerBand: Int = 4,
       seed: Long = 42L
   ): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
     val k = bands * rowsPerBand
 
     // ONE map-only pass builds (doc, sig) via the native codegen'd
@@ -245,7 +244,13 @@ object Dedup {
         graft.functions.MinHashSig(col(textCol), n, k, seed).as("sig"))
       .localCheckpoint(true)
       .filter(col("sig")(0) < P)
+    lshPairs(signed, bands, rowsPerBand)
+  }
 
+  /** [[minhashLsh]]'s pairs from a signed (doc, sig) frame without empty-shingle docs. */
+  private def lshPairs(signed: DataFrame, bands: Int, rowsPerBand: Int): DataFrame = {
+    val spark = signed.sparkSession
+    import spark.implicits._
     // Band bucket = rolling-hash fold of the band's signature slice
     // (not murmur3): same join semantics, reproducible in the SQL
     // oracle.
@@ -258,7 +263,7 @@ object Dedup {
       .dropDuplicates("doc_a", "doc_b")
 
     candidates
-      .withColumn("est_jaccard", sigAgreement($"sig_a", $"sig_b", k))
+      .withColumn("est_jaccard", sigAgreement($"sig_a", $"sig_b", bands * rowsPerBand))
       .select($"doc_a", $"doc_b", $"est_jaccard")
   }
 
@@ -308,9 +313,9 @@ object Dedup {
     val signed = signedAll.filter(col("sig")(0) < P)
 
     // (a) intra-batch: verified near-dup pairs → CC → survivor =
-    // component min; everything else in a component drops.
-    val pairs = minhashLsh(newDocs, textCol, idCol, n, bands, rowsPerBand, seed)
-      .filter(col("est_jaccard") >= simThreshold)
+    // component min; everything else in a component drops. The batch
+    // is signed once: these pairs come from the same signatures.
+    val pairs = lshPairs(signed, bands, rowsPerBand).filter(col("est_jaccard") >= simThreshold)
     val intraDropped = connectedComponents(pairs, "doc_a", "doc_b")
       .filter(col("node") =!= col("component"))
       .select(col("node").as("doc"))
@@ -530,7 +535,12 @@ object Dedup {
   def connectedComponents(pairs: DataFrame, aCol: String, bCol: String, maxIter: Int = 20): DataFrame =
     connectedComponentsWithRounds(pairs, aCol, bCol, maxIter)._1
 
-  /** Large-star/small-star alternation (Kiveris et al., "Connected
+  /** (labels, rounds), rounds exposed for tests. At most `driverCap` LONG-id pairs are
+    * labeled by a union-find on the driver, rounds = 0; more pairs and other id types take
+    * the star rounds, with the same (node, component) set and schema. The cap bounds driver
+    * memory, not speed: the driver finish was faster at every size measured, up to 4M pairs.
+    *
+    * Large-star/small-star alternation (Kiveris et al., "Connected
     * Components in MapReduce and Beyond", SoCC'14): rounds scale with
     * O(log n) — NOT graph diameter — so adversarial long chains
     * converge as fast as near-dup cliques. Each round is two
@@ -545,24 +555,26 @@ object Dedup {
     *    smaller neighbor.
     *
     * At the fixed point every component is a star rooted at its
-    * minimum id; labels read directly off the edges. Returns
-    * (labels, rounds) — rounds exposed so tests can assert the
-    * logarithmic bound.
+    * minimum id; labels read directly off the edges.
     */
   private[graft] def connectedComponentsWithRounds(
       pairs: DataFrame,
       aCol: String,
       bCol: String,
-      maxIter: Int = 20
+      maxIter: Int = 20,
+      driverCap: Long = DriverCcPairs
   ): (DataFrame, Int) = {
     val spark = pairs.sparkSession
     import spark.implicits._
     import org.apache.spark.sql.expressions.Window
     // Materialize the pair source ONCE: `pairs` is referenced by two
     // branches below, so an expensive upstream (the Jaccard candidate
-    // pipeline) would run twice otherwise.
-    val raw = pairs.select(col(aCol).as("a"), col(bCol).as("b")).localCheckpoint(true)
+    // pipeline) would run twice otherwise. The checkpoint is lazy: the
+    // first job over `raw` (the count, for LONG ids) fills it.
+    val raw = pairs.select(col(aCol).as("a"), col(bCol).as("b")).localCheckpoint(false)
     val nodes = raw.select($"a".as("node")).union(raw.select($"b".as("node"))).distinct()
+    val node = nodes.schema("node")
+    if (node.dataType == LongType && raw.rdd.count() <= driverCap) return (labelsOnDriver(raw, node), 0)
     var edges = raw
       .filter($"a" =!= $"b")
       .select(least($"a", $"b").as("u"), greatest($"a", $"b").as("v"))
@@ -615,6 +627,53 @@ object Dedup {
       .join(edges.groupBy($"v".as("node")).agg(min($"u").as("root")), Seq("node"), "left")
       .select($"node", coalesce($"root", $"node").as("component"))
     (labels, rounds)
+  }
+
+  /** Most pairs [[connectedComponentsWithRounds]] labels on the driver: ~2 MB of longs
+    * collected, at most ~4 MB of (node, component) longs broadcast. */
+  private[graft] val DriverCcPairs = 1L << 17
+
+  /** Union-find labels of LONG-id pairs on primitive arrays, as a one-partition RDD over a
+    * broadcast: one part file, shipped once however often it is read, and never
+    * auto-broadcast, so callers' join plans keep their exchanges. Ids are sorted, so the
+    * smaller root index is the smaller id. A null end adds one (null, null) row. */
+  private def labelsOnDriver(raw: DataFrame, node: StructField): DataFrame = {
+    val (a, b) = (col("a"), col("b"))
+    // Per partition: (a0, b0, a1, b1, …) and whether an end was null; (x, null) reads as (x, x).
+    val parts = raw.select(coalesce(a, b).cast(LongType), coalesce(b, a).cast(LongType), a.isNull || b.isNull)
+      .rdd.mapPartitions { rows =>
+        val ends = Array.newBuilder[Long]
+        var hasNull = false
+        rows.foreach { r =>
+          hasNull ||= r.getBoolean(2)
+          if (!r.isNullAt(0)) { ends += r.getLong(0); ends += r.getLong(1) }
+        }
+        Iterator((ends.result(), hasNull))
+      }.collect()
+    val ends = Array.concat(parts.map(_._1).toIndexedSeq: _*)
+    val ids = ends.sorted
+    var n = 0
+    for (i <- ids.indices if i == 0 || ids(i) != ids(i - 1)) { ids(n) = ids(i); n += 1 }
+    val parent = Array.range(0, n)
+    def find(i: Int): Int = {
+      var r = i
+      while (parent(r) != r) { parent(r) = parent(parent(r)); r = parent(r) }
+      r
+    }
+    def at(id: Long) = find(java.util.Arrays.binarySearch(ids, 0, n, id))
+    for (k <- ends.indices by 2) {
+      val (x, y) = (at(ends(k)), at(ends(k + 1)))
+      parent(x max y) = x min y
+    }
+    val comps = new Array[Long](n)
+    for (i <- 0 until n) comps(i) = ids(find(i))
+    val hasNull = parts.exists(_._2)
+    val labels = raw.sparkSession.sparkContext.broadcast((ids.take(n), comps))
+    val rows = raw.sparkSession.sparkContext.parallelize(Seq(0), 1).flatMap { _ =>
+      val (ids, comps) = labels.value
+      ids.indices.iterator.map(i => Row(ids(i), comps(i))) ++ Iterator.single(Row(null, null)).filter(_ => hasNull)
+    }
+    raw.sparkSession.createDataFrame(rows, StructType(Seq(node, StructField("component", LongType, node.nullable))))
   }
 
   /** Benchmark decontamination: flag training documents sharing any

@@ -31,8 +31,8 @@ import org.apache.spark.sql.SparkSession
   * to it. On `onApplicationEnd`, which `SparkContext.stop` posts
   * before it drains the listener bus and returns, the context's
   * directories are deleted and all entries of its sessions dropped.
-  * One JVM-exit hook deletes what a context that was never stopped
-  * still holds.
+  * [[release]] does the same for one session. One JVM-exit hook
+  * deletes what a context that was never stopped still holds.
   *
   * '''Location.''' Directories live under `java.io.tmpdir`. They are
   * local files that driver-side readers (GeoPackage, FlatGeobuf,
@@ -47,7 +47,7 @@ object SessionStage {
       lazy val value: Any = build()
     }
     private val entries = TrieMap.empty[(SparkSession, String, String), Holder]
-    private val dirs = TrieMap.empty[Path, SparkContext]
+    private val dirs = TrieMap.empty[Path, SparkSession]
     private val watched = TrieMap.empty[SparkContext, Unit]
 
     def value[V](spark: SparkSession, dir: String, name: String)(build: => V): V = {
@@ -61,7 +61,7 @@ object SessionStage {
     def dir(spark: SparkSession, dir: String, name: String)(write: Path => Unit): Path =
       value(spark, dir, name) {
         val p = Files.createTempDirectory(s"graft_${name}_")
-        dirs.put(p, spark.sparkContext)
+        dirs.put(p, spark)
         try write(p)
         catch { case e: Throwable => delete(p); throw e }
         p
@@ -70,16 +70,21 @@ object SessionStage {
     /** Delete `sc`'s directories and drop its sessions' entries. */
     def release(sc: SparkContext): Unit = {
       watched.remove(sc)
-      entries.keys.filter(_._1.sparkContext eq sc).foreach(entries.remove)
-      dirs.collect { case (p, c) if c eq sc => p }.foreach(delete)
+      release((s: SparkSession) => s.sparkContext eq sc)
+    }
+
+    /** Delete the directories and drop the entries of the sessions `of` selects. */
+    def release(of: SparkSession => Boolean): Unit = {
+      entries.keys.filter(k => of(k._1)).foreach(entries.remove)
+      dirs.collect { case (p, s) if of(s) => p }.foreach(delete)
     }
 
     def releaseAll(): Unit = dirs.keys.foreach(delete)
 
-    private def delete(p: Path): Unit = {
-      Fs.deleteRecursively(p)
-      dirs.remove(p)
-    }
+    /** Only the caller that removes `p` from `dirs` deletes it: a context
+      * release and the JVM-exit hook may race over the same dirs.
+      */
+    private def delete(p: Path): Unit = if (dirs.remove(p).isDefined) Fs.deleteRecursively(p)
 
     private def watch(sc: SparkContext): Unit =
       if (watched.putIfAbsent(sc, ()).isEmpty)
@@ -100,4 +105,7 @@ object SessionStage {
     */
   def dir(spark: SparkSession, dir: String, name: String)(write: Path => Unit): Path =
     store.dir(spark, dir, name)(write)
+
+  /** Drop `spark`'s entries and delete its directories now; its next call builds again. */
+  def release(spark: SparkSession): Unit = store.release((s: SparkSession) => s eq spark)
 }

@@ -4,6 +4,7 @@ import com.fasterxml.jackson.databind.ObjectMapper
 import graft.queries.QueryDef
 import graft.util.StageMetricsListener
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
 
 /** The sweep's scoring and its BENCH_FULL.json / totals shape. */
 class BenchSpec extends SparkSpec {
@@ -44,6 +45,11 @@ class BenchSpec extends SparkSpec {
     })
     val Seq(score) = Bench.score(spark, Seq(staged), sfDir, new StageMetricsListener)
     assert(score.error.isEmpty && builds == 2)
+    // each run's session is released: no staged dir outlives its run
+    val tmp = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"))
+    val left = java.nio.file.Files.list(tmp)
+    try assert(!left.iterator.asScala.exists(_.getFileName.toString.startsWith("graft_bench_spec_staged_")))
+    finally left.close()
   }
 
   test("the totals fields keep their keys and order") {

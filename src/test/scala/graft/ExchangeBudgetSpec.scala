@@ -184,7 +184,9 @@ class ExchangeBudgetSpec extends SparkSpec {
     "dd_lsh_eval" -> ((6, 1)),
     "q_ab_lift" -> ((1, 0)),
     "q_lag_ratio" -> ((2, 0)),
-    "dd_multikey_er" -> ((2, 1)),
+    // CC labels of a pair set within Dedup.DriverCcPairs come from the
+    // driver finish, so the labels plan has no exchange of its own.
+    "dd_multikey_er" -> ((0, 0)),
     "tx_rare_tokens" -> ((1, 1)),
     // Batch 11: lineage = one rollup over the partitioned stage;
     // drawdown = daily rollup + day-bounded window/agg;
@@ -435,11 +437,11 @@ class ExchangeBudgetSpec extends SparkSpec {
     "q_funnel_windowed" -> ((3, 1)),
     "q_prefix_rollup" -> ((2, 0)),
     "sim_mmr" -> ((16, 0)),
-    // Round-8 batch 22: grid cluster's 4 move cell-/dense-bounded
-    // tables after the checkpointed histogram (CC rounds sit behind
-    // their per-round checkpoints); growth accounting = the
+    // Round-8 batch 22: grid cluster's 3 move cell-/dense-bounded
+    // tables after the checkpointed histogram (the CC labels are
+    // finished on the driver); growth accounting = the
     // (user,day) distinct + the lag re-key + the daily rollup.
-    "geo_grid_cluster" -> ((4, 0)),
+    "geo_grid_cluster" -> ((3, 0)),
     "q_growth_accounting" -> ((3, 0)),
     // Round-8 batch 23: attribution = the user-anchor window + the
     // bounded per-type rollup; overlap = the (user,type) distinct +

@@ -79,6 +79,41 @@ class SessionStageSpec extends SparkSpec {
     assert(onDisk(name) == Seq(p))
   }
 
+  test("release(session) deletes that session's dirs and entries; another session's survive") {
+    val dir = key()
+    val name = "spec_release_session_" + System.nanoTime()
+    val (a, b) = (spark.newSession(), spark.newSession())
+    val pa = SessionStage.dir(a, dir, name)(p => Files.writeString(p.resolve("part"), "a"))
+    val pb = SessionStage.dir(b, dir, name)(p => Files.writeString(p.resolve("part"), "b"))
+    assert(SessionStage.value(a, dir, "v")(1) == 1 && SessionStage.value(b, dir, "v")(1) == 1)
+    SessionStage.release(a)
+    assert(!Files.exists(pa))
+    assert(onDisk(name) == Seq(pb))
+    assert(SessionStage.value(a, dir, "v")(2) == 2)
+    assert(SessionStage.value(b, dir, "v")(2) == 1)
+    assert(SessionStage.dir(b, dir, name)(_ => ()) == pb)
+    SessionStage.release(b)
+    assert(onDisk(name).isEmpty)
+  }
+
+  test("a context release racing the JVM-exit release deletes each dir once, without error") {
+    val store = new SessionStage.Store
+    val (dir, name) = (key(), "spec_race_" + System.nanoTime())
+    val staged = (1 to 20).map(i => store.dir(spark, dir, s"$name$i") { p =>
+      (1 to 200).foreach(j => Files.writeString(p.resolve(s"f$j"), "x"))
+    })
+    val start = new java.util.concurrent.CountDownLatch(1)
+    val errors = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]
+    val threads = Seq(() => store.releaseAll(), () => store.release(spark.sparkContext)).map { f =>
+      new Thread(() => { start.await(); try f() catch { case e: Throwable => errors.add(e) } })
+    }
+    threads.foreach(_.start())
+    start.countDown()
+    threads.foreach(_.join())
+    assert(errors.isEmpty, errors)
+    assert(!staged.exists(Files.exists(_)))
+  }
+
   test("release deletes the context's dirs and drops its entries") {
     val store = new SessionStage.Store
     val dir = key()
