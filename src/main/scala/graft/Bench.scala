@@ -123,7 +123,7 @@ object Bench {
   private def run(spark: SparkSession, q: QueryDef, sfDir: String): (Long, Double) = {
     val session = spark.newSession()
     val t0 = System.nanoTime()
-    try (q.fn(session, sfDir).count(), (System.nanoTime() - t0) / 1e9)
+    try (q.fn(Tables(session, sfDir)).count(), (System.nanoTime() - t0) / 1e9)
     finally SessionStage.release(session)
   }
 

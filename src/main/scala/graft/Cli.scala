@@ -247,10 +247,12 @@ object Cli {
           case other => throw new IllegalArgumentException(
             s"run writes tabular results — use .parquet, .csv or .jsonl (got $other)")
         }
-        val fn = SparkEntry.queries.getOrElse(name,
-          throw new IllegalArgumentException(
-            s"no registered query '$name' (see list-registry)"))
-        Exporter.write(fn(spark, sfDir), outPath, fmt)
+        val q = try SparkEntry.select(Seq(name)).head
+        catch {
+          case _: IllegalArgumentException =>
+            throw new IllegalArgumentException(s"no registered query '$name' (see list-registry)")
+        }
+        Exporter.write(q.fn(Tables(spark, sfDir)), outPath, fmt)
         println(s"[cli] wrote $name -> $outPath")
 
       case Seq("list-registry") =>

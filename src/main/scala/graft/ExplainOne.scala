@@ -19,8 +19,9 @@ object ExplainOne {
     val spark = GraftSession.fromEnv("graft-explain")
     spark.sparkContext.setLogLevel("ERROR")
     Files.createDirectories(Paths.get(outDir))
+    val t = Tables(spark, sfDir)
     val failed = SparkEntry.runEach(spark, rows) { q =>
-      val txt = q.fn(spark, sfDir).queryExecution.explainString(
+      val txt = q.fn(t).queryExecution.explainString(
         org.apache.spark.sql.execution.FormattedMode)
       Files.writeString(Paths.get(outDir, s"${q.name}$suffix.txt"), txt)
       println(s"[explain] wrote $outDir/${q.name}$suffix.txt")

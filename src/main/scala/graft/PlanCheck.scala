@@ -75,8 +75,9 @@ object PlanCheck {
   def budgetMain(dir: String): Unit = {
     val spark = GraftSession.builder(master = "local[4]", shufflePartitions = 4).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
+    val t = Tables(spark, dir)
     SparkEntry.runEach(spark, SparkEntry.select(Nil).filterNot(_.name.startsWith("st_"))) { q =>
-      val (s, b) = exchangeCounts(q.fn(spark, dir))
+      val (s, b) = exchangeCounts(q.fn(t))
       println(s"BUDGET ${q.name} $s $b")
     }
     spark.stop()
@@ -91,8 +92,9 @@ object PlanCheck {
     val spark = GraftSession.builder(master = "local[8]", shufflePartitions = 8).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     println(s"entry rows (sf0.001): ${SparkEntry.entry(spark).count()}")
+    val t = Tables(spark, dir)
     SparkEntry.runEach(spark, SparkEntry.select(Nil)) { q =>
-      val df = q.fn(spark, dir)
+      val df = q.fn(t)
       val (shuffles, bcasts) = exchangeCounts(df)
       // Spark 4 executedPlan.toString marks codegen stages as
       // "*(n) Operator"; count distinct stage ids.

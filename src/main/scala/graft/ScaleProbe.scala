@@ -39,7 +39,7 @@ object ScaleProbe {
     if (args.headOption.contains("streamfloor")) {
       val spark = GraftSession.fromEnv("graft-scaleprobe")
       timeRuns("stream_floor", if (args.length > 2) args(2).toInt else 3)(
-        graft.queries.StreamQueries.stNoopFloor(spark, args(1)).count())
+        graft.queries.StreamQueries.stNoopFloor(Tables(spark, args(1))).count())
       spark.stop()
       return
     }

@@ -1,6 +1,6 @@
 package graft
 
-import graft.queries.{QueryDef, Registry}
+import graft.queries.{LlmQueries, QueryDef, Registry}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import scala.util.control.NonFatal
 
@@ -8,7 +8,8 @@ import scala.util.control.NonFatal
   * (correctness protocol). Query implementations live under
   * `graft.queries` / `graft.operators`; this object aggregates the
   * registry and is the one place the registry mains (Bench, Verify,
-  * ExplainOne, PlanCheck) pick rows and run them.
+  * ExplainOne, PlanCheck, `Cli run`) pick rows and run them. A row's
+  * `fn` takes the [[Tables]] catalog its runner builds for the session.
   */
 object SparkEntry {
 
@@ -17,11 +18,17 @@ object SparkEntry {
     * language ID, and dedup in one plan (SURVEY §2 M1).
     */
   def entry(spark: SparkSession): DataFrame =
-    queries("pipe_clean_corpus")(spark, "/root/testdata/sf0.001")
+    LlmQueries.pipeCleanCorpus(Tables(spark, "/root/testdata/sf0.001"))
 
-  /** One entry per implemented operator from SURVEY.md §2. */
+  /** Every row as a `fn(spark, dir)` call, keyed by name: the adapter
+    * the benchmark harness (`perfbench`) drives the registry through.
+    * Each call builds the row over a fresh `Tables(spark, dir)`. The
+    * registry mains take rows from [[select]] and pass their own catalog.
+    */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    Registry.all.map(q => q.name -> q.fn).toMap
+    Registry.all.map { q =>
+      q.name -> ((spark: SparkSession, dir: String) => q.fn(Tables(spark, dir)))
+    }.toMap
 
   /** DuckDB-runnable oracle SQL per query (same column names). */
   def oracleSql: Map[String, String] =

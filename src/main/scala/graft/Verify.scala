@@ -30,8 +30,9 @@ object Verify {
       outDir: String
   ): Seq[(QueryDef, Throwable)] = {
     Files.createDirectories(Paths.get(outDir))
+    val t = Tables(spark, sfDir)
     val failed = SparkEntry.runEach(spark, rows) { q =>
-      q.fn(spark, sfDir).coalesce(1).write.mode("overwrite").parquet(s"$outDir/${q.name}")
+      q.fn(t).coalesce(1).write.mode("overwrite").parquet(s"$outDir/${q.name}")
     }
     val oracle = rows.flatMap(q => q.oracle.map(q.name -> _))
     Files.writeString(Paths.get(outDir, "oracle_sql.json"), graft.config.JsonConfig.obj(oracle: _*))

@@ -145,78 +145,6 @@ object Exporter {
     GeoJson.writeFeatureCollectionLayers(data, path, target, generatedAt, raw)
   }
 
-  /** Z-order clustered parquet write — the 2-D extension of
-    * `FeatureService.writeRangeSorted`: rows are range-partitioned
-    * AND sorted by their Morton key (`Geo.mortonKey` over x/y), so
-    * every output file covers one tight, disjoint z-range and its
-    * footer min/max statistics become a spatial index. At 100 TB a
-    * bbox predicate rewritten to z-range bounds prunes to the
-    * handful of files whose ranges intersect it (the lake-table
-    * Z-ORDER clustering move) instead of scanning the world. The
-    * `zkey` column is kept in the output — it is the pruning
-    * predicate's column.
-    */
-  def writeZOrdered(
-      df: DataFrame,
-      path: String,
-      x: Column,
-      y: Column,
-      xmin: Double,
-      ymin: Double,
-      xmax: Double,
-      ymax: Double,
-      partitions: Int
-  ): Unit = {
-    import org.apache.spark.sql.functions.col
-    df.withColumn("zkey", graft.operators.Geo.mortonKey(x, y, xmin, ymin, xmax, ymax))
-      .repartitionByRange(partitions, col("zkey"))
-      .sortWithinPartitions("zkey")
-      .write.mode("overwrite").parquet(path)
-  }
-
-  /** Bbox read over a [[writeZOrdered]] layout — the consuming half
-    * of the Z-order contract: the query bbox is rewritten to its
-    * covering z-ranges (`Geo.zRangesForBbox`, driver-side math, no
-    * data read to plan) and applied as OR'd BETWEEN predicates on
-    * `zkey` — range predicates parquet prunes with footer min/max,
-    * so with the writer's disjoint per-file ranges only the files
-    * whose z-range intersects the bbox are opened. The exact x/y
-    * predicate is ANDed on top, so correctness never depends on the
-    * cover's tightness (it is a superset by construction: quantize
-    * is monotonic and out-of-frame points clamp to edge cells the
-    * exact predicate then rejects).
-    */
-  def readZOrdered(
-      spark: org.apache.spark.sql.SparkSession,
-      path: String,
-      xCol: String,
-      yCol: String,
-      xmin: Double,
-      ymin: Double,
-      xmax: Double,
-      ymax: Double,
-      bboxXLo: Double,
-      bboxYLo: Double,
-      bboxXHi: Double,
-      bboxYHi: Double,
-      maxDepth: Int = 8
-  ): DataFrame = {
-    import org.apache.spark.sql.functions.col
-    import graft.operators.Geo
-    val qxLo = Geo.quantize16(bboxXLo, xmin, xmax)
-    val qxHi = Geo.quantize16(bboxXHi, xmin, xmax)
-    val qyLo = Geo.quantize16(bboxYLo, ymin, ymax)
-    val qyHi = Geo.quantize16(bboxYHi, ymin, ymax)
-    val ranges = Geo.zRangesForBbox(qxLo, qxHi, qyLo, qyHi, maxDepth)
-    val zPred = ranges
-      .map { case (lo, hi) => col("zkey").between(lo, hi) }
-      .reduceOption(_ || _)
-      .getOrElse(org.apache.spark.sql.functions.lit(false))
-    spark.read.parquet(path)
-      .filter(zPred)
-      .filter(col(xCol).between(bboxXLo, bboxXHi) && col(yCol).between(bboxYLo, bboxYHi))
-  }
-
   /** Incremental partitioned export with DYNAMIC partition
     * overwrite: only the partitions present in `df` are replaced;
     * every other partition of the target survives untouched. This

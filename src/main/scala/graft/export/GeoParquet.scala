@@ -73,8 +73,10 @@ object GeoParquet {
     val schema = df.schema
 
     // Distributed part-file write: Hadoop FS API end-to-end, so the
-    // same code path targets file://, hdfs://, s3a://.
-    val hconf = new org.apache.hadoop.conf.Configuration()
+    // same code path targets file://, hdfs://, s3a://. The session's
+    // Hadoop conf (spark.hadoop.* settings) reaches every task.
+    val hconf = df.sparkSession.sparkContext.hadoopConfiguration
+    val taskConf = org.apache.spark.sql.GraftBridge.taskHadoopConf(df.sparkSession)
     val dirPath = new org.apache.hadoop.fs.Path(path)
     val fs = dirPath.getFileSystem(hconf)
     if (fs.exists(dirPath)) fs.delete(dirPath, true)
@@ -84,7 +86,7 @@ object GeoParquet {
       if (!it.hasNext) Iterator.empty
       else {
         val file = f"part-$idx%05d.parquet"
-        val n = writePart(schema, wkbCol, geoJson, s"$path/$file", it)
+        val n = writePart(schema, wkbCol, geoJson, s"$path/$file", taskConf(), it)
         Iterator.single((file, n))
       }
     }.collect() // bounded: one (name, count) pair per partition
@@ -146,6 +148,7 @@ object GeoParquet {
       wkbCol: String,
       geoJson: String,
       file: String,
+      conf: org.apache.hadoop.conf.Configuration,
       it: Iterator[org.apache.spark.sql.Row]): Long = {
     import org.apache.parquet.example.data.simple.SimpleGroupFactory
     import org.apache.parquet.hadoop.example.ExampleParquetWriter
@@ -153,7 +156,6 @@ object GeoParquet {
     import org.apache.parquet.io.api.Binary
 
     val msgType = parquetSchema(schema)
-    val conf = new org.apache.hadoop.conf.Configuration()
     val out = org.apache.parquet.hadoop.util.HadoopOutputFile
       .fromPath(new org.apache.hadoop.fs.Path(file), conf)
     val extra = new java.util.HashMap[String, String]()

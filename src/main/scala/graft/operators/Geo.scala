@@ -288,68 +288,6 @@ object Geo {
     (s2.bitwiseOR(shiftleft(s2, 1))).bitwiseAND(lit(0x5555555555555555L))
   }
 
-  /** Driver-side twin of [[spreadBits16]] for z-range planning. */
-  private def spreadBits16L(v: Long): Long = {
-    val s8 = (v | (v << 8)) & 0x00FF00FFL
-    val s4 = (s8 | (s8 << 4)) & 0x0F0F0F0FL
-    val s2 = (s4 | (s4 << 2)) & 0x33333333L
-    (s2 | (s2 << 1)) & 0x55555555L
-  }
-
-  /** Driver-side morton key of a quantized cell (same bit layout as
-    * [[mortonKey]]: x even bits, y odd).
-    */
-  private[graft] def mortonOfCells(qx: Long, qy: Long): Long =
-    spreadBits16L(qx) | (spreadBits16L(qy) << 1)
-
-  /** Quantize a coordinate onto [[mortonKey]]'s 2^16 grid (same
-    * clamp-to-frame formula).
-    */
-  private[graft] def quantize16(v: Double, lo: Double, hi: Double): Long =
-    math.min(math.max(math.floor((v - lo) / (hi - lo) * ((1L << 16) - 1)).toLong, 0L),
-      (1L << 16) - 1L)
-
-  /** The COVERING z-ranges for a quantized query rectangle — the
-    * "bbox → z-range rewrite" that turns a z-ordered file layout
-    * into a spatial index. Quadtree decomposition: a depth-d
-    * quadtree cell covers one CONTIGUOUS morton range of length
-    * 4^(16−d); nodes fully inside the rect emit their range, nodes
-    * at `maxDepth` emit theirs whole (an over-approximation — the
-    * caller keeps the exact x/y predicate, so correctness never
-    * depends on cover tightness), the rest recurse. Adjacent ranges
-    * are merged. Driver-side closed-form math: no data is read to
-    * plan the cover, and the range count is bounded by the rect
-    * perimeter at `maxDepth` (~O(2^maxDepth)), not its area.
-    */
-  def zRangesForBbox(
-      qxLo: Long, qxHi: Long, qyLo: Long, qyHi: Long,
-      maxDepth: Int = 8): Seq[(Long, Long)] = {
-    require(maxDepth >= 0 && maxDepth <= 16, s"maxDepth out of [0,16]: $maxDepth")
-    val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
-    def rec(d: Int, cx: Long, cy: Long): Unit = {
-      val size = 1L << (16 - d)
-      val xlo = cx * size; val xhi = xlo + size - 1
-      val ylo = cy * size; val yhi = ylo + size - 1
-      if (xhi < qxLo || xlo > qxHi || yhi < qyLo || ylo > qyHi) ()
-      else if ((xlo >= qxLo && xhi <= qxHi && ylo >= qyLo && yhi <= qyHi) || d == maxDepth) {
-        val zlo = mortonOfCells(xlo, ylo)
-        out += ((zlo, zlo + (1L << (2 * (16 - d))) - 1))
-      } else {
-        rec(d + 1, 2 * cx, 2 * cy); rec(d + 1, 2 * cx + 1, 2 * cy)
-        rec(d + 1, 2 * cx, 2 * cy + 1); rec(d + 1, 2 * cx + 1, 2 * cy + 1)
-      }
-    }
-    rec(0, 0L, 0L)
-    val sorted = out.sortBy(_._1)
-    val merged = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
-    sorted.foreach { r =>
-      if (merged.nonEmpty && merged.last._2 + 1 >= r._1)
-        merged(merged.length - 1) = (merged.last._1, math.max(merged.last._2, r._2))
-      else merged += r
-    }
-    merged.toSeq
-  }
-
   /** Geohash base-32 alphabet (no a/i/l/o). */
   val GeohashAlphabet = "0123456789bcdefghjkmnpqrstuvwxyz"
 

@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.Tables
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -17,8 +17,7 @@ object Analytic {
   /** D1: TPC-H Q1-style pricing summary. Map-side partial agg, one
     * shuffle on the (tiny-cardinality) group key.
     */
-  def q1Pricing(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def q1Pricing(t: Tables): DataFrame =
     t.lineitem
       .filter(col("l_shipdate") <= lit("1998-09-02").cast("timestamp"))
       .groupBy(col("l_returnflag"), col("l_linestatus"))
@@ -29,7 +28,6 @@ object Analytic {
         round(avg(col("l_quantity")), 4).as("avg_qty"),
         count(lit(1)).as("count_order")
       )
-  }
 
   val q1PricingSql: String =
     """SELECT l_returnflag, l_linestatus,
@@ -45,8 +43,7 @@ object Analytic {
   /** D2: TPC-H Q3-style shipping priority — customer ⋈ orders ⋈
     * lineitem, agg, top-10. customer is dim-sized → broadcast.
     */
-  def q3Priority(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def q3Priority(t: Tables): DataFrame = {
     val cust = t.customer.filter(col("c_mktsegment") === "BUILDING").select("c_custkey")
     t.orders
       .join(broadcast(cust), col("o_custkey") === col("c_custkey"))
@@ -74,8 +71,7 @@ object Analytic {
   /** D3: TPC-H Q5-style star join — all dims broadcast, single
     * shuffle chain on the fact keys.
     */
-  def q5Volume(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def q5Volume(t: Tables): DataFrame =
     t.lineitem
       .join(t.orders, col("l_orderkey") === col("o_orderkey"))
       .join(broadcast(t.customer), col("o_custkey") === col("c_custkey"))
@@ -86,7 +82,6 @@ object Analytic {
       .filter(col("r_name") === "ASIA")
       .groupBy(col("n_name"))
       .agg(round(sum(col("l_extendedprice") * (lit(1) - col("l_discount"))), 4).as("revenue"))
-  }
 
   val q5VolumeSql: String =
     """SELECT n_name,
@@ -101,8 +96,7 @@ object Analytic {
   /** D4: top-N per group via row_number window — the reference's
     * "first feature per key" patterns generalized.
     */
-  def qTopnWindow(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def qTopnWindow(t: Tables): DataFrame = {
     val w = Window.partitionBy(col("o_custkey")).orderBy(col("o_totalprice").desc, col("o_orderkey"))
     t.orders
       .withColumn("rn", row_number().over(w))
@@ -124,8 +118,7 @@ object Analytic {
   /** D5: tumbling 1-hour event-time window aggregation — the batch
     * twin of the streaming windowed agg (SURVEY §2 I1).
     */
-  def qEventsWindow(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def qEventsWindow(t: Tables): DataFrame =
     t.events
       .groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
       .agg(
@@ -133,7 +126,6 @@ object Analytic {
         round(sum(col("value")), 4).as("sum_value")
       )
       .select(col("w.start").as("window_start"), col("event_type"), col("n_events"), col("sum_value"))
-  }
 
   val qEventsWindowSql: String =
     """SELECT time_bucket(INTERVAL '1 hour', ts) AS window_start, event_type,
@@ -145,8 +137,7 @@ object Analytic {
     * cumulative sum of session-break flags; batch twin of the
     * stateful streaming sessionizer (SURVEY §2 I2).
     */
-  def qSessionize(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def qSessionize(t: Tables): DataFrame = {
     val byUser  = Window.partitionBy(col("user_id")).orderBy(col("ts"))
     val gapSecs = 1800L
     t.events

@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.Tables
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Analytic coverage, batch 2 (SURVEY §2 D continued): semi/anti
@@ -14,13 +14,11 @@ object Analytic2 {
     * (left-semi join; builds the reference's "only features with a
     * match" filters).
     */
-  def qExists(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def qExists(t: Tables): DataFrame =
     t.customer
       .join(t.orders.filter(col("o_orderpriority") === "1-URGENT"),
         col("c_custkey") === col("o_custkey"), "left_semi")
       .select(col("c_custkey"), col("c_mktsegment"))
-  }
 
   val qExistsSql: String =
     """SELECT c_custkey, c_mktsegment FROM customer
@@ -28,12 +26,10 @@ object Analytic2 {
       |  WHERE o_custkey = c_custkey AND o_orderpriority = '1-URGENT')""".stripMargin
 
   /** D8: NOT EXISTS — customers with no orders at all (left-anti). */
-  def qNotExists(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def qNotExists(t: Tables): DataFrame =
     t.customer
       .join(t.orders, col("c_custkey") === col("o_custkey"), "left_anti")
       .select(col("c_custkey"), round(col("c_acctbal"), 4).as("acctbal"))
-  }
 
   val qNotExistsSql: String =
     """SELECT c_custkey, round(c_acctbal, 4) + 0 AS acctbal FROM customer
@@ -42,14 +38,12 @@ object Analytic2 {
   /** D9: ROLLUP — revenue at (region, nation), (region), and grand
     * total levels in one pass.
     */
-  def qRollup(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def qRollup(t: Tables): DataFrame =
     t.customer
       .join(broadcast(t.nation), col("c_nationkey") === col("n_nationkey"))
       .join(broadcast(t.region), col("n_regionkey") === col("r_regionkey"))
       .rollup(col("r_name"), col("n_name"))
       .agg(round(sum(col("c_acctbal")), 4).as("total_bal"), count(lit(1)).as("n_customers"))
-  }
 
   val qRollupSql: String =
     """SELECT r_name, n_name, round(sum(c_acctbal), 4) + 0 AS total_bal,
@@ -62,14 +56,12 @@ object Analytic2 {
   /** D9b: CUBE over the same dims as the rollup — all grouping-set
     * combinations including per-nation-across-regions margins.
     */
-  def qCube(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def qCube(t: Tables): DataFrame =
     t.customer
       .join(broadcast(t.nation), col("c_nationkey") === col("n_nationkey"))
       .join(broadcast(t.region), col("n_regionkey") === col("r_regionkey"))
       .cube(col("r_name"), col("n_name"))
       .agg(round(sum(col("c_acctbal")), 4).as("total_bal"), count(lit(1)).as("n_customers"))
-  }
 
   val qCubeSql: String =
     """SELECT r_name, n_name, round(sum(c_acctbal), 4) + 0 AS total_bal,
@@ -87,15 +79,13 @@ object Analytic2 {
     * (q_quantile_approx) is the sketch twin when rank error is
     * tolerable.
     */
-  def qPercentiles(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def qPercentiles(t: Tables): DataFrame =
     graft.operators.Quantiles
       .exactInterpolated(t.orders, "o_orderstatus", "o_totalprice",
         Seq("p50" -> 0.5, "p90" -> 0.9))
       .select(col("o_orderstatus"),
         round(col("p50"), 4).as("p50"),
         round(col("p90"), 4).as("p90"))
-  }
 
   val qPercentilesSql: String =
     """SELECT o_orderstatus,
@@ -106,15 +96,13 @@ object Analytic2 {
   /** D11: pivot — event counts per user bucketed by type, as
     * columns (the reference's per-category layer splits, wide form).
     */
-  def qPivot(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def qPivot(t: Tables): DataFrame =
     t.events
       .withColumn("bucket", (col("user_id") % 10).cast("long"))
       .groupBy(col("bucket"))
       .pivot("event_type", Seq("click", "view", "purchase", "signup", "error"))
       .agg(count(lit(1)))
       .na.fill(0) // empty cells: align with FILTER's 0 (pivot yields null)
-  }
 
   val qPivotSql: String =
     """SELECT user_id % 10 AS bucket,
@@ -128,13 +116,11 @@ object Analytic2 {
   /** D12: streaming-style dimension enrichment — events joined to
     * the (broadcast) customer dim, aggregated per segment.
     */
-  def qEnrichJoin(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def qEnrichJoin(t: Tables): DataFrame =
     t.events
       .join(broadcast(t.customer), col("user_id") === col("c_custkey"))
       .groupBy(col("c_mktsegment"))
       .agg(count(lit(1)).as("n_events"), round(sum(col("value")), 4).as("total_value"))
-  }
 
   val qEnrichJoinSql: String =
     """SELECT c_mktsegment, count(*) AS n_events,
@@ -147,8 +133,7 @@ object Analytic2 {
     * agg merges partials. Same result as the direct groupBy (which
     * is the oracle).
     */
-  def qSaltedAgg(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def qSaltedAgg(t: Tables): DataFrame = {
     val salted = t.events
       .withColumn("salt", pmod(col("event_id"), lit(16)))
       .groupBy(col("event_type"), col("salt"))
@@ -168,8 +153,7 @@ object Analytic2 {
     * formulation, one shuffle; right side pre-aggregated to one row
     * per (key, time) for determinism under ties).
     */
-  def qAsofJoin(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def qAsofJoin(t: Tables): DataFrame = {
     val ordersByDay = t.orders
       .groupBy(col("o_custkey"), col("o_orderdate"))
       .agg(max(col("o_orderkey")).as("last_orderkey"))
@@ -194,8 +178,7 @@ object Analytic2 {
   /** D15: trailing moving average per user (5-row window) — the
     * rolling-statistics shape of monitoring/feature pipelines.
     */
-  def qMovingAvg(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def qMovingAvg(t: Tables): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("user_id")).orderBy(col("ts")).rowsBetween(-4, 0)
     t.events.select(
@@ -217,15 +200,13 @@ object Analytic2 {
     * (the PlanGuardSpec failure mode). Same exact semantics, no
     * global window.
     */
-  def qNtile(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def qNtile(t: Tables): DataFrame =
     graft.operators.GlobalRank
       .ntileExact(
         t.customer.select(col("c_custkey"), col("c_acctbal")),
         Seq(col("c_acctbal"), col("c_custkey")),
         k = 10, out = "decile")
       .select(col("c_custkey"), col("decile"))
-  }
 
   val qNtileSql: String =
     """SELECT c_custkey,
@@ -235,13 +216,11 @@ object Analytic2 {
   /** D17: fixed-width histogram of order totals (binning for data
     * profiling; closed form shared with the oracle).
     */
-  def qHistogram(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def qHistogram(t: Tables): DataFrame =
     t.orders
       .withColumn("bin", floor(col("o_totalprice") / 25000.0).cast("long"))
       .groupBy(col("bin"))
       .agg(count(lit(1)).as("n"), round(avg(col("o_totalprice")), 4).as("avg_price"))
-  }
 
   val qHistogramSql: String =
     """SELECT CAST(floor(o_totalprice / 25000.0) AS BIGINT) AS bin,
@@ -253,8 +232,7 @@ object Analytic2 {
     * `q_topn_window` but with map-side-combined k-bounded partial
     * states instead of a full partition sort.
     */
-  def qTopnHeap(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def qTopnHeap(t: Tables): DataFrame =
     t.orders
       .groupBy(col("o_custkey"))
       .agg(graft.functions.TopKAgg(col("o_totalprice"), col("o_orderkey"), 3).as("top"))
@@ -264,13 +242,11 @@ object Analytic2 {
         col("col.payload").as("o_orderkey"),
         round(col("col.ord"), 4).as("totalprice"),
         (col("pos") + 1).cast("long").as("rn"))
-  }
 
   /** D19: z-score standardization per group — windowed feature
     * engineering (map-only after one shuffle on the group key).
     */
-  def qZscore(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def qZscore(t: Tables): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window.partitionBy(col("event_type"))
     t.events.select(
       col("event_id"), col("event_type"),
@@ -285,8 +261,7 @@ object Analytic2 {
       |FROM events""".stripMargin
 
   /** D20: min-max scaling per group. */
-  def qMinmaxScale(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def qMinmaxScale(t: Tables): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window.partitionBy(col("event_type"))
     t.events.select(
       col("event_id"), col("event_type"),
@@ -304,15 +279,13 @@ object Analytic2 {
   /** D21: bivariate statistics per group — Pearson correlation and
     * sample covariance between the event value and its JSON metric.
     */
-  def qCorrStats(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def qCorrStats(t: Tables): DataFrame =
     t.events
       .withColumn("k", get_json_object(col("props"), "$.k").cast("double"))
       .groupBy(col("event_type"))
       .agg(
         round(corr(col("value"), col("k")), 4).as("pearson"),
         round(covar_samp(col("value"), col("k")), 4).as("covariance"))
-  }
 
   val qCorrStatsSql: String =
     """SELECT event_type,

@@ -2,7 +2,7 @@ package graft.queries
 
 import graft.Tables
 import graft.operators.Geo
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Geometry-math operator exercises (SURVEY §2 C). The testdata has
@@ -28,8 +28,8 @@ object GeoQueries {
   /** C1: per-group bounding box (reference computes total_bounds for
     * cache metadata, source.py:1454).
     */
-  def geoBboxAgg(spark: SparkSession, dir: String): DataFrame =
-    Geo.bboxAgg(points(Tables(spark, dir)), Seq("event_type"), "x", "y")
+  def geoBboxAgg(t: Tables): DataFrame =
+    Geo.bboxAgg(points(t), Seq("event_type"), "x", "y")
 
   val geoBboxAggSql: String =
     s"""SELECT event_type, round(min(x), 4) + 0 AS xmin, round(min(y), 4) + 0 AS ymin,
@@ -39,8 +39,8 @@ object GeoQueries {
   /** C2: trajectory polyline length with degenerate-drop
     * (MIN_LINE_LENGTH, transform.py:30).
     */
-  def geoLineLength(spark: SparkSession, dir: String): DataFrame =
-    Geo.lineLength(points(Tables(spark, dir)), "user_id", "ts", "x", "y", minLength = 1e-10)
+  def geoLineLength(t: Tables): DataFrame =
+    Geo.lineLength(points(t), "user_id", "ts", "x", "y", minLength = 1e-10)
 
   val geoLineLengthSql: String =
     s"""SELECT user_id, round(sum(seg), 4) + 0 AS length, count(*) AS n_points
@@ -58,8 +58,8 @@ object GeoQueries {
   /** C3: point-in-bbox containment count per class (the clip
     * strategies' range predicate, source.py:496-507).
     */
-  def geoPointInBbox(spark: SparkSession, dir: String): DataFrame = {
-    val p = points(Tables(spark, dir))
+  def geoPointInBbox(t: Tables): DataFrame = {
+    val p = points(t)
     p.filter(Geo.inBBox(col("x"), col("y"), 10.0, 20.0, 120.0, 80.0))
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n_inside"))
@@ -74,8 +74,7 @@ object GeoQueries {
     * equi-join on grid cells (no cartesian product). Boxes derive
     * deterministically from the region dim.
     */
-  def geoGridJoin(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def geoGridJoin(t: Tables): DataFrame = {
     val boxes = t.region.select(
       col("r_regionkey"),
       (col("r_regionkey") * 50.0).as("bxmin"),
@@ -102,8 +101,8 @@ object GeoQueries {
     * (graft.functions.BBoxUnion) — same semantics as C1 through a
     * merge-able typed aggregation.
     */
-  def geoBboxTyped(spark: SparkSession, dir: String): DataFrame = {
-    val p = points(Tables(spark, dir))
+  def geoBboxTyped(t: Tables): DataFrame = {
+    val p = points(t)
     p.groupBy(col("event_type"))
       .agg(graft.functions.BBoxUnion.column(col("x"), col("y")).as("bb"))
       .select(col("event_type"),
@@ -118,8 +117,8 @@ object GeoQueries {
     * 5 events, compute true area centroid + signed area, drop
     * degenerates.
     */
-  def geoCentroid(spark: SparkSession, dir: String): DataFrame = {
-    val p = points(Tables(spark, dir))
+  def geoCentroid(t: Tables): DataFrame = {
+    val p = points(t)
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("user_id")).orderBy(col("ts"))
     val rings = p
@@ -162,8 +161,8 @@ object GeoQueries {
     * composition, no UDF. Coordinates mapped into valid lon/lat
     * ranges; distance to the origin, averaged per class.
     */
-  def geoHaversine(spark: SparkSession, dir: String): DataFrame = {
-    val p = points(Tables(spark, dir))
+  def geoHaversine(t: Tables): DataFrame = {
+    val p = points(t)
       .withColumn("lon", col("x") % 180.0)
       .withColumn("lat", col("y") % 90.0)
     p.withColumn("dist_km", Geo.haversineKm(col("lon"), col("lat"), lit(0.0), lit(0.0)))

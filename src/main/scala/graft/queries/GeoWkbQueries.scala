@@ -3,7 +3,7 @@ package graft.queries
 import graft.Tables
 import graft.functions.Wkb
 import graft.operators.Geo
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Geometry operators over REAL WKB blobs (SURVEY §2 C/B rows, the
@@ -63,8 +63,8 @@ object GeoWkbQueries {
     * how the reference routes a mixed-geometry scan
     * (source.py:966-1003).
     */
-  def srcGeometrySplitWkb(spark: SparkSession, dir: String): DataFrame = {
-    val p = pts(Tables(spark, dir))
+  def srcGeometrySplitWkb(t: Tables): DataFrame = {
+    val p = pts(t)
     // ONE per-user aggregation emits both derived geometries (union
     // branches over the same agg don't get exchange reuse — two
     // subtree scans would pay the user shuffle twice, measured in
@@ -111,8 +111,8 @@ object GeoWkbQueries {
     * segment lengths with a sequential fold, read the vertex count
     * from the header alone.
     */
-  def geoLineLengthWkb(spark: SparkSession, dir: String): DataFrame = {
-    val seqs = userSeqs(pts(Tables(spark, dir)))
+  def geoLineLengthWkb(t: Tables): DataFrame = {
+    val seqs = userSeqs(pts(t))
       .filter(size(col("coords")) >= 2)
       .select(col("user_id"), Wkb.wkbLineFromCoords(col("coords")).as("geom"))
     // Single-pass native fold over the blob (WkbPathLength): same
@@ -150,8 +150,8 @@ object GeoWkbQueries {
     * closing vertex stripped, then the same shoelace math as the
     * plain row (cli.py:2234-2303 polygons_to_centroids).
     */
-  def geoCentroidWkb(spark: SparkSession, dir: String): DataFrame = {
-    val seqs = userSeqs(pts(Tables(spark, dir)))
+  def geoCentroidWkb(t: Tables): DataFrame = {
+    val seqs = userSeqs(pts(t))
       .filter(size(col("coords")) >= 3)
       .select(col("user_id"),
         Wkb.wkbPolygonFromCoords(slice(col("coords"), 1, 5)).as("geom"))
@@ -193,8 +193,8 @@ object GeoWkbQueries {
     * consecutive duplicates, normalize winding, and apply the
     * degenerate-area validity test (transform.py:252-294 + :29).
     */
-  def trGeometryRulesWkb(spark: SparkSession, dir: String): DataFrame = {
-    val seqs = userSeqs(pts(Tables(spark, dir)))
+  def trGeometryRulesWkb(t: Tables): DataFrame = {
+    val seqs = userSeqs(pts(t))
       .select(col("user_id"),
         Wkb.wkbPolygonFromCoords(col("coords")).as("geom"))
     // staged projections: decode once, normalize once, compute the

@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.Tables
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** The shared co-purchase graph the D-series graph queries
@@ -26,9 +26,8 @@ object GraphBase {
   /** Weighted undirected-as-canonical (u < v) co-purchase pairs:
     * (u, v, w) with w = co-occurrence count ≥ 2, checkpointed.
     */
-  def coPurchasePairs(spark: SparkSession, dir: String): DataFrame =
-    graft.util.SessionStage.value(spark, dir, "copurchase_edges") {
-      val t = Tables(spark, dir)
+  def coPurchasePairs(t: Tables): DataFrame =
+    graft.util.SessionStage.value(t, "copurchase_edges") {
       val li = t.lineitem.select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
       li.as("a")
         .join(li.as("b"), col("a.ok") === col("b.ok") && col("a.pk") < col("b.pk"))
@@ -45,9 +44,8 @@ object GraphBase {
     * verdict #4: the collapse is the only corpus-sized exchange in
     * the HITS chain and must not be re-paid per run).
     */
-  def purchaseEdges(spark: SparkSession, dir: String): DataFrame =
-    graft.util.SessionStage.value(spark, dir, "purchase_edges") {
-      val t = Tables(spark, dir)
+  def purchaseEdges(t: Tables): DataFrame =
+    graft.util.SessionStage.value(t, "purchase_edges") {
       t.orders
         .join(t.lineitem, col("o_orderkey") === col("l_orderkey"))
         .select(col("o_custkey").as("u"), col("l_partkey").as("p"))

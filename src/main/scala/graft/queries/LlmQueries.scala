@@ -2,7 +2,7 @@ package graft.queries
 
 import graft.Tables
 import graft.operators.{Dedup, Multimodal, Similarity, TextOps}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Training-data pipeline operators (SURVEY §2 E/F/G/K) exercised
@@ -15,8 +15,8 @@ object LlmQueries {
   // ----------------------------------------------------------------
 
   /** E1: exact dedup groups by content digest. */
-  def ddExact(spark: SparkSession, dir: String): DataFrame =
-    Dedup.exact(Tables(spark, dir).documents, "text", "doc_id")
+  def ddExact(t: Tables): DataFrame =
+    Dedup.exact(t.documents, "text", "doc_id")
 
   val ddExactSql: String =
     """SELECT md5(text) AS content_hash, min(doc_id) AS survivor_id,
@@ -28,8 +28,8 @@ object LlmQueries {
     * the same rolling-hash shingles, the same (a, b) permutation
     * constants (embedded as literals below), the same band folds.
     */
-  def ddMinhashLsh(spark: SparkSession, dir: String): DataFrame =
-    Dedup.minhashLsh(Tables(spark, dir).documents, "text", "doc_id")
+  def ddMinhashLsh(t: Tables): DataFrame =
+    Dedup.minhashLsh(t.documents, "text", "doc_id")
 
   /** Rolling hash of a string expression, as oracle SQL — the exact
     * semantics of [[graft.functions.RollingHash]]: fold (h·31 + cp)
@@ -86,8 +86,8 @@ object LlmQueries {
   /** E3: SimHash fingerprints — deterministic integer math, oracled
     * bit-for-bit (60-bit fingerprint; see [[Dedup.simhash]]).
     */
-  def ddSimhash(spark: SparkSession, dir: String): DataFrame =
-    Tables(spark, dir).documents
+  def ddSimhash(t: Tables): DataFrame =
+    t.documents
       .select(col("doc_id"), Dedup.simhash(col("text")).as("simhash"))
 
   val ddSimhashSql: String =
@@ -112,9 +112,9 @@ object LlmQueries {
     * are cheap column math over this candidate table. Candidate
     * width is maxDocFreq-bounded, so the checkpoint is pair-sized.
     */
-  private[queries] def shingleInter(spark: SparkSession, dir: String): DataFrame =
-    graft.util.SessionStage.value(spark, dir, "shingle_inter")(
-      Dedup.shingleIntersections(Tables(spark, dir).documents, "text", "doc_id",
+  private[queries] def shingleInter(t: Tables): DataFrame =
+    graft.util.SessionStage.value(t, "shingle_inter")(
+      Dedup.shingleIntersections(t.documents, "text", "doc_id",
         n = 3, maxDocFreq = 100).localCheckpoint(true))
 
   /** Session-scoped materialization of the Jaccard candidate pairs:
@@ -124,9 +124,9 @@ object LlmQueries {
     * warehouse would use for a common subexpression. Result rows are
     * tiny (near-dup pairs only).
     */
-  private[queries] def ngramPairs(spark: SparkSession, dir: String): DataFrame =
-    graft.util.SessionStage.value(spark, dir, "ngram_pairs")(
-      Dedup.scoreJaccard(shingleInter(spark, dir), threshold = 0.5)
+  private[queries] def ngramPairs(t: Tables): DataFrame =
+    graft.util.SessionStage.value(t, "ngram_pairs")(
+      Dedup.scoreJaccard(shingleInter(t), threshold = 0.5)
         .localCheckpoint(true))
 
   /** Session-scoped CC labels over [[ngramPairs]]: E6 and M6 both
@@ -134,14 +134,14 @@ object LlmQueries {
     * once per (session, dir) — same materialized-view semantics as
     * the pairs cache (labels are near-dup-member-sized, tiny).
     */
-  private[queries] def ccLabels(spark: SparkSession, dir: String): DataFrame =
-    graft.util.SessionStage.value(spark, dir, "cc_labels")(
-      Dedup.connectedComponents(ngramPairs(spark, dir), "doc_a", "doc_b")
+  private[queries] def ccLabels(t: Tables): DataFrame =
+    graft.util.SessionStage.value(t, "cc_labels")(
+      Dedup.connectedComponents(ngramPairs(t), "doc_a", "doc_b")
         .localCheckpoint(true))
 
   /** E4: exact n-gram Jaccard over the inverted shingle index. */
-  def ddNgramJaccard(spark: SparkSession, dir: String): DataFrame =
-    ngramPairs(spark, dir)
+  def ddNgramJaccard(t: Tables): DataFrame =
+    ngramPairs(t)
 
   val ddNgramJaccardSql: String =
     """WITH toks AS (
@@ -173,8 +173,8 @@ object LlmQueries {
     * Catches the small-doc-quoted-in-big-doc inclusions Jaccard's
     * symmetric denominator hides.
     */
-  def ddContainment(spark: SparkSession, dir: String): DataFrame =
-    Dedup.scoreContainment(shingleInter(spark, dir), threshold = 0.8)
+  def ddContainment(t: Tables): DataFrame =
+    Dedup.scoreContainment(shingleInter(t), threshold = 0.8)
 
   val ddContainmentSql: String =
     """WITH toks AS (
@@ -205,8 +205,7 @@ object LlmQueries {
     * whitespace) — catches trivially-reformatted copies the byte
     * hash misses.
     */
-  def ddExactNorm(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def ddExactNorm(t: Tables): DataFrame = {
     val norm = lower(regexp_replace(trim(col("text")), "\\s+", " "))
     t.documents
       .select(md5(norm.cast("binary")).as("content_hash"), col("doc_id"))
@@ -224,9 +223,8 @@ object LlmQueries {
     * shingle index, never on N². The final precision stage of a
     * dedup pipeline.
     */
-  def ddLevenshtein(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
-    val pairs = ngramPairs(spark, dir)
+  def ddLevenshtein(t: Tables): DataFrame = {
+    val pairs = ngramPairs(t)
     val texts = t.documents.select(col("doc_id"), substring(col("text"), 1, 80).as("prefix"))
     pairs
       .join(texts.withColumnRenamed("doc_id", "doc_a").withColumnRenamed("prefix", "pa"), "doc_a")
@@ -251,10 +249,8 @@ object LlmQueries {
     t.embeddings.filter(col("vec_id") < 10)
 
   /** F1: brute-force exact cosine top-5 for the 10 query vectors. */
-  def simCosineTopk(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def simCosineTopk(t: Tables): DataFrame =
     Similarity.cosineTopK(t.embeddings, queryVectors(t), "vec_id", "embedding", k = 5)
-  }
 
   val simCosineTopkSql: String =
     """WITH q AS (SELECT vec_id AS query_id, embedding AS qv FROM embeddings WHERE vec_id < 10),
@@ -280,13 +276,13 @@ object LlmQueries {
     * test are candidate generation + exact filter, fully oracled
     * (hyperplane constants as SQL literals).
     */
-  def ddEmbeddingNeardup(spark: SparkSession, dir: String): DataFrame =
+  def ddEmbeddingNeardup(t: Tables): DataFrame =
     // planes PINNED at 6 for oracle determinism (the hyperplane
     // constants are SQL literals below). The library default a
     // caller should copy at scale is Similarity.embeddingNearDupAuto,
     // which derives planes = ceil(log2(N/targetBucketSize)) so bucket
     // occupancy stays flat as N grows.
-    Similarity.embeddingNearDup(Tables(spark, dir).embeddings,
+    Similarity.embeddingNearDup(t.embeddings,
       "vec_id", "embedding", dim = 64, planes = 6, threshold = 0.35, seed = 42L)
 
   val ddEmbeddingNeardupSql: String = {
@@ -331,8 +327,7 @@ object LlmQueries {
     * [[graft.operators.Similarity.lshAnn]] (recall-spec'd in
     * SimilaritySpec).
     */
-  def simLshAnn(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def simLshAnn(t: Tables): DataFrame = {
     val ann = Similarity.lshAnn(t.embeddings, queryVectors(t), "vec_id", "embedding",
       dim = 64, planes = 4, k = 5, tables = 12)
     val exact = Similarity.cosineTopK(t.embeddings, queryVectors(t), "vec_id", "embedding", k = 5)
@@ -351,8 +346,8 @@ object LlmQueries {
        |SELECT count(*) AS n_exact, CAST(1 AS BIGINT) AS recall_ok FROM topk""".stripMargin
 
   /** F3: per-label centroids (IVF coarse-quantizer build). */
-  def simCentroid(spark: SparkSession, dir: String): DataFrame =
-    Similarity.centroids(Tables(spark, dir).embeddings, "label", "embedding")
+  def simCentroid(t: Tables): DataFrame =
+    Similarity.centroids(t.embeddings, "label", "embedding")
 
   val simCentroidSql: String =
     """WITH percomp AS (
@@ -368,11 +363,9 @@ object LlmQueries {
     * probed lists. Fully deterministic (rounded centroids), so fully
     * oracled — the scale path the LSH variant approximates.
     */
-  def simIvfAnn(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def simIvfAnn(t: Tables): DataFrame =
     Similarity.ivfAnn(t.embeddings, queryVectors(t), "vec_id", "embedding", "label",
       nprobe = 2, k = 5)
-  }
 
   val simIvfAnnSql: String = ivfAnnSqlAt(2)
 
@@ -419,8 +412,8 @@ object LlmQueries {
     * rounding make the whole trajectory SQL-oracled (the oracle
     * unrolls both iterations as CTEs).
     */
-  def simKmeans(spark: SparkSession, dir: String): DataFrame =
-    Similarity.kmeans(Tables(spark, dir).embeddings, "vec_id", "embedding",
+  def simKmeans(t: Tables): DataFrame =
+    Similarity.kmeans(t.embeddings, "vec_id", "embedding",
       k = 4, iters = 2)
 
   private def cosSqlExpr(a: String, b: String): String =
@@ -472,13 +465,13 @@ object LlmQueries {
   /** E11: SemDeDup-style semantic near-dup pairs — k-means blocking
     * (k=16) then exact cosine ≥ 0.35 within clusters only.
     */
-  def ddSemanticPairs(spark: SparkSession, dir: String): DataFrame =
+  def ddSemanticPairs(t: Tables): DataFrame =
     // k PINNED at 16 for oracle determinism (the k-means CTEs below
     // unroll at k=16). The library default a caller should copy at
     // scale is Similarity.semanticPairsAuto, which derives
     // k = ceil(N/targetClusterSize) so per-cluster pair work stays
     // constant as N grows.
-    Similarity.semanticPairs(Tables(spark, dir).embeddings,
+    Similarity.semanticPairs(t.embeddings,
       "vec_id", "embedding", k = 16, iters = 2, threshold = 0.35)
 
   val ddSemanticPairsSql: String =
@@ -497,8 +490,8 @@ object LlmQueries {
   // ----------------------------------------------------------------
 
   /** G1: token counting. */
-  def txTokens(spark: SparkSession, dir: String): DataFrame =
-    Tables(spark, dir).documents.select(
+  def txTokens(t: Tables): DataFrame =
+    t.documents.select(
       col("doc_id"),
       TextOps.tokenCount(col("text")).as("n_tokens"),
       length(col("text")).cast("long").as("n_chars_actual"))
@@ -519,13 +512,13 @@ object LlmQueries {
     * round) disagree — the threshold compare itself is safe because
     * both engines produce bit-identical IEEE quotients.
     */
-  def txCodeDetect(spark: SparkSession, dir: String): DataFrame = {
+  def txCodeDetect(t: Tables): DataFrame = {
     val text = col("text")
     val nSym = length(regexp_replace(text, "[^{}()\\[\\];=<>]", "")).cast("long")
     val kwHits = size(regexp_extract_all(text,
       lit("\\b(def|class|import|return|function|var|const|if|else|for|while)\\b"), lit(0)))
       .cast("long")
-    Tables(spark, dir).documents.select(
+    t.documents.select(
       col("doc_id"),
       nSym.as("n_sym"),
       length(text).cast("long").as("n_chars"),
@@ -551,9 +544,9 @@ object LlmQueries {
     * scores low, natural prose high). Pure map-side column math on
     * the normalized token array; zero shuffles.
     */
-  def txTtr(spark: SparkSession, dir: String): DataFrame = {
+  def txTtr(t: Tables): DataFrame = {
     val toks = split(lower(trim(col("text"))), "\\s+")
-    Tables(spark, dir).documents.select(
+    t.documents.select(
       col("doc_id"),
       size(toks).cast("long").as("n_tokens"),
       size(array_distinct(toks)).cast("long").as("n_types"),
@@ -573,8 +566,8 @@ object LlmQueries {
     * Spark side (no explode, no shuffle); the oracle reproduces the
     * same counts via unnest+group.
     */
-  def txEntropy(spark: SparkSession, dir: String): DataFrame =
-    Tables(spark, dir).documents.select(
+  def txEntropy(t: Tables): DataFrame =
+    t.documents.select(
       col("doc_id"),
       round(TextOps.charEntropy(col("text")), 4).as("char_entropy"),
       TextOps.charAlphabet(col("text")).as("n_chars_distinct"))
@@ -596,8 +589,8 @@ object LlmQueries {
     * the ratio is the "tokens per word" fertility signal a training
     * pipeline budgets by.
     */
-  def txTokensBpe(spark: SparkSession, dir: String): DataFrame =
-    Tables(spark, dir).documents.select(
+  def txTokensBpe(t: Tables): DataFrame =
+    t.documents.select(
       col("doc_id"),
       TextOps.tokenCount(col("text")).as("n_ws_tokens"),
       TextOps.bpeTokenCount(col("text")).as("n_bpe_tokens"))
@@ -613,8 +606,8 @@ object LlmQueries {
   }
 
   /** G2: composite quality score. */
-  def txQuality(spark: SparkSession, dir: String): DataFrame =
-    Tables(spark, dir).documents.select(
+  def txQuality(t: Tables): DataFrame =
+    t.documents.select(
       col("doc_id"),
       TextOps.qualityScore(col("text")).as("quality"))
 
@@ -631,8 +624,8 @@ object LlmQueries {
       |FROM documents""".stripMargin
 
   /** G3: stopword-vote language ID. */
-  def txLangid(spark: SparkSession, dir: String): DataFrame =
-    Tables(spark, dir).documents.select(
+  def txLangid(t: Tables): DataFrame =
+    t.documents.select(
       col("doc_id"),
       col("lang").as("lang_claimed"),
       TextOps.langId(col("text")).as("lang_pred"))
@@ -658,8 +651,8 @@ object LlmQueries {
   }
 
   /** G4: rolling-hash fingerprint. */
-  def txFingerprint(spark: SparkSession, dir: String): DataFrame =
-    Tables(spark, dir).documents.select(
+  def txFingerprint(t: Tables): DataFrame =
+    t.documents.select(
       col("doc_id"),
       TextOps.fingerprint(col("text")).as("fp"))
 
@@ -677,8 +670,7 @@ object LlmQueries {
     * that backs corpus statistics; map-side partial counts, one
     * shuffle on (lang, bigram).
     */
-  def txBigrams(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def txBigrams(t: Tables): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     // Native codegen'd bigram array (one loop per row) — same
     // semantics as the HOF transform-over-token-slices formulation
@@ -717,8 +709,7 @@ object LlmQueries {
     * twin is unaffordable — remains available via
     * `approx_count_distinct`; Analytic2Spec bounds it too.
     */
-  def txVocabApprox(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def txVocabApprox(t: Tables): DataFrame =
     t.documents
       .select(col("source"), explode(split(lower(trim(col("text"))), "\\s+")).as("tok"))
       .groupBy(col("source"))
@@ -730,7 +721,6 @@ object LlmQueries {
         // |est - exact|*20 <= exact  ⇔  error ≤ 5%, in integers
         (abs(col("est") - col("n_exact")) * lit(20L) <= col("n_exact"))
           .cast("long").as("bound_ok"))
-  }
 
   val txVocabApproxSql: String =
     """SELECT source, count(DISTINCT tok) AS n_exact, CAST(1 AS BIGINT) AS bound_ok
@@ -741,8 +731,8 @@ object LlmQueries {
   /** G8: PII-style redaction over the JSON props strings (the only
     * testdata column containing digits — real replacements happen).
     */
-  def txRedact(spark: SparkSession, dir: String): DataFrame =
-    Tables(spark, dir).events.select(
+  def txRedact(t: Tables): DataFrame =
+    t.events.select(
       col("event_id"),
       TextOps.redact(col("props")).as("redacted"))
 
@@ -755,8 +745,8 @@ object LlmQueries {
       |FROM events""".stripMargin
 
   /** G7: TF-IDF top-3 terms per document. */
-  def txTfidf(spark: SparkSession, dir: String): DataFrame =
-    TextOps.tfIdfTopK(Tables(spark, dir).documents, "text", "doc_id", k = 3)
+  def txTfidf(t: Tables): DataFrame =
+    TextOps.tfIdfTopK(t.documents, "text", "doc_id", k = 3)
 
   val txTfidfSql: String =
     """WITH terms AS (
@@ -776,8 +766,8 @@ object LlmQueries {
   /** E6: dedup groups — connected components over the n-gram
     * Jaccard near-dup pairs (min-reachable-id labeling).
     */
-  def ddDedupGroups(spark: SparkSession, dir: String): DataFrame =
-    ccLabels(spark, dir)
+  def ddDedupGroups(t: Tables): DataFrame =
+    ccLabels(t)
 
   val ddDedupGroupsSql: String =
     s"""WITH RECURSIVE pairs AS ($ddNgramJaccardSql),
@@ -790,13 +780,11 @@ object LlmQueries {
   /** N1: deterministic train/val/test split — counts per
     * (lang, split) so the oracle checks every row's assignment.
     */
-  def smSplitAssign(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def smSplitAssign(t: Tables): DataFrame =
     t.documents
       .withColumn("split", graft.operators.Sampling.splitAssign(col("doc_id"), 80, 10))
       .groupBy(col("lang"), col("split"))
       .agg(count(lit(1)).as("n_docs"))
-  }
 
   val smSplitAssignSql: String =
     """SELECT lang,
@@ -808,10 +796,10 @@ object LlmQueries {
       |GROUP BY 1, 2""".stripMargin
 
   /** N2: deterministic stratified 10% sample per language. */
-  def smStratified(spark: SparkSession, dir: String): DataFrame =
+  def smStratified(t: Tables): DataFrame =
     graft.operators.Sampling
       .stratifiedSample(
-        Tables(spark, dir).documents.select(col("doc_id"), col("lang")),
+        t.documents.select(col("doc_id"), col("lang")),
         "lang", "doc_id", 0.1)
 
   val smStratifiedSql: String =
@@ -831,9 +819,8 @@ object LlmQueries {
     * [[ngramPairs]]/[[ccLabels]]: the flagship M1 row and the M7
     * manifest both consume it.
     */
-  def pipeCleanCorpus(spark: SparkSession, dir: String): DataFrame =
-    graft.util.SessionStage.value(spark, dir, "clean_corpus") {
-      val t = Tables(spark, dir)
+  def pipeCleanCorpus(t: Tables): DataFrame =
+    graft.util.SessionStage.value(t, "clean_corpus") {
       val scored = t.documents.select(
         col("doc_id"), col("text"),
         TextOps.qualityScore(col("text")).as("quality"),
@@ -870,9 +857,8 @@ object LlmQueries {
     * on the component key; the expensive stages (pairs, CC) are the
     * already-shared candidates subtree.
     */
-  def pipeCanonicalize(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
-    val cc = ccLabels(spark, dir)
+  def pipeCanonicalize(t: Tables): DataFrame = {
+    val cc = ccLabels(t)
     val scored = t.documents.select(
       col("doc_id"), TextOps.qualityScore(col("text")).as("quality"))
     val labeled = scored.join(cc, scored("doc_id") === cc("node"), "left")
@@ -910,12 +896,10 @@ object LlmQueries {
   /** K1: binary payload + typed metadata (text bytes stand in for
     * media payloads; the plumbing is payload-agnostic).
     */
-  def mmBinaryMeta(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def mmBinaryMeta(t: Tables): DataFrame =
     Multimodal
       .withBinaryMeta(t.documents.withColumn("payload", col("text").cast("binary")), "payload")
       .select(col("doc_id"), col("n_bytes"), col("magic_byte"), col("checksum"))
-  }
 
   val mmBinaryMetaSql: String =
     """SELECT doc_id, octet_length(encode(text)) AS n_bytes,
@@ -932,14 +916,13 @@ object LlmQueries {
     * needs (corrupt rows are a fact of life; silently losing them
     * unaccounted is how corpora rot).
     */
-  def mmDecodeStats(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def mmDecodeStats(t: Tables): DataFrame = {
     // r13: spread the (id, text) rows across cores before the per-id
     // PNG encode (single-input-split serialization; the K7 lesson).
     val docs = t.documents.select(col("doc_id").cast("long").as("doc_id"), col("text"))
-      .repartition(spark.sparkContext.defaultParallelism)
+      .repartition(t.spark.sparkContext.defaultParallelism)
     val staged = {
-      val spark2 = spark
+      val spark2 = t.spark
       val schema = org.apache.spark.sql.types.StructType(Seq(
         org.apache.spark.sql.types.StructField("doc_id",
           org.apache.spark.sql.types.LongType, nullable = false),
@@ -985,7 +968,7 @@ object LlmQueries {
         }
       }
     }
-    spark.createDataFrame(out, outSchema)
+    t.spark.createDataFrame(out, outSchema)
   }
 
   val mmDecodeStatsSql: String =
@@ -1004,8 +987,7 @@ object LlmQueries {
     * offset must be the JPEG SOI marker (0xFFD8 = 65496) — a wrong
     * offset lands anywhere else in the container.
     */
-  def mmFrameSample(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def mmFrameSample(t: Tables): DataFrame = {
     val staged = Pipeline70.stagedAvis(t)
     val schema = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("media_id",
@@ -1028,7 +1010,7 @@ object LlmQueries {
         }
       }
     }
-    spark.createDataFrame(rows, schema)
+    t.spark.createDataFrame(rows, schema)
   }
 
   val mmFrameSampleSql: String =

@@ -2,7 +2,7 @@ package graft.queries
 
 import graft.Tables
 import graft.operators.{Graph, Sampling}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -26,10 +26,10 @@ object Pipeline10 {
     * identical — the registry row proves the smart algorithm
     * against the naive definition.
     */
-  def qTriangleCount(spark: SparkSession, dir: String): DataFrame = {
+  def qTriangleCount(t: Tables): DataFrame = {
     // Shared session-materialized edge set (GraphBase) — the build
     // runs once per (session, dir) across all six graph queries.
-    val edges = GraphBase.coPurchasePairs(spark, dir).select(col("u"), col("v"))
+    val edges = GraphBase.coPurchasePairs(t).select(col("u"), col("v"))
     Graph.triangleCounts(edges, "u", "v")
   }
 
@@ -61,8 +61,7 @@ object Pipeline10 {
     * identical longs. One window + one agg over order-sized rows;
     * dims broadcast.
     */
-  def qGini(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def qGini(t: Tables): DataFrame = {
     val rows = t.orders
       .join(broadcast(t.customer.select(col("c_custkey"), col("c_nationkey"))),
         col("o_custkey") === col("c_custkey"))
@@ -120,8 +119,7 @@ object Pipeline10 {
     * names — the difference between 2·10⁵ and 2·10¹⁰ comparisons at
     * 100 TB. Output is block-bounded (block, n_parts, n_match_pairs).
     */
-  def ddBlockedEr(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def ddBlockedEr(t: Tables): DataFrame = {
     // Vocabulary-bounded after the agg — checkpoint so the three
     // consumers (self-join a/b sides + block rollup) reuse one
     // corpus-side aggregation instead of re-scanning part 3×.
@@ -175,13 +173,11 @@ object Pipeline10 {
     * integer arithmetic. Output is the per-(fold, lang) profile a
     * training run uses to confirm fold balance.
     */
-  def smKfold(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def smKfold(t: Tables): DataFrame =
     t.documents
       .withColumn("fold", Sampling.kfold(col("doc_id"), 5))
       .groupBy(col("fold"), col("lang"))
       .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("sum_chars"))
-  }
 
   val smKfoldSql: String =
     """SELECT
@@ -203,8 +199,7 @@ object Pipeline10 {
     * extreme vocabularies a shuffle join on token — both sides are
     * sub-linear in the corpus either way).
     */
-  def txPmiBigrams(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def txPmiBigrams(t: Tables): DataFrame = {
     val toks = t.documents
       .select(explode(split(lower(trim(col("text"))), "\\s+")).as("tok"))
     val uni = toks.groupBy(col("tok")).agg(count(lit(1)).as("cnt")).localCheckpoint(true)

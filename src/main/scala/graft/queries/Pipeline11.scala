@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.Tables
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -23,8 +23,7 @@ object Pipeline11 {
     * sum·cnt·10⁶ overflows 2⁶³ past sf0.1. Two node-bounded aggs
     * (type×7 and type), broadcast-joined back.
     */
-  def qSeasonalIndex(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def qSeasonalIndex(t: Tables): DataFrame = {
     val base = t.events.select(
       col("event_type"),
       expr("unix_micros(ts) div 86400000000").as("epoch_day"),
@@ -76,8 +75,7 @@ object Pipeline11 {
     * scale), so the per-group array is bounded too; the corpus-sized
     * work is the one daily-rollup shuffle.
     */
-  def qHolt(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def qHolt(t: Tables): DataFrame = {
     val daily = t.events.select(
       col("event_type"),
       expr("unix_micros(ts) div 86400000000").as("epoch_day"),
@@ -151,8 +149,7 @@ object Pipeline11 {
     * window, phrase rollups, word join — all corpus-linear,
     * vocabulary-bounded after the phrase agg.
     */
-  def txRakeKeywords(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def txRakeKeywords(t: Tables): DataFrame = {
     // r14 (guide §2.4): phrase occurrences are a PER-DOCUMENT fact,
     // so they are computed map-side by the native codegen'd
     // [[graft.functions.RakePhrases]] (one pass: stopword-split
@@ -194,8 +191,8 @@ object Pipeline11 {
     * bitstream is implementation-defined — error-model ScalaTest
     * instead, the sketch-row protocol).
     */
-  def txCompressRatio(spark: SparkSession, dir: String): DataFrame =
-    Tables(spark, dir).documents
+  def txCompressRatio(t: Tables): DataFrame =
+    t.documents
       .filter(length(col("text")) > 0)
       .select(col("doc_id"),
         octet_length(col("text")).cast("long").as("n_bytes"),

@@ -2,7 +2,7 @@ package graft.queries
 
 import graft.Tables
 import graft.operators.Sampling
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -23,8 +23,7 @@ object Pipeline12 {
     * closes it. Never a per-day rescan of raw events, never a
     * collect_set over raw rows.
     */
-  def qWindowDistinct(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def qWindowDistinct(t: Tables): DataFrame = {
     val du = t.events
       .select(col("event_type"),
         expr("unix_micros(ts) div 86400000000").as("d"),
@@ -60,8 +59,7 @@ object Pipeline12 {
     * (bounded by the type vocabulary, not the event count), and
     * everything after the pair agg is vocabulary²-bounded.
     */
-  def qAssocRules(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def qAssocRules(t: Tables): DataFrame = {
     // One user-keyed agg builds the basket ARRAYS (bounded by the
     // type vocabulary, with map-side partial dedup); pair fanout is
     // then a map-side array expression — no basket self-join, no
@@ -120,15 +118,13 @@ object Pipeline12 {
     * merge on the driver side of the exchange; no global sort, no
     * full shuffle, the canonical distributed-reservoir plan.
     */
-  def smReservoir(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def smReservoir(t: Tables): DataFrame =
     t.documents
       .select(col("doc_id"), col("lang"),
         Sampling.idBucket(col("doc_id"), 1000000).as("pri"))
       .orderBy(col("pri"), col("doc_id"))
       .limit(100)
       .select(col("doc_id"), col("lang"))
-  }
 
   val smReservoirSql: String =
     """SELECT doc_id, lang FROM (
@@ -145,8 +141,7 @@ object Pipeline12 {
     * a 1-row min) + one per-class rank window; no sampling
     * randomness to drift between runs or engines.
     */
-  def smClassBalance(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def smClassBalance(t: Tables): DataFrame = {
     val e = t.embeddings.select(col("vec_id"), col("label"))
     val minCnt = e.groupBy(col("label")).agg(count(lit(1)).as("c"))
       .agg(min(col("c")).as("min_c"))

@@ -2,7 +2,7 @@ package graft.queries
 
 import graft.Tables
 import graft.operators.{Dedup, Sampling}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -20,17 +20,17 @@ object Pipeline13 {
     * lossless end-to-end. Staged once per (session, dir) in
     * [[graft.util.SessionStage]].
     */
-  def srcCodecRoundtrip(spark: SparkSession, dir: String): DataFrame = {
-    val stage = codecStage(spark, dir)
-    spark.read.parquet(stage.toString)
+  def srcCodecRoundtrip(t: Tables): DataFrame = {
+    val stage = codecStage(t)
+    Tables.parquet(t.spark, stage.toString)
       .groupBy(col("l_returnflag"))
       .agg(count(lit(1)).as("n_rows"),
         sum(expr("CAST(round(l_quantity * 100) AS BIGINT)")).as("qty_cents"))
   }
 
-  private def codecStage(spark: SparkSession, dir: String): java.nio.file.Path =
-    graft.util.SessionStage.dir(spark, dir, "codec") { stage =>
-      Tables(spark, dir).lineitem
+  private def codecStage(t: Tables): java.nio.file.Path =
+    graft.util.SessionStage.dir(t, "codec") { stage =>
+      t.lineitem
         .select(col("l_returnflag"), col("l_quantity"))
         .write.mode("overwrite").option("compression", "zstd")
         .parquet(stage.resolve("li").toString)
@@ -49,8 +49,7 @@ object Pipeline13 {
     * division anywhere. One corpus agg; DECIMAL(38)/HUGEINT for the
     * cross products.
     */
-  def qAbLift(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def qAbLift(t: Tables): DataFrame = {
     val armed = t.events.select(
       col("event_type"),
       pmod(Sampling.idBucket(col("user_id"), 1000000), lit(2)).as("arm"),
@@ -95,8 +94,7 @@ object Pipeline13 {
     * CONSECUTIVE days (gaps emit no row — a lag over missing days
     * would silently compare across the gap).
     */
-  def qLagRatio(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def qLagRatio(t: Tables): DataFrame = {
     val daily = t.events.select(col("event_type"),
         expr("unix_micros(ts) div 86400000000").as("d"),
         expr("CAST(round(value * 10000) AS BIGINT)").as("v_fx"))
@@ -135,8 +133,7 @@ object Pipeline13 {
     * with identical connectivity. Two key aggs + CC on
     * star-edge-sized input.
     */
-  def ddMultikeyEr(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def ddMultikeyEr(t: Tables): DataFrame = {
     val docs = t.documents.select(col("doc_id"),
       sha2(regexp_replace(lower(trim(col("text"))), "\\s+", " "), 256).as("k1"),
       sha2(expr("array_join(slice(split(lower(trim(text)), '\\\\s+'), 1, 16), ' ')"), 256)
@@ -181,8 +178,7 @@ object Pipeline13 {
     * sf). One corpus token shuffle; the rare-type table is
     * vocab-bounded and broadcast back.
     */
-  def txRareTokens(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def txRareTokens(t: Tables): DataFrame = {
     val toks = t.documents.select(col("doc_id"),
       explode(split(lower(trim(col("text"))), "\\s+")).as("tok"))
     val types = toks.groupBy(col("tok")).agg(count(lit(1)).as("c"))

@@ -2,7 +2,7 @@ package graft.queries
 
 import graft.Tables
 import graft.operators.Sampling
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -20,13 +20,13 @@ object Pipeline14 {
     * column-derived counts on the original table — any mis-tagged
     * row breaks the match.
     */
-  def srcFileLineage(spark: SparkSession, dir: String): DataFrame = {
-    val root = graft.util.SessionStage.dir(spark, dir, "lineage") { stage =>
-      Tables(spark, dir).events
+  def srcFileLineage(t: Tables): DataFrame = {
+    val root = graft.util.SessionStage.dir(t, "lineage") { stage =>
+      t.events
         .select(col("event_id"), col("value"), col("event_type"))
         .write.partitionBy("event_type").mode("overwrite").parquet(stage.toString)
     }
-    spark.read.parquet(root.toString)
+    Tables.parquet(t.spark, root.toString)
       .select(regexp_extract(input_file_name(), "event_type=([^/]+)/", 1)
         .as("event_type"))
       .groupBy(col("event_type"))
@@ -45,8 +45,7 @@ object Pipeline14 {
     * on the day-count-bounded series (~365·n_types rows at ANY
     * corpus scale); one corpus shuffle (the daily rollup).
     */
-  def qDrawdown(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def qDrawdown(t: Tables): DataFrame = {
     val daily = t.events.select(col("event_type"),
         expr("unix_micros(ts) div 86400000000").as("d"),
         expr("CAST(round(value * 10000) AS BIGINT)").as("v_fx"))
@@ -86,8 +85,8 @@ object Pipeline14 {
     * Downstream of the cached survivors this is one map + one
     * bounded agg.
     */
-  def pipeReleaseManifest(spark: SparkSession, dir: String): DataFrame =
-    LlmQueries.pipeCleanCorpus(spark, dir)
+  def pipeReleaseManifest(t: Tables): DataFrame =
+    LlmQueries.pipeCleanCorpus(t)
       .withColumn("split", Sampling.splitAssign(col("doc_id"), 80, 10))
       .groupBy(col("split"), col("lang_pred"))
       .agg(count(lit(1)).as("n_docs"),

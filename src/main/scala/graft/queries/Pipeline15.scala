@@ -2,7 +2,7 @@ package graft.queries
 
 import graft.Tables
 import graft.operators.TextOps
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -32,8 +32,7 @@ object Pipeline15 {
     * hash collision merges two distinct segments — ~n²/2⁶⁵, the
     * standard C4 trade (same as G14).
     */
-  def ddLineDedup(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def ddLineDedup(t: Tables): DataFrame = {
     val seg = t.documents
       .select(col("doc_id"), split(col("text"), " ").as("toks"))
       .select(col("doc_id"),
@@ -93,8 +92,7 @@ object Pipeline15 {
     * table. Probabilities are exact integer division (cnt·10⁶ div
     * rowtotal) — no float accumulation anywhere.
     */
-  def qMarkovTransitions(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def qMarkovTransitions(t: Tables): DataFrame = {
     val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
     val pairs = t.events
       .select(col("user_id"), col("ts"), col("event_id"),
@@ -129,8 +127,8 @@ object Pipeline15 {
     * either. Map-only scoring (G3's stopword-hit math), one
     * 16-row-bounded aggregate, window on the bounded table.
     */
-  def txLangConfusion(spark: SparkSession, dir: String): DataFrame = {
-    val scored = Tables(spark, dir).documents.select(
+  def txLangConfusion(t: Tables): DataFrame = {
+    val scored = t.documents.select(
       col("lang").as("lang_claimed"),
       TextOps.langId(col("text")).as("lang_pred"))
     val counts = scored.groupBy(col("lang_claimed"), col("lang_pred"))
@@ -169,8 +167,8 @@ object Pipeline15 {
     * per-bucket rank EXACTLY (spec-pinned ≡ the naive single
     * window); ties broken by doc_id for a total order.
     */
-  def smLengthBuckets(spark: SparkSession, dir: String): DataFrame =
-    lengthBuckets(Tables(spark, dir).documents, bucketWidth = 64, batchSize = 8)
+  def smLengthBuckets(t: Tables): DataFrame =
+    lengthBuckets(t.documents, bucketWidth = 64, batchSize = 8)
 
   /** Library form over any (doc_id, text) frame. */
   def lengthBuckets(docs: DataFrame, bucketWidth: Int, batchSize: Int): DataFrame = {

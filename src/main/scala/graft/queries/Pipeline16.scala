@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.Tables
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -26,8 +26,7 @@ object Pipeline16 {
     * math — no float-accumulation order sensitivity anywhere; the
     * median itself is an input value, bit-exact on both sides.
     */
-  def qWeightedMedian(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def qWeightedMedian(t: Tables): DataFrame = {
     val comp = t.lineitem
       .groupBy(col("l_returnflag"), col("l_extendedprice"))
       .agg(sum(col("l_quantity").cast("long")).as("w"))
@@ -75,8 +74,8 @@ object Pipeline16 {
     * cartesian, one agg exchange — the NOT-EXISTS oracle the judge
     * can read is O(n²); this plan is one pass.
     */
-  def qSkyline(spark: SparkSession, dir: String): DataFrame = {
-    val orders = Tables(spark, dir).orders
+  def qSkyline(t: Tables): DataFrame = {
+    val orders = t.orders
     val perDate = orders.groupBy(col("o_orderdate"))
       .agg(max(col("o_totalprice")).as("pmax"))
     val laterW = Window.orderBy(col("o_orderdate").desc)
@@ -115,8 +114,7 @@ object Pipeline16 {
     * 4 dp on both sides (the D21 convention) to absorb
     * engine-internal accumulation-order ULPs.
     */
-  def qRegression(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def qRegression(t: Tables): DataFrame =
     t.events
       .withColumn("k", get_json_object(col("props"), "$.k").cast("double"))
       .groupBy(col("event_type"))
@@ -125,7 +123,6 @@ object Pipeline16 {
         round(regr_intercept(col("value"), col("k")), 4).as("intercept"),
         round(regr_r2(col("value"), col("k")), 4).as("r2"),
         regr_count(col("value"), col("k")).as("n_fit"))
-  }
 
   val qRegressionSql: String =
     """SELECT event_type,
@@ -150,8 +147,7 @@ object Pipeline16 {
     * aggregate, and a broadcast of the single-row total — no
     * window, no second corpus pass.
     */
-  def qBenford(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def qBenford(t: Tables): DataFrame = {
     val digits = t.orders
       .select(substring(
         expr("CAST(CAST(round(o_totalprice * 100) AS BIGINT) AS STRING)"),
@@ -195,8 +191,7 @@ object Pipeline16 {
     * trajectory sorts within its own partition), then pure codegen
     * trig — identical closed form on both sides, rounded 4 dp.
     */
-  def geoBearing(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def geoBearing(t: Tables): DataFrame = {
     val p = t.events.select(
       col("event_id"), col("user_id"), col("ts"),
       (col("value") % 180.0).as("lon"),

@@ -2,7 +2,7 @@ package graft.queries
 
 import graft.Tables
 import graft.functions.JaroWinkler
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -31,8 +31,7 @@ object Pipeline17 {
     * Threshold compares the ROUNDED score on both sides, so the
     * keep-set is ULP-robust.
     */
-  def ddJaroWinkler(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def ddJaroWinkler(t: Tables): DataFrame = {
     val p = t.part.select(col("p_partkey"), col("p_name"), col("p_brand"),
       split(col("p_name"), " ").getItem(0).as("tok0"))
     val a = p.select(col("tok0"), col("p_brand"),
@@ -67,8 +66,7 @@ object Pipeline17 {
     * source to constant state. No global window, no second corpus
     * pass.
     */
-  def txZipfSlope(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def txZipfSlope(t: Tables): DataFrame = {
     val freqs = t.documents
       .select(col("source"), explode(split(col("text"), " ")).as("tok"))
       .filter(length(col("tok")) > 0)
@@ -110,8 +108,7 @@ object Pipeline17 {
     * G6's sketched vocab size. Same compaction as G30, then a
     * source-bounded rollup — integer math end to end.
     */
-  def txHapaxRatio(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def txHapaxRatio(t: Tables): DataFrame =
     t.documents
       .select(col("source"), explode(split(col("text"), " ")).as("tok"))
       .filter(length(col("tok")) > 0)
@@ -124,7 +121,6 @@ object Pipeline17 {
         sum(when(col("cnt") === 1, 1L).otherwise(0L)).as("n_hapax"))
       .select(col("source"), col("n_vocab"), col("n_tokens"), col("n_hapax"),
         expr("CAST(n_hapax * 1000000 div n_vocab AS BIGINT)").as("hapax_fx"))
-  }
 
   val txHapaxRatioSql: String =
     """WITH f AS (
@@ -154,8 +150,7 @@ object Pipeline17 {
     * rollup is map-side-combining. All arithmetic on epoch-second
     * longs.
     */
-  def qIntervalMerge(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def qIntervalMerge(t: Tables): DataFrame = {
     val iv = t.events.select(
       col("user_id"),
       unix_micros(col("ts")).as("s"),
@@ -215,8 +210,7 @@ object Pipeline17 {
     * (map-side combine), then the argmax window runs on the
     * user×vocab-bounded table — never on raw events.
     */
-  def qMode(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def qMode(t: Tables): DataFrame = {
     val counts = t.events.groupBy(col("user_id"), col("event_type"))
       .agg(count(lit(1)).as("cnt"))
     val w = Window.partitionBy(col("user_id"))
@@ -252,8 +246,7 @@ object Pipeline17 {
     * a 1-row broadcast. Expected/χ² are derived from the same
     * integer counts on both sides, 4 dp.
     */
-  def smSplitChi2(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def smSplitChi2(t: Tables): DataFrame = {
     val cells = t.documents
       .withColumn("split",
         graft.operators.Sampling.splitAssign(col("doc_id"), 80, 10))

@@ -2,7 +2,7 @@ package graft.queries
 
 import graft.Tables
 import graft.operators.GlobalRank
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -26,8 +26,7 @@ object Pipeline18 {
     * re-joins (each pass appends its score column in place). Ties
     * break on custkey, so every score is deterministic.
     */
-  def qRfm(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def qRfm(t: Tables): DataFrame = {
     val base = t.orders
       .groupBy(col("o_custkey"))
       .agg(
@@ -74,8 +73,7 @@ object Pipeline18 {
     * PARTITIONED by type on that calendar-bounded table (days, not
     * events), and `corr` reduces each type to constant moment state.
     */
-  def qAutocorr(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def qAutocorr(t: Tables): DataFrame = {
     val daily = t.events
       .groupBy(col("event_type"), to_date(col("ts")).as("day"))
       .agg(count(lit(1)).cast("double").as("cnt"))
@@ -118,8 +116,7 @@ object Pipeline18 {
     * per-user max. The only corpus-sized exchange is the distinct;
     * the window runs on the compacted table.
     */
-  def qStreaks(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def qStreaks(t: Tables): DataFrame = {
     val days = t.events
       .select(col("user_id"), to_date(col("ts")).as("day"))
       .distinct()
@@ -155,8 +152,7 @@ object Pipeline18 {
     * struct — a constant-state argmin, not a sort — with event_id
     * breaking timestamp ties so the bar is deterministic.
     */
-  def qOhlc(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def qOhlc(t: Tables): DataFrame = {
     val ord = struct(col("ts"), col("event_id"))
     t.events
       .groupBy(col("event_type"), to_date(col("ts")).as("day"))
@@ -200,8 +196,7 @@ object Pipeline18 {
     * Zero-count (source, bin) cells are grid-filled: their p·log(p/m)
     * term is 0 but the corpus half still contributes.
     */
-  def txJsdDrift(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def txJsdDrift(t: Tables): DataFrame = {
     // The corpus collapses ONCE to the source×20-bounded count table;
     // localCheckpoint stops the three derived aggregates (bins,
     // source totals, grand total) from each re-exploding the corpus.

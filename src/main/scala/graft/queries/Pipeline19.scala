@@ -2,7 +2,7 @@ package graft.queries
 
 import graft.Tables
 import graft.functions.RollingHash
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -30,8 +30,7 @@ object Pipeline19 {
     * ×10⁶ fixed-point emission per type), so the result is exact
     * under any partitioning and bit-identical to the oracle.
     */
-  def qKsTest(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def qKsTest(t: Tables): DataFrame = {
     // One corpus-sized exchange; checkpointed for its three bounded
     // consumers (grid, per-type totals, the grid-fill join).
     val comp = t.events
@@ -116,8 +115,7 @@ object Pipeline19 {
     * and the rank-sum accumulates in DECIMAL(38), so U is exact at
     * any corpus scale.
     */
-  def qMannWhitney(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def qMannWhitney(t: Tables): DataFrame = {
     val base = t.orders
       .join(broadcast(t.customer.select(col("c_custkey"), col("c_mktsegment"))),
         col("o_custkey") === col("c_custkey"))
@@ -200,8 +198,7 @@ object Pipeline19 {
     * the ×10⁶ fixed-point division happens once per nation on exact
     * integers, so results hash-match the oracle at any sf.
     */
-  def qHhi(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def qHhi(t: Tables): DataFrame = {
     val perCust = t.orders
       .join(broadcast(t.customer.select(col("c_custkey"), col("c_nationkey"))),
         col("o_custkey") === col("c_custkey"))
@@ -250,8 +247,7 @@ object Pipeline19 {
     * (PlanGuard-allowlisted). Hazard is an exact ×10⁶ integer
     * floor-division per day.
     */
-  def qKaplanMeier(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def qKaplanMeier(t: Tables): DataFrame = {
     // Checkpointed: consumed by the max-day aggregate, both delta
     // branches, and the deaths rollup.
     val spans = t.events
@@ -331,15 +327,13 @@ object Pipeline19 {
     * HOF per shingle and a corpus-sized window re-key (measured 7.1 s
     * vs 0.5 s at sf0.1) and is kept as the spec's cross-check twin.
     */
-  def txWinnowing(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def txWinnowing(t: Tables): DataFrame =
     t.documents
       .select(col("doc_id"),
         graft.functions.WinnowStats(col("text"), 3, 4).as("s"))
       .filter(col("s").isNotNull)
       .select(col("doc_id"), col("s.n_fp").as("n_fp"),
         col("s.min_fp").as("min_fp"), col("s.max_fp").as("max_fp"))
-  }
 
   /** The composed-operator twin of [[txWinnowing]] — identical
     * result by construction (spec-pinned); the rightmost-min tie
@@ -347,8 +341,7 @@ object Pipeline19 {
     * plain `min` window implements it (doc positions bounded < 2²¹
     * by the chunking contract upstream G10 enforces at ingest).
     */
-  def txWinnowingComposed(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def txWinnowingComposed(t: Tables): DataFrame = {
     val stride = 1L << 21
     val grams = t.documents
       .select(col("doc_id"), split(col("text"), " ").as("t"))

@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.Tables
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -20,8 +20,7 @@ object Pipeline2 {
     * 3-row summary (reference: the sector queries' staged
     * category→subtype filters, queries.yml).
     */
-  def qFunnel(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def qFunnel(t: Tables): DataFrame = {
     // Single pass: per-user time-sorted event list folded into the
     // three stage timestamps (first view, first click after it,
     // first purchase after that) — ONE shuffle on user_id, vs the
@@ -79,8 +78,7 @@ object Pipeline2 {
     * (the warehouse dimension-history primitive behind the
     * reference's incremental publish modes, publish.py).
     */
-  def qScd2(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def qScd2(t: Tables): DataFrame = {
     val w = Window.partitionBy(col("user_id"))
       .orderBy(col("valid_from_us"), col("event_id"))
     t.events.filter(col("event_type") === "purchase")
@@ -104,8 +102,7 @@ object Pipeline2 {
     * key before the shuffle), where the row_number formulation would
     * sort the whole log.
     */
-  def qFirstLastTouch(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def qFirstLastTouch(t: Tables): DataFrame = {
     val ord = struct(col("ts_us"), col("event_id"))
     t.events.select(col("user_id"), col("event_id"), col("event_type"),
         unix_micros(col("ts")).as("ts_us"), col("value"))
@@ -140,8 +137,7 @@ object Pipeline2 {
     * id-ordered array). Site coords derive deterministically from
     * the nation dim.
     */
-  def geoNearest(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def geoNearest(t: Tables): DataFrame = {
     val sites = t.nation.select(
         col("n_nationkey").cast("long").as("site_id"),
         pmod(col("n_nationkey") * 37, lit(127)).cast("double").as("sx"),
@@ -203,8 +199,7 @@ object Pipeline2 {
     * byte-exact. A 64-bit hash collision would merge two distinct
     * spans — ~n²/2⁶⁵ at corpus scale, the standard C4 trade.
     */
-  def txSpanDedup(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def txSpanDedup(t: Tables): DataFrame = {
     val light = t.documents
       .select(col("doc_id"), split(col("text"), " ").as("toks"))
       .select(col("doc_id"),
@@ -254,8 +249,7 @@ object Pipeline2 {
     * tables are group-sized and broadcast back onto one fact scan;
     * the data shuffles only for the sorts and the final rollup.
     */
-  def qOutlierMad(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def qOutlierMad(t: Tables): DataFrame = {
     val e = t.events.select(col("event_type"), col("value"))
     val med = graft.operators.Quantiles
       .exactInterpolated(e, "event_type", "value", Seq("med" -> 0.5))
@@ -299,8 +293,7 @@ object Pipeline2 {
     * window of the exact values — the same honesty contract as
     * q_quantile_approx (D36).
     */
-  def qOutlierMadApproxRaw(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def qOutlierMadApproxRaw(t: Tables): DataFrame = {
     val e = t.events.select(col("event_type"), col("value"))
     val med = e.groupBy(col("event_type"))
       .agg(expr("approx_percentile(value, 0.5d, 10000)").as("med"))
@@ -328,8 +321,7 @@ object Pipeline2 {
     * to: it restates the exact per-group count and the two 1s the
     * contract forces).
     */
-  def qOutlierMadApprox(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def qOutlierMadApprox(t: Tables): DataFrame = {
     val e = t.events.select(col("event_type"), col("value"))
     val med = e.groupBy(col("event_type"))
       .agg(expr("approx_percentile(value, 0.5d, 10000)").as("med"))
@@ -365,8 +357,7 @@ object Pipeline2 {
     * math over a per-source window (one shuffle); the global merge
     * is a sort at READ time, never a single-partition window.
     */
-  def smInterleave(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def smInterleave(t: Tables): DataFrame = {
     val w = Window.partitionBy(col("source")).orderBy(col("doc_id"))
     t.documents.select(col("doc_id"), col("source"))
       // coalesce(…, 0): a digit-free source name falls back to
@@ -400,8 +391,7 @@ object Pipeline2 {
     * key-disjoint from the snapshot at every SF. One shuffle per
     * side on the merge key.
     */
-  def qMergeUpsert(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def qMergeUpsert(t: Tables): DataFrame = {
     val agg = t.events.groupBy(col("user_id")).agg(
       max(col("event_type") === "error").as("has_err"),
       round(sum(when(col("event_type") === "purchase", col("value"))
@@ -461,8 +451,7 @@ object Pipeline2 {
     * The watermark is one aggregate scalar through the driver; the
     * incremental scan is map-only.
     */
-  def srcIncremental(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def srcIncremental(t: Tables): DataFrame = {
     // published snapshot = first two weeks; predicate in the raw ts
     // column's own physical type (nano-long or timestamp) so it
     // stays pushable to parquet row-group stats
@@ -503,8 +492,7 @@ object Pipeline2 {
     * unbounded-preceding frame that trailing windows (D15) and
     * range frames (D23) don't cover. One shuffle on the key.
     */
-  def qExpanding(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def qExpanding(t: Tables): DataFrame = {
     val w = Window.partitionBy(col("user_id"))
       .orderBy(col("ts_us"), col("event_id"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -528,9 +516,9 @@ object Pipeline2 {
     * measurement loop that justifies running the sketch at 100 TB
     * instead of the exact index.
     */
-  def ddSketchPrecision(spark: SparkSession, dir: String): DataFrame =
-    LlmQueries.ddMinhashLsh(spark, dir)
-      .join(LlmQueries.ngramPairs(spark, dir), Seq("doc_a", "doc_b"))
+  def ddSketchPrecision(t: Tables): DataFrame =
+    LlmQueries.ddMinhashLsh(t)
+      .join(LlmQueries.ngramPairs(t), Seq("doc_a", "doc_b"))
       .select(col("doc_a"), col("doc_b"), col("est_jaccard"), col("jaccard"),
         round(abs(col("est_jaccard") - col("jaccard")), 4).as("abs_err"))
 
@@ -548,9 +536,8 @@ object Pipeline2 {
     * session-cached CC labels (singletons label themselves); beyond
     * them this is one map-side split expression + the doc-key join.
     */
-  def smLeakageSafeSplit(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
-    val cc = LlmQueries.ccLabels(spark, dir)
+  def smLeakageSafeSplit(t: Tables): DataFrame = {
+    val cc = LlmQueries.ccLabels(t)
     t.documents.select(col("doc_id"))
       .join(cc, col("doc_id") === col("node"), "left")
       .select(col("doc_id"),
@@ -584,10 +571,9 @@ object Pipeline2 {
     * what mean quality. Everything upstream is shared/cached
     * subtrees; the rollup adds one group-key shuffle.
     */
-  def pipeManifest(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
-    val clean = LlmQueries.pipeCleanCorpus(spark, dir).select(col("doc_id"), col("quality"))
-    val splits = smLeakageSafeSplit(spark, dir).select(col("doc_id"), col("split"))
+  def pipeManifest(t: Tables): DataFrame = {
+    val clean = LlmQueries.pipeCleanCorpus(t).select(col("doc_id"), col("quality"))
+    val splits = smLeakageSafeSplit(t).select(col("doc_id"), col("split"))
     val docs = t.documents.select(col("doc_id"), col("source"),
       size(split(col("text"), " ")).cast("long").as("n_tokens"))
     clean.join(splits, "doc_id").join(docs, "doc_id")
@@ -622,8 +608,7 @@ object Pipeline2 {
     * rolled up per shard. The tar-shard index a media training
     * pipeline writes before uploading.
     */
-  def mmShardManifest(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def mmShardManifest(t: Tables): DataFrame =
     graft.operators.Multimodal.shardManifest(
       t.documents.select(col("source"), col("doc_id"),
         length(col("text").cast("binary")).as("n_bytes")),
@@ -632,7 +617,6 @@ object Pipeline2 {
       .agg(count(lit(1)).as("n_items"),
         min(col("offset")).as("first_offset"),
         max(col("offset")).as("last_offset"))
-  }
 
   val mmShardManifestSql: String =
     """WITH RECURSIVE p AS (
@@ -660,8 +644,7 @@ object Pipeline2 {
     * aggregate proves token↔user is 1:1 (no collisions, counts
     * preserved).
     */
-  def txPseudonymize(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def txPseudonymize(t: Tables): DataFrame = {
     val token = substring(md5(concat(lit("graft-salt:"),
       col("user_id").cast("string"))), 1, 16)
     t.events.select(token.as("pseudo_id"), col("user_id"), col("event_type"))
@@ -686,8 +669,7 @@ object Pipeline2 {
     * partitions reduce to ≤1 row per (key, window) before the
     * shuffle — no log-wide window sort.
     */
-  def ddWithinWindow(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def ddWithinWindow(t: Tables): DataFrame =
     t.events
       .select(col("user_id"), col("event_type"), col("event_id"), col("value"),
         unix_micros(col("ts")).as("ts_us"),
@@ -699,7 +681,6 @@ object Pipeline2 {
       .select(col("user_id"), col("event_type"), col("hour"),
         col("m.event_id").as("event_id"), col("m.ts_us").as("ts_us"),
         col("m.value").as("value"), col("n_collapsed"))
-  }
 
   val ddWithinWindowSql: String =
     """WITH r AS (
@@ -723,8 +704,7 @@ object Pipeline2 {
     * output is engine-specific by nature); the spec bounds its rank
     * error against the exact values.
     */
-  def qQuantileApproxRaw(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def qQuantileApproxRaw(t: Tables): DataFrame =
     t.events.groupBy(col("event_type"))
       .agg(expr("approx_percentile(value, array(0.5d, 0.95d, 0.99d), 10000)")
         .as("q"))
@@ -732,7 +712,6 @@ object Pipeline2 {
         round(col("q")(0), 4).as("p50"),
         round(col("q")(1), 4).as("p95"),
         round(col("q")(2), 4).as("p99"))
-  }
 
   /** The ORACLED registry shape of D36 (r12, closing a declared
     * `no_oracle` row by the dd_decontaminate_bloom r10 pattern):
@@ -748,8 +727,7 @@ object Pipeline2 {
     * themselves. Integer cross-multiplied comparisons; the tie
     * interval (not the point rank) is what GK actually promises.
     */
-  def qQuantileApprox(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def qQuantileApprox(t: Tables): DataFrame = {
     val e = t.events.select(col("event_type"), col("value"))
     val q = e.groupBy(col("event_type"))
       .agg(expr("approx_percentile(value, array(0.5d, 0.95d, 0.99d), 10000)").as("q"))
@@ -799,20 +777,18 @@ object Pipeline2 {
     round(lit(1.0) / (lit(1.0) + exp(-z)), 4)
   }
 
-  def txQualityClassifier(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def txQualityClassifier(t: Tables): DataFrame =
     t.documents.select(col("doc_id"), qualityScoreCol(col("text")).as("score"))
       .withColumn("kept", col("score") >= 0.5)
-  }
 
   /** F6: product-quantization codes ([[graft.operators.Similarity.pqCodes]])
     * — vector compression for billion-scale ANN: 64 floats → 4
     * codebook ids (+ reconstruction error). Map-only encode scan;
     * see the operator for the scale argument.
     */
-  def simPq(spark: SparkSession, dir: String): DataFrame =
+  def simPq(t: Tables): DataFrame =
     graft.operators.Similarity.pqCodes(
-      Tables(spark, dir).embeddings, "vec_id", "embedding", "label", m = 4)
+      t.embeddings, "vec_id", "embedding", "label", m = 4)
 
   val simPqSql: String =
     """WITH percomp AS (
@@ -847,8 +823,7 @@ object Pipeline2 {
     * map-side column math; one group-key shuffle. The recency-
     * weighted score every ranking/feature pipeline computes.
     */
-  def qDecayWeighted(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def qDecayWeighted(t: Tables): DataFrame = {
     val nowUs = 1706745600000000L // 2024-02-01T00:00:00Z
     val lambdaPerDay = 0.1
     val ageDays = (lit(nowUs) - unix_micros(col("ts"))).cast("double") / 86400000000.0
@@ -876,8 +851,7 @@ object Pipeline2 {
     * one file. Coordinates derive from the event columns scaled
     * into lon/lat range.
     */
-  def geoTileKey(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def geoTileKey(t: Tables): DataFrame = {
     val z = 6
     val n = lit((1 << z).toDouble)
     val lon = pmod(col("value"), lit(360.0)) - 180.0
@@ -915,8 +889,7 @@ object Pipeline2 {
     * previous row — exactly what the fold (and the oracle's
     * recursive CTE) expresses.
     */
-  def geoSimplify(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def geoSimplify(t: Tables): DataFrame = {
     val eps2 = 400.0 // eps = 20 in coordinate units
     val emptyKept = array().cast("array<struct<x:double,y:double>>")
     val folded = t.events
@@ -985,8 +958,7 @@ object Pipeline2 {
     * the DIRECT aggregate over everything — the merge must be
     * indistinguishable from a full recompute.
     */
-  def qMvMerge(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def qMvMerge(t: Tables): DataFrame = {
     val cutUs = 1705276800000000L // 2024-01-15T00:00:00Z
     def partials(df: DataFrame) = df
       .select(col("event_type"), unix_micros(col("ts")).as("ts_us"), col("value"))

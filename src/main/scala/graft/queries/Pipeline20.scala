@@ -3,7 +3,7 @@ package graft.queries
 import graft.Tables
 import graft.functions.RollingHash
 import graft.operators.Graph
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Round-8 extension batch 17: label-propagation communities,
@@ -30,9 +30,9 @@ object Pipeline20 {
     * three chained CTEs — integer counts and a total-order tie rule
     * make every iteration bit-identical across engines.
     */
-  def qLabelProp(spark: SparkSession, dir: String): DataFrame = {
+  def qLabelProp(t: Tables): DataFrame = {
     // Shared session-materialized edge set (GraphBase convention).
-    val edges = GraphBase.coPurchasePairs(spark, dir).select(col("u"), col("v"))
+    val edges = GraphBase.coPurchasePairs(t).select(col("u"), col("v"))
     Graph.labelPropagation(edges, "u", "v", iters = 3)
       .select(col("node"), col("lbl").as("label"))
   }
@@ -82,8 +82,7 @@ object Pipeline20 {
     * consumers; first-occurrence is a map-side-combined `min` per
     * gram; the rollup is per-doc bounded. Exact integer ×10⁶ share.
     */
-  def txNgramNovelty(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def txNgramNovelty(t: Tables): DataFrame = {
     // Native one-pass shingle hashing (graft.functions.ShingleHashes)
     // — the transform(sequence, i -> RollingHash(concat_ws(...)))
     // composition evaluates interpreted and allocates a shingle
@@ -142,8 +141,7 @@ object Pipeline20 {
     * source-bounded aggregate; shares emitted from exact long counts
     * by ×10⁶ floor division.
     */
-  def txCharclassProfile(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def txCharclassProfile(t: Tables): DataFrame = {
     val n     = length(col("text")).cast("long")
     val digit = (n - length(regexp_replace(col("text"), "[0-9]", "")))
     val space = (n - length(regexp_replace(col("text"), "[ \\t\\n\\r]", "")))

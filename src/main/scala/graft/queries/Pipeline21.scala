@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.Tables
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -26,8 +26,7 @@ object Pipeline21 {
     * rounded at 4 dp (identical parse tree both engines). Full
     * windows only; zero-variance windows yield SQL NULL.
     */
-  def qRollingCorr(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def qRollingCorr(t: Tables): DataFrame = {
     val daily = t.events
       .groupBy(col("event_type"), to_date(col("ts")).as("day"))
       .agg(count(lit(1)).as("x"))
@@ -104,8 +103,7 @@ object Pipeline21 {
     * integers, written with the identical parse tree in the oracle,
     * rounded at 4 dp. Zero shuffled rows beyond the 1-row moment set.
     */
-  def qWelchTtest(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def qWelchTtest(t: Tables): DataFrame = {
     val base = t.orders
       .join(broadcast(t.customer.select(col("c_custkey"), col("c_mktsegment"))),
         col("o_custkey") === col("c_custkey"))
@@ -178,8 +176,7 @@ object Pipeline21 {
     * is one double expression, rounded at 4 dp. Degenerate paths
     * (all segments zero-length) interpolate at fraction 0.
     */
-  def geoPointAlong(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def geoPointAlong(t: Tables): DataFrame = {
     val p = t.events.select(
       col("event_id"), col("user_id"), col("ts"),
       (col("value") % 180.0).as("lon"),
@@ -263,9 +260,9 @@ object Pipeline21 {
     * reading is one schema-projected JSON scan; the report is a
     * bounded per-type aggregate.
     */
-  def srcMalformedJsonl(spark: SparkSession, dir: String): DataFrame = {
-    val stage = graft.util.SessionStage.dir(spark, dir, "src_badjson") { out =>
-      Tables(spark, dir).events
+  def srcMalformedJsonl(t: Tables): DataFrame = {
+    val stage = graft.util.SessionStage.dir(t, "src_badjson") { out =>
+      t.events
         .select(col("event_id"), col("event_type"), col("value"))
         .select(
           when(pmod(col("event_id"), lit(7)) === 0,
@@ -275,7 +272,7 @@ object Pipeline21 {
               col("value")))).as("value"))
         .write.mode("overwrite").text(out.toString)
     }
-    val read = spark.read
+    val read = t.spark.read
       .schema("event_id BIGINT, event_type STRING, value DOUBLE, _corrupt_record STRING")
       .option("mode", "PERMISSIVE")
       .option("columnNameOfCorruptRecord", "_corrupt_record")

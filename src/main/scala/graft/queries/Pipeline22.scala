@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.Tables
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -25,8 +25,7 @@ object Pipeline22 {
     * handles a hot key); map-side integer emission, no float
     * anywhere.
     */
-  def qPercentRank(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def qPercentRank(t: Tables): DataFrame = {
     val rows = t.orders
       .join(broadcast(t.customer.select(col("c_custkey"), col("c_nationkey"))),
         col("o_custkey") === col("c_custkey"))
@@ -76,8 +75,7 @@ object Pipeline22 {
     * division), the excursion is a running integer sum, and the peak
     * is a row_number argmax with the earliest-day tie rule.
     */
-  def qCusum(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def qCusum(t: Tables): DataFrame = {
     val daily = t.events
       .groupBy(col("event_type"), to_date(col("ts")).as("day"))
       .agg(count(lit(1)).as("x"))
@@ -139,8 +137,7 @@ object Pipeline22 {
     * fractions are ×10⁶ integer floor divisions of exact long byte
     * totals.
     */
-  def mmModalityBalance(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def mmModalityBalance(t: Tables): DataFrame = {
     val target = expr(
       """CASE modality WHEN 'text' THEN 700000
                        WHEN 'image' THEN 200000

@@ -2,7 +2,7 @@ package graft.queries
 
 import graft.Tables
 import graft.operators.GlobalRank
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -24,8 +24,7 @@ object Pipeline23 {
     * (its cumulative window is PlanGuard-allowlisted as
     * decile-bounded). Exact integers end to end.
     */
-  def qLorenz(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def qLorenz(t: Tables): DataFrame = {
     val perCust = t.orders
       .groupBy(col("o_custkey"))
       .agg(sum(expr("CAST(round(o_totalprice * 100) AS BIGINT)")).as("cents"))
@@ -74,8 +73,8 @@ object Pipeline23 {
     * keep rule does, so no pair can land on different sides of a
     * threshold across engines; everything after is pair-bounded.
     */
-  def ddThresholdCurve(spark: SparkSession, dir: String): DataFrame = {
-    val pairs = LlmQueries.ngramPairs(spark, dir)
+  def ddThresholdCurve(t: Tables): DataFrame = {
+    val pairs = LlmQueries.ngramPairs(t)
       .select(col("doc_a"), col("doc_b"),
         expr("CAST(round(jaccard * 10000) AS BIGINT)").as("jfx"))
     val thresholds = explode(typedLit(Seq(5000L, 6000L, 7000L, 8000L, 9000L)))

@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.Tables
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -23,8 +23,7 @@ object Pipeline24 {
     * timestamps; the funnel counts are a second, 1-row aggregate.
     * All time comparisons are exact epoch-micros integer math.
     */
-  def qFunnelWindowed(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def qFunnelWindowed(t: Tables): DataFrame = {
     val ev = t.events.select(col("user_id"), col("event_type"),
       expr("unix_micros(ts)").as("us"))
     val w = Window.partitionBy(col("user_id"))
@@ -100,8 +99,7 @@ object Pipeline24 {
     * explode of the CUSTOMER-sized table (never the fact table) into
     * one map-side-combined rollup.
     */
-  def qPrefixRollup(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def qPrefixRollup(t: Tables): DataFrame = {
     val perCust = t.orders
       .groupBy(col("o_custkey"))
       .agg(count(lit(1)).as("n_orders"),
@@ -149,8 +147,7 @@ object Pipeline24 {
     * similarity matrix is 8×8 per query — constant — and every
     * exchange after the scored scan moves query×8-bounded rows.
     */
-  def simMmr(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def simMmr(t: Tables): DataFrame = {
     val emb = t.embeddings
     val q = emb.filter(col("vec_id") < 5)
       .select(col("vec_id").as("query_id"), col("embedding").as("qv"))

@@ -2,7 +2,7 @@ package graft.queries
 
 import graft.Tables
 import graft.operators.Dedup
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -28,8 +28,7 @@ object Pipeline25 {
     * negative-neighbor guard (coordinate domain ≥ 0; 1024 bounds
     * cy by construction here — documents the packing contract).
     */
-  def geoGridCluster(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def geoGridCluster(t: Tables): DataFrame = {
     val cells = t.events
       .select(col("value").as("x"),
         get_json_object(col("props"), "$.k").cast("double").as("y"))
@@ -106,8 +105,7 @@ object Pipeline25 {
     * map-side-combined bounded rollup. All gap math on integer
     * epoch days.
     */
-  def qGrowthAccounting(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def qGrowthAccounting(t: Tables): DataFrame = {
     val days = t.events
       .select(col("user_id"), to_date(col("ts")).as("day"))
       .distinct()

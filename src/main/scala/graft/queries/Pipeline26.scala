@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.Tables
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -27,8 +27,7 @@ object Pipeline26 {
     * purchase and positions the touches (per-user bounded); the
     * rollup is a bounded per-type aggregate. No floats anywhere.
     */
-  def qAttribution(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def qAttribution(t: Tables): DataFrame = {
     val ev = t.events.select(col("user_id"), col("event_type"),
       expr("unix_micros(ts)").as("us"), col("event_id"))
     val w = Window.partitionBy(col("user_id"))
@@ -94,8 +93,7 @@ object Pipeline26 {
     * per-user TYPE-vocabulary (≤ |types| per user, bounded), never
     * by user pairs; the output is types²-bounded.
     */
-  def qAudienceOverlap(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def qAudienceOverlap(t: Tables): DataFrame = {
     val ut = t.events.select(col("user_id"), col("event_type")).distinct()
       .localCheckpoint(true)
     val sizes = ut.groupBy(col("event_type")).agg(count(lit(1)).as("n"))

@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.Tables
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -25,8 +25,7 @@ object Pipeline27 {
     * precedent), and the peak is a row_number argmax. All epoch-
     * micros integer math.
     */
-  def qPeakConcurrency(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def qPeakConcurrency(t: Tables): DataFrame = {
     val winUs = 300000000L // 5 minutes
     val ev = t.events.select(col("event_type"), expr("unix_micros(ts)").as("us"))
     val deltas = ev.select(col("event_type"), col("us"), lit(1L).as("dd"))
@@ -82,8 +81,7 @@ object Pipeline27 {
     * and broadcast back as a 1-row join; the split labeling is
     * map-side; the report is a 3-row aggregate.
     */
-  def smTimeSplit(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def smTimeSplit(t: Tables): DataFrame = {
     val days = t.events.select(to_date(col("ts")).as("day"))
       .groupBy(col("day")).agg(count(lit(1)).as("cnt"))
       .localCheckpoint(true)

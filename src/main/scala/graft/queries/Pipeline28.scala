@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.Tables
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Round-8 extension batch 25 (continued): functional-dependency
@@ -21,8 +21,7 @@ object Pipeline28 {
     * countDistinct shape; candidates run independently and union
     * bounded 1-row reports.
     */
-  def qFdCheck(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def qFdCheck(t: Tables): DataFrame = {
     def check(name: String, df: DataFrame, lhs: String, rhs: String): DataFrame =
       df.select(col(lhs).as("l"), col(rhs).as("r")).distinct()
         .groupBy(col("l")).agg(count(lit(1)).as("n_rhs"))
@@ -90,8 +89,7 @@ object Pipeline28 {
     * is one equi-join on the candidate id; output is ≤ 3 rows per
     * anchor.
     */
-  def smNegativePairs(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def smNegativePairs(t: Tables): DataFrame = {
     val docs = t.documents.select(col("doc_id"), col("source"))
       .localCheckpoint(true)
     val n = docs.agg(count(lit(1)).as("n_docs"))

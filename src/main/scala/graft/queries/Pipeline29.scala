@@ -2,7 +2,7 @@ package graft.queries
 
 import graft.Tables
 import graft.operators.Graph
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Round-8 extension batch 29: k-hop BFS traversal and
@@ -24,10 +24,10 @@ object Pipeline29 {
     * edge×edge, no global window; distances are exact longs, so the
     * result is partitioning-invariant by construction.
     */
-  def qKhopBfs(spark: SparkSession, dir: String): DataFrame = {
+  def qKhopBfs(t: Tables): DataFrame = {
     // Shared session-materialized edge set (GraphBase convention);
     // already checkpointed there.
-    val edges = GraphBase.coPurchasePairs(spark, dir).select(col("u"), col("v"))
+    val edges = GraphBase.coPurchasePairs(t).select(col("u"), col("v"))
     val seed = edges.agg(least(min(col("u")), min(col("v"))).as("node"))
     Graph.bfsHops(edges, "u", "v", seed, maxHops = 3)
   }
@@ -92,8 +92,7 @@ object Pipeline29 {
     * all pairs. Every threshold is an integer cross-multiplication;
     * no float boundary anywhere.
     */
-  def ddPrefixFilter(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def ddPrefixFilter(t: Tables): DataFrame = {
     // Shingle ONCE — and as 64-bit xxhash values, not strings (r13,
     // guide §2.3 "shuffle keys, not payloads"): NgramXxHashes is the
     // E9-decontamination convention (hash equality == shingle-string

@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.Tables
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Round-5 extension batch: retrieval scoring, cross-document
@@ -20,9 +20,9 @@ object Pipeline3 {
     */
   val Bm25Terms: Seq[String] = Seq("spark", "join", "window", "stream")
 
-  def txBm25(spark: SparkSession, dir: String): DataFrame =
+  def txBm25(t: Tables): DataFrame =
     graft.operators.TextOps.bm25TopK(
-      Tables(spark, dir).documents, "text", "doc_id", Bm25Terms)
+      t.documents, "text", "doc_id", Bm25Terms)
 
   /** The SQL mirrors the Scala expression tree token-for-token
     * (`a * b / c` association, left-to-right `+` chain over the
@@ -68,8 +68,8 @@ object Pipeline3 {
     * duplicated subset joins back on the hash, and one doc_id
     * aggregation closes — no raw text ever shuffles.
     */
-  def txDupNgramFrac(spark: SparkSession, dir: String): DataFrame =
-    dupNgramFrac(Tables(spark, dir).documents)
+  def txDupNgramFrac(t: Tables): DataFrame =
+    dupNgramFrac(t.documents)
 
   /** Library form over any (doc_id, text) frame.
     *
@@ -152,9 +152,8 @@ object Pipeline3 {
     * which keeps the integer ranks — and therefore the fused scores
     * — bit-deterministic.
     */
-  def simHybridRrf(spark: SparkSession, dir: String): DataFrame = {
+  def simHybridRrf(t: Tables): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val t = Tables(spark, dir)
     val n = 50
     // Windows below are unpartitioned BY DESIGN: their input is the
     // already-limited candidate list (≤ n rows), not the corpus.
@@ -216,9 +215,9 @@ object Pipeline3 {
     * a pathological giant dup cluster (shared boilerplate) costs a
     * running max instead of a per-key sort.
     */
-  def ddClusterRep(spark: SparkSession, dir: String): DataFrame = {
-    val labels = LlmQueries.ccLabels(spark, dir) // (node, component)
-    val docs = Tables(spark, dir).documents.select(col("doc_id"), col("n_chars"))
+  def ddClusterRep(t: Tables): DataFrame = {
+    val labels = LlmQueries.ccLabels(t) // (node, component)
+    val docs = t.documents.select(col("doc_id"), col("n_chars"))
     val rank = struct(col("n_chars"), -col("node")) // max ⇔ longest, tie lowest id
     labels
       .join(docs, labels("node") === docs("doc_id"))
@@ -259,8 +258,7 @@ object Pipeline3 {
     * single-scan at scale — a quantile-based binning would need a
     * pre-pass.
     */
-  def qPsiDrift(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def qPsiDrift(t: Tables): DataFrame = {
     val ev = t.events
       .filter(col("event_type").isin("view", "purchase"))
       .select(
@@ -269,7 +267,7 @@ object Pipeline3 {
     val counts = ev.groupBy(col("bin")).agg(
       sum(when(col("event_type") === "view", 1L).otherwise(0L)).as("c_ref"),
       sum(when(col("event_type") === "purchase", 1L).otherwise(0L)).as("c_cur"))
-    val bins = spark.range(10).select(col("id").as("bin"))
+    val bins = t.spark.range(10).select(col("id").as("bin"))
     val filled = bins
       .join(counts, Seq("bin"), "left")
       .select(
@@ -325,8 +323,8 @@ object Pipeline3 {
     * data-derived at run time, which is what keeps the pass
     * single-scan at 100 TB.
     */
-  def smCurriculum(spark: SparkSession, dir: String): DataFrame = {
-    val docs = Tables(spark, dir).documents
+  def smCurriculum(t: Tables): DataFrame = {
+    val docs = t.documents
     val dl = size(split(lower(trim(col("text"))), "\\s+"))
     val ord =
       (pmod(col("doc_id"), lit(1000000007L)) * lit(2654435761L) + lit(1013904223L)) %

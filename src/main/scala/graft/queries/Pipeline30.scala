@@ -2,7 +2,7 @@ package graft.queries
 
 import graft.Tables
 import graft.operators.Similarity
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -33,8 +33,7 @@ object Pipeline30 {
     * with id tie-breaks, so the graph is bit-stable across engines
     * and partitionings.
     */
-  def simKnnMutual(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def simKnnMutual(t: Tables): DataFrame = {
     val e = t.embeddings.select(col("vec_id"), col("embedding"), col("label"))
     val scored = e.as("a")
       .join(e.as("b"),
@@ -96,8 +95,7 @@ object Pipeline30 {
     * inside the probed lists only. Ranks order on the ROUNDED score
     * with id ties — deterministic across engines.
     */
-  def simHardNegatives(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def simHardNegatives(t: Tables): DataFrame = {
     val e = t.embeddings.select(col("vec_id"), col("embedding"), col("label"))
     val q = e.filter(col("vec_id") < 10)
       .select(col("vec_id").as("query_id"), col("embedding").as("qv"),

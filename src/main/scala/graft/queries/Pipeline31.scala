@@ -2,7 +2,7 @@ package graft.queries
 
 import graft.Tables
 import graft.operators.Graph
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -24,10 +24,10 @@ object Pipeline31 {
     * groupBy against the checkpointed dist table — never edge×edge;
     * integer costs end-to-end ⇒ partitioning-invariant exact longs.
     */
-  def qSsspWeighted(spark: SparkSession, dir: String): DataFrame = {
+  def qSsspWeighted(t: Tables): DataFrame = {
     // Shared session-materialized edge set (GraphBase convention);
     // already checkpointed there.
-    val edges = GraphBase.coPurchasePairs(spark, dir)
+    val edges = GraphBase.coPurchasePairs(t)
       .select(col("u"), col("v"),
         expr("CAST(1000 AS BIGINT) div w").as("ecost"))
     val seed = edges.agg(least(min(col("u")), min(col("v"))).as("node"))
@@ -77,8 +77,7 @@ object Pipeline31 {
     * agg, and a cell-bounded argmin window. No pairwise stage
     * exists at all.
     */
-  def qMedoid(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def qMedoid(t: Tables): DataFrame = {
     val fx = t.embeddings
       .select(col("vec_id"), col("label"),
         posexplode(col("embedding")).as(Seq("i", "x")))

@@ -2,7 +2,7 @@ package graft.queries
 
 import graft.Tables
 import graft.operators.Graph
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Round-8 extension batch 32: k-core graph peeling and the exact
@@ -10,9 +10,9 @@ import org.apache.spark.sql.functions._
   */
 object Pipeline32 {
 
-  private def coPurchaseUndirected(spark: SparkSession, dir: String): DataFrame = {
+  private def coPurchaseUndirected(t: Tables): DataFrame = {
     // Shared session-materialized edge set (GraphBase convention).
-    val ef = GraphBase.coPurchasePairs(spark, dir).select(col("u"), col("v"))
+    val ef = GraphBase.coPurchasePairs(t).select(col("u"), col("v"))
     ef.union(ef.select(col("v").as("u"), col("u").as("v")))
   }
 
@@ -34,8 +34,8 @@ object Pipeline32 {
     * shrinking edge list — O(edges) per round, never edge×edge;
     * exact long degrees ⇒ partitioning-invariant.
     */
-  def qKcore(spark: SparkSession, dir: String): DataFrame = {
-    var und = coPurchaseUndirected(spark, dir).localCheckpoint(true)
+  def qKcore(t: Tables): DataFrame = {
+    var und = coPurchaseUndirected(t).localCheckpoint(true)
     // checkpoint per round (the Graph.kCore loop shape): without it,
     // each round's TWO references to the prior edge set double the
     // plan tree — 53 captured exchanges vs 3, and re-computed degree
@@ -86,13 +86,12 @@ object Pipeline32 {
     * the algebra is identical BIT FOR BIT (n·Σfxᵢfxⱼ − Σfxᵢ·Σfxⱼ
     * over exact integers in both).
     */
-  def simCovMatrix(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def simCovMatrix(t: Tables): DataFrame = {
     val dim = 64
     val (n0, sxB, sxyB) =
       graft.operators.Whitening.fixedPointGram(t.embeddings, "embedding", dim)
     val nD = n0.toDouble
-    import spark.implicits._
+    import t.spark.implicits._
     val rows = for {
       i <- 0 until dim
       j <- i until dim

@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.Tables
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -30,8 +30,7 @@ object Pipeline33 {
     * type-vocabulary-bounded counts with the pₖ vector broadcast —
     * at 100 TB the iteration cost is independent of corpus size.
     */
-  def qMarkovAbsorption(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def qMarkovAbsorption(t: Tables): DataFrame = {
     val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
     val counts = t.events
       .select(col("user_id"), col("ts"), col("event_id"),

@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.Tables
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -29,8 +29,7 @@ object Pipeline34 {
     * text in the oracle, rounded at 4 dp. Zero shuffled rows beyond
     * the single moment row.
     */
-  def qAnova(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def qAnova(t: Tables): DataFrame = {
     val base = t.orders.select(col("o_orderpriority").as("pr"),
       expr("CAST(round(o_totalprice * 100) AS BIGINT)").as("c"))
     val aggs = priorities.zipWithIndex.flatMap { case (p, i) =>
@@ -106,8 +105,7 @@ object Pipeline34 {
     * shuffled rows are (user, type) compacts, pair fan-out stays
     * vocabulary-bounded, the final agg is types²-sized.
     */
-  def qSeqPairs(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def qSeqPairs(t: Tables): DataFrame = {
     val ut = t.events
       .select(col("user_id"), col("event_type"),
         struct(col("ts"), col("event_id")).as("k"))
@@ -156,8 +154,7 @@ object Pipeline34 {
     * lower-median rank of the value-sorted pairs), so ties cannot
     * make the answer partition-dependent.
     */
-  def qTheilSen(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def qTheilSen(t: Tables): DataFrame = {
     val daily = t.events
       .groupBy(col("event_type"),
         datediff(to_date(col("ts")), lit("1970-01-01")).as("dayn"))
@@ -227,8 +224,7 @@ object Pipeline34 {
     * exact micros BIGINT (DECIMAL(38) is the documented next step
     * past ~10¹⁸ weighted micros per partition-group).
     */
-  def qBootstrapCi(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def qBootstrapCi(t: Tables): DataFrame = {
     val wCase = poissonThresholds.zipWithIndex
       .map { case (th, i) => s"WHEN u < $th THEN $i" }
       .mkString("CASE ", " ", " ELSE 8 END")

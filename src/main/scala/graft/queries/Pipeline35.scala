@@ -4,7 +4,7 @@ import graft.Tables
 import graft.functions.HaversineDistKm
 import graft.operators.GlobalRank
 import graft.plans.GeoRadiusPushdown
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.GraftBridge
 import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.expressions.Window
@@ -35,9 +35,8 @@ object Pipeline35 {
     * zero shuffled rows beyond the per-type partials. At 100 TB the
     * envelope turns a full-corpus trig pass into a pruned-scan one.
     */
-  def geoRadiusSearch(spark: SparkSession, dir: String): DataFrame = {
-    GeoRadiusPushdown.install(spark)
-    val t = Tables(spark, dir)
+  def geoRadiusSearch(t: Tables): DataFrame = {
+    GeoRadiusPushdown.install(t.spark)
     val p = t.events.select(
       col("event_type"),
       get_json_object(col("props"), "$.k").cast("double").as("lat"),
@@ -87,8 +86,7 @@ object Pipeline35 {
     * pair width is bounded by per-part line counts, and AQE's skew
     * join splits a hot part. Quantities are exact BIGINTs end to end.
     */
-  def qFifoAllocation(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def qFifoAllocation(t: Tables): DataFrame = {
     val w = Window.partitionBy(col("l_partkey"))
       .orderBy(col("l_shipdate"), col("l_orderkey"), col("l_linenumber"))
     def side(flagSupply: Boolean) = t.lineitem
@@ -166,8 +164,7 @@ object Pipeline35 {
     * decile-bounded). Lift is one fixed-parse-tree double expression
     * over exact integer counts, 4 dp.
     */
-  def qDecileLift(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def qDecileLift(t: Tables): DataFrame = {
     val perCust = t.orders
       .groupBy(col("o_custkey"))
       .agg(sum(expr("CAST(round(o_totalprice * 100) AS BIGINT)")).as("cents"),

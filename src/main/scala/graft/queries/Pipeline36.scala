@@ -2,7 +2,7 @@ package graft.queries
 
 import graft.Tables
 import graft.operators.Similarity
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -20,8 +20,8 @@ object Pipeline36 {
     * score array is already on every assigned row; no explode, no
     * per-vector window — the only exchange is the k-row aggregate).
     */
-  def simSilhouette(spark: SparkSession, dir: String): DataFrame =
-    Similarity.silhouette(Tables(spark, dir).embeddings, "vec_id", "embedding",
+  def simSilhouette(t: Tables): DataFrame =
+    Similarity.silhouette(t.embeddings, "vec_id", "embedding",
       k = 4, iters = 2)
 
   val simSilhouetteSql: String =
@@ -64,8 +64,7 @@ object Pipeline36 {
     * p-vectors broadcast — the 4-channel removal sweep costs
     * iteration count, not corpus passes. At 100 TB: identical.
     */
-  def qMarkovRemoval(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def qMarkovRemoval(t: Tables): DataFrame = {
     val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
     val base = t.events
       .select(col("user_id"), col("ts"), col("event_id"),

@@ -2,7 +2,7 @@ package graft.queries
 
 import graft.Tables
 import graft.functions.{TopKAgg, WordBigrams}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -32,8 +32,8 @@ object Pipeline37 {
     * second materialization barrier; no N² anywhere; the top-10s
     * are TakeOrdered (heap per partition), never a global window.
     */
-  def qHits(spark: SparkSession, dir: String): DataFrame = {
-    val edges = GraphBase.purchaseEdges(spark, dir)
+  def qHits(t: Tables): DataFrame = {
+    val edges = GraphBase.purchaseEdges(t)
     // Half-step: authorities from hub scores (or hubs from authority
     // scores): join edges to the opposite side's normalized scores,
     // sum per node, renormalize. The checkpoint sits on the RAW sums;
@@ -106,8 +106,7 @@ object Pipeline37 {
     * operator path demonstrated end-to-end. Times travel as exact
     * epoch micros so both sides share one orderable type.
     */
-  def qAsofJoinNative(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def qAsofJoinNative(t: Tables): DataFrame = {
     val ordersByDay = t.orders
       .groupBy(col("o_custkey"),
         expr("unix_micros(CAST(o_orderdate AS TIMESTAMP))").as("odate_us"))
@@ -148,8 +147,7 @@ object Pipeline37 {
     * oracle reproduces it bit-for-bit; the spec bounds its error
     * against the E19 exact matrix.
     */
-  def ddKmvOverlap(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def ddKmvOverlap(t: Tables): DataFrame = {
     val k = 256
     val keyExpr =
       """(aggregate(transform(split(bigram, ''), c -> CAST(ascii(c) AS BIGINT)),

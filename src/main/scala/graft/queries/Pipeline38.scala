@@ -2,7 +2,7 @@ package graft.queries
 
 import graft.Tables
 import graft.operators.GlobalRank
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -27,8 +27,7 @@ object Pipeline38 {
     * to 100-row tables before the join. Ties break on event_id, so
     * every bucket edge is deterministic in both engines.
     */
-  def qQuantileNormalize(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def qQuantileNormalize(t: Tables): DataFrame = {
     val base = t.events.select(col("event_type"), col("event_id"), col("value"))
     val wSrc = Window.partitionBy(col("event_type"))
       .orderBy(col("value"), col("event_id"))
@@ -84,8 +83,7 @@ object Pipeline38 {
     * exchange is the (type, cell) map-side-combined count. At
     * 100 TB identical — the classic render-side aggregation.
     */
-  def geoHexbin(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def geoHexbin(t: Tables): DataFrame = {
     val base = t.events.select(col("event_type"),
       col("value").as("x"),
       get_json_object(col("props"), "$.k").cast("double").as("y"))

@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.Tables
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Round-8 extension batch 34: hashing-trick featurization and
@@ -22,8 +22,7 @@ object Pipeline39 {
     * exchange is the (doc, dim)-keyed map-side-combined sum, output
     * width ≤ 64 rows per document by construction.
     */
-  def txFeatureHashing(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def txFeatureHashing(t: Tables): DataFrame = {
     val hashExpr =
       """(aggregate(transform(split(tok, ''), c -> CAST(ascii(c) AS BIGINT)),
         |  CAST(7 AS BIGINT), (acc, c) -> (acc * 31 + c) % 1000000007)
@@ -72,10 +71,10 @@ object Pipeline39 {
     * edge set on its own key, and the final top-20 is TakeOrdered.
     * Exact integers end to end.
     */
-  def qLinkPrediction(spark: SparkSession, dir: String): DataFrame = {
+  def qLinkPrediction(t: Tables): DataFrame = {
     // Shared session-materialized edge set (GraphBase convention);
     // already checkpointed there.
-    val edges = GraphBase.coPurchasePairs(spark, dir).select(col("u"), col("v"))
+    val edges = GraphBase.coPurchasePairs(t).select(col("u"), col("v"))
     val adj = edges.select(col("u").as("node"), col("v").as("nbr"))
       .unionAll(edges.select(col("v").as("node"), col("u").as("nbr")))
     val deg = adj.groupBy(col("node")).agg(count(lit(1)).as("deg"))

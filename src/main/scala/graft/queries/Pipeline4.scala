@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.Tables
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -31,8 +31,8 @@ object Pipeline4 {
     * shuffle is the (source, bucket) one, and bucket width (not
     * source count) bounds every sorted partition.
     */
-  def smTokenBudgetMix(spark: SparkSession, dir: String): DataFrame =
-    tokenBudgetMix(Tables(spark, dir).documents, budget = 150L, bucketWidth = 64L)
+  def smTokenBudgetMix(t: Tables): DataFrame =
+    tokenBudgetMix(t.documents, budget = 150L, bucketWidth = 64L)
 
   /** Library form over any (doc_id, source, text) frame. */
   def tokenBudgetMix(docs: DataFrame, budget: Long, bucketWidth: Long): DataFrame = {
@@ -111,8 +111,8 @@ object Pipeline4 {
     * stays one reducer's worth (pinned at 32 here for oracle
     * determinism; a 100 TB caller passes nShards ≈ rows / 10M).
     */
-  def smEpochShuffle(spark: SparkSession, dir: String): DataFrame =
-    epochShuffle(Tables(spark, dir).documents, epochs = 3, nShards = 32)
+  def smEpochShuffle(t: Tables): DataFrame =
+    epochShuffle(t.documents, epochs = 3, nShards = 32)
 
   /** Library form over any frame with a stable long id column. */
   def epochShuffle(docs: DataFrame, epochs: Int, nShards: Int): DataFrame = {

@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.Tables
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -31,8 +31,7 @@ object Pipeline40 {
     * signed long — beyond that, emit the three raw aggregates and
     * divide in the reader.
     */
-  def qRocAuc(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def qRocAuc(t: Tables): DataFrame = {
     val g = t.documents
       .groupBy(col("source"), col("n_chars"))
       .agg(
@@ -93,8 +92,7 @@ object Pipeline40 {
     * reuses the compacted table, so nothing corpus-sized shuffles
     * twice.
     */
-  def qWinsorize(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def qWinsorize(t: Tables): DataFrame = {
     val c = t.events
       .select(col("event_type"),
         expr("CAST(round(value * 100) AS BIGINT)").as("cents"))
@@ -164,8 +162,7 @@ object Pipeline40 {
     * not events; the error-side and real-side rollups are plain
     * map-side-combined aggs joined user-keyed.
     */
-  def qImputeMedian(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def qImputeMedian(t: Tables): DataFrame = {
     val ev = t.events.select(col("user_id"), col("event_type"),
       expr("CAST(round(value * 100) AS BIGINT)").as("cents"))
     val nonerr = ev.filter(col("event_type") =!= "error")

@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.Tables
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -29,8 +29,7 @@ object Pipeline41 {
     * the posting window only ever sorts the 15 selected terms'
     * chains (low-df by construction), never a stopword chain.
     */
-  def txInvertedIndex(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def txInvertedIndex(t: Tables): DataFrame = {
     val tf = t.documents
       .select(col("doc_id").as("doc"),
         explode(split(lower(trim(col("text"))), "\\s+")).as("term"))
@@ -90,8 +89,7 @@ object Pipeline41 {
     * bigram explode + groupBy. Model cardinality is bigram-TYPE
     * bounded (≤ vocab²), never corpus-sized.
     */
-  private def knModel(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  private def knModel(t: Tables): DataFrame = {
     val types = t.documents
       .select(explode(graft.functions.WordBigrams(col("text"))).as("bigram"))
       .groupBy(col("bigram")).agg(count(lit(1)).as("c12"))
@@ -114,8 +112,8 @@ object Pipeline41 {
           .as("pkn_fx"))
   }
 
-  def txKnBigram(spark: SparkSession, dir: String): DataFrame =
-    knModel(spark, dir)
+  def txKnBigram(t: Tables): DataFrame =
+    knModel(t)
       .orderBy(col("c12").desc, col("w1"), col("w2")).limit(20)
       .select(col("w1"), col("w2"), col("c12"), col("pkn_fx"))
 
@@ -163,11 +161,10 @@ object Pipeline41 {
     * (broadcast when the vocab is small, shuffle-keyed otherwise —
     * AQE picks) and ONE map-side-combined per-doc agg.
     */
-  def txKnLogprob(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def txKnLogprob(t: Tables): DataFrame = {
     val inst = t.documents.select(col("doc_id"),
       explode(graft.functions.WordBigrams(col("text"))).as("bigram"))
-    inst.join(knModel(spark, dir).select(col("bigram"), col("pkn_fx")), "bigram")
+    inst.join(knModel(t).select(col("bigram"), col("pkn_fx")), "bigram")
       .select(col("doc_id"),
         expr("CAST(round(-ln(pkn_fx / 1000000.0) * 10000) AS BIGINT)").as("neg_fx"))
       .groupBy(col("doc_id"))

@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.Tables
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -29,8 +29,7 @@ object Pipeline42 {
     * source) and never sorts a partition (the E27 heap convention;
     * a row_number window would sort every source end-to-end).
     */
-  def smWeightedSample(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def smWeightedSample(t: Tables): DataFrame = {
     val keyed = t.documents.select(col("source"), col("doc_id"),
       expr("""ln((((doc_id % 1000000007) * 2654435761 + 1013904223)
              |  % 1000000007 % 1048576 + 1) / 1048577.0)
@@ -77,8 +76,7 @@ object Pipeline42 {
     * convention); the cumulative window runs on the calendar-
     * bounded day table (D74's audited pattern).
     */
-  def qSprt(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def qSprt(t: Tables): DataFrame = {
     val daily = t.events
       .filter(col("user_id") % 2 === 1)
       .groupBy(to_date(col("ts")).as("day"))

@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.Tables
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -32,8 +32,7 @@ object Pipeline43 {
     * `aggregate`-HOF shape — state is 10 longs, iteration count =
     * days, independent of corpus size).
     */
-  def qHoltWinters(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def qHoltWinters(t: Tables): DataFrame = {
     val daily = t.events.select(
       col("event_type"),
       expr("unix_micros(ts) div 86400000000").as("epoch_day"),
@@ -126,9 +125,8 @@ object Pipeline43 {
     * lang) counts, bounded argmax) aggregate the member-sized join,
     * never the corpus.
     */
-  def ddSurvivorship(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
-    val members = LlmQueries.ccLabels(spark, dir)
+  def ddSurvivorship(t: Tables): DataFrame = {
+    val members = LlmQueries.ccLabels(t)
       .join(t.documents, col("node") === col("doc_id"))
     val base = members.groupBy(col("component"))
       .agg(

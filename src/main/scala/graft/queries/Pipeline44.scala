@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.Tables
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -29,8 +29,7 @@ object Pipeline44 {
     * When the site table outgrows a literal/broadcast, the C6
     * grid-cell equi-join bounds candidates first.
     */
-  def geoKnn(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def geoKnn(t: Tables): DataFrame = {
     val sites = t.nation.select(
         col("n_nationkey").cast("long").as("site_id"),
         expr("CAST((n_nationkey * 37) % 127 AS DOUBLE)").as("sx"),

@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.Tables
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Round-8 extension batch 42: span-level decontamination and
@@ -26,8 +26,8 @@ object Pipeline45 {
     * one map-side-combined agg on (train, eval) keys. Same join
     * key discipline as E9 — at 100 TB the eval side broadcasts.
     */
-  def ddDecontaminateSpans(spark: SparkSession, dir: String): DataFrame = {
-    val docs = Tables(spark, dir).documents
+  def ddDecontaminateSpans(t: Tables): DataFrame = {
+    val docs = t.documents
     def toks(c: org.apache.spark.sql.Column) =
       split(lower(trim(c)), "\\s+")
     val train = docs.filter(pmod(col("doc_id"), lit(97)) =!= 0)
@@ -79,8 +79,7 @@ object Pipeline45 {
     * Scale shape: two map-side-combined max aggregates (per type,
     * global) — nothing wider than |types| rows ever moves.
     */
-  def qFreshness(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def qFreshness(t: Tables): DataFrame = {
     val ev = t.events.select(col("event_type"),
       expr("unix_micros(ts)").as("us"))
     val per = ev.groupBy(col("event_type"))

@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.Tables
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Round-8 extension batch 43: mix-vs-rate decomposition — the
@@ -27,8 +27,7 @@ object Pipeline46 {
     * type against the 2-row period totals broadcast — everything
     * after the collapse is |types|-bounded.
     */
-  def qMixDecompose(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def qMixDecompose(t: Tables): DataFrame = {
     // ONE corpus exchange: collapse to (type, day) count/sum cells;
     // the period split, both period rollups and the totals all run
     // on the calendar×types-bounded cell table.

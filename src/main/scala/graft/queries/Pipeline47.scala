@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.Tables
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -26,8 +26,7 @@ object Pipeline47 {
     * window and the weekday rollup run on the calendar-bounded
     * table (≤ types × days rows).
     */
-  def qSeasonalDecompose(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def qSeasonalDecompose(t: Tables): DataFrame = {
     val daily = t.events.select(
       col("event_type"),
       expr("unix_micros(ts) div 86400000000").as("day"),
@@ -82,8 +81,7 @@ object Pipeline47 {
     * only days where BOTH forecasters have history score (fair
     * comparison on the identical support set).
     */
-  def qBacktestMae(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def qBacktestMae(t: Tables): DataFrame = {
     val daily = t.events.select(
       col("event_type"),
       expr("unix_micros(ts) div 86400000000").as("day"),

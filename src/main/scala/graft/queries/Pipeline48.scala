@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.Tables
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Round-8 extension batch 45: index numbers and term burstiness —
@@ -31,8 +31,7 @@ object Pipeline48 {
     * key; the half-pivot, matched-basket filter and the three
     * index sums all run on the parts-bounded table.
     */
-  def qPriceIndex(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def qPriceIndex(t: Tables): DataFrame = {
     val shipType = t.lineitem.schema("l_shipdate").dataType
     val li = t.lineitem
       .join(broadcast(t.part.select(col("p_partkey"), col("p_brand"))),
@@ -130,8 +129,7 @@ object Pipeline48 {
     * per-term moment agg on the compacted table, top-10 by df via
     * TakeOrdered, N as a 1-row broadcast.
     */
-  def txBurstiness(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def txBurstiness(t: Tables): DataFrame = {
     val tf = t.documents
       .select(col("doc_id"),
         explode(split(lower(trim(col("text"))), "\\s+")).as("term"))

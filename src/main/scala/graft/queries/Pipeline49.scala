@@ -2,7 +2,7 @@ package graft.queries
 
 import graft.Tables
 import graft.operators.GlobalRank
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -29,8 +29,7 @@ object Pipeline49 {
     * cumulative window runs on the 10-row decile table
     * (allowlisted, constant-size).
     */
-  def qUpliftQini(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def qUpliftQini(t: Tables): DataFrame = {
     val users = t.events
       .groupBy(col("user_id"))
       .agg(
@@ -96,15 +95,15 @@ object Pipeline49 {
     * all-pairs); the metric join is pair-keyed on two already-
     * near-dup-sized tables; output is ONE row.
     */
-  def ddBlockingEval(spark: SparkSession, dir: String): DataFrame = {
-    val exact = LlmQueries.ngramPairs(spark, dir).select(col("doc_a"), col("doc_b"))
+  def ddBlockingEval(t: Tables): DataFrame = {
+    val exact = LlmQueries.ngramPairs(t).select(col("doc_a"), col("doc_b"))
     val cand = graft.operators.Dedup
-      .minhashLsh(Tables(spark, dir).documents, "text", "doc_id")
+      .minhashLsh(t.documents, "text", "doc_id")
       .select(col("doc_a"), col("doc_b"))
     val nE = exact.count()
     val nC = cand.count()
     val nH = exact.join(cand, Seq("doc_a", "doc_b")).count()
-    import spark.implicits._
+    import t.spark.implicits._
     Seq((nE, nC, nH))
       .toDF("n_exact", "n_cand", "n_hit")
       .select(col("n_exact"), col("n_cand"), col("n_hit"),

@@ -2,7 +2,7 @@ package graft.queries
 
 import graft.Tables
 import graft.operators.TextOps
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Round-8 extension batch 2: corpus-curation surfaces from the
@@ -29,8 +29,8 @@ object Pipeline5 {
     * Both engines compare the ROUNDED ratios, so boundary decisions
     * cannot diverge on the last double ulp.
     */
-  def txGopherRules(spark: SparkSession, dir: String): DataFrame =
-    gopherRules(Tables(spark, dir).documents)
+  def txGopherRules(t: Tables): DataFrame =
+    gopherRules(t.documents)
 
   /** The four Gopher signals over a text column, as named columns —
     * ratios are ROUNDED before any comparison so both engines make
@@ -108,12 +108,12 @@ object Pipeline5 {
     * larger hashed feature space (1e5 buckets) still broadcasts as a
     * sub-megabyte literal.
     */
-  def smImportanceWeight(spark: SparkSession, dir: String): DataFrame = {
-    val nonEmpty = Tables(spark, dir).documents
+  def smImportanceWeight(t: Tables): DataFrame = {
+    val nonEmpty = t.documents
       .filter(length(trim(col("text"))) > 0)
     nonEmpty.select(
       col("doc_id"), col("lang"),
-      importanceScore(cachedModel(spark, dir), 64, col("text")).as("weight"))
+      importanceScore(cachedModel(t), 64, col("text")).as("weight"))
   }
 
   /** Session-scoped model memo (same immutable-sf-dir contract as
@@ -121,10 +121,10 @@ object Pipeline5 {
     * and the M11 composed report all score under ONE fitted model —
     * fitting it once per (session, dir) instead of per invocation.
     */
-  private def cachedModel(spark: SparkSession, dir: String): Array[Double] =
-    graft.util.SessionStage.value(spark, dir, "importance_model")(
+  private def cachedModel(t: Tables): Array[Double] =
+    graft.util.SessionStage.value(t, "importance_model")(
       importanceModel(
-        Tables(spark, dir).documents.filter(length(trim(col("text"))) > 0),
+        t.documents.filter(length(trim(col("text"))) > 0),
         targetSource = "src0", nBuckets = 64))
 
   private def bucketCol(w: Column, nBuckets: Int): Column =
@@ -227,8 +227,8 @@ object Pipeline5 {
     * (per-partition heaps + a k-row driver merge) — no global sort
     * exchange, k bounds driver memory.
     */
-  def smImportanceResample(spark: SparkSession, dir: String): DataFrame = {
-    val base = smImportanceWeight(spark, dir)
+  def smImportanceResample(t: Tables): DataFrame = {
+    val base = smImportanceWeight(t)
     val P = 1000000007L
     val mix = (pmod(col("doc_id"), lit(P)) * lit(2654435761L) + lit(1013904223L)) % lit(P)
     val u = (mix.cast("double") + lit(0.5)) / lit(P.toDouble)
@@ -271,9 +271,8 @@ object Pipeline5 {
     * pairs/CC cost itself is the E2/E4/E6 bucketed path, O(log n)
     * rounds.
     */
-  def ddSoftDedup(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
-    val labels = LlmQueries.ccLabels(spark, dir)
+  def ddSoftDedup(t: Tables): DataFrame = {
+    val labels = LlmQueries.ccLabels(t)
     val sizes = labels.groupBy(col("component"))
       .agg(count(lit(1)).as("comp_size"))
     val wtab = labels.join(broadcast(sizes), Seq("component"))
@@ -319,8 +318,8 @@ object Pipeline5 {
     * counts aggregate map-side again. Two exchanges total: one on
     * bigram, one tiny on (src_a, src_b). Never all-pairs over docs.
     */
-  def ddSourceOverlap(spark: SparkSession, dir: String): DataFrame =
-    sourceOverlap(Tables(spark, dir).documents)
+  def ddSourceOverlap(t: Tables): DataFrame =
+    sourceOverlap(t.documents)
 
   /** Library form over any (source, text) frame. */
   def sourceOverlap(docs: DataFrame): DataFrame = {
@@ -367,11 +366,10 @@ object Pipeline5 {
     * the only corpus exchange is the final 20-row source rollup. No
     * corpus-sized join anywhere.
     */
-  def pipeCurateCorpus(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def pipeCurateCorpus(t: Tables): DataFrame = {
     val docs = t.documents.filter(length(trim(col("text"))) > 0)
-    val lr = cachedModel(spark, dir)
-    val labels = LlmQueries.ccLabels(spark, dir)
+    val lr = cachedModel(t)
+    val labels = LlmQueries.ccLabels(t)
     val sizes = labels.groupBy(col("component"))
       .agg(count(lit(1)).as("comp_size"))
     val wtab = labels.join(broadcast(sizes), Seq("component"))

@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.Tables
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -25,8 +25,7 @@ object Pipeline50 {
     * (map-side combined); margins re-aggregate the cell table;
     * everything after is vocabulary-bounded.
     */
-  def qContingency(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def qContingency(t: Tables): DataFrame = {
     val cells = t.documents
       .groupBy(col("lang"), col("source"))
       .agg(count(lit(1)).as("obs"))
@@ -77,8 +76,7 @@ object Pipeline50 {
     * key; map-side integer segment math; one map-side-combined
     * rollup.
     */
-  def geoSpeedAudit(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def geoSpeedAudit(t: Tables): DataFrame = {
     val pts = t.events.select(
       col("user_id"), col("event_id"),
       expr("unix_micros(ts)").as("us"),

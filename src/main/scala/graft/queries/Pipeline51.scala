@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.Tables
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -25,9 +25,8 @@ object Pipeline51 {
     * the member⋈documents join and one per-source rollup of the
     * corpus (map-side combined).
     */
-  def ddDedupReport(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
-    val labels = LlmQueries.ccLabels(spark, dir) // (node, component)
+  def ddDedupReport(t: Tables): DataFrame = {
+    val labels = LlmQueries.ccLabels(t) // (node, component)
     val docs = t.documents.select(col("doc_id"), col("source"))
     val perSource = docs.groupBy(col("source")).agg(count(lit(1)).as("n_docs"))
     val members = docs.join(labels, col("doc_id") === col("node"))
@@ -82,8 +81,7 @@ object Pipeline51 {
     * before any window, so the cumulative walk touches at most
     * |priorities| × |distinct lags| rows.
     */
-  def qCycleTime(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def qCycleTime(t: Tables): DataFrame = {
     val shipT = t.lineitem.schema("l_shipdate").dataType
     val ordT = t.orders.schema("o_orderdate").dataType
     val lags = t.lineitem

@@ -2,7 +2,7 @@ package graft.queries
 
 import graft.Tables
 import graft.operators.GlobalRank
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -25,8 +25,7 @@ object Pipeline52 {
     * Scale shape: one corpus collapse to per-part revenue, the
     * D62/D92 tiling path, then constant-size work.
     */
-  def qAbc(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def qAbc(t: Tables): DataFrame = {
     val perPart = t.lineitem
       .groupBy(col("l_partkey"))
       .agg(sum(expr("CAST(round(l_extendedprice * 100) AS BIGINT)")).as("cents"))
@@ -87,14 +86,14 @@ object Pipeline52 {
     * hash-fails against `count(*)`). The observability surface is
     * thereby oracle-gated, not just spec-asserted.
     */
-  def stProgressTotal(spark: SparkSession, dir: String): DataFrame = {
-    val (_, m) = graft.streaming.StreamMetrics.withMetrics(spark) { m =>
-      StreamQueries.stWindowedAgg(spark, dir).count()
+  def stProgressTotal(t: Tables): DataFrame = {
+    val (_, m) = graft.streaming.StreamMetrics.withMetrics(t.spark) { m =>
+      StreamQueries.stWindowedAgg(t).count()
       // Every progress event is posted before the stream terminates;
       // listeners receive them on the async bus, so drain it.
-      org.apache.spark.sql.GraftBridge.drainListenerBus(spark)
+      org.apache.spark.sql.GraftBridge.drainListenerBus(t.spark)
     }
-    import spark.implicits._
+    import t.spark.implicits._
     Seq(m.snapshot().map(_.inputRows).sum).toDF("total_input_rows")
   }
 

@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.Tables
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Round-8 extension batch 51: dollar retention and experiment
@@ -24,8 +24,7 @@ object Pipeline53 {
     * the (cohort, offset) rollup is map-side combined; the week-0
     * denominator table is |cohorts| rows.
     */
-  def qNdr(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def qNdr(t: Tables): DataFrame = {
     val weekly = t.events.select(
       col("user_id"),
       expr("unix_micros(ts) div 604800000000").as("week"),
@@ -81,8 +80,7 @@ object Pipeline53 {
     * Scale shape: ONE map-side-combined moment aggregate per type;
     * everything after is |types| rows of integer arithmetic.
     */
-  def qPowerAnalysis(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def qPowerAnalysis(t: Tables): DataFrame =
     t.events
       .select(col("event_type"),
         expr("CAST(round(value * 100) AS BIGINT)").as("c"))
@@ -97,7 +95,6 @@ object Pipeline53 {
         expr("""(2 * 78400 * (s2 div n - (s1 div n) * (s1 div n)))
                | div greatest(((s1 div n) * (s1 div n)) div 100, 1)""".stripMargin)
           .as("req_n_per_arm"))
-  }
 
   val qPowerAnalysisSql: String =
     """WITH m AS (

@@ -2,7 +2,7 @@ package graft.queries
 
 import graft.Tables
 import graft.operators.Whitening
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Round-9 extension batch 56: ZCA whitening as a CORRECTNESS row
@@ -42,8 +42,8 @@ object Pipeline54 {
     * to the driver, and no shuffle exists at all (ExchangeBudget
     * (0, 0)).
     */
-  def simWhitenIdentity(spark: SparkSession, dir: String): DataFrame = {
-    val emb = Tables(spark, dir).embeddings
+  def simWhitenIdentity(t: Tables): DataFrame = {
+    val emb = t.embeddings
     val dim = 64
     val (mean, cov) = Whitening.meanAndCov(emb, "embedding", dim)
     val w = Whitening.zcaMatrix(cov)
@@ -51,7 +51,7 @@ object Pipeline54 {
     // d²-bounded model-sized cells assembled on the driver (the
     // k-means-centroid convention); the corpus-sized work above ran
     // as two fused per-partition Gram passes.
-    import spark.implicits._
+    import t.spark.implicits._
     val rows = for {
       i <- 0 until dim
       j <- i until dim

@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.Tables
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -32,8 +32,7 @@ object Pipeline55 {
     * the calendar-bounded daily table (≤ type_count × days rows) —
     * partitioned by type, never global. Output is type-bounded.
     */
-  def qPageHinkley(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def qPageHinkley(t: Tables): DataFrame = {
     val daily = t.events
       .groupBy(col("event_type"), to_date(col("ts")).as("day"))
       .agg(sum(expr("CAST(round(value * 10000, 0) AS BIGINT)")).as("c"),
@@ -105,8 +104,7 @@ object Pipeline55 {
     * collected prefix sums — the k-means-centroid convention, ~30 k
     * double ops. Output is day-bounded.
     */
-  def qIsotonic(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def qIsotonic(t: Tables): DataFrame = {
     val daily = t.events
       .groupBy(to_date(col("ts")).as("day"))
       .agg(sum(expr("CAST(round(value * 10000, 0) AS BIGINT)")).as("c"),
@@ -137,7 +135,7 @@ object Pipeline55 {
         BigDecimal(y).setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble + 0.0,
         BigDecimal(yhat).setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble + 0.0)
     }
-    import spark.implicits._
+    import t.spark.implicits._
     rows.toDF("day", "y", "yhat")
   }
 

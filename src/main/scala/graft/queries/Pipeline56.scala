@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.Tables
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Round-9 extension batch 59: three graph statistics the D-layer
@@ -15,8 +15,8 @@ import org.apache.spark.sql.functions._
   */
 object Pipeline56 {
 
-  private def undirected(spark: SparkSession, dir: String): DataFrame = {
-    val ef = GraphBase.coPurchasePairs(spark, dir).select(col("u"), col("v"))
+  private def undirected(t: Tables): DataFrame = {
+    val ef = GraphBase.coPurchasePairs(t).select(col("u"), col("v"))
     ef.unionAll(ef.select(col("v").as("u"), col("u").as("v")))
   }
 
@@ -37,8 +37,8 @@ object Pipeline56 {
     * candidates anti-join the edge set; TakeOrdered top-20, never a
     * global window.
     */
-  def qResourceAlloc(spark: SparkSession, dir: String): DataFrame = {
-    val und = undirected(spark, dir)
+  def qResourceAlloc(t: Tables): DataFrame = {
+    val und = undirected(t)
     val deg = und.groupBy(col("u").as("node")).agg(count(lit(1)).as("d"))
     val adj = und.join(deg.withColumnRenamed("node", "u"), Seq("u"))
       .filter(col("d") <= 50)
@@ -46,7 +46,7 @@ object Pipeline56 {
       .join(adj.as("y"), col("x.u") === col("y.u") && col("x.v") < col("y.v"))
       .select(col("x.v").as("a"), col("y.v").as("b"),
         expr("1000000 div x.d").as("contrib"))
-    val ef = GraphBase.coPurchasePairs(spark, dir).select(col("u"), col("v"))
+    val ef = GraphBase.coPurchasePairs(t).select(col("u"), col("v"))
     wedges
       .groupBy(col("a"), col("b"))
       .agg(sum(col("contrib")).as("ra_fx"), count(lit(1)).as("cn"))
@@ -96,8 +96,8 @@ object Pipeline56 {
     * one edge-keyed join + global agg (map-side combined, 1-row
     * reduce). Nothing quadratic, no window.
     */
-  def qAssortativity(spark: SparkSession, dir: String): DataFrame = {
-    val und = undirected(spark, dir)
+  def qAssortativity(t: Tables): DataFrame = {
+    val und = undirected(t)
     val deg = und.groupBy(col("u").as("node")).agg(count(lit(1)).as("d"))
     val xy = und
       .join(deg.select(col("node").as("u"), col("d").as("x")), Seq("u"))
@@ -159,10 +159,9 @@ object Pipeline56 {
     * one brand-keyed agg for d_c, one for e_c (intra edges only) —
     * brand-bounded output, no window, no quadratic step.
     */
-  def qGraphModularity(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
-    val ef = GraphBase.coPurchasePairs(spark, dir).select(col("u"), col("v"))
-    val und = undirected(spark, dir)
+  def qGraphModularity(t: Tables): DataFrame = {
+    val ef = GraphBase.coPurchasePairs(t).select(col("u"), col("v"))
+    val und = undirected(t)
     val brand = t.part.select(col("p_partkey").as("node"), col("p_brand").as("brand"))
     val deg = und.groupBy(col("u").as("node")).agg(count(lit(1)).as("d"))
     val dSum = deg.join(brand, Seq("node"))

@@ -2,7 +2,7 @@ package graft.queries
 
 import graft.Tables
 import graft.operators.GlobalRank
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Round-9 extension batch 60: harmonic centrality, Spearman rank
@@ -28,14 +28,14 @@ object Pipeline57 {
     * edge list + an anti-join vs the visited set (checkpointed per
     * round, never edge×edge); the reached set is ≤ 5·nodes.
     */
-  def qHarmonicCentrality(spark: SparkSession, dir: String): DataFrame = {
-    val ef = GraphBase.coPurchasePairs(spark, dir).select(col("u"), col("v"))
+  def qHarmonicCentrality(t: Tables): DataFrame = {
+    val ef = GraphBase.coPurchasePairs(t).select(col("u"), col("v"))
     val und = ef.unionAll(ef.select(col("v").as("u"), col("u").as("v")))
       .localCheckpoint(true)
     val deg = und.groupBy(col("u").as("node")).agg(count(lit(1)).as("d"))
     val seeds = deg.orderBy(col("d").desc, col("node").asc).limit(5)
       .select(col("node")).collect().map(_.getLong(0))
-    import spark.implicits._
+    import t.spark.implicits._
     var visited = seeds.toSeq.toDF("seed")
       .select(col("seed"), col("seed").as("node"), lit(0).as("dist"))
       .localCheckpoint(true)
@@ -92,8 +92,7 @@ object Pipeline57 {
     * NEVER a single-task global window (the D75/D92 machinery);
     * the d² reduce is one map-side-combined global agg.
     */
-  def qSpearman(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def qSpearman(t: Tables): DataFrame = {
     val m = t.orders.groupBy(col("o_custkey").as("ck"))
       .agg(count(lit(1)).as("cnt"),
         sum(expr("CAST(round(o_totalprice * 100, 0) AS BIGINT)")).as("cents"))
@@ -147,8 +146,7 @@ object Pipeline57 {
     * (map-only), ONE 4-cell conditional aggregate. No join, no
     * window, nothing second-pass.
     */
-  def qCohensKappa(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def qCohensKappa(t: Tables): DataFrame = {
     val sig = Pipeline5.gopherSignalCols(col("text"))
     val sigMap = sig.toMap
     val gopher = Pipeline5.gopherKeep(sigMap("n_words"), sigMap("mean_word_len"),

@@ -3,7 +3,7 @@ package graft.queries
 import graft.Tables
 import graft.functions.TopKAgg
 import graft.operators.Sampling
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Round-9 extension batch 61: Kendall rank correlation and the
@@ -31,8 +31,7 @@ object Pipeline58 {
     * customers); the self-join is 120²/2 pairs × nations, corpus-
     * independent; metrics come from one orders-keyed agg.
     */
-  def qKendallTau(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def qKendallTau(t: Tables): DataFrame = {
     val m = t.orders.groupBy(col("o_custkey").as("ck"))
       .agg(count(lit(1)).as("cnt"),
         sum(expr("CAST(round(o_totalprice * 100, 0) AS BIGINT)")).as("cents"))
@@ -123,8 +122,7 @@ object Pipeline58 {
     * map-side combined; global totals ride a 1-row broadcast
     * crossJoin (the repo's totals pattern). Nation-bounded output.
     */
-  def qTheilIndex(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def qTheilIndex(t: Tables): DataFrame = {
     val cust = t.orders.groupBy(col("o_custkey").as("ck"))
       .agg(sum(expr("CAST(round(o_totalprice * 100, 0) AS BIGINT)")).as("x"))
       .join(t.customer.select(col("c_custkey").as("ck"),

@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.Tables
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -16,8 +16,8 @@ object Pipeline59 {
   /** The shared daily series: per-day mean value as exact ×10⁴ cents
     * (floor-div — the D114 quantization), calendar-bounded.
     */
-  private def dailyMean(spark: SparkSession, dir: String): DataFrame =
-    Tables(spark, dir).events
+  private def dailyMean(t: Tables): DataFrame =
+    t.events
       .groupBy(to_date(col("ts")).as("day"))
       .agg(sum(expr("CAST(round(value * 10000, 0) AS BIGINT)")).as("c"),
         count(lit(1)).as("n"))
@@ -39,8 +39,8 @@ object Pipeline59 {
     * pair join and tie groups run on the ~31-row daily table. No
     * window at all.
     */
-  def qMannKendall(spark: SparkSession, dir: String): DataFrame = {
-    val daily = dailyMean(spark, dir).select(col("day"), col("m")).localCheckpoint(true)
+  def qMannKendall(t: Tables): DataFrame = {
+    val daily = dailyMean(t).select(col("day"), col("m")).localCheckpoint(true)
     val s = daily.as("a").join(daily.as("b"), col("a.day") < col("b.day"))
       .agg(sum(signum(col("b.m") - col("a.m")).cast("long")).as("s"),
         count(lit(1)).as("n_pairs"))
@@ -94,8 +94,8 @@ object Pipeline59 {
     * with that argument; the corpus-sized work is the one day-keyed
     * exact agg.
     */
-  def qRunsTest(spark: SparkSession, dir: String): DataFrame = {
-    val daily = dailyMean(spark, dir).select(col("day"), col("m")).localCheckpoint(true)
+  def qRunsTest(t: Tables): DataFrame = {
+    val daily = dailyMean(t).select(col("day"), col("m")).localCheckpoint(true)
     val byVal = Window.orderBy(col("m"), col("day"))
     val med = daily.withColumn("rk", row_number().over(byVal))
     val n = daily.count()

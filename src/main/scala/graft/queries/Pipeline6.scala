@@ -2,7 +2,7 @@ package graft.queries
 
 import graft.Tables
 import graft.operators.{Geo, HeavyHitters, RuntimeFilter, TextOps, Urls}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Round-8 extension batch 3: runtime-filtered joins, sketch-guided
@@ -20,8 +20,7 @@ object Pipeline6 {
     * exact equi-join that follows erases the bloom's false
     * positives, which is why the plain-join oracle matches exactly.
     */
-  def qBloomJoin(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def qBloomJoin(t: Tables): DataFrame = {
     val dim = t.orders
       .filter(col("o_orderpriority") === "1-URGENT")
       .select(col("o_orderkey"), col("o_orderstatus"))
@@ -50,8 +49,8 @@ object Pipeline6 {
     * threshold; CMS never undercounts, so the output is exactly the
     * oracle's GROUP BY … HAVING.
     */
-  def qHeavyHitters(spark: SparkSession, dir: String): DataFrame = {
-    val li = Tables(spark, dir).lineitem
+  def qHeavyHitters(t: Tables): DataFrame = {
+    val li = t.lineitem
     val key = when(pmod(col("l_orderkey"), lit(3)) === 0,
       pmod(col("l_partkey"), lit(16))).otherwise(col("l_partkey"))
     HeavyHitters.exact(li, key, 0.005)
@@ -100,8 +99,8 @@ object Pipeline6 {
     * key — at 100 TB this is the standard crawl-dedup first pass,
     * upstream of any content hashing.
     */
-  def ddUrlDedup(spark: SparkSession, dir: String): DataFrame =
-    Tables(spark, dir).documents
+  def ddUrlDedup(t: Tables): DataFrame =
+    t.documents
       .select(col("doc_id"), Urls.canonicalizeUrl(syntheticUrl).as("canon_url"))
       .groupBy(col("canon_url"))
       .agg(count(lit(1)).as("n_dups"), min(col("doc_id")).as("keep_doc"))
@@ -155,8 +154,8 @@ object Pipeline6 {
     * spatial bucketing / partition key for a 100 TB geo table
     * without any geometry library on the executors.
     */
-  def geoGeohash(spark: SparkSession, dir: String): DataFrame = {
-    val ev = Tables(spark, dir).events
+  def geoGeohash(t: Tables): DataFrame = {
+    val ev = t.events
     val lon = col("value") / 500.0 * 360.0 - 180.0
     val lat = get_json_object(col("props"), "$.k").cast("double") / 100.0 * 180.0 - 90.0
     ev.select(col("event_id"), Geo.geohash(lat, lon).as("gh"))
@@ -198,8 +197,8 @@ object Pipeline6 {
     * ratios are ROUNDED before the score so both engines make
     * identical boundary decisions (the Pipeline5 convention).
     */
-  def txReadability(spark: SparkSession, dir: String): DataFrame =
-    readability(Tables(spark, dir).documents)
+  def txReadability(t: Tables): DataFrame =
+    readability(t.documents)
 
   /** The count columns behind the Flesch score, over a text column —
     * shared by the registry row and the M12 corpus card.

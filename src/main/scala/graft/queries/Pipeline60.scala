@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.Tables
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Round-9 extension batch 63: vocabulary coverage curve, Good–Turing
@@ -15,8 +15,8 @@ object Pipeline60 {
   /** Lowercased whitespace unigrams with corpus counts — the shared
     * input of G41/G42 (the G11 tokenization convention).
     */
-  private def unigrams(spark: SparkSession, dir: String): DataFrame =
-    Tables(spark, dir).documents
+  private def unigrams(t: Tables): DataFrame =
+    t.documents
       .select(explode(split(lower(trim(col("text"))), "\\s+")).as("w"))
       .groupBy(col("w")).agg(count(lit(1)).as("cnt"))
 
@@ -34,12 +34,12 @@ object Pipeline60 {
     * combined count; one global long sum for the denominator; one
     * heap-limited top-k. Output is 3 rows at any corpus size.
     */
-  def txVocabCoverage(spark: SparkSession, dir: String): DataFrame = {
-    val uni = unigrams(spark, dir).localCheckpoint(true)
+  def txVocabCoverage(t: Tables): DataFrame = {
+    val uni = unigrams(t).localCheckpoint(true)
     val total = uni.agg(sum(col("cnt"))).head().getLong(0)
     val top = uni.orderBy(col("cnt").desc, col("w").asc).limit(10000)
       .select(col("cnt")).collect().map(_.getLong(0))
-    import spark.implicits._
+    import t.spark.implicits._
     Seq(100, 1000, 10000).map { k =>
       val covered = top.take(k).sum
       (k.toLong, covered, total, covered * 1000000L / total)
@@ -75,13 +75,13 @@ object Pipeline60 {
     * map-side combined); the N_r table is count-bounded (≤ distinct
     * frequencies); output is 6 rows.
     */
-  def txGoodTuring(spark: SparkSession, dir: String): DataFrame = {
-    val uni = unigrams(spark, dir).localCheckpoint(true)
+  def txGoodTuring(t: Tables): DataFrame = {
+    val uni = unigrams(t).localCheckpoint(true)
     val nr = uni.groupBy(col("cnt").as("r")).agg(count(lit(1)).as("n_r"))
       .filter(col("r") <= 6)
     val total = uni.agg(sum(col("cnt"))).head().getLong(0)
     val byR = nr.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    import spark.implicits._
+    import t.spark.implicits._
     val rows = (0L to 5L).map { r =>
       if (r == 0L) {
         val n1 = byR.getOrElse(1L, 0L)
@@ -128,8 +128,7 @@ object Pipeline60 {
     * division, 4 dp (null when b+c = 0 — no disagreements, nothing
     * to test). One map-only scan, one 2-cell agg.
     */
-  def qMcnemar(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def qMcnemar(t: Tables): DataFrame = {
     val sig = Pipeline5.gopherSignalCols(col("text"))
     val sigMap = sig.toMap
     val gopher = Pipeline5.gopherKeep(sigMap("n_words"), sigMap("mean_word_len"),

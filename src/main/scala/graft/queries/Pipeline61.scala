@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.Tables
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Round-9 extension batch 64: Chao1 vocabulary-richness estimation
@@ -21,8 +21,8 @@ object Pipeline61 {
     * from two nested map-side-combined aggs); the estimate itself is
     * one fixed-order double, 2 dp (the estimator's own precision).
     */
-  def txChao1(spark: SparkSession, dir: String): DataFrame = {
-    val uni = Tables(spark, dir).documents
+  def txChao1(t: Tables): DataFrame = {
+    val uni = t.documents
       .select(explode(split(lower(trim(col("text"))), "\\s+")).as("w"))
       .groupBy(col("w")).agg(count(lit(1)).as("cnt"))
     uni.agg(
@@ -66,8 +66,7 @@ object Pipeline61 {
     * closed-form `(doc_id·10) div (max_id+1)` — no ranking pass;
     * everything after is 10-row-bounded.
     */
-  def txHeapsCurve(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def txHeapsCurve(t: Tables): DataFrame = {
     val maxId = t.documents.agg(max(col("doc_id"))).head().getLong(0)
     val tok = t.documents
       .select(col("doc_id"), explode(split(lower(trim(col("text"))), "\\s+")).as("w"))

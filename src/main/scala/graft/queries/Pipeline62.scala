@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
@@ -66,12 +66,10 @@ object Pipeline62 {
     * payload partition — payload bytes never shuffle (the K6 shard
     * manifest convention); output is 7 small columns per media row.
     */
-  def mmDecodeReal(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def mmDecodeReal(t: Tables): DataFrame =
     Multimodal.decodeImageStats(stagedImages(t, "png"), "doc_id", "payload")
       .select(col("media_id").as("doc_id"), col("width"), col("height"),
         col("n_channels"), col("sum_r"), col("sum_g"), col("sum_b"))
-  }
 
   val mmDecodeRealSql: String =
     """SELECT doc_id,
@@ -96,8 +94,7 @@ object Pipeline62 {
     */
   val JpegMeanTol = 4L
 
-  def mmDecodeJpeg(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def mmDecodeJpeg(t: Tables): DataFrame = {
     val dec = Multimodal.decodeImageStats(stagedImages(t, "jpg"), "doc_id", "payload")
     val base = pmod(col("media_id"), lit(64L))
     val wh = col("width") * col("height")

@@ -2,7 +2,7 @@ package graft.queries
 
 import graft.Tables
 import graft.operators.GlobalRank
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -39,8 +39,7 @@ object Pipeline63 {
     * a cent-keyed join back, one type rollup; the 1-row totals
     * broadcast into the k-row result.
     */
-  def qKruskalWallis(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def qKruskalWallis(t: Tables): DataFrame = {
     val ct = t.events
       .select(col("event_type"), expr(cents).as("c"))
       .groupBy(col("c"), col("event_type"))
@@ -128,8 +127,7 @@ object Pipeline63 {
     * range sort + numPartitions-long offset zip, one |d|-keyed agg,
     * one 1-row rollup. Nothing user-sized ever funnels to a task.
     */
-  def qWilcoxonSignedRank(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def qWilcoxonSignedRank(t: Tables): DataFrame = {
     val pairs = t.events
       .select(col("user_id"), expr(cents).as("c"),
         (dayofmonth(col("ts")) <= 15).as("h1"))
@@ -207,8 +205,7 @@ object Pipeline63 {
     * PARTITIONED by day (k-bounded rows per partition); the rank
     * frame is calendar×k-bounded.
     */
-  def qFriedman(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def qFriedman(t: Tables): DataFrame = {
     val cells = t.events
       .select(to_date(col("ts")).as("day"), col("event_type"), expr(cents).as("c"))
       .groupBy(col("day"), col("event_type"))
@@ -289,8 +286,7 @@ object Pipeline63 {
     * Scale shape: one map-side-combined moment agg over events; the
     * whole BH procedure runs on the k-row family (k = |types|).
     */
-  def qBhFdr(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def qBhFdr(t: Tables): DataFrame = {
     val m = t.events
       .select(col("event_type"), expr(cents).as("c"))
       .groupBy(col("event_type"))

@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.Tables
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Round-10 batch 66: association-strength measures — Cramér's V
@@ -27,8 +27,7 @@ object Pipeline64 {
     * Scale shape: one (lang,source) cell agg; margins and the χ²
     * fold run on the vocabulary-bounded cell table.
     */
-  def qCramersV(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def qCramersV(t: Tables): DataFrame = {
     val cells = t.documents
       .groupBy(col("lang"), col("source"))
       .agg(count(lit(1)).as("obs"))
@@ -87,8 +86,7 @@ object Pipeline64 {
     * Scale shape: one (flag,status) cell agg (map-side combined, 6
     * cells); everything downstream is cell-table math.
     */
-  def qMutualInfo(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def qMutualInfo(t: Tables): DataFrame = {
     val cells = t.lineitem
       .groupBy(col("l_returnflag").as("rf"), col("l_linestatus").as("ls"))
       .agg(count(lit(1)).as("obs"))
@@ -150,8 +148,7 @@ object Pipeline64 {
     * Scale shape: ONE map-side-combined moment aggregate (9 sums);
     * the partialling is 1-row arithmetic.
     */
-  def qPartialCorr(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def qPartialCorr(t: Tables): DataFrame = {
     val m = t.lineitem
       .select(
         expr("CAST(round(l_extendedprice * 100) AS BIGINT)").as("x"),
@@ -236,8 +233,7 @@ object Pipeline64 {
     * Scale shape: ONE user-keyed agg (two boolean max flags per
     * user), one 1-row rollup. Never a distinct per window.
     */
-  def qCaptureRecapture(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def qCaptureRecapture(t: Tables): DataFrame = {
     val flags = t.events
       .select(col("user_id"),
         (dayofmonth(col("ts")) <= 7).as("w1"),

@@ -2,7 +2,7 @@ package graft.queries
 
 import graft.Tables
 import graft.operators.Graph
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Round-10 batch 67: spectral centrality and the degree-law tail —
@@ -28,8 +28,7 @@ object Pipeline65 {
     * distributed power iteration needs; the max-normalizer is a
     * 1-row broadcast folded in-plan.
     */
-  def qEigenCentrality(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def qEigenCentrality(t: Tables): DataFrame = {
     val edges = t.lineitem
       .join(t.orders, col("l_orderkey") === col("o_orderkey"))
       .join(broadcast(t.customer.select(col("c_custkey"), col("c_nationkey"))),
@@ -88,8 +87,7 @@ object Pipeline65 {
     * on the degree-bounded table, one 1-row MLE agg broadcast onto
     * the histogram rows.
     */
-  def qDegreePowerlaw(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def qDegreePowerlaw(t: Tables): DataFrame = {
     val deg = t.orders
       .groupBy(col("o_custkey"))
       .agg(count(lit(1)).as("d"))

@@ -2,7 +2,7 @@ package graft.queries
 
 import graft.Tables
 import graft.operators.Multimodal
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 /** Round-10 batch 68: REAL audio decode (the K2 seam's audio leg,
@@ -57,13 +57,11 @@ object Pipeline66 {
     * partition (payload bytes never shuffle — the K6 convention);
     * output is 7 small columns per media row.
     */
-  def mmAudioWav(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def mmAudioWav(t: Tables): DataFrame =
     Multimodal.decodeAudioStats(stagedWavs(t), "doc_id", "payload")
       .select(col("media_id").as("doc_id"), col("sample_rate"),
         col("n_channels"), col("n_frames"), col("sum_s"), col("sum_sq"),
         col("peak_abs"))
-  }
 
   val mmAudioWavSql: String =
     """SELECT doc_id,
@@ -89,8 +87,7 @@ object Pipeline66 {
     * its 1-row (N, V) rollup broadcast; eval tokens join the vocab
     * on term (the G11 join shape) and collapse per source.
     */
-  def txCrossEntropy(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def txCrossEntropy(t: Tables): DataFrame = {
     val toks = t.documents
       .select(col("doc_id"), col("source"),
         explode(split(lower(trim(col("text"))), "\\s+")).as("term"))

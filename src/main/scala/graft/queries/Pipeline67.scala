@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.Tables
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -25,8 +25,7 @@ object Pipeline67 {
     * Scale shape: ONE user-keyed boolean-flag agg + one 1-row cell
     * rollup; the OR arithmetic is 1-row math.
     */
-  def qOddsRatio(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def qOddsRatio(t: Tables): DataFrame = {
     val flags = t.events
       .groupBy(col("user_id"))
       .agg(
@@ -83,8 +82,7 @@ object Pipeline67 {
     * Scale shape: one map-side-combined two-group moment agg; the
     * TOST is 1-row arithmetic.
     */
-  def qTost(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def qTost(t: Tables): DataFrame = {
     val m = t.events
       .filter(col("event_type").isin("click", "view"))
       .select(col("event_type"), expr(cents).as("c"))
@@ -156,8 +154,7 @@ object Pipeline67 {
     * Scale shape: one filtered 1-row aggregate; parquet row-group
     * stats prune everything outside the two windows.
     */
-  def qPoissonRate(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def qPoissonRate(t: Tables): DataFrame = {
     val x = t.events
       .filter(col("event_type") === "error")
       .agg(
@@ -192,8 +189,7 @@ object Pipeline67 {
     * Scale shape: one (type, day) daily collapse; every window is
     * PARTITIONED by type over the calendar-bounded daily table.
     */
-  def qBollinger(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def qBollinger(t: Tables): DataFrame = {
     val daily = t.events
       .groupBy(col("event_type"), to_date(col("ts")).as("day"))
       .agg(sum(expr(cents)).as("x"))

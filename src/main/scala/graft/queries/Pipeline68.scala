@@ -2,7 +2,7 @@ package graft.queries
 
 import graft.Tables
 import graft.operators.Sampling
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Round-10 batch 70: Dunning log-likelihood-ratio collocations
@@ -25,8 +25,7 @@ object Pipeline68 {
     * vocabulary-bounded margin aggs joined back on their keys, a
     * TakeOrdered top-20 — never a global sort.
     */
-  def txCollocLlr(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def txCollocLlr(t: Tables): DataFrame = {
     val bg = t.documents
       .select(explode(graft.functions.WordBigrams(col("text"))).as("bigram"))
       .select(split(col("bigram"), " ").getItem(0).as("w1"),
@@ -111,8 +110,7 @@ object Pipeline68 {
     * Scale shape: map-only fold assignment; one (fold,type) agg +
     * one fold-keyed user agg joined on the 5-row fold key.
     */
-  def smGroupKfold(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def smGroupKfold(t: Tables): DataFrame = {
     val tagged = t.events
       .select(Sampling.idBucket(col("user_id"), 5).as("fold"),
         col("event_type"), col("user_id"))

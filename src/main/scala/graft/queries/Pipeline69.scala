@@ -2,7 +2,7 @@ package graft.queries
 
 import graft.Tables
 import graft.operators.Graph
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -28,8 +28,7 @@ object Pipeline69 {
     * partitioned windows on the calendar-bounded daily table; one
     * type-keyed moment agg.
     */
-  def qPacf(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def qPacf(t: Tables): DataFrame = {
     val daily = t.events
       .groupBy(col("event_type"), to_date(col("ts")).as("day"))
       .agg(count(lit(1)).cast("double").as("x"))
@@ -121,8 +120,7 @@ object Pipeline69 {
     * arithmetic on the day index; every window is PARTITIONED by
     * (n, block) over the calendar-bounded daily table.
     */
-  def qHurst(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def qHurst(t: Tables): DataFrame = {
     val daily = t.events
       .groupBy(to_date(col("ts")).as("day"))
       .agg(sum(expr("CAST(round(value * 100) AS BIGINT)")).as("x"))
@@ -222,8 +220,7 @@ object Pipeline69 {
     * vocabulary-bounded; per iteration exactly PageRank's two
     * exchanges; TakeOrdered top-20.
     */
-  def txTextrank(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def txTextrank(t: Tables): DataFrame = {
     val bg = t.documents
       .select(explode(graft.functions.WordBigrams(col("text"))).as("b"))
       .select(split(col("b"), " ").getItem(0).as("w1"),
@@ -300,8 +297,7 @@ object Pipeline69 {
     */
   val ResizeMeanTol = 4L
 
-  def mmResizeReal(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def mmResizeReal(t: Tables): DataFrame = {
     val staged = Pipeline62.stagedImages(t, "png")
     val outW = 6
     val outH = 5
@@ -327,7 +323,7 @@ object Pipeline69 {
           }
       }
     }
-    val dec = spark.createDataFrame(rows, schema)
+    val dec = t.spark.createDataFrame(rows, schema)
     // source ramp true mean per channel: base + 64c + (w-1)/2 + (h-1)/2
     val base = pmod(col("doc_id"), lit(64L)).cast("double")
     val srcW = (lit(8L) + pmod(col("doc_id"), lit(9L))).cast("double")

@@ -2,7 +2,7 @@ package graft.queries
 
 import graft.Tables
 import graft.operators.Multimodal
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Round-8 extension batch 4: perceptual-hash media near-dup,
@@ -30,8 +30,8 @@ object Pipeline7 {
     * before the ONE tiny exchange — at 100 TB the shuffle moves
     * kilobytes.
     */
-  def txBpePairStats(spark: SparkSession, dir: String): DataFrame = {
-    val docs = Tables(spark, dir).documents
+  def txBpePairStats(t: Tables): DataFrame = {
+    val docs = t.documents
       .filter(length(col("text")) >= 2)
     docs
       .select(explode(graft.functions.CharPairCounts(col("text"))).as("pc"))
@@ -89,8 +89,8 @@ object Pipeline7 {
     * q_salted_agg device) shows up with the expected pathology while
     * the natural keys read uniform.
     */
-  def qSkewReport(spark: SparkSession, dir: String): DataFrame = {
-    val li = Tables(spark, dir).lineitem
+  def qSkewReport(t: Tables): DataFrame = {
+    val li = t.lineitem
     val hot = when(pmod(col("l_orderkey"), lit(3)) === 0,
       pmod(col("l_partkey"), lit(16))).otherwise(col("l_partkey"))
     skewRow(li, "l_partkey", col("l_partkey"))

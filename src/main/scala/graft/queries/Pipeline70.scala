@@ -2,7 +2,7 @@ package graft.queries
 
 import graft.Tables
 import graft.operators.Multimodal
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 /** Round-10 batch 72: REAL video frame sampling — the K2 seam's
@@ -60,8 +60,7 @@ object Pipeline70 {
     * per-sampled-frame small columns — the "decode only what you
     * sample" economics a 100 TB video corpus requires.
     */
-  def mmVideoFrames(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def mmVideoFrames(t: Tables): DataFrame = {
     val staged = stagedAvis(t)
     val schema = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("doc_id",
@@ -90,7 +89,7 @@ object Pipeline70 {
         }
       }
     }
-    spark.createDataFrame(rows, schema)
+    t.spark.createDataFrame(rows, schema)
   }
 
   val mmVideoFramesSql: String =

@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.Tables
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -27,8 +27,7 @@ object Pipeline71 {
     * calendar-bounded daily table (allowlisted: single global
     * series); one 1-row moment fold.
     */
-  def qNeweyWest(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def qNeweyWest(t: Tables): DataFrame = {
     // Dollars, not cents: the daily-total autocovariances land near
     // 1e11 in cents², where a 4-dp round sits AT double's ulp and
     // forked the two engines on the last digit in bring-up — /100
@@ -107,8 +106,7 @@ object Pipeline71 {
     * the OLS and DF folds are 1-row aggregates; the single lag
     * window runs on the calendar-bounded residual series.
     */
-  def qEngleGranger(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def qEngleGranger(t: Tables): DataFrame = {
     val daily = t.events
       .filter(col("event_type").isin("click", "view"))
       .groupBy(col("event_type"), to_date(col("ts")).as("day"))

@@ -2,7 +2,7 @@ package graft.queries
 
 import graft.Tables
 import graft.operators.Multimodal
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 /** Round-11 batch: REAL DCT perceptual hash (the round-10 verdict's
@@ -209,8 +209,7 @@ object Pipeline72 {
     * the same hashes is exercised (and precision/recall-gated) by
     * `mm_phash_eval`.
     */
-  def mmPhashNeardup(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def mmPhashNeardup(t: Tables): DataFrame = {
     // r13: checkpoint the hash table (the mm_phash_eval convention) —
     // the a/b branches below are two scans of this subtree, so the
     // un-checkpointed form re-rendered and re-hashed every staged
@@ -254,8 +253,7 @@ object Pipeline72 {
     * is implementation-specific, the CONTRACT (near-dups recovered,
     * non-dups separated, hash informative) is not.
     */
-  def mmPhashEval(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def mmPhashEval(t: Tables): DataFrame = {
     val hashes = Multimodal.phashes(stagedPairs(t), "media_id", "payload")
       .localCheckpoint(true) // hash once: the LSH self-join + stats read it 3×
     val pairs = Multimodal.phashNearDup(hashes, maxHamming = 3, nBands = 4)

@@ -2,7 +2,7 @@ package graft.queries
 
 import graft.Tables
 import graft.functions.Wkb
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Round-11 batch: ORACLED EXPORT ROUND TRIPS (verdict ask #4) — the
@@ -74,20 +74,20 @@ object Pipeline73 {
       |GROUP BY event_type""".stripMargin
 
   // the written layer is staged once per (session, dir)
-  private def stage(spark: SparkSession, dir: String, kind: String)(
+  private def stage(t: Tables, kind: String)(
       write: (DataFrame, java.nio.file.Path) => Unit): java.nio.file.Path =
-    graft.util.SessionStage.dir(spark, dir, s"rt_$kind")(
-      write(pointLayer(Tables(spark, dir)), _))
+    graft.util.SessionStage.dir(t, s"rt_$kind")(
+      write(pointLayer(t), _))
 
   /** A22 `exp_geoparquet_roundtrip`: distributed GeoParquet write →
     * Spark parquet read-back → aggregate vs the original table.
     */
-  def expGeoparquetRoundtrip(spark: SparkSession, dir: String): DataFrame = {
-    val d = stage(spark, dir, "gpq") { (df, p) =>
+  def expGeoparquetRoundtrip(t: Tables): DataFrame = {
+    val d = stage(t, "gpq") { (df, p) =>
       graft.`export`.GeoParquet.write(df, "geometry", p.resolve("layer").toString)
       ()
     }
-    roundTripAgg(spark.read.parquet(d.resolve("layer").toString))
+    roundTripAgg(Tables.parquet(t.spark, d.resolve("layer").toString))
   }
   val expGeoparquetRoundtripSql: String = roundTripSql
 
@@ -97,12 +97,12 @@ object Pipeline73 {
     * event_type (C); coordinates live in .shp as LE doubles —
     * bit-exact.
     */
-  def expShapefileRoundtrip(spark: SparkSession, dir: String): DataFrame = {
-    val d = stage(spark, dir, "shp") { (df, p) =>
+  def expShapefileRoundtrip(t: Tables): DataFrame = {
+    val d = stage(t, "shp") { (df, p) =>
       graft.`export`.Shapefile.write(df, "geometry", p.resolve("layer").toString)
       ()
     }
-    roundTripAgg(graft.sources.ShapefileReader.read(spark, d.resolve("layer").toString))
+    roundTripAgg(graft.sources.ShapefileReader.read(t.spark, d.resolve("layer").toString))
   }
   val expShapefileRoundtripSql: String = roundTripSql
 
@@ -112,13 +112,13 @@ object Pipeline73 {
     * Exercises the Hilbert sort, the tree build, and the reader's
     * traversal in one correctness row.
     */
-  def expFgbRoundtrip(spark: SparkSession, dir: String): DataFrame = {
-    val d = stage(spark, dir, "fgb") { (df, p) =>
+  def expFgbRoundtrip(t: Tables): DataFrame = {
+    val d = stage(t, "fgb") { (df, p) =>
       graft.`export`.FlatGeobuf.write(df, "geometry",
         p.resolve("layer.fgb").toString, indexNodeSize = 16)
       ()
     }
-    roundTripAgg(graft.sources.FlatGeobufReader.read(spark, d.resolve("layer.fgb").toString))
+    roundTripAgg(graft.sources.FlatGeobufReader.read(t.spark, d.resolve("layer.fgb").toString))
   }
   val expFgbRoundtripSql: String = roundTripSql
 }

@@ -2,7 +2,7 @@ package graft.queries
 
 import graft.Tables
 import graft.operators.Sampling
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -24,9 +24,8 @@ object Pipeline74 {
     * shortest-repr decimal strings (both sides parse to identical
     * IEEE doubles), so the 4-dp fixed-point sums land exactly.
     */
-  def expGeojsonseqRoundtrip(spark: SparkSession, dir: String): DataFrame = {
-    val d = graft.util.SessionStage.dir(spark, dir, "rt_gjs") { p =>
-      val t = Tables(spark, dir)
+  def expGeojsonseqRoundtrip(t: Tables): DataFrame = {
+    val d = graft.util.SessionStage.dir(t, "rt_gjs") { p =>
       val layer = t.events.select(
           col("event_id").cast("long").as("event_id"),
           col("event_type"),
@@ -38,7 +37,7 @@ object Pipeline74 {
         graft.`export`.GeoJson.pointGeometry(col("x"), col("y")),
         p.resolve("layer").toString)
     }
-    val back = spark.read.json(d.resolve("layer").toString)
+    val back = t.spark.read.json(d.resolve("layer").toString)
     back.select(
         col("properties.event_id").cast("long").as("event_id"),
         col("properties.event_type").as("event_type"),
@@ -63,15 +62,15 @@ object Pipeline74 {
     * the ORIGINAL table. The one export format whose bytes no Spark
     * or DuckDB reader ever touches, now oracled end-to-end.
     */
-  def expGpkgRoundtrip(spark: SparkSession, dir: String): DataFrame = {
-    val d = graft.util.SessionStage.dir(spark, dir, "rt_gpkg") { p =>
-      val layer = Pipeline73.pointLayer(Tables(spark, dir))
+  def expGpkgRoundtrip(t: Tables): DataFrame = {
+    val d = graft.util.SessionStage.dir(t, "rt_gpkg") { p =>
+      val layer = Pipeline73.pointLayer(t)
         .select(col("event_id").as("fid"), col("event_type"),
           col("geometry").as("geom"))
       graft.`export`.Gpkg.write(layer, p.resolve("layer.gpkg").toString, "layer")
     }
     val back = graft.sources.GpkgReader
-      .readFeatures(spark, d.resolve("layer.gpkg").toString, "layer")
+      .readFeatures(t.spark, d.resolve("layer.gpkg").toString, "layer")
       .select(col("fid").as("event_id"), col("event_type"),
         col("geom").as("geometry"))
     Pipeline73.roundTripAgg(back)
@@ -89,8 +88,7 @@ object Pipeline74 {
     * JB = n/6·(S² + (K−3)²/4), skewness S and kurtosis K emitted
     * 4 dp. One map-side-combined aggregate; 3 rows out.
     */
-  def qJarqueBera(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def qJarqueBera(t: Tables): DataFrame =
     t.lineitem
       .select(col("l_returnflag"),
         expr("CAST(round(l_extendedprice * 100) AS DECIMAL(12,0))").as("x"))
@@ -131,7 +129,6 @@ object Pipeline74 {
                 / pow(CAST(s2 AS DOUBLE)/CAST(n AS DOUBLE)
                       - pow(CAST(s1 AS DOUBLE)/CAST(n AS DOUBLE), 2), 2), 4) AS kurtosis""")
           .as("kurtosis"))
-  }
 
   val qJarqueBeraSql: String =
     """WITH m AS (
@@ -170,8 +167,7 @@ object Pipeline74 {
     * double from exact sums. Two aggregates + one broadcast-back of
     * a k-row median table.
     */
-  def qLevene(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def qLevene(t: Tables): DataFrame = {
     val x = t.lineitem.select(col("l_returnflag"),
       expr("CAST(round(l_extendedprice * 100) AS BIGINT)").as("x"))
     val med = x.groupBy(col("l_returnflag"))
@@ -240,8 +236,7 @@ object Pipeline74 {
     * significance — the experiment readout is incomplete without
     * both. One corpus aggregate, 1 row out.
     */
-  def qTwoProportionZ(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def qTwoProportionZ(t: Tables): DataFrame = {
     val armed = t.events.select(
       pmod(Sampling.idBucket(col("user_id"), 1000000), lit(2)).as("arm"),
       (col("event_type") === "purchase").cast("long").as("conv"))

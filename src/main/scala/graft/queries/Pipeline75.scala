@@ -2,7 +2,7 @@ package graft.queries
 
 import graft.Tables
 import graft.operators.{Graph, Sampling}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -27,8 +27,8 @@ object Pipeline75 {
     * rows); triangles via the degree-oriented wedge join (never
     * all-wedges on hubs); degrees are one agg over the edge list.
     */
-  def qClusteringCoeff(spark: SparkSession, dir: String): DataFrame = {
-    val edges = GraphBase.coPurchasePairs(spark, dir).select(col("u"), col("v"))
+  def qClusteringCoeff(t: Tables): DataFrame = {
+    val edges = GraphBase.coPurchasePairs(t).select(col("u"), col("v"))
     val und = edges
       .select(least(col("u"), col("v")).as("a"), greatest(col("u"), col("v")).as("b"))
       .filter(col("a") =!= col("b"))
@@ -86,8 +86,7 @@ object Pipeline75 {
     * fixed points, 4 dp. The censoring-aware "did arm A churn
     * faster" readout.
     */
-  def qLogRank(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def qLogRank(t: Tables): DataFrame = {
     val spans = t.events
       .select(col("user_id"), to_date(col("ts")).as("day"))
       .groupBy(col("user_id"))

@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.Tables
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -27,8 +27,7 @@ object Pipeline76 {
     * ONE map-side-combined agg; everything after runs on the
     * calendar-bounded table (lag window partitioned by type).
     */
-  def qDurbinWatson(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def qDurbinWatson(t: Tables): DataFrame = {
     val daily = t.events
       .groupBy(col("event_type"), to_date(col("ts")).as("day"))
       .agg(sum(expr("CAST(round(value * 100) AS BIGINT)")).as("y"))
@@ -110,8 +109,7 @@ object Pipeline76 {
     * calendar-bounded window pass; one agg computes the five
     * correlations together.
     */
-  def qLjungBox(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def qLjungBox(t: Tables): DataFrame = {
     val daily = t.events
       .groupBy(col("event_type"), to_date(col("ts")).as("day"))
       .agg(count(lit(1)).cast("double").as("cnt"))

@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.Tables
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -21,8 +21,7 @@ object Pipeline77 {
     * double from exact sums, and the day tie-breaks ascending. "Is
     * the worst day a statistical outlier, and which day is it."
     */
-  def qGrubbs(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def qGrubbs(t: Tables): DataFrame = {
     val daily = t.events
       .groupBy(col("event_type"), to_date(col("ts")).as("day"))
       .agg(sum(expr("CAST(round(value * 100) AS BIGINT)")).as("y"))
@@ -78,8 +77,7 @@ object Pipeline77 {
     * seven correlations in one aggregate, unpivoted to (lag, ccf)
     * rows.
     */
-  def qCcf(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def qCcf(t: Tables): DataFrame = {
     val daily = t.events
       .groupBy(to_date(col("ts")).as("day"), col("event_type"))
       .agg(count(lit(1)).cast("double").as("cnt"))
@@ -143,8 +141,7 @@ object Pipeline77 {
     * split day, the two segment means and the gain — "did this
     * metric step, and when".
     */
-  def qChangepoint(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def qChangepoint(t: Tables): DataFrame = {
     val daily = t.events
       .groupBy(col("event_type"), to_date(col("ts")).as("day"))
       .agg(sum(expr("CAST(round(value * 100) AS BIGINT)")).as("y"))

@@ -2,7 +2,7 @@ package graft.queries
 
 import graft.Tables
 import graft.operators.Dedup
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Round-11 extension batch 6: the dedup EVAL harness — the E-family
@@ -33,10 +33,10 @@ object Pipeline78 {
     * convention: the contract is scale-stable, the exact candidate
     * count is not).
     */
-  def ddLshEval(spark: SparkSession, dir: String): DataFrame = {
-    val truth = LlmQueries.ngramPairs(spark, dir)
+  def ddLshEval(t: Tables): DataFrame = {
+    val truth = LlmQueries.ngramPairs(t)
       .select(col("doc_a"), col("doc_b"))
-    val cand = Dedup.minhashLsh(Tables(spark, dir).documents, "text", "doc_id")
+    val cand = Dedup.minhashLsh(t.documents, "text", "doc_id")
       .select(col("doc_a"), col("doc_b"), col("est_jaccard"))
       .localCheckpoint(true) // one LSH pass feeds both metrics
     val hit = truth.join(cand, Seq("doc_a", "doc_b"), "left")

@@ -2,7 +2,7 @@ package graft.queries
 
 import graft.Tables
 import graft.functions.Wkb
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Round-12 batch: the last reference-surface gap — the MULTI-LAYER
@@ -32,9 +32,8 @@ object Pipeline79 {
     * read back is distributed (leaf pages decode on executors).
     * Aggregates are map-side-combined; output is group-count-bounded.
     */
-  def expGpkgMultilayer(spark: SparkSession, dir: String): DataFrame = {
-    val d = graft.util.SessionStage.dir(spark, dir, "rt_gpkgml") { p =>
-      val t = Tables(spark, dir)
+  def expGpkgMultilayer(t: Tables): DataFrame = {
+    val d = graft.util.SessionStage.dir(t, "rt_gpkgml") { p =>
       val places = Pipeline73.pointLayer(t)
         .select(col("event_id").as("fid"), col("event_type"),
           col("geometry").as("geom"))
@@ -49,7 +48,7 @@ object Pipeline79 {
     }
     val path = d.resolve("education.gpkg").toString
     def layerAgg(table: String, grpCol: String): DataFrame =
-      graft.sources.GpkgReader.readFeatures(spark, path, table)
+      graft.sources.GpkgReader.readFeatures(t.spark, path, table)
         .select(col("fid"), col(grpCol).as("grp"),
           Wkb.wkbPointXY(col("geom")).as("p"))
         .groupBy(col("grp"))
@@ -76,9 +75,8 @@ object Pipeline79 {
     * every row — feature tagging, property round trip, AND the
     * metadata contract all sit under the hash.
     */
-  def expGeojsonMultilayer(spark: SparkSession, dir: String): DataFrame = {
-    val d = graft.util.SessionStage.dir(spark, dir, "rt_gjml") { p =>
-      val t = Tables(spark, dir)
+  def expGeojsonMultilayer(t: Tables): DataFrame = {
+    val d = graft.util.SessionStage.dir(t, "rt_gjml") { p =>
       // Fixed staging panel (ids < 100000, a no-op at the oracle
       // scales): the single-file FeatureCollection is ONE json
       // object, so the read-back side is a single-task parse by
@@ -106,7 +104,7 @@ object Pipeline79 {
           ("buildings", buildings, graft.`export`.GeoJson.pointGeometry(col("x"), col("y")))),
         p.resolve("education.geojson").toString, target = "education")
     }
-    val doc = spark.read.option("multiLine", "true")
+    val doc = t.spark.read.option("multiLine", "true")
       .json(d.resolve("education.geojson").toString)
     val f = doc.select(explode(col("features")).as("f"),
       col("metadata.layers.places").as("n_places"),
@@ -168,10 +166,10 @@ object Pipeline79 {
     * query set, label-partitioned base scan — the base table never
     * shuffles); the eval join moves 50 rows.
     */
-  def simIvfEval(spark: SparkSession, dir: String): DataFrame = {
-    val exact = LlmQueries.simCosineTopk(spark, dir)
+  def simIvfEval(t: Tables): DataFrame = {
+    val exact = LlmQueries.simCosineTopk(t)
       .select(col("query_id"), col("base_id"))
-    val ivf = LlmQueries.simIvfAnn(spark, dir)
+    val ivf = LlmQueries.simIvfAnn(t)
       .select(col("query_id"), col("base_id"), lit(1L).as("hit"))
     exact.join(ivf, Seq("query_id", "base_id"), "left")
       .groupBy(col("query_id"))
@@ -210,8 +208,7 @@ object Pipeline79 {
     * E4 pairs. (The DuckDB twin brute-forces the hamming join —
     * fine for an oracle, not the engine's plan.)
     */
-  def ddSimhashEval(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def ddSimhashEval(t: Tables): DataFrame = {
     // Fixed eval panel (doc_id < 2000): filter quality is measured
     // on a bounded doc set at every scale — the eval-set convention
     // (F18 measures on F1's fixed query set the same way). On this
@@ -223,7 +220,7 @@ object Pipeline79 {
     val cand = graft.operators.Dedup
       .simhashNearDup(panel, "text", "doc_id", maxHamming = 3, nBands = 4)
       .select(col("doc_a"), col("doc_b")).localCheckpoint(true)
-    val truth = LlmQueries.ngramPairs(spark, dir)
+    val truth = LlmQueries.ngramPairs(t)
       .filter(col("doc_a") < 2000 && col("doc_b") < 2000)
       .select(col("doc_a"), col("doc_b"), lit(1L).as("t"))
     cand.join(truth, Seq("doc_a", "doc_b"), "left")
@@ -263,12 +260,11 @@ object Pipeline79 {
     * std ≈ √(J(1−J)/32) ≈ 0.09 at J = 0.5 — the row states exactly
     * what ±9 points of estimate noise looks like on this corpus.
     */
-  def ddMinhashEstEval(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def ddMinhashEstEval(t: Tables): DataFrame = {
     val cand = graft.operators.Dedup
       .minhashLsh(t.documents, "text", "doc_id")
       .select(col("doc_a"), col("doc_b"), col("est_jaccard"))
-    val truth = LlmQueries.ngramPairs(spark, dir)
+    val truth = LlmQueries.ngramPairs(t)
       .select(col("doc_a"), col("doc_b"), col("jaccard"))
     cand.join(truth, Seq("doc_a", "doc_b"))
       .select(expr("CAST(round(abs(est_jaccard - jaccard) * 10000) AS BIGINT)").as("err"))
@@ -313,10 +309,9 @@ object Pipeline79 {
     * table format's MERGE replaces it, as the operator doc states);
     * the read-back aggregate is map-side combined.
     */
-  def expFeatureUpsert(spark: SparkSession, dir: String): DataFrame = {
+  def expFeatureUpsert(t: Tables): DataFrame = {
     import graft.`export`.{FeatureService, PublishMode}
-    val svc = graft.util.SessionStage.dir(spark, dir, "rt_featsvc") { p =>
-      val t = Tables(spark, dir)
+    val svc = graft.util.SessionStage.dir(t, "rt_featsvc") { p =>
       val base = t.orders.select(
         col("o_orderkey").as("id"),
         col("o_orderstatus").as("status"),
@@ -337,7 +332,7 @@ object Pipeline79 {
         sp, "secondary", PublishMode.Overwrite)
     }.resolve("service").toString
     def layerAgg(layer: String): DataFrame =
-      graft.`export`.FeatureService.readLayer(spark, svc, layer)
+      graft.`export`.FeatureService.readLayer(t.spark, svc, layer)
         .groupBy(col("status"))
         .agg(
           count(lit(1)).as("n_rows"),

@@ -2,7 +2,7 @@ package graft.queries
 
 import graft.Tables
 import graft.operators.Similarity
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Round-8 extension batch 5: maximum-inner-product retrieval, a
@@ -19,11 +19,9 @@ object Pipeline8 {
     * F2/F4 ANN indexes serve it (spec pins the reduction's ranking
     * equivalence).
     */
-  def simMipsTopk(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def simMipsTopk(t: Tables): DataFrame =
     Similarity.mipsTopK(t.embeddings,
       t.embeddings.filter(col("vec_id") < 10), "vec_id", "embedding", k = 5)
-  }
 
   val simMipsTopkSql: String =
     """WITH q AS (SELECT vec_id AS query_id, embedding AS qv FROM embeddings WHERE vec_id < 10),
@@ -47,9 +45,9 @@ object Pipeline8 {
     * TESTABILITY choice, not a privacy claim. Post-aggregation
     * map math: one group shuffle, noise costs nothing at any scale.
     */
-  def qDpCounts(spark: SparkSession, dir: String): DataFrame = {
+  def qDpCounts(t: Tables): DataFrame = {
     val P = 1000000007L
-    val counts = Tables(spark, dir).lineitem
+    val counts = t.lineitem
       .groupBy(col("l_returnflag")).agg(count(lit(1)).as("n"))
     val mix = (pmod(ascii(col("l_returnflag")).cast("long"), lit(P))
       * lit(2654435761L) + lit(1013904223L)) % lit(P)
@@ -81,8 +79,8 @@ object Pipeline8 {
     * longs (the M11 lesson: long sums are order-independent where a
     * double sum's 4th decimal flips on accumulation order).
     */
-  def pipeCorpusCard(spark: SparkSession, dir: String): DataFrame = {
-    val docs = Tables(spark, dir).documents
+  def pipeCorpusCard(t: Tables): DataFrame = {
+    val docs = t.documents
     val sig = Pipeline5.gopherSignalCols(col("text"))
     val (nW, nS, nSy) = Pipeline6.readabilityCounts(col("text"))
     val perDoc = docs.select(

@@ -2,7 +2,7 @@ package graft.queries
 
 import graft.Tables
 import graft.operators.{Dedup, Similarity}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Round-13 batch: measurement → hardening. The r12 eval rows
@@ -42,9 +42,8 @@ object Pipeline80 {
     * hash partitioning, one exchange) — per-bucket work is
     * cap-bounded so no straggler task exists at any corpus size.
     */
-  def ddSimhashEval2(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
-    val truth = LlmQueries.ngramPairs(spark, dir)
+  def ddSimhashEval2(t: Tables): DataFrame = {
+    val truth = LlmQueries.ngramPairs(t)
       .select(col("doc_a"), col("doc_b"), lit(1L).as("tr"))
     // The fingerprint HOF is the row's real work; the sf parquet is
     // one input split, so fan the docs out first (the K7 id-list
@@ -52,7 +51,7 @@ object Pipeline80 {
     // is trivial; at lake scale the source has native splits and the
     // OPERATOR adds no repartition).
     val docs = t.documents.select(col("doc_id"), col("text"))
-      .repartition(spark.sparkContext.defaultParallelism, col("doc_id"))
+      .repartition(t.spark.sparkContext.defaultParallelism, col("doc_id"))
     // ONE signing scan for BOTH variants (r14, the verdict's #1 ask):
     // the unigram and shingle3 fingerprints are computed side by side
     // in a single projection over one pass of the corpus text and the
@@ -168,9 +167,8 @@ object Pipeline80 {
     * cell counts at equal nprobe; iters=2, F5's Lloyd recipe): the
     * three nprobe sweeps probe ONE training run.
     */
-  private def trainedModel(spark: SparkSession, dir: String): (DataFrame, Seq[Seq[Double]]) =
-    graft.util.SessionStage.value(spark, dir, "ivf_model") {
-      val t = Tables(spark, dir)
+  private def trainedModel(t: Tables): (DataFrame, Seq[Seq[Double]]) =
+    graft.util.SessionStage.value(t, "ivf_model") {
       val (assigned, cents) =
         Similarity.kmeansModel(t.embeddings, "vec_id", "embedding", k = 10, iters = 2)
       (assigned.select(col("cluster"), col("id").as("base_id"), col("vec").as("bv"))
@@ -194,12 +192,11 @@ object Pipeline80 {
     * (base table never shuffles); the model trains once per session
     * and the eval joins move ≤ 50 rows per combination.
     */
-  def simIvfEval2(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
-    val exact = LlmQueries.simCosineTopk(spark, dir)
+  def simIvfEval2(t: Tables): DataFrame = {
+    val exact = LlmQueries.simCosineTopk(t)
       .select(col("query_id"), col("base_id"))
     val queries = t.embeddings.filter(col("vec_id") < 10)
-    val (cells, cents) = trainedModel(spark, dir)
+    val (cells, cents) = trainedModel(t)
     def recallOf(name: String, np: Int, ann: DataFrame): DataFrame =
       exact.join(
           ann.select(col("query_id"), col("base_id"), lit(1L).as("hit")),
@@ -297,9 +294,8 @@ object Pipeline80 {
     * bounded (band, bucket) joins (batch×batch, batch×store); the
     * store side reads k·8 B per historical doc, never the corpus.
     */
-  def ddIncremental(spark: SparkSession, dir: String): DataFrame = {
-    val staged = graft.util.SessionStage.dir(spark, dir, "rt_incdedup") { p =>
-      val t = Tables(spark, dir)
+  def ddIncremental(t: Tables): DataFrame = {
+    val staged = graft.util.SessionStage.dir(t, "rt_incdedup") { p =>
       val store = p.resolve("sigstore").toString
       def keep(batch: Int): Unit =
         Dedup.incrementalNearDup(
@@ -310,9 +306,8 @@ object Pipeline80 {
       keep(0)
       keep(1)
     }
-    val t = Tables(spark, dir)
     def keptAgg(batch: Int): DataFrame =
-      spark.read.parquet(staged.resolve(s"kept$batch").toString)
+      Tables.parquet(t.spark, staged.resolve(s"kept$batch").toString)
         .join(t.documents.select(col("doc_id"), col("lang")), Seq("doc_id"))
         .groupBy(col("lang"))
         .agg(count(lit(1)).as("n_kept"), sum(col("doc_id")).as("id_sum"))

@@ -2,7 +2,7 @@ package graft.queries
 
 import graft.Tables
 import graft.operators.Graph
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -23,8 +23,7 @@ object Pipeline9 {
     * integer fixed-point math, so the 5-iteration DuckDB CTE chain
     * reproduces every rank bit-for-bit (see [[Graph.pageRank]]).
     */
-  def qPagerank(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def qPagerank(t: Tables): DataFrame = {
     val edges = t.lineitem
       .join(t.orders, col("l_orderkey") === col("o_orderkey"))
       .join(broadcast(t.customer.select(col("c_custkey"), col("c_nationkey"))),
@@ -95,9 +94,9 @@ object Pipeline9 {
     * in [[graft.operators.Similarity.randomProjectFx]] is the
     * single-pass scale path — spec pins the two equivalent.
     */
-  def simRpProject(spark: SparkSession, dir: String): DataFrame = {
-    val base = Tables(spark, dir).embeddings.filter(col("vec_id") < 20)
-    val dims = spark.range(0, 8).select(col("id").as("dim"))
+  def simRpProject(t: Tables): DataFrame = {
+    val base = t.embeddings.filter(col("vec_id") < 20)
+    val dims = t.spark.range(0, 8).select(col("id").as("dim"))
     base
       .select(col("vec_id"), posexplode(col("embedding")).as(Seq("i", "x")))
       .join(broadcast(dims))
@@ -133,8 +132,8 @@ object Pipeline9 {
     * rollup and the per-type window — day-count-bounded, so the
     * window input is ~365·n_types rows at ANY corpus scale.
     */
-  def qChangeDetect(spark: SparkSession, dir: String): DataFrame = {
-    val daily = Tables(spark, dir).events
+  def qChangeDetect(t: Tables): DataFrame = {
+    val daily = t.events
       .groupBy(col("event_type"), to_date(col("ts")).as("day"))
       .agg(sum(round(col("value") * lit(10000.0), 0).cast("long")).as("v_fx"),
         count(lit(1)).as("n"))

@@ -2,7 +2,7 @@ package graft.queries
 
 import graft.Tables
 import graft.operators.{Constraints, Dedup, RangeJoin, Sampling, SnapshotDiff, TextOps}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -19,8 +19,7 @@ object PipelineQueries {
     * range predicates; per-range aggregate keeps the output
     * range-table-sized.
     */
-  def qRangeJoin(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def qRangeJoin(t: Tables): DataFrame = {
     val ranges = t.nation.select(
       col("n_nationkey").cast("long").as("range_id"),
       col("n_nationkey").cast("double").as("lo"),
@@ -54,8 +53,7 @@ object PipelineQueries {
     * formulation rows-windows can't express when event spacing is
     * irregular.
     */
-  def qWindowRange(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def qWindowRange(t: Tables): DataFrame = {
     val w = Window.partitionBy(col("user_id")).orderBy(col("ts_us"))
       .rangeBetween(-3600000000L, 0L)
     t.events.select(
@@ -77,8 +75,7 @@ object PipelineQueries {
     * anti-join — the release gate. `known_event_type` deliberately
     * omits 'signup' so a domain rule actually fires on this data.
     */
-  def trConstraints(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def trConstraints(t: Tables): DataFrame =
     Constraints.check(t.events, Seq(
       "event_id_not_null" -> col("event_id").isNotNull,
       "value_non_negative" -> (col("value") >= 0),
@@ -86,7 +83,6 @@ object PipelineQueries {
       "known_event_type" -> col("event_type").isin("click", "view", "purchase", "error")))
       .unionByName(Constraints.referential(
         t.events, "user_id", t.customer, "c_custkey", "user_in_customer"))
-  }
 
   val trConstraintsSql: String =
     """WITH s AS (SELECT
@@ -110,8 +106,7 @@ object PipelineQueries {
     * aggregates on, so the join reuses the exchange; the final cell
     * grid is |cohorts|·|offsets|.
     */
-  def qRetention(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def qRetention(t: Tables): DataFrame = {
     val weekly = t.events.select(
       col("user_id"), expr("unix_micros(ts) div 604800000000").as("week"))
     val firsts = weekly.groupBy(col("user_id")).agg(min(col("week")).as("cohort"))
@@ -136,8 +131,7 @@ object PipelineQueries {
     * map-side-combined collect on the user_id shuffle — no global
     * sort of the event log.
     */
-  def qTopPaths(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def qTopPaths(t: Tables): DataFrame =
     t.events
       .groupBy(col("user_id"))
       .agg(array_sort(collect_list(
@@ -146,7 +140,6 @@ object PipelineQueries {
         transform(slice(col("seq"), 1, 3), s => s.getField("event_type")), ">").as("path"))
       .groupBy(col("path"))
       .agg(count(lit(1)).as("n_users"))
-  }
 
   val qTopPathsSql: String =
     """WITH p AS (
@@ -164,8 +157,7 @@ object PipelineQueries {
     * whole log. Deterministic while (ts, id mod 1000) is unique per
     * key (held by this data: no duplicate (user, ts) at any SF).
     */
-  def ddLatestWins(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def ddLatestWins(t: Tables): DataFrame = {
     val ord = expr("unix_micros(ts) * 1000 + pmod(event_id, 1000)")
     t.events
       .groupBy(col("user_id"))
@@ -187,9 +179,9 @@ object PipelineQueries {
     * in ONE aggregation pass — the release-validation report; see
     * [[graft.operators.Profiler]] for the Expand-based scale shape.
     */
-  def qProfile(spark: SparkSession, dir: String): DataFrame =
+  def qProfile(t: Tables): DataFrame =
     graft.operators.Profiler.profile(
-      Tables(spark, dir).events,
+      t.events,
       Seq("event_id", "user_id", "value", "event_type"))
 
   val qProfileSql: String =
@@ -214,8 +206,7 @@ object PipelineQueries {
     * resample+ffill shape feature pipelines run before windowed
     * training joins.
     */
-  def qGapFill(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def qGapFill(t: Tables): DataFrame = {
     val hourly = t.events
       .withColumn("hr", expr("unix_micros(ts) div 3600000000"))
       .groupBy(col("user_id"), col("hr"))
@@ -247,8 +238,8 @@ object PipelineQueries {
       |FROM grid g LEFT JOIN hourly h ON g.user_id = h.user_id AND g.hr = h.hr""".stripMargin
 
   /** G9: Gopher-style repetition metrics + flag per document. */
-  def txRepetition(spark: SparkSession, dir: String): DataFrame =
-    TextOps.repetitionMetrics(Tables(spark, dir).documents, "text", "doc_id")
+  def txRepetition(t: Tables): DataFrame =
+    TextOps.repetitionMetrics(t.documents, "text", "doc_id")
       .withColumn("repetitive", col("repetitive").cast("int").cast("long"))
 
   val txRepetitionSql: String =
@@ -286,8 +277,8 @@ object PipelineQueries {
   /** G10: fixed-size token chunking with overlap (40-token chunks,
     * 10-token overlap — context-window preparation).
     */
-  def txChunk(spark: SparkSession, dir: String): DataFrame =
-    TextOps.chunk(Tables(spark, dir).documents, "text", "doc_id", 40, 10)
+  def txChunk(t: Tables): DataFrame =
+    TextOps.chunk(t.documents, "text", "doc_id", 40, 10)
 
   val txChunkSql: String =
     """WITH toks AS (
@@ -306,8 +297,7 @@ object PipelineQueries {
   /** N3: concat-and-chunk sequence packing into 256-token budgets per
     * language shard; per-pack rollup keeps the output pack-sized.
     */
-  def smPackSequences(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def smPackSequences(t: Tables): DataFrame = {
     val docs = t.documents.select(
       col("lang"), col("doc_id"),
       TextOps.tokenCount(col("text")).as("n_tokens"))
@@ -340,8 +330,7 @@ object PipelineQueries {
     * decisions. Output is the per-source kept/total census so the
     * oracle checks every row's keep decision in aggregate.
     */
-  def smTemperature(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def smTemperature(t: Tables): DataFrame = {
     val docs = t.documents.select(
       col("doc_id"), col("source"),
       TextOps.tokenCount(col("text")).as("n_tokens"))
@@ -373,8 +362,8 @@ object PipelineQueries {
   /** G11: corpus unigram LM score per document (mean ln P(token)) —
     * the cheap fluency proxy before model-based filtering.
     */
-  def txUnigramLogprob(spark: SparkSession, dir: String): DataFrame =
-    TextOps.unigramLogprob(Tables(spark, dir).documents, "text", "doc_id")
+  def txUnigramLogprob(t: Tables): DataFrame =
+    TextOps.unigramLogprob(t.documents, "text", "doc_id")
 
   /** G19: the Count-Min-Sketch twin of G11
     * ([[graft.operators.TextOps.unigramLogprobSketch]]) — the vocab
@@ -382,8 +371,8 @@ object PipelineQueries {
     * entry (counter collisions are sketch-internal); the spec pins
     * the CMS one-sided guarantee against exact counts.
     */
-  def txUnigramLogprobSketch(spark: SparkSession, dir: String): DataFrame =
-    TextOps.unigramLogprobSketch(Tables(spark, dir).documents, "text", "doc_id")
+  def txUnigramLogprobSketch(t: Tables): DataFrame =
+    TextOps.unigramLogprobSketch(t.documents, "text", "doc_id")
 
   val txUnigramLogprobSql: String =
     """WITH terms AS (
@@ -400,8 +389,8 @@ object PipelineQueries {
   /** G12: corpus bigram-LM score per document — word-order-aware
     * fluency (shuffled text scores low even with common words).
     */
-  def txBigramLogprob(spark: SparkSession, dir: String): DataFrame =
-    TextOps.bigramLogprob(Tables(spark, dir).documents, "text", "doc_id")
+  def txBigramLogprob(t: Tables): DataFrame =
+    TextOps.bigramLogprob(t.documents, "text", "doc_id")
 
   /** Mirrors the Scala compacted shape: per-doc bigram counts, then
     * the n-weighted mean — so both engines share one summation
@@ -428,8 +417,8 @@ object PipelineQueries {
     * sharing any 5-gram with the eval slice (doc_id % 97 = 0);
     * broadcast eval shingle set, map-only train scan.
     */
-  def ddDecontaminate(spark: SparkSession, dir: String): DataFrame = {
-    val docs = Tables(spark, dir).documents
+  def ddDecontaminate(t: Tables): DataFrame = {
+    val docs = t.documents
     Dedup.decontaminate(
       docs.filter(pmod(col("doc_id"), lit(97)) =!= 0),
       docs.filter(pmod(col("doc_id"), lit(97)) === 0),
@@ -451,8 +440,8 @@ object PipelineQueries {
     * full flagged list remains available via the operator
     * (PipelineOpsSpec asserts the same two properties row-wise).
     */
-  def ddDecontaminateBloom(spark: SparkSession, dir: String): DataFrame = {
-    val docs = Tables(spark, dir).documents
+  def ddDecontaminateBloom(t: Tables): DataFrame = {
+    val docs = t.documents
     val train = docs.filter(pmod(col("doc_id"), lit(97)) =!= 0)
     val evalDocs = docs.filter(pmod(col("doc_id"), lit(97)) === 0)
     val exact = Dedup.decontaminate(train, evalDocs, "text", "doc_id", 5)
@@ -507,8 +496,8 @@ object PipelineQueries {
     * quality score (ties by doc_id), the per-domain cap of a
     * pretraining mix.
     */
-  def smCapPerSource(spark: SparkSession, dir: String): DataFrame = {
-    val docs = Tables(spark, dir).documents.select(
+  def smCapPerSource(t: Tables): DataFrame = {
+    val docs = t.documents.select(
       col("doc_id"), col("source"),
       TextOps.qualityScore(col("text")).as("quality"))
     Sampling.capPerGroup(docs, "source", "quality", "doc_id", 50)
@@ -527,8 +516,8 @@ object PipelineQueries {
     * range-sorted parquet footers tight spatial tiles (file-level
     * bbox pruning at 100 TB).
     */
-  def geoZorder(spark: SparkSession, dir: String): DataFrame = {
-    val pts = Tables(spark, dir).events.select(
+  def geoZorder(t: Tables): DataFrame = {
+    val pts = t.events.select(
       col("event_id"),
       col("value").as("x"),
       get_json_object(col("props"), "$.k").cast("double").as("y"))
@@ -542,8 +531,7 @@ object PipelineQueries {
     * linestatus, and grand-total aggregates in ONE pass (rollup/cube
     * can't express this set list). Exact decimal sum as in D22.
     */
-  def qGroupingSets(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def qGroupingSets(t: Tables): DataFrame =
     t.lineitem
       .groupingSets(
         Seq(Seq(col("l_returnflag")), Seq(col("l_linestatus")), Seq()),
@@ -552,7 +540,6 @@ object PipelineQueries {
         grouping_id(col("l_returnflag"), col("l_linestatus")).as("gid"),
         count(lit(1)).as("n"),
         round(sum(col("l_quantity").cast("decimal(18,2)")).cast("double"), 4).as("sum_qty"))
-  }
 
   val qGroupingSetsSql: String =
     """SELECT l_returnflag, l_linestatus,
@@ -567,8 +554,8 @@ object PipelineQueries {
     * current as docs with doc_id % 11 ≠ 0; classify added / removed
     * / changed from (key, content-hash) pairs only.
     */
-  def qSnapshotDiff(spark: SparkSession, dir: String): DataFrame = {
-    val docs = Tables(spark, dir).documents
+  def qSnapshotDiff(t: Tables): DataFrame = {
+    val docs = t.documents
     val prev = docs.filter(pmod(col("doc_id"), lit(7)) =!= 0)
       .withColumn("text",
         when(pmod(col("doc_id"), lit(5)) === 0, concat(col("text"), lit(" v2")))
@@ -599,8 +586,7 @@ object PipelineQueries {
     * exact rational of the decoded per-channel sums, so a one-byte
     * codec mis-parse moves a block off its twin.
     */
-  def mmFeatureNeardup(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def mmFeatureNeardup(t: Tables): DataFrame = {
     val feats = graft.operators.Multimodal.decodeImageStats(
       Pipeline62.stagedImages(t, "png"), "doc_id", "payload")
       .select(col("media_id"),

@@ -3,7 +3,7 @@ package graft.queries
 import graft.Tables
 import graft.operators.Normalize
 import graft.sources._
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Named pipeline queries (SURVEY §2 J) — the analogues of the
@@ -21,8 +21,7 @@ object RefQueries {
   /** J1: roads — theme=transportation select + roads normalization +
     * metadata (queries.yml `roads`).
     */
-  def refRoads(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def refRoads(t: Tables): DataFrame = {
     val raw = OvertureReader.read(t, ReadRequest("part",
       columns = Seq("p_partkey as id", "p_name as name", "p_brand as road_class", "p_type as road_type")))
     Normalize.addMetadata(
@@ -40,8 +39,7 @@ object RefQueries {
   /** J2: buildings — class filter + numeric height/floors
     * (queries.yml `buildings`).
     */
-  def refBuildings(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def refBuildings(t: Tables): DataFrame = {
     val raw = OvertureReader.read(t, ReadRequest("part",
       columns = Seq("p_partkey as id", "p_name as name", "p_brand as building_class",
         "p_retailprice as height", "p_size as num_floors"),
@@ -70,8 +68,7 @@ object RefQueries {
     * `categories.primary = 'education'`, building_filter
     * `subtype = 'education'`).
     */
-  def refEducation(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def refEducation(t: Tables): DataFrame =
     OvertureReader.readMultilayer(t, Seq(
       "place" -> ReadRequest("customer",
         columns = Seq("c_custkey as id", "c_name as name"),
@@ -80,7 +77,6 @@ object RefQueries {
         columns = Seq("s_suppkey as id", "s_name as name"),
         filter = Some("s_nationkey = '1'"))))
       .withColumnRenamed("source_type", "feature_type")
-  }
 
   val refEducationSql: String =
     """SELECT c_custkey AS id, c_name AS name, 'place' AS feature_type
@@ -93,8 +89,7 @@ object RefQueries {
     * (queries.yml `markets`: `categories.primary IN (...)`,
     * building subtype IN (...)).
     */
-  def refMarkets(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def refMarkets(t: Tables): DataFrame =
     OvertureReader.readMultilayer(t, Seq(
       "place" -> ReadRequest("customer",
         columns = Seq("c_custkey as id", "c_name as name"),
@@ -103,7 +98,6 @@ object RefQueries {
         columns = Seq("s_suppkey as id", "s_name as name"),
         filter = Some("s_nationkey IN ('2', '3')"))))
       .withColumnRenamed("source_type", "feature_type")
-  }
 
   val refMarketsSql: String =
     """SELECT c_custkey AS id, c_name AS name, 'place' AS feature_type
@@ -116,8 +110,7 @@ object RefQueries {
     * (queries.yml `power`: `subtype = 'power'`,
     * geometry_split: true).
     */
-  def refPower(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def refPower(t: Tables): DataFrame = {
     val filtered = OvertureReader.read(t, ReadRequest("events",
       columns = Seq("event_id as id", "event_type", "user_id"),
       filter = Some("event_type IN ('error', 'signup', 'purchase')")))
@@ -140,8 +133,7 @@ object RefQueries {
     * — same multilayer shape as J3 with its own filter pair and
     * sector metadata.
     */
-  def refHealth(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def refHealth(t: Tables): DataFrame = {
     val layers = OvertureReader.readMultilayer(t, Seq(
       "place" -> ReadRequest("customer",
         columns = Seq("c_custkey as id", "c_name as name"),
@@ -172,8 +164,7 @@ object RefQueries {
     * points of interest"), normalized and metadata-stamped like
     * every published sector.
     */
-  def refPlaces(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def refPlaces(t: Tables): DataFrame = {
     val raw = OvertureReader.read(t, ReadRequest("customer",
       columns = Seq("c_custkey as id", "c_name as name",
         "c_mktsegment as category")))

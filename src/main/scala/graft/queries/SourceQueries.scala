@@ -2,7 +2,7 @@ package graft.queries
 
 import graft.Tables
 import graft.sources._
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Source-layer operator exercises (SURVEY §2 A) — every query goes
@@ -14,9 +14,9 @@ object SourceQueries {
   /** A1: explicit column selection + aliasing (reference
     * OVERTURE_COLUMNS, source.py:30-71).
     */
-  def srcSelectAlias(spark: SparkSession, dir: String): DataFrame =
+  def srcSelectAlias(t: Tables): DataFrame =
     OvertureReader.read(
-      Tables(spark, dir),
+      t,
       ReadRequest("events",
         columns = Seq("event_id", "event_type as etype", "user_id", "value")))
 
@@ -26,10 +26,10 @@ object SourceQueries {
   /** A2: nested-field access `names.primary as name` → JSON property
     * extraction on the `props` string column.
     */
-  def srcJsonNested(spark: SparkSession, dir: String): DataFrame =
+  def srcJsonNested(t: Tables): DataFrame =
     OvertureReader
       .read(
-        Tables(spark, dir),
+        t,
         ReadRequest("events", columns = Seq("event_id", "props.k as k_raw")))
       .withColumn("k", col("k_raw").cast("int"))
       .drop("k_raw")
@@ -40,9 +40,9 @@ object SourceQueries {
   /** A3: bbox pre-filter — 2-D range predicate pushed to the scan
     * (reference source.py:496-507).
     */
-  def srcBboxFilter(spark: SparkSession, dir: String): DataFrame =
+  def srcBboxFilter(t: Tables): DataFrame =
     OvertureReader.read(
-      Tables(spark, dir),
+      t,
       ReadRequest("events",
         columns = Seq("event_id", "value", "user_id"),
         bbox = Some(BBoxFilter("value", "user_id", BBox(50.0, 100.0, 150.0, 900.0)))))
@@ -53,9 +53,9 @@ object SourceQueries {
       |  AND user_id >= 100 AND user_id <= 900""".stripMargin
 
   /** A4: apply_sql_filter equality (source.py:94-115). */
-  def srcFilterEq(spark: SparkSession, dir: String): DataFrame =
+  def srcFilterEq(t: Tables): DataFrame =
     OvertureReader.read(
-      Tables(spark, dir),
+      t,
       ReadRequest("documents",
         columns = Seq("doc_id", "lang", "source", "n_chars"),
         filter = Some("lang = 'en'")))
@@ -64,9 +64,9 @@ object SourceQueries {
     "SELECT doc_id, lang, source, n_chars FROM documents WHERE lang = 'en'"
 
   /** A5: apply_sql_filter IN-list (source.py:117-145). */
-  def srcFilterIn(spark: SparkSession, dir: String): DataFrame =
+  def srcFilterIn(t: Tables): DataFrame =
     OvertureReader.read(
-      Tables(spark, dir),
+      t,
       ReadRequest("events",
         columns = Seq("event_id", "event_type", "user_id"),
         filter = Some("event_type IN ('click', 'view')")))
@@ -77,9 +77,9 @@ object SourceQueries {
   /** A6: deterministic feature limit (reference appends LIMIT n,
     * source.py:459-460; we sort first for stable results).
     */
-  def srcLimit(spark: SparkSession, dir: String): DataFrame =
+  def srcLimit(t: Tables): DataFrame =
     OvertureReader.read(
-      Tables(spark, dir),
+      t,
       ReadRequest("orders",
         columns = Seq("o_orderkey", "o_custkey", "o_orderstatus"),
         limit = Some(LimitSpec(100, Seq("o_orderkey")))))
@@ -91,8 +91,7 @@ object SourceQueries {
   /** A7: multilayer dual read with source_type tags, unioned by name
     * (reference dual places+buildings query, source.py:509-586).
     */
-  def srcMultilayer(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def srcMultilayer(t: Tables): DataFrame =
     OvertureReader.readMultilayer(
       t,
       Seq(
@@ -102,7 +101,6 @@ object SourceQueries {
         "building" -> ReadRequest("supplier",
           columns = Seq("s_suppkey as id", "s_name as name"))
       ))
-  }
 
   val srcMultilayerSql: String =
     """SELECT c_custkey AS id, c_name AS name, 'place' AS source_type
@@ -114,8 +112,7 @@ object SourceQueries {
   /** A8: geometry-family split classification (source.py:966-1003);
     * event_type stands in for the geometry-type designator.
     */
-  def srcGeometrySplit(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def srcGeometrySplit(t: Tables): DataFrame =
     OvertureReader
       .geometrySplit(
         t.events.select("event_id", "event_type"),
@@ -126,7 +123,6 @@ object SourceQueries {
           "polygons" -> Seq("signup")))
       .groupBy(col("geometry_family"))
       .agg(count(lit(1)).as("n_features"))
-  }
 
   val srcGeometrySplitSql: String =
     """SELECT CASE
@@ -142,12 +138,10 @@ object SourceQueries {
     * theme/type discovery from S3 paths, source.py:1330): numeric
     * suffix of the document source id.
     */
-  def srcRegexExtract(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def srcRegexExtract(t: Tables): DataFrame =
     t.documents.select(
       col("doc_id"),
       regexp_extract(col("source"), "src(\\d+)", 1).cast("int").as("source_num"))
-  }
 
   val srcRegexExtractSql: String =
     """SELECT doc_id,
@@ -157,13 +151,11 @@ object SourceQueries {
   /** A11: INTERSECT — customer keys present in both the BUILDING
     * segment and the urgent-order population (set semantics).
     */
-  def srcIntersect(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def srcIntersect(t: Tables): DataFrame =
     t.customer.filter(col("c_mktsegment") === "BUILDING").select(col("c_custkey"))
       .intersect(
         t.orders.filter(col("o_orderpriority") === "1-URGENT")
           .select(col("o_custkey").as("c_custkey")))
-  }
 
   val srcIntersectSql: String =
     """SELECT c_custkey FROM customer WHERE c_mktsegment = 'BUILDING'
@@ -171,14 +163,12 @@ object SourceQueries {
       |SELECT o_custkey FROM orders WHERE o_orderpriority = '1-URGENT'""".stripMargin
 
   /** A12: EXCEPT — part brands never ordered in large quantity. */
-  def srcExcept(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def srcExcept(t: Tables): DataFrame =
     t.part.select(col("p_brand"))
       .except(
         t.part.join(t.lineitem, col("p_partkey") === col("l_partkey"))
           .filter(col("l_quantity") >= 45)
           .select(col("p_brand")))
-  }
 
   val srcExceptSql: String =
     """SELECT DISTINCT p_brand FROM part
@@ -189,12 +179,10 @@ object SourceQueries {
   /** A9: divisions-clip analogue — broadcast semi-join containment
     * (source.py:464-494 country-polygon clip, at dim-join cost).
     */
-  def srcDivisionsClip(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def srcDivisionsClip(t: Tables): DataFrame =
     OvertureReader
       .clipToRegion(t, t.customer, "c_nationkey", "ASIA")
       .select(col("c_custkey"), col("c_nationkey"), round(col("c_acctbal"), 4).as("acctbal"))
-  }
 
   val srcDivisionsClipSql: String =
     """SELECT c_custkey, c_nationkey, round(c_acctbal, 4) + 0 AS acctbal
@@ -210,11 +198,11 @@ object SourceQueries {
     * at planning time (PartitionFilters — asserted in
     * HivePartitionSpec) instead of scanning and discarding rows.
     */
-  def srcHivePartitioned(spark: SparkSession, dir: String): DataFrame = {
+  def srcHivePartitioned(t: Tables): DataFrame = {
     // One partitioned copy of events per (session, dir): the write is
     // setup, not the operator under test, so re-runs time the READ.
-    val root = graft.util.SessionStage.dir(spark, dir, "hive_events") { stage =>
-      Tables(spark, dir).events
+    val root = graft.util.SessionStage.dir(t, "hive_events") { stage =>
+      t.events
         .select(col("event_id"), col("user_id"), col("value"), col("event_type"))
         .write.partitionBy("event_type").mode("overwrite").parquet(stage.toString)
     }.toString
@@ -222,13 +210,13 @@ object SourceQueries {
     // layout (nothing published yet) reads as empty rather than
     // failing schema discovery.
     val layout = org.apache.spark.sql.types.StructType(
-      Tables(spark, dir).events
+      t.events
         .select(col("event_id"), col("user_id"), col("value"), col("event_type"))
         .schema.fields.filterNot(_.name == "event_type") :+
         org.apache.spark.sql.types.StructField("event_type",
           org.apache.spark.sql.types.StringType))
     OvertureReader
-      .readHivePartitioned(spark, root,
+      .readHivePartitioned(t.spark, root,
         Some("event_type IN ('click', 'error')"), Some(layout))
       .select(col("event_id"), col("user_id"), col("value"), col("event_type"))
   }
@@ -246,9 +234,9 @@ object SourceQueries {
     * surface `event_type` as null; the merge is footer-only work at
     * planning time.
     */
-  def srcSchemaEvolution(spark: SparkSession, dir: String): DataFrame = {
-    val root = graft.util.SessionStage.dir(spark, dir, "evo_events") { stage =>
-      val events = Tables(spark, dir).events
+  def srcSchemaEvolution(t: Tables): DataFrame = {
+    val root = graft.util.SessionStage.dir(t, "evo_events") { stage =>
+      val events = t.events
         .select(col("event_id"), col("user_id"), col("value"), col("event_type"))
       events.filter(col("event_id") % 2 === 0)
         .drop("event_type")
@@ -257,7 +245,7 @@ object SourceQueries {
         .write.mode("overwrite").parquet(s"$stage/release_b")
     }
     OvertureReader
-      .readMergedSchema(spark, Seq(s"$root/release_a", s"$root/release_b"))
+      .readMergedSchema(t.spark, Seq(s"$root/release_a", s"$root/release_b"))
       .select(col("event_id"), col("user_id"), col("value"), col("event_type"))
   }
 
@@ -290,9 +278,9 @@ object SourceQueries {
     * the same prefilter-then-exact shape `gridJoin` uses at the
     * many-polygons scale.
     */
-  def srcPolygonClip(spark: SparkSession, dir: String): DataFrame = {
+  def srcPolygonClip(t: Tables): DataFrame = {
     import graft.operators.Geo
-    val pts = Tables(spark, dir).events.select(
+    val pts = t.events.select(
       col("event_id"),
       col("value").as("x"),
       get_json_object(col("props"), "$.k").cast("double").as("y"))
@@ -358,10 +346,10 @@ object SourceQueries {
     * the fixture is an immutable projection of the events table, so
     * bench/verify re-runs measure the READ path, not fixture writes.
     */
-  private def textStage(spark: SparkSession, dir: String, fmt: String): String =
-    graft.util.SessionStage.dir(spark, dir, s"src_$fmt") { p =>
+  private def textStage(t: Tables, fmt: String): String =
+    graft.util.SessionStage.dir(t, s"src_$fmt") { p =>
       val out = p.toString
-      val slim = Tables(spark, dir).events
+      val slim = t.events
         .select(col("event_id"), col("event_type"), col("value"))
       fmt match {
         case "csv"  => slim.write.mode("overwrite").option("header", "true").csv(out)
@@ -382,9 +370,9 @@ object SourceQueries {
     df.groupBy(col("event_type"))
       .agg(count(lit(1)).as("n"), round(sum(col("value")), 4).as("total_value"))
 
-  def srcCsvRead(spark: SparkSession, dir: String): DataFrame =
-    textAgg(spark.read.schema(textSchema).option("header", "true")
-      .csv(textStage(spark, dir, "csv")))
+  def srcCsvRead(t: Tables): DataFrame =
+    textAgg(t.spark.read.schema(textSchema).option("header", "true")
+      .csv(textStage(t, "csv")))
 
   val srcCsvReadSql: String =
     """SELECT event_type, count(*) AS n,
@@ -393,9 +381,9 @@ object SourceQueries {
 
   /** A17: JSON-lines source path — same contract as A16 over the
     * newline-delimited JSON the dump/export tooling emits. */
-  def srcJsonlRead(spark: SparkSession, dir: String): DataFrame =
-    textAgg(spark.read.schema(textSchema)
-      .json(textStage(spark, dir, "json")))
+  def srcJsonlRead(t: Tables): DataFrame =
+    textAgg(t.spark.read.schema(textSchema)
+      .json(textStage(t, "json")))
 
   val srcJsonlReadSql: String = srcCsvReadSql
 
@@ -404,9 +392,9 @@ object SourceQueries {
     * JSONL). Binary round trip, so the oracle runs on the ORIGINAL
     * parquet; schema passed explicitly like A16/A17.
     */
-  def srcOrcRead(spark: SparkSession, dir: String): DataFrame =
-    textAgg(spark.read.schema(textSchema)
-      .orc(textStage(spark, dir, "orc")))
+  def srcOrcRead(t: Tables): DataFrame =
+    textAgg(t.spark.read.schema(textSchema)
+      .orc(textStage(t, "orc")))
 
   val srcOrcReadSql: String = srcCsvReadSql
 }

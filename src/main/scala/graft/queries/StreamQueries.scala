@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.Tables
 import graft.streaming.EventStream
 import graft.util.Fs
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
@@ -124,9 +125,8 @@ object StreamQueries {
   /** The events schema, from the first data file's footer on the
     * driver (no Spark job).
     */
-  private def eventsSchema(
-      spark: SparkSession, dir: String): org.apache.spark.sql.types.StructType =
-    graft.Tables.parquet(spark, s"$dir/events.parquet").schema
+  private def eventsSchema(t: Tables): org.apache.spark.sql.types.StructType =
+    t.table("events").schema
 
   /** One staged copy of events.parquet, shared by every query whose
     * source layout is just "a directory holding the backlog once"
@@ -135,19 +135,19 @@ object StreamQueries {
     * and sink every run — only the immutable INPUT staging is
     * shared, the same contract as [[lateStage]]/[[cdcStage]].
     */
-  private def plainStage(spark: SparkSession, dir: String): Path =
-    graft.util.SessionStage.dir(spark, dir, "stream_events") { stage =>
-      Files.copy(Paths.get(s"$dir/events.parquet"), stage.resolve("events.parquet"))
+  private def plainStage(t: Tables): Path =
+    graft.util.SessionStage.dir(t, "stream_events") { stage =>
+      Files.copy(Paths.get(s"${t.dir}/events.parquet"), stage.resolve("events.parquet"))
     }
 
   /** The doubled-delivery layout (the backlog staged twice, a_ then
     * b_) shared by the at-least-once scenarios (dedup, foreachBatch
     * upsert).
     */
-  private def doubleStage(spark: SparkSession, dir: String): Path =
-    graft.util.SessionStage.dir(spark, dir, "stream_double") { stage =>
+  private def doubleStage(t: Tables): Path =
+    graft.util.SessionStage.dir(t, "stream_double") { stage =>
       Seq("a", "b").foreach { p =>
-        Files.copy(Paths.get(s"$dir/events.parquet"), stage.resolve(s"${p}_events.parquet"))
+        Files.copy(Paths.get(s"${t.dir}/events.parquet"), stage.resolve(s"${p}_events.parquet"))
       }
     }
 
@@ -162,10 +162,10 @@ object StreamQueries {
     * registry row, so `graft.Bench` cannot time it; use
     * `ScaleProbe streamfloor <sfDir> [runs]`.
     */
-  private[graft] def stNoopFloor(spark: SparkSession, dir: String): DataFrame = {
-    val stage = plainStage(spark, dir)
-    val raw = spark.readStream.schema(eventsSchema(spark, dir)).parquet(stage.toString)
-    toMemory(spark, "st_noop_floor", raw.select(col("event_id")).limit(1), "append")()
+  private[graft] def stNoopFloor(t: Tables): DataFrame = {
+    val stage = plainStage(t)
+    val raw = t.spark.readStream.schema(eventsSchema(t)).parquet(stage.toString)
+    toMemory(t.spark, "st_noop_floor", raw.select(col("event_id")).limit(1), "append")()
   }
 
   /** I1 end-to-end: tumbling 1-hour event-time windows over the
@@ -174,13 +174,13 @@ object StreamQueries {
     * then terminates — the same code path a live `readStream` takes,
     * which is what makes this a faithful streaming correctness row.
     */
-  def stWindowedAgg(spark: SparkSession, dir: String): DataFrame = {
+  def stWindowedAgg(t: Tables): DataFrame = {
     // File streaming sources list a DIRECTORY; the testdata tables
     // are single parquet files — stage a copy (session-shared
     // immutable fixture; at production scale the source would
     // already be a directory of part files).
-    val stage = plainStage(spark, dir)
-    val raw = spark.readStream.schema(eventsSchema(spark, dir)).parquet(stage.toString)
+    val stage = plainStage(t)
+    val raw = t.spark.readStream.schema(eventsSchema(t)).parquet(stage.toString)
     // Same ts normalization Tables.events applies on the batch side
     // (schema-dispatched: nano-long or TIMESTAMP_NTZ → timestamp).
     val events = graft.Tables.normalizeTs(raw)
@@ -189,7 +189,7 @@ object StreamQueries {
     // the watermark — matching the batch twin exactly. (Append mode
     // would withhold the trailing windows; the append/eviction
     // behavior is covered by the MemoryStream ScalaTests.)
-    toMemory(spark, "st_windowed_agg", out, "complete")() // stage is session-cached
+    toMemory(t.spark, "st_windowed_agg", out, "complete")() // stage is session-cached
   }
 
   /** Oracle: identical to the batch twin D5 (q_events_window). */
@@ -202,12 +202,12 @@ object StreamQueries {
     * buckets but stays intact in some sliding window). Complete
     * mode + AvailableNow, the I1 drain shape.
     */
-  def stSlidingWindow(spark: SparkSession, dir: String): DataFrame = {
-    val stage = plainStage(spark, dir)
-    val raw = spark.readStream.schema(eventsSchema(spark, dir)).parquet(stage.toString)
+  def stSlidingWindow(t: Tables): DataFrame = {
+    val stage = plainStage(t)
+    val raw = t.spark.readStream.schema(eventsSchema(t)).parquet(stage.toString)
     val events = graft.Tables.normalizeTs(raw)
     val out = EventStream.slidingAgg(events, "2 hours", "1 hour", "1 hour")
-    toMemory(spark, "st_sliding_window", out, "complete")() // stage is session-cached
+    toMemory(t.spark, "st_sliding_window", out, "complete")() // stage is session-cached
   }
 
   /** Oracle: each event contributes to the two hourly-aligned
@@ -236,14 +236,14 @@ object StreamQueries {
     * a production stream drains — event time, not wall clock, closes
     * sessions.
     */
-  def stSessionAgg(spark: SparkSession, dir: String): DataFrame = {
+  def stSessionAgg(t: Tables): DataFrame = {
     // Footer-only read: the schema, not the data.
-    val schema = eventsSchema(spark, dir)
+    val schema = eventsSchema(t)
     // Staged once per (session, dir) (immutable fixture: backlog copy +
     // guard scan + sentinel write) — the stream below re-runs fully
     // (fresh checkpoint + sink) on every invocation.
-    val stage = graft.util.SessionStage.dir(spark, dir, "stream_sessions") { stage =>
-      Files.copy(Paths.get(s"$dir/events.parquet"), stage.resolve("a_events.parquet"))
+    val stage = graft.util.SessionStage.dir(t, "stream_sessions") { stage =>
+      Files.copy(Paths.get(s"${t.dir}/events.parquet"), stage.resolve("a_events.parquet"))
       val baseTime = Files.getLastModifiedTime(stage.resolve("a_events.parquet")).toMillis
       // Two sentinel files (user −1, fixed far-future ts — 2200-01-01,
       // beyond any event the generator emits, so no data scan needed to
@@ -260,7 +260,7 @@ object StreamQueries {
       // column — cheap, and it fails FAST instead of silently
       // withholding sessions if the data ever reaches the sentinel era.
       val tsType = schema("ts").dataType
-      val rawEvents = spark.read.parquet(s"$dir/events.parquet")
+      val rawEvents = t.table("events")
       val maxTsRow = rawEvents
         .agg(max(graft.Tables.tsMicrosExpr(tsType, col("ts")))).head()
       // Empty source: any sentinel is trivially beyond the (absent)
@@ -299,18 +299,18 @@ object StreamQueries {
     // twice with strictly increasing mtimes so the source orders the
     // sentinels last.
     stageSinglePart(
-      spark.createDataFrame(java.util.Collections.singletonList(sentinelRow), schema),
+      t.spark.createDataFrame(java.util.Collections.singletonList(sentinelRow), schema),
       Seq(1, 2).map(i =>
         stage.resolve(s"z_sentinel_$i.parquet") -> (baseTime + i * 60000L)))
     }
 
-    val raw = spark.readStream.schema(schema)
+    val raw = t.spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", "2")
       .parquet(stage.toString)
     val events = graft.Tables.normalizeTs(raw)
     val out = EventStream.sessionWindows(events, "30 minutes", "1 hour")
     // stage is session-cached, not deleted here
-    toMemory(spark, "st_session_agg", out, "append")()
+    toMemory(t.spark, "st_session_agg", out, "append")()
       .filter(col("user_id") =!= -1L)
       .select(col("user_id"),
         unix_micros(col("session_start")).as("session_start_us"),
@@ -326,15 +326,15 @@ object StreamQueries {
     * join is stateless (dimension side is static), so state is only
     * the segment aggregate. Oracle = the batch twin D12 SQL.
     */
-  def stEnrichJoin(spark: SparkSession, dir: String): DataFrame = {
-    val stage = plainStage(spark, dir)
-    val raw = spark.readStream.schema(eventsSchema(spark, dir)).parquet(stage.toString)
-    val customer = spark.read.parquet(s"$dir/customer.parquet")
+  def stEnrichJoin(t: Tables): DataFrame = {
+    val stage = plainStage(t)
+    val raw = t.spark.readStream.schema(eventsSchema(t)).parquet(stage.toString)
+    val customer = t.customer
     val out = raw
       .join(broadcast(customer), col("user_id") === col("c_custkey"))
       .groupBy(col("c_mktsegment"))
       .agg(count(lit(1)).as("n_events"), round(sum(col("value")), 4).as("total_value"))
-    toMemory(spark, "st_enrich_join", out, "complete")() // stage is session-cached
+    toMemory(t.spark, "st_enrich_join", out, "complete")() // stage is session-cached
   }
 
   /** Oracle: identical to the batch twin D12 (q_enrich_join). */
@@ -351,13 +351,13 @@ object StreamQueries {
     * pair stream is aggregated per user on the (bounded) sink table;
     * oracle = the same self-join in batch SQL.
     */
-  def stStreamStreamJoin(spark: SparkSession, dir: String): DataFrame = {
-    val stage = plainStage(spark, dir)
-    val schema = eventsSchema(spark, dir)
+  def stStreamStreamJoin(t: Tables): DataFrame = {
+    val stage = plainStage(t)
+    val schema = eventsSchema(t)
     // Two independent file-source streams over the same backlog —
     // the production analogue is two topics (clicks, errors).
     def side(eventType: String, prefix: String) =
-      spark.readStream.schema(schema).parquet(stage.toString)
+      t.spark.readStream.schema(schema).parquet(stage.toString)
         .transform(graft.Tables.normalizeTs(_))
         .filter(col("event_type") === eventType)
         .select(
@@ -372,7 +372,7 @@ object StreamQueries {
       errors,
       expr("c_user = e_user AND e_ts >= c_ts AND e_ts <= c_ts + interval 1 hour"))
     // stage is session-cached, not deleted here
-    toMemory(spark, "st_ss_join", pairs, "append")(
+    toMemory(t.spark, "st_ss_join", pairs, "append")(
       _.groupBy(col("c_user").as("user_id"))
         .agg(count(lit(1)).as("n_pairs"),
           round(sum(col("e_value")), 4).as("err_value")))
@@ -392,20 +392,20 @@ object StreamQueries {
     * result would silently equal the INNER join on the tail. The
     * oracle is the plain batch LEFT JOIN twin.
     */
-  def stSsLeftOuter(spark: SparkSession, dir: String): DataFrame = {
-    val schema = eventsSchema(spark, dir)
+  def stSsLeftOuter(t: Tables): DataFrame = {
+    val schema = eventsSchema(t)
     val tsType = schema("ts").dataType
     // Staged once per (session, dir) (immutable fixture: backlog copy +
     // max-ts scan + two sentinel writes); the stream below re-runs
     // fully (fresh checkpoint + sink) per invocation.
-    val stage = graft.util.SessionStage.dir(spark, dir, "stream_ss_lo") { stage =>
-      val raw = spark.read.parquet(s"$dir/events.parquet")
+    val stage = graft.util.SessionStage.dir(t, "stream_ss_lo") { stage =>
+      val raw = t.table("events")
       val maxUs = raw.agg(max(graft.Tables.tsMicrosExpr(tsType, col("ts"))))
         .head().getLong(0)
       val dayUs = 86400000000L
       def sentinel(us: Long, idBase: Long) =
         Seq("click" -> idBase, "error" -> (idBase - 1)).map { case (et, id) =>
-          spark.range(1).select(
+          t.spark.range(1).select(
             lit(id).as("event_id"),
             graft.Tables.tsBoundLit(tsType, us).as("ts"),
             lit(-1L).as("user_id"),
@@ -418,8 +418,8 @@ object StreamQueries {
       // delivery — the sentinels would advance the watermark first and
       // every real click would arrive late and be dropped. Pin all
       // three mtimes explicitly.
-      val base = Files.getLastModifiedTime(Paths.get(s"$dir/events.parquet")).toMillis
-      Files.copy(Paths.get(s"$dir/events.parquet"), stage.resolve("a_events.parquet"))
+      val base = Files.getLastModifiedTime(Paths.get(s"${t.dir}/events.parquet")).toMillis
+      Files.copy(Paths.get(s"${t.dir}/events.parquet"), stage.resolve("a_events.parquet"))
       Files.setLastModifiedTime(stage.resolve("a_events.parquet"),
         java.nio.file.attribute.FileTime.fromMillis(base))
       stageSinglePart(sentinel(maxUs + 30 * dayUs, -1L),
@@ -437,7 +437,7 @@ object StreamQueries {
         Seq(col("user_id").as(s"${prefix}_user")) ++
           (if (withId) Seq(col("event_id").as(s"${prefix}_id")) else Nil) ++
           Seq(col("ts").as(s"${prefix}_ts"))
-      spark.readStream.schema(schema)
+      t.spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1")
         .parquet(stage.toString)
         .transform(graft.Tables.normalizeTs(_))
@@ -450,7 +450,7 @@ object StreamQueries {
       expr("c_user = e_user AND e_ts >= c_ts AND e_ts <= c_ts + interval 1 hour"),
       "leftOuter")
     // stage is session-cached, not deleted here
-    toMemory(spark, "st_ss_leftouter", pairs, "append")(
+    toMemory(t.spark, "st_ss_leftouter", pairs, "append")(
       _.filter(col("c_user") >= 0)
         .groupBy(col("c_user").as("user_id"))
         .agg(
@@ -482,15 +482,15 @@ object StreamQueries {
     * monotone, so the final state is max-per-key, which must equal
     * the plain batch aggregate.
     */
-  def stUpdateAgg(spark: SparkSession, dir: String): DataFrame = {
-    val stage = cdcStage(spark, dir)
-    val stream = spark.readStream.schema(eventsSchema(spark, dir))
+  def stUpdateAgg(t: Tables): DataFrame = {
+    val stage = cdcStage(t)
+    val stream = t.spark.readStream.schema(eventsSchema(t))
       .option("maxFilesPerTrigger", "1")
       .parquet(stage.toString)
     val counts = graft.Tables.normalizeTs(stream)
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n_events"))
-    toMemory(spark, "st_update_agg", counts, "update")(
+    toMemory(t.spark, "st_update_agg", counts, "update")(
       _.groupBy(col("event_type")).agg(max(col("n_events")).as("n_events")))
   }
 
@@ -522,20 +522,20 @@ object StreamQueries {
     * so the oracle is the plain batch aggregate over the
     * single-copy table.
     */
-  def stForeachBatchUpsert(spark: SparkSession, dir: String): DataFrame = {
-    val stage = doubleStage(spark, dir) // session-cached, not deleted here
+  def stForeachBatchUpsert(t: Tables): DataFrame = {
+    val stage = doubleStage(t) // session-cached, not deleted here
     val service = Files.createTempDirectory("graft_stream_fb_svc_")
     try {
-      val raw = spark.readStream.schema(eventsSchema(spark, dir))
+      val raw = t.spark.readStream.schema(eventsSchema(t))
         .option("maxFilesPerTrigger", "1")
         .parquet(stage.toString)
       val slim = raw.select(col("event_id"), col("user_id"), col("value"))
-      run(spark, "st_foreachbatch_upsert", slim)(_.foreachBatch { (batch: Dataset[Row], _: Long) =>
+      run(t.spark, "st_foreachbatch_upsert", slim)(_.foreachBatch { (batch: Dataset[Row], _: Long) =>
         graft.export.FeatureService.publish(
           batch.toDF(), service.toString, "events",
           graft.export.PublishMode.Auto, upsertKey = "event_id")
       })
-      collected(spark, graft.export.FeatureService.readLayer(spark, service.toString, "events")
+      collected(t.spark, graft.export.FeatureService.readLayer(t.spark, service.toString, "events")
         .groupBy(col("user_id"))
         .agg(count(lit(1)).as("n_events"), round(sum(col("value")), 4).as("total_value")))
     } finally Fs.deleteRecursively(service)
@@ -561,10 +561,10 @@ object StreamQueries {
     * aggregated on the sink table BEFORE collecting, and equals the
     * batch aggregate over the single-copy table iff dedup worked.
     */
-  def stDedupStream(spark: SparkSession, dir: String): DataFrame = {
-    val stage = doubleStage(spark, dir)
-    val schema = eventsSchema(spark, dir)
-    val raw = spark.readStream.schema(schema).parquet(stage.toString)
+  def stDedupStream(t: Tables): DataFrame = {
+    val stage = doubleStage(t)
+    val schema = eventsSchema(t)
+    val raw = t.spark.readStream.schema(schema).parquet(stage.toString)
     val events = graft.Tables.normalizeTs(raw)
     // r13 (guide §2.3): project BEFORE the dedup — the state store
     // keys on event_id but buffered rows carry every column through
@@ -577,7 +577,7 @@ object StreamQueries {
       .withWatermark("ts", "1 hour")
       .dropDuplicatesWithinWatermark("event_id")
     // stage is session-cached, not deleted here
-    toMemory(spark, "st_dedup_stream", deduped, "append")(
+    toMemory(t.spark, "st_dedup_stream", deduped, "append")(
       _.groupBy(col("user_id"))
         .agg(count(lit(1)).as("n_events"), round(sum(col("value")), 4).as("total_value")))
   }
@@ -619,10 +619,10 @@ object StreamQueries {
     * (fresh checkpoint + sink each time) without re-running the
     * two filter-write jobs that build the fixture.
     */
-  private def lateStage(spark: SparkSession, dir: String): java.nio.file.Path =
-    graft.util.SessionStage.dir(spark, dir, "stream_late") { stage =>
+  private def lateStage(t: Tables): java.nio.file.Path =
+    graft.util.SessionStage.dir(t, "stream_late") { stage =>
       val splitUs = 1706140800000000L // 2024-01-25T00:00:00Z
-      val raw = spark.read.parquet(s"$dir/events.parquet")
+      val raw = t.table("events")
       // Bound literal in the RAW column's own physical type: keeps
       // the two stage filters parquet-prunable (column vs literal)
       // AND the staged copies in the file's encoding so the
@@ -641,7 +641,7 @@ object StreamQueries {
       // fine: three empty batches, empty windows, empty result.
       require((nFresh == 0L && nLate == 0L) || (nFresh > 0L && nLate > 0L),
         s"stLateDrop split at $splitUs leaves an empty side (fresh=$nFresh late=$nLate)")
-      val base = Files.getLastModifiedTime(Paths.get(s"$dir/events.parquet")).toMillis
+      val base = Files.getLastModifiedTime(Paths.get(s"${t.dir}/events.parquet")).toMillis
       stageSinglePart(raw.filter(col("ts") >= splitBound),
         Seq(stage.resolve("a_fresh.parquet") -> base))
       // The mid commit is LOAD-BEARING, not cadence decoration: a
@@ -658,15 +658,15 @@ object StreamQueries {
         Seq(stage.resolve("z_late.parquet") -> (base + 60000L)))
     }
 
-  def stLateDrop(spark: SparkSession, dir: String): DataFrame = {
-    val stage = lateStage(spark, dir)
-    val stream = spark.readStream.schema(eventsSchema(spark, dir))
+  def stLateDrop(t: Tables): DataFrame = {
+    val stage = lateStage(t)
+    val stream = t.spark.readStream.schema(eventsSchema(t))
       .option("maxFilesPerTrigger", "1")
       .parquet(stage.toString)
     val events = graft.Tables.normalizeTs(stream)
     val out = EventStream.windowedAgg(events, "1 hour", "1 hour")
     // stage dir is cached per (session, dir) — not deleted here.
-    toMemory(spark, "st_late_drop", out, "append")()
+    toMemory(t.spark, "st_late_drop", out, "append")()
       .select(unix_micros(col("window_start")).as("window_start_us"),
         col("event_type"), col("n_events"), col("sum_value"))
   }
@@ -697,10 +697,10 @@ object StreamQueries {
     * out of order), delivered in mtime order one file per
     * micro-batch.
     */
-  private def cdcStage(spark: SparkSession, dir: String): java.nio.file.Path =
-    graft.util.SessionStage.dir(spark, dir, "stream_cdc") { stage =>
-      val raw = spark.read.parquet(s"$dir/events.parquet")
-      val base = Files.getLastModifiedTime(Paths.get(s"$dir/events.parquet")).toMillis
+  private def cdcStage(t: Tables): java.nio.file.Path =
+    graft.util.SessionStage.dir(t, "stream_cdc") { stage =>
+      val raw = t.table("events")
+      val base = Files.getLastModifiedTime(Paths.get(s"${t.dir}/events.parquet")).toMillis
       (0 until 3).foreach { i =>
         stageSinglePart(raw.filter(pmod(col("event_id"), lit(3)) === i),
           Seq(stage.resolve(s"${('a' + i).toChar}_slice.parquet") -> (base + i * 30000L)))
@@ -720,18 +720,18 @@ object StreamQueries {
     * the reason the batch oracle (latest row per key, tombstones
     * excluded) matches exactly.
     */
-  def stCdcApply(spark: SparkSession, dir: String): DataFrame = {
-    val stage = cdcStage(spark, dir)
+  def stCdcApply(t: Tables): DataFrame = {
+    val stage = cdcStage(t)
     val deltas = Files.createTempDirectory("graft_stream_cdc_delta_")
     try {
-      val raw = spark.readStream.schema(eventsSchema(spark, dir))
+      val raw = t.spark.readStream.schema(eventsSchema(t))
         .option("maxFilesPerTrigger", "1")
         .parquet(stage.toString)
       val cdc = graft.Tables.normalizeTs(raw).select(
         col("user_id"),
         when(col("event_type") === "error", lit("D")).otherwise(lit("U")).as("op"),
         col("value"), col("ts"), col("event_id"))
-      run(spark, "st_cdc_apply", cdc)(_.foreachBatch { (batch: Dataset[Row], _: Long) =>
+      run(t.spark, "st_cdc_apply", cdc)(_.foreachBatch { (batch: Dataset[Row], _: Long) =>
         batch
           .groupBy(col("user_id"))
           .agg(max_by(
@@ -741,7 +741,7 @@ object StreamQueries {
             col("w.ts").as("ts"), col("w.event_id").as("event_id"))
           .write.mode("append").parquet(deltas.toString)
       })
-      collected(spark, spark.read.parquet(deltas.toString)
+      collected(t.spark, Tables.parquet(t.spark, deltas.toString)
         .groupBy(col("user_id"))
         .agg(max_by(struct(col("op"), col("value")),
           struct(col("ts"), col("event_id"))).as("w"))
@@ -800,15 +800,15 @@ object StreamQueries {
     * micro-batch and cannot be maintained incrementally in complete
     * mode).
     */
-  def stTopkWindowed(spark: SparkSession, dir: String): DataFrame = {
-    val stage = plainStage(spark, dir)
-    val raw = spark.readStream.schema(eventsSchema(spark, dir)).parquet(stage.toString)
+  def stTopkWindowed(t: Tables): DataFrame = {
+    val stage = plainStage(t)
+    val raw = t.spark.readStream.schema(eventsSchema(t)).parquet(stage.toString)
     val events = graft.Tables.normalizeTs(raw)
     val counts = events
       .groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
       .agg(count(lit(1)).as("n"))
       .select(col("w.start").as("window_start"), col("event_type"), col("n"))
-    val drained = toMemory(spark, "st_topk_windowed", counts, "complete")() // stage session-cached
+    val drained = toMemory(t.spark, "st_topk_windowed", counts, "complete")() // stage session-cached
     val rankW = org.apache.spark.sql.expressions.Window
       .partitionBy(col("window_start"))
       .orderBy(col("n").desc, col("event_type"))
@@ -829,14 +829,13 @@ object StreamQueries {
     * not on sink-side dedup (I9 proves the complementary
     * idempotent-sink contract).
     */
-  def stCheckpointResume(spark: SparkSession, dir: String): DataFrame = {
+  def stCheckpointResume(t: Tables): DataFrame = {
     // The two halves of the split backlog are immutable fixtures —
     // build their part files ONCE per (session, dir) (two filter-write
     // jobs); each RUN still stages them into a fresh source dir in
     // two steps (A, run, B, run) so the restart semantics under test
     // are untouched, but re-runs pay two file copies, not two jobs.
-    val parts = graft.util.SessionStage.dir(spark, dir, "stream_resume_parts") { hold =>
-      val t = graft.Tables(spark, dir)
+    val parts = graft.util.SessionStage.dir(t, "stream_resume_parts") { hold =>
       val slim = t.events.select(col("event_id"), col("event_type"), col("value"))
       val now = System.currentTimeMillis()
       stageSinglePart(slim.filter(pmod(col("event_id"), lit(2)) === 0),
@@ -855,10 +854,10 @@ object StreamQueries {
       Files.setLastModifiedTime(stage.resolve("a_events.parquet"),
         java.nio.file.attribute.FileTime.fromMillis(base))
       def runOnce(): Unit = {
-        val raw = spark.readStream
+        val raw = t.spark.readStream
           .schema("event_id BIGINT, event_type STRING, value DOUBLE")
           .parquet(stage.toString)
-        run(spark, name, raw, Some(ckpt))(_.foreachBatch { (batch: Dataset[Row], _: Long) =>
+        run(t.spark, name, raw, Some(ckpt))(_.foreachBatch { (batch: Dataset[Row], _: Long) =>
           batch.write.mode("append").parquet(sink)
         })
       }
@@ -867,7 +866,7 @@ object StreamQueries {
       Files.setLastModifiedTime(stage.resolve("b_events.parquet"),
         java.nio.file.attribute.FileTime.fromMillis(base + 60000L))
       runOnce() // restart: must pick up ONLY B
-      collected(spark, spark.read.parquet(sink)
+      collected(t.spark, Tables.parquet(t.spark, sink)
         .groupBy(col("event_type"))
         .agg(count(lit(1)).as("n"), round(sum(col("value")), 4).as("total_value")))
     } finally Seq(ckpt, stage, sinkDir).foreach(Fs.deleteRecursively)
@@ -909,21 +908,21 @@ object StreamQueries {
     * (n·x−Σx)² > 9·(n·Σx²−(Σx)²) comparison over a
     * rows-between-preceding window.
     */
-  def stAnomalyZscore(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
+  def stAnomalyZscore(t: Tables): DataFrame = {
+    import t.spark.implicits._
     // Staged once per (session, dir) (two filter-write jobs building the
     // old/new split — immutable fixture); fresh stream per run.
-    val stage = graft.util.SessionStage.dir(spark, dir, "stream_anom") { stage =>
-      val raw0 = spark.read.parquet(s"$dir/events.parquet")
+    val stage = graft.util.SessionStage.dir(t, "stream_anom") { stage =>
+      val raw0 = t.table("events")
       val splitUs = 1706140800000000L // 2024-01-25T00:00:00Z
       val splitBound = graft.Tables.tsBoundLit(raw0.schema("ts").dataType, splitUs)
-      val base = Files.getLastModifiedTime(Paths.get(s"$dir/events.parquet")).toMillis
+      val base = Files.getLastModifiedTime(Paths.get(s"${t.dir}/events.parquet")).toMillis
       stageSinglePart(raw0.filter(col("ts") < splitBound),
         Seq(stage.resolve("a_old.parquet") -> base))
       stageSinglePart(raw0.filter(col("ts") >= splitBound),
         Seq(stage.resolve("z_new.parquet") -> (base + 30000L)))
     }
-    val stream = spark.readStream.schema(eventsSchema(spark, dir))
+    val stream = t.spark.readStream.schema(eventsSchema(t))
       .option("maxFilesPerTrigger", "1")
       .parquet(stage.toString)
     val ev = graft.Tables.normalizeTs(stream)
@@ -932,7 +931,7 @@ object StreamQueries {
         expr("CAST(round(value * 1000000.0, 0) AS BIGINT)").as("fx"))
       .as[graft.streaming.AnomEvent]
     val flags = graft.streaming.EventStream.anomalyZscore(ev)
-    toMemory(spark, "st_anomaly_zscore", flags.toDF(), "append")() // stage is session-cached
+    toMemory(t.spark, "st_anomaly_zscore", flags.toDF(), "append")() // stage is session-cached
   }
 
   /** The stateful stream's flag set equals the batch full-history

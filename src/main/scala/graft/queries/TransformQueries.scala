@@ -2,7 +2,7 @@ package graft.queries
 
 import graft.Tables
 import graft.operators.Normalize
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Transform-layer operator exercises (SURVEY §2 B) — each drives
@@ -15,8 +15,7 @@ object TransformQueries {
     * project/rename to the flat publish schema, strings clipped,
     * publish column order. `part` stands in for segments.
     */
-  def trNormalizeRoads(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def trNormalizeRoads(t: Tables): DataFrame = {
     val projected = t.part.select(
       col("p_partkey").as("id"),
       col("p_name").as("name"),
@@ -32,8 +31,7 @@ object TransformQueries {
   /** B2: buildings schema normalization incl. numeric height/floors
     * (transform.py:472-515).
     */
-  def trNormalizeBuildings(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def trNormalizeBuildings(t: Tables): DataFrame = {
     val projected = t.part.select(
       col("p_partkey").as("id"),
       col("p_name").as("name"),
@@ -53,14 +51,12 @@ object TransformQueries {
   /** B3: places schema normalization (transform.py:518-573) — JSON
     * flatten + category + confidence over the events analogue.
     */
-  def trNormalizePlaces(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def trNormalizePlaces(t: Tables): DataFrame =
     t.events.select(
       col("event_id").as("id"),
       get_json_object(col("props"), "$.k").as("name_primary"),
       col("event_type").as("category_primary"),
       round(col("value"), 4).as("confidence"))
-  }
 
   val trNormalizePlacesSql: String =
     """SELECT event_id AS id, json_extract_string(props, '$.k') AS name_primary,
@@ -68,13 +64,11 @@ object TransformQueries {
       |FROM events""".stripMargin
 
   /** B4: string clipping at 255 (transform.py:327-331). */
-  def trClipStrings(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def trClipStrings(t: Tables): DataFrame =
     Normalize
       .clipStrings(t.documents.select(col("doc_id"), col("text")))
       .withColumn("clipped_len", length(col("text")))
       .drop("text")
-  }
 
   val trClipStringsSql: String =
     "SELECT doc_id, length(left(text, 255)) AS clipped_len FROM documents"
@@ -83,13 +77,11 @@ object TransformQueries {
     * JSON-int extraction and a guaranteed-garbage cast both flow
     * through try_cast semantics (null, never an error).
     */
-  def trSafeNumeric(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def trSafeNumeric(t: Tables): DataFrame =
     t.events.select(
       col("event_id"),
       Normalize.safeNumeric(get_json_object(col("props"), "$.k"), "int").as("k_int"),
       Normalize.safeNumeric(col("event_type"), "int").as("bad_cast"))
-  }
 
   val trSafeNumericSql: String =
     """SELECT event_id,
@@ -100,13 +92,11 @@ object TransformQueries {
   /** B6: first-of-array extraction (transform.py:725-742
     * `_extract_first_from_array`).
     */
-  def trFirstOfArray(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def trFirstOfArray(t: Tables): DataFrame =
     t.embeddings.select(
       col("vec_id"),
       round(element_at(col("embedding"), 1).cast("double"), 4).as("first_dim"),
       size(col("embedding")).cast("long").as("dim"))
-  }
 
   val trFirstOfArraySql: String =
     """SELECT vec_id, round(CAST(embedding[1] AS DOUBLE), 4) + 0 AS first_dim,
@@ -118,8 +108,7 @@ object TransformQueries {
     * reserved keywords suffixed, spaces/dashes underscored, 30-char
     * cap. The frame is built with hostile names, then sanitized.
     */
-  def trSanitizeFields(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def trSanitizeFields(t: Tables): DataFrame = {
     val hostile = t.orders.select(
       col("o_orderkey").as("select"),
       col("o_orderstatus").as("order status"),
@@ -135,15 +124,13 @@ object TransformQueries {
       |FROM orders""".stripMargin
 
   /** B8: metadata enrichment (transform.py:151-177). */
-  def trMetadataEnrich(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def trMetadataEnrich(t: Tables): DataFrame =
     Normalize.addMetadata(
       t.nation.select(col("n_nationkey"), col("n_name")),
       countryIso3 = "AFG",
       countryName = "Afghanistan",
       sector = Some("Road Network"),
       processedDate = "2026-01-01T00:00:00")
-  }
 
   val trMetadataEnrichSql: String =
     """SELECT n_nationkey, n_name,
@@ -156,14 +143,12 @@ object TransformQueries {
     * schema (the structured counterpart of the A2 path extraction;
     * reference flattens whole JSON objects, transform.py:576-635).
     */
-  def trFromJson(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def trFromJson(t: Tables): DataFrame =
     t.events.select(
       col("event_id"),
       from_json(col("props"), org.apache.spark.sql.types.StructType(Seq(
         org.apache.spark.sql.types.StructField("k", org.apache.spark.sql.types.LongType)))).as("p"))
       .select(col("event_id"), col("p.k").as("k"))
-  }
 
   val trFromJsonSql: String =
     """SELECT event_id,
@@ -173,15 +158,13 @@ object TransformQueries {
   /** B9: validity rules (transform.py:252-294) — non-null/non-empty
     * requireds plus the degenerate-magnitude threshold.
     */
-  def trDropInvalid(spark: SparkSession, dir: String): DataFrame = {
-    val t = Tables(spark, dir)
+  def trDropInvalid(t: Tables): DataFrame =
     Normalize
       .dropInvalid(
         t.events.select(col("event_id"), col("event_type"), col("value")),
         requiredNonEmpty = Seq("event_type", "value"),
         magnitudeCol = Some(("value", 1.0)))
       .withColumn("value", round(col("value"), 4))
-  }
 
   val trDropInvalidSql: String =
     """SELECT event_id, event_type, round(value, 4) + 0 AS value FROM events
@@ -196,9 +179,8 @@ object TransformQueries {
     * in (ts, event_id) order with the first vertex re-appended, so
     * the closing-vertex rule actually fires on every row.
     */
-  def trGeometryRules(spark: SparkSession, dir: String): DataFrame = {
+  def trGeometryRules(t: Tables): DataFrame = {
     import graft.operators.Geo
-    val t = Tables(spark, dir)
     val pts = t.events.select(
       col("user_id"), col("ts"), col("event_id"),
       col("value").as("x"),
@@ -279,9 +261,8 @@ object TransformQueries {
     * the inverse against the forward — the whole operator is
     * map-only, so at 100 TB it rides the scan with zero exchanges.
     */
-  def trReproject(spark: SparkSession, dir: String): DataFrame = {
+  def trReproject(t: Tables): DataFrame = {
     import graft.operators.Geo
-    val t = Tables(spark, dir)
     val src = t.events.select(
       col("event_id"),
       (pmod(col("value"), lit(360.0)) - 180.0).as("lon"),

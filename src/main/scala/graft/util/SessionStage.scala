@@ -5,15 +5,17 @@ import scala.collection.concurrent.TrieMap
 import org.apache.spark.SparkContext
 import org.apache.spark.scheduler.{SparkListener, SparkListenerApplicationEnd}
 import org.apache.spark.sql.SparkSession
+import graft.Tables
 
 /** The one store for intermediates a query builds once and reuses:
   * round-trip export files, staged stream backlogs, localCheckpoint
   * edge sets, fitted models. Query modules keep no cache of their own.
   *
-  * '''Key.''' `(SparkSession, dir, name)`: an artifact is reused
+  * '''Key.''' Callers pass their table catalog; the key is its
+  * session (by identity), its dir, and `name`. An artifact is reused
   * within the session that built it, for one source directory (the
   * dir is an immutable released snapshot for the session's lifetime).
-  * `spark.newSession()` builds its own copy. `name` identifies the
+  * A catalog over `spark.newSession()` builds its own copy. `name` identifies the
   * artifact and is also its temp-dir prefix (`graft_<name>_…`), so one
   * string names both the entry and what it leaves on disk.
   *
@@ -96,15 +98,15 @@ object SessionStage {
   private val store = new Store
   Runtime.getRuntime.addShutdownHook(new Thread(() => store.releaseAll()))
 
-  /** The value `build` returns, built once per (session, dir, name). */
-  def value[V](spark: SparkSession, dir: String, name: String)(build: => V): V =
-    store.value(spark, dir, name)(build)
+  /** The value `build` returns, built once per (t.spark, t.dir, name). */
+  def value[V](t: Tables, name: String)(build: => V): V =
+    store.value(t.spark, t.dir, name)(build)
 
-  /** A directory under `java.io.tmpdir` filled once per (session, dir,
+  /** A directory under `java.io.tmpdir` filled once per (t.spark, t.dir,
     * name) by `write`, deleted when the session's SparkContext stops.
     */
-  def dir(spark: SparkSession, dir: String, name: String)(write: Path => Unit): Path =
-    store.dir(spark, dir, name)(write)
+  def dir(t: Tables, name: String)(write: Path => Unit): Path =
+    store.dir(t.spark, t.dir, name)(write)
 
   /** Drop `spark`'s entries and delete its directories now; its next call builds again. */
   def release(spark: SparkSession): Unit = store.release((s: SparkSession) => s eq spark)

@@ -26,4 +26,13 @@ object GraftBridge {
     */
   def drainListenerBus(spark: SparkSession): Unit =
     spark.sparkContext.listenerBus.waitUntilEmpty()
+
+  /** The session's Hadoop conf for tasks: broadcast once through
+    * Spark's (`spark`-package-private) `SerializableConfiguration`,
+    * read on the executor by calling the returned function.
+    */
+  def taskHadoopConf(spark: SparkSession): () => org.apache.hadoop.conf.Configuration = {
+    val b = org.apache.spark.util.SerializableConfiguration.broadcast(spark.sparkContext)
+    () => b.value.value
+  }
 }

@@ -3,22 +3,22 @@ package graft
 import com.fasterxml.jackson.databind.ObjectMapper
 import graft.queries.QueryDef
 import graft.util.StageMetricsListener
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import scala.jdk.CollectionConverters._
 
 /** The sweep's scoring and its BENCH_FULL.json / totals shape. */
 class BenchSpec extends SparkSpec {
 
-  private def row(name: String)(fn: (SparkSession, String) => DataFrame) = QueryDef(name, fn, None)
+  private def row(name: String)(fn: Tables => DataFrame) = QueryDef(name, fn, None)
 
   test("a failed row scores -1 and carries its cause; the other rows are timed") {
     var calls = 0
     val rows = Seq(
-      row("ok")((s, _) => s.range(5).toDF()),
-      row("bad")((_, _) => throw new IllegalStateException("boom\ntrace")),
-      row("bad_second")((s, _) => {
+      row("ok")(t => t.spark.range(5).toDF()),
+      row("bad")(_ => throw new IllegalStateException("boom\ntrace")),
+      row("bad_second")(t => {
         calls += 1
-        if (calls == 2) throw new IllegalArgumentException("second run") else s.range(1).toDF()
+        if (calls == 2) throw new IllegalArgumentException("second run") else t.spark.range(1).toDF()
       }))
     val scores = Bench.score(spark, rows, sfDir, new StageMetricsListener)
     assert(scores.map(_.name) == Seq("ok", "bad", "bad_second"))
@@ -39,9 +39,9 @@ class BenchSpec extends SparkSpec {
 
   test("a row that stages through SessionStage builds its artifact in every timed run") {
     var builds = 0
-    val staged = row("staged")((s, dir) => {
-      graft.util.SessionStage.dir(s, dir, "bench_spec_staged")(_ => builds += 1)
-      s.range(1).toDF()
+    val staged = row("staged")(t => {
+      graft.util.SessionStage.dir(t, "bench_spec_staged")(_ => builds += 1)
+      t.spark.range(1).toDF()
     })
     val Seq(score) = Bench.score(spark, Seq(staged), sfDir, new StageMetricsListener)
     assert(score.error.isEmpty && builds == 2)

@@ -717,7 +717,7 @@ class ExchangeBudgetSpec extends SparkSpec {
     val batch = Registry.all.filterNot(_.name.startsWith("st_"))
     val offenders = batch.flatMap { q =>
       budget.get(q.name).flatMap { case (maxS, maxB) =>
-        val (s, b) = PlanCheck.exchangeCounts(q.fn(spark, sfDir))
+        val (s, b) = PlanCheck.exchangeCounts(q.fn(tables))
         if (s > maxS || b > maxB)
           Some(s"${q.name}: shuffle $s (max $maxS), broadcast $b (max $maxB)")
         else None

@@ -33,7 +33,7 @@ class PartitionInvarianceSpec extends SparkSpec {
     "sm_epoch_shuffle")  // LCG permutation + shard windows
 
   private def canon(name: String): Seq[String] = {
-    val df = Registry.all.find(_.name == name).get.fn(spark, sfDir)
+    val df = Registry.all.find(_.name == name).get.fn(tables)
     df.collect().map(_.toString).sorted.toSeq
   }
 

@@ -112,7 +112,7 @@ class PlanGuardSpec extends SparkSpec {
   test("no registry query has an unbroadcast cartesian product") {
     val batch = Registry.all.filterNot(_.name.startsWith("st_"))
     val offenders = batch.flatMap { q =>
-      val n = PlanCheck.cartesianProducts(q.fn(spark, sfDir))
+      val n = PlanCheck.cartesianProducts(q.fn(tables))
       if (n > 0) Some(s"${q.name}: $n CartesianProduct node(s)") else None
     }
     assert(offenders.isEmpty, s"cartesian products:\n${offenders.mkString("\n")}")
@@ -124,7 +124,7 @@ class PlanGuardSpec extends SparkSpec {
     // window; they are exercised by StreamQueriesSpec instead.
     val batch = Registry.all.filterNot(_.name.startsWith("st_"))
     val offenders = batch.flatMap { q =>
-      val wins = PlanCheck.unpartitionedWindows(q.fn(spark, sfDir))
+      val wins = PlanCheck.unpartitionedWindows(q.fn(tables))
       val cap = allow.get(q.name).map(_._1).getOrElse(0)
       if (wins.size > cap) Some(s"${q.name}: ${wins.size} global window(s) [${wins.mkString(" | ")}]")
       else None

@@ -67,7 +67,7 @@ class PushdownGuardSpec extends SparkSpec {
   test("every pinned query still pushes a filter to its scan") {
     val byName = Registry.all.map(q => q.name -> q).toMap
     val offenders = mustPush.filterNot { n =>
-      PlanCheck.hasPushedFilters(byName(n).fn(spark, sfDir))
+      PlanCheck.hasPushedFilters(byName(n).fn(tables))
     }
     assert(offenders.isEmpty,
       s"queries whose scan predicate disappeared: $offenders")

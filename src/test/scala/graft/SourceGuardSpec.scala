@@ -12,8 +12,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * escaping, Jackson mappers and config-document parsing only in
   * `config/JsonConfig`, one start/await/checkpoint site for every
   * streaming row, and one geometry-column check and ring decoder for
-  * the geo file writers. No JVM system property steers the program,
-  * and no `Throwable` catch swallows a fatal error.
+  * the geo file writers. Query modules take their tables from the
+  * catalog their runner passes. No JVM system property steers the
+  * program, and no `Throwable` catch swallows a fatal error.
   */
 class SourceGuardSpec extends AnyFunSuite {
 
@@ -42,6 +43,10 @@ class SourceGuardSpec extends AnyFunSuite {
   private val codec = "graft/config/JsonConfig.scala"
   private val systemProperty = """\bsys\.props\b|System\.getProperty\b""".r
 
+  /** A query building its own catalog, taking `(spark, dir)`, or reading parquet around the catalog. */
+  private val ownCatalog =
+    """\bTables\s*\(|\bspark\s*:\s*SparkSession\s*,\s*dir\s*:\s*String\b|\bspark\.read\.parquet\(""".r
+
   /** A catch case typed `Throwable`; it must rethrow on its line. */
   private val throwableCase = """case\s+\w+\s*:\s*Throwable\s*=>""".r
 
@@ -65,6 +70,11 @@ class SourceGuardSpec extends AnyFunSuite {
     assert(mapper.findFirstIn("YAMLMapper.builder()").isDefined)
     assert(throwableCase.findFirstIn("catch { case _: Throwable => return -1.0 }").isDefined)
     assert(throwableCase.findFirstIn("case NonFatal(e) => log(e)").isEmpty)
+    Seq("val t = graft.Tables(spark, dir)", "def q(spark: SparkSession, dir: String): DataFrame =",
+      """t.spark.read.parquet(s"${t.dir}/events.parquet")""").foreach { s =>
+      assert(ownCatalog.findFirstIn(s).isDefined, s)
+    }
+    assert(ownCatalog.findFirstIn("Tables.parquet(t.spark, path)").isEmpty)
   }
 
   test("sources are where the guard looks") {
@@ -84,6 +94,11 @@ class SourceGuardSpec extends AnyFunSuite {
   test("no query module holds a module-level mutable map") {
     val queries = sources.filter(_._1.startsWith("graft/queries/"))
     assert(offenders(queries, moduleMap).isEmpty)
+  }
+
+  test("query modules take their tables from the runner's catalog") {
+    val queries = sources.filter(_._1.startsWith("graft/queries/"))
+    assert(offenders(queries, ownCatalog).isEmpty)
   }
 
   test("JSON/YAML documents are parsed and escaped only in the Jackson codec") {

@@ -1,12 +1,12 @@
 package graft
 
 import graft.queries.QueryDef
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 
 /** The registry mains' shared row picker and runner. */
 class SparkEntrySpec extends SparkSpec {
 
-  private def row(name: String)(fn: (SparkSession, String) => DataFrame) = QueryDef(name, fn, None)
+  private def row(name: String)(fn: Tables => DataFrame) = QueryDef(name, fn, None)
 
   test("select: all rows in registry order, or the named rows in the given order, each once") {
     assert(SparkEntry.select(Nil) == graft.queries.Registry.all)
@@ -25,12 +25,12 @@ class SparkEntrySpec extends SparkSpec {
   test("runEach records a failed row's cause and runs the rows after it") {
     val ran = scala.collection.mutable.Buffer.empty[String]
     val rows = Seq(
-      row("ok_a")((s, _) => s.range(2).toDF()),
-      row("bad")((_, _) => throw new IllegalStateException("boom\nsecond line")),
-      row("ok_b")((s, _) => s.range(3).toDF()))
+      row("ok_a")(t => t.spark.range(2).toDF()),
+      row("bad")(_ => throw new IllegalStateException("boom\nsecond line")),
+      row("ok_b")(t => t.spark.range(3).toDF()))
     val failed = SparkEntry.runEach(spark, rows) { q =>
       assert(spark.sparkContext.getLocalProperty("spark.jobGroup.id") == q.name)
-      q.fn(spark, sfDir).count()
+      q.fn(tables).count()
       ran += q.name
     }
     assert(ran == Seq("ok_a", "ok_b"))
@@ -41,7 +41,7 @@ class SparkEntrySpec extends SparkSpec {
 
   test("runEach lets a fatal error through after clearing the job group") {
     val ran = scala.collection.mutable.Buffer.empty[String]
-    val rows = Seq(row("fatal")((s, _) => s.range(1).toDF()), row("after")((s, _) => s.range(1).toDF()))
+    val rows = Seq(row("fatal")(t => t.spark.range(1).toDF()), row("after")(t => t.spark.range(1).toDF()))
     intercept[LinkageError] {
       SparkEntry.runEach(spark, rows) { q =>
         ran += q.name

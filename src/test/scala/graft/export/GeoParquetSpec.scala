@@ -132,4 +132,32 @@ class GeoParquetSpec extends SparkSpec {
     assert(e2.getMessage.contains("does not support column type") ||
       e2.getCause != null)
   }
+
+  test("the write uses the session's Hadoop conf on the driver and in every task") {
+    // A scheme only the session's conf maps to a FileSystem: a fresh
+    // Configuration (driver or task) cannot resolve it. The cache is
+    // off for it, so a task cannot reuse the driver's instance.
+    val scheme = SessionSchemeFs.Scheme
+    val conf = spark.sparkContext.hadoopConfiguration
+    val keys = Seq(s"fs.$scheme.impl", s"fs.$scheme.impl.disable.cache")
+    conf.set(keys(0), classOf[SessionSchemeFs].getName)
+    conf.set(keys(1), "true")
+    try {
+      val local = tmpDir("geoparquet-conf")
+      val res = GeoParquet.write(sampleDf.repartition(2), "geom", s"$scheme://$local")
+      assert(res.rows == 3L)
+      assert(spark.read.parquet(local).count() == 3L)
+      assert(res.files.forall(f => GeoParquet.geoMetadata(s"$local/$f").isDefined))
+    } finally keys.foreach(conf.unset)
+  }
+}
+
+/** The local file system under another scheme (see the conf test above). */
+class SessionSchemeFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getUri: java.net.URI = java.net.URI.create(s"${SessionSchemeFs.Scheme}:///")
+  override def getScheme: String = SessionSchemeFs.Scheme
+}
+
+object SessionSchemeFs {
+  val Scheme = "graftsessionconf"
 }

@@ -136,7 +136,7 @@ class NativeExprSpec extends SparkSpec {
   }
 
   test("tr_geometry_rules evaluates RingStats once per ring") {
-    val plan = graft.queries.TransformQueries.trGeometryRules(spark, sfDir)
+    val plan = graft.queries.TransformQueries.trGeometryRules(tables)
       .queryExecution.executedPlan.toString
     assert("ringstats\\(".r.findAllMatchIn(plan).size == 1, plan)
   }

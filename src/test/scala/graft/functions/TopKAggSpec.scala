@@ -24,9 +24,9 @@ class TopKAggSpec extends SparkSpec {
   }
 
   test("heap aggregate equals window top-N on real data across many partitions") {
-    val windowed = graft.queries.Analytic.qTopnWindow(spark, sfDir)
+    val windowed = graft.queries.Analytic.qTopnWindow(tables)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val heaped = graft.queries.Analytic2.qTopnHeap(spark, sfDir)
+    val heaped = graft.queries.Analytic2.qTopnHeap(tables)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(heaped == windowed && heaped.nonEmpty)
   }

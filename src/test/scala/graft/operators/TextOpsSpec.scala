@@ -75,7 +75,7 @@ class TextOpsSpec extends SparkSpec {
       .collect().map(r => r.getLong(0) -> r.getBoolean(1)).toMap
     assert(out(1L) && !out(2L))
     // registered query shape sanity on the real table
-    val rows = LlmQueries.txCodeDetect(spark, sfDir).limit(5).collect()
+    val rows = LlmQueries.txCodeDetect(tables).limit(5).collect()
     assert(rows.forall(r => r.getLong(1) <= r.getLong(2)))
   }
 

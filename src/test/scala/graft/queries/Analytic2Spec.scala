@@ -9,13 +9,13 @@ class Analytic2Spec extends SparkSpec {
     val direct = tables.events.groupBy("event_type")
       .agg(count(lit(1)).as("n_events"), round(sum(col("value")), 4).as("total_value"))
       .collect().map(r => (r.getString(0), r.getLong(1), r.getDouble(2))).toSet
-    val salted = Analytic2.qSaltedAgg(spark, sfDir)
+    val salted = Analytic2.qSaltedAgg(tables)
       .collect().map(r => (r.getString(0), r.getLong(1), r.getDouble(2))).toSet
     assert(salted == direct)
   }
 
   test("rollup emits subtotal and grand-total rows") {
-    val rows = Analytic2.qRollup(spark, sfDir).collect()
+    val rows = Analytic2.qRollup(tables).collect()
     assert(rows.count(r => r.isNullAt(0) && r.isNullAt(1)) == 1) // grand total
     assert(rows.exists(r => !r.isNullAt(0) && r.isNullAt(1)))    // region subtotal
   }
@@ -26,7 +26,7 @@ class Analytic2Spec extends SparkSpec {
     val exact = tables.documents
       .select(col("source"), explode(split(lower(trim(col("text"))), "\\s+")).as("tok"))
       .groupBy("source").agg(countDistinct("tok").as("exact"))
-    val row = LlmQueries.txVocabApprox(spark, sfDir)
+    val row = LlmQueries.txVocabApprox(tables)
     val joined = exact.join(row, "source")
       .collect().map(r => (r.getLong(1), r.getLong(2), r.getLong(3)))
     assert(joined.nonEmpty)
@@ -37,7 +37,7 @@ class Analytic2Spec extends SparkSpec {
   }
 
   test("pivot fills absent combinations with zero") {
-    val df = Analytic2.qPivot(spark, sfDir)
+    val df = Analytic2.qPivot(tables)
     assert(df.columns.toSeq == Seq("bucket", "click", "view", "purchase", "signup", "error"))
     assert(df.filter(col("click").isNull).count() == 0)
   }

@@ -48,7 +48,7 @@ class Pipeline10Spec extends SparkSpec {
   }
 
   test("q_triangle_count total triangle mass is divisible by 3") {
-    val df = Pipeline10.qTriangleCount(spark, sfDir)
+    val df = Pipeline10.qTriangleCount(tables)
     val total = df.agg(sum(col("tri_cnt"))).collect()(0).getLong(0)
     assert(total > 0 && total % 3 == 0)
   }
@@ -71,7 +71,7 @@ class Pipeline10Spec extends SparkSpec {
   }
 
   test("q_gini output is bounded in [0, 1e6) with positive counts") {
-    val rows = Pipeline10.qGini(spark, sfDir).collect()
+    val rows = Pipeline10.qGini(tables).collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
       val g = r.getLong(1)
@@ -106,7 +106,7 @@ class Pipeline10Spec extends SparkSpec {
         } yield 1
         blk -> ((ps.size.toLong, pairs.size.toLong))
       }
-    val got = Pipeline10.ddBlockedEr(spark, sfDir).collect()
+    val got = Pipeline10.ddBlockedEr(tables).collect()
       .map(r => (r.getString(0), r.getString(1)) ->
         ((r.getLong(2), r.getLong(3)))).toMap
     assert(got == naive)
@@ -115,7 +115,7 @@ class Pipeline10Spec extends SparkSpec {
   // ---- sm_kfold ----
 
   test("sm_kfold folds partition the corpus and are balanced") {
-    val df = Pipeline10.smKfold(spark, sfDir)
+    val df = Pipeline10.smKfold(tables)
     val total = df.agg(sum(col("n_docs"))).collect()(0).getLong(0)
     val t = graft.Tables(spark, sfDir)
     assert(total == t.documents.count())
@@ -129,7 +129,7 @@ class Pipeline10Spec extends SparkSpec {
   // ---- tx_pmi_bigrams ----
 
   test("tx_pmi_bigrams ranks by the exact PMI ratio and respects support") {
-    val rows = Pipeline10.txPmiBigrams(spark, sfDir).collect()
+    val rows = Pipeline10.txPmiBigrams(tables).collect()
     assert(rows.length == 20)
     val byRank = rows.sortBy(_.getAs[Long]("rank"))
     byRank.foreach(r => assert(r.getAs[Long]("cnt_ab") >= 5L))

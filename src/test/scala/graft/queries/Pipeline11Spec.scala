@@ -25,7 +25,7 @@ class Pipeline11Spec extends SparkSpec {
       (et, dow) -> ((rs.size.toLong,
         (sumDow * cntAll * 1000000 / (BigInt(rs.size) * sumAll)).toLong))
     }
-    val got = Pipeline11.qSeasonalIndex(spark, sfDir).collect()
+    val got = Pipeline11.qSeasonalIndex(tables).collect()
       .map(r => (r.getString(0), r.getLong(1)) -> ((r.getLong(2), r.getLong(3))))
       .toMap
     assert(got == expected)
@@ -59,7 +59,7 @@ class Pipeline11Spec extends SparkSpec {
         val (l, b) = refHolt(xs)
         et -> ((xs.size.toLong, l, b, l + 7 * b))
     }
-    val got = Pipeline11.qHolt(spark, sfDir).collect()
+    val got = Pipeline11.qHolt(tables).collect()
       .map(r => r.getString(0) ->
         ((r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4)))).toMap
     assert(got == expected.toMap)
@@ -76,7 +76,7 @@ class Pipeline11Spec extends SparkSpec {
   // ---- tx_rake_keywords ----
 
   test("tx_rake_keywords phrases contain no stopwords and scores are consistent") {
-    val rows = Pipeline11.txRakeKeywords(spark, sfDir).collect()
+    val rows = Pipeline11.txRakeKeywords(tables).collect()
     assert(rows.length == 20)
     val stop = Pipeline11.RakeStopwords.toSet
     rows.foreach { r =>
@@ -130,7 +130,7 @@ class Pipeline11Spec extends SparkSpec {
   }
 
   test("tx_compress_ratio rows are bounded and the SQL function is registered") {
-    val df = Pipeline11.txCompressRatio(spark, sfDir)
+    val df = Pipeline11.txCompressRatio(tables)
     val rows = df.collect()
     assert(rows.length == graft.Tables(spark, sfDir).documents.count())
     rows.foreach { r =>

@@ -20,7 +20,7 @@ class Pipeline12Spec extends SparkSpec {
         case (e, d, u) if e == et && d >= day - 6 && d <= day => u
       }.distinct.size.toLong
     }.toMap
-    val got = Pipeline12.qWindowDistinct(spark, sfDir).collect()
+    val got = Pipeline12.qWindowDistinct(tables).collect()
       .map(r => (r.getString(0), r.getLong(1)) -> r.getLong(2)).toMap
     assert(got == expected)
   }
@@ -38,7 +38,7 @@ class Pipeline12Spec extends SparkSpec {
       val ts = rs.map(_._2)
       for (a <- ts; b <- ts if a != b) yield (a, b)
     }.groupBy(identity).map { case (p, xs) => p -> xs.size.toLong }
-    val got = Pipeline12.qAssocRules(spark, sfDir).collect()
+    val got = Pipeline12.qAssocRules(tables).collect()
     assert(got.nonEmpty)
     got.foreach { r =>
       val (a, b) = (r.getAs[String]("ante"), r.getAs[String]("cons"))
@@ -54,7 +54,7 @@ class Pipeline12Spec extends SparkSpec {
   // ---- sm_reservoir ----
 
   test("sm_reservoir is a stable k-subset that ignores partitioning") {
-    val a = Pipeline12.smReservoir(spark, sfDir).collect().map(_.getLong(0)).sorted
+    val a = Pipeline12.smReservoir(tables).collect().map(_.getLong(0)).sorted
     assert(a.length == 100)
     // same result when the source is read with a different layout
     val t = graft.Tables(spark, sfDir)
@@ -69,7 +69,7 @@ class Pipeline12Spec extends SparkSpec {
   // ---- sm_class_balance ----
 
   test("sm_class_balance equalizes every class to the minority count") {
-    val rows = Pipeline12.smClassBalance(spark, sfDir).collect()
+    val rows = Pipeline12.smClassBalance(tables).collect()
     val t = graft.Tables(spark, sfDir)
     val counts = t.embeddings.groupBy(col("label")).agg(count(lit(1)).as("c"))
       .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap

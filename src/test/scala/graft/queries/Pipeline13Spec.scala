@@ -8,7 +8,7 @@ class Pipeline13Spec extends SparkSpec {
   // ---- src_codec_roundtrip ----
 
   test("codec roundtrip stage really is zstd and lossless") {
-    val df = Pipeline13.srcCodecRoundtrip(spark, sfDir)
+    val df = Pipeline13.srcCodecRoundtrip(tables)
     val expected = graft.Tables(spark, sfDir).lineitem
       .groupBy(col("l_returnflag"))
       .agg(count(lit(1)).as("n_rows"),
@@ -39,7 +39,7 @@ class Pipeline13Spec extends SparkSpec {
           ((sb * a.size - sa * b.size) * 1000000 / (sa * b.size)).toLong)))
       else None
     }
-    val got = Pipeline13.qAbLift(spark, sfDir).collect()
+    val got = Pipeline13.qAbLift(tables).collect()
       .map(r => r.getString(0) -> ((r.getLong(1), r.getLong(2), r.getLong(3))))
       .toMap
     assert(got == expected.toMap)
@@ -49,7 +49,7 @@ class Pipeline13Spec extends SparkSpec {
   // ---- q_lag_ratio ----
 
   test("q_lag_ratio emits only consecutive-day rows") {
-    val rows = Pipeline13.qLagRatio(spark, sfDir).collect()
+    val rows = Pipeline13.qLagRatio(tables).collect()
     assert(rows.nonEmpty)
     // ratio bounded sanity: |dod| under 100x for the synthetic series
     rows.foreach(r => assert(math.abs(r.getLong(2)) < 100000000L))
@@ -84,7 +84,7 @@ class Pipeline13Spec extends SparkSpec {
     // a key-group with >1 doc (the group min enters via the b side).
     val inEdge = groups.filter(_.length > 1).flatMap(_.map(_._1)).toSet
     val expected = inEdge.map(id => id -> find(id)).toMap
-    val got = Pipeline13.ddMultikeyEr(spark, sfDir).collect()
+    val got = Pipeline13.ddMultikeyEr(tables).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got == expected)
     assert(got.nonEmpty)
@@ -107,7 +107,7 @@ class Pipeline13Spec extends SparkSpec {
       val nr = xs.count(x => rare.contains(x._2)).toLong
       id -> ((xs.size.toLong, nr, nr * 1000000L / xs.size))
     }
-    val got = Pipeline13.txRareTokens(spark, sfDir).collect()
+    val got = Pipeline13.txRareTokens(tables).collect()
       .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2), r.getLong(3)))).toMap
     assert(got == expected)
   }

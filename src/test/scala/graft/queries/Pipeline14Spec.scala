@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 class Pipeline14Spec extends SparkSpec {
 
   test("src_file_lineage extracts every row's partition from its physical path") {
-    val got = Pipeline14.srcFileLineage(spark, sfDir).collect()
+    val got = Pipeline14.srcFileLineage(tables).collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
     val expected = graft.Tables(spark, sfDir).events
       .groupBy(col("event_type")).agg(count(lit(1)))
@@ -29,7 +29,7 @@ class Pipeline14Spec extends SparkSpec {
       et -> ((peaks.zip(xs).map { case (p, x) => p - x }.max,
         xs.length.toLong, peaks.max))
     }
-    val got = Pipeline14.qDrawdown(spark, sfDir).collect()
+    val got = Pipeline14.qDrawdown(tables).collect()
       .map(r => r.getString(0) -> ((r.getLong(1), r.getLong(2), r.getLong(3))))
       .toMap
     assert(got == expected.toMap)
@@ -37,8 +37,8 @@ class Pipeline14Spec extends SparkSpec {
   }
 
   test("pipe_release_manifest totals equal the M1 survivor set") {
-    val manifest = Pipeline14.pipeReleaseManifest(spark, sfDir).collect()
-    val survivors = LlmQueries.pipeCleanCorpus(spark, sfDir).count()
+    val manifest = Pipeline14.pipeReleaseManifest(tables).collect()
+    val survivors = LlmQueries.pipeCleanCorpus(tables).count()
     assert(manifest.map(_.getAs[Long]("n_docs")).sum == survivors)
     val splits = manifest.map(_.getAs[String]("split")).toSet
     assert(splits.subsetOf(Set("train", "val", "test")))

@@ -19,7 +19,7 @@ class Pipeline15Spec extends SparkSpec {
       val kept = all.filterNot(boiler.contains)
       id -> ((all.size.toLong, kept.size.toLong, kept.mkString(" ")))
     }
-    val got = Pipeline15.ddLineDedup(spark, sfDir).collect()
+    val got = Pipeline15.ddLineDedup(tables).collect()
       .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2), r.getString(3))))
       .toMap
     assert(got == expected)
@@ -31,7 +31,7 @@ class Pipeline15Spec extends SparkSpec {
   test("dd_line_dedup removes a repeated segment from its FIRST occurrence too") {
     // Distinguishes E24 from G14's keep-first semantics: pick any
     // boilerplate segment and assert NO doc retains it.
-    val out = Pipeline15.ddLineDedup(spark, sfDir).collect()
+    val out = Pipeline15.ddLineDedup(tables).collect()
     val removedSomething = out.filter(r => r.getLong(2) < r.getLong(1))
     assert(removedSomething.nonEmpty)
     val keptTexts = out.map(_.getString(3))
@@ -61,7 +61,7 @@ class Pipeline15Spec extends SparkSpec {
     val expected = cnt.map { case ((s, d), c) =>
       (s, d) -> ((c, c * 1000000L / srcTot(s)))
     }
-    val got = Pipeline15.qMarkovTransitions(spark, sfDir).collect()
+    val got = Pipeline15.qMarkovTransitions(tables).collect()
       .map(r => (r.getString(0), r.getString(1)) -> ((r.getLong(2), r.getLong(3))))
       .toMap
     assert(got == expected)
@@ -69,7 +69,7 @@ class Pipeline15Spec extends SparkSpec {
   }
 
   test("tx_lang_confusion matrix is complete and shares row-normalize") {
-    val m = Pipeline15.txLangConfusion(spark, sfDir).collect()
+    val m = Pipeline15.txLangConfusion(tables).collect()
     assert(m.map(_.getLong(2)).sum == tables.documents.count())
     m.groupBy(_.getString(0)).foreach { case (claimed, rs) =>
       val shareSum = rs.map(_.getLong(3)).sum
@@ -94,14 +94,14 @@ class Pipeline15Spec extends SparkSpec {
       .select(col("doc_id"), col("tok"), col("bucket"), col("batch"))
       .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2), r.getLong(3))))
       .toMap
-    val got = Pipeline15.smLengthBuckets(spark, sfDir).collect()
+    val got = Pipeline15.smLengthBuckets(tables).collect()
       .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2), r.getLong(3))))
       .toMap
     assert(got == naive)
   }
 
   test("sm_length_buckets batches are full-size except each bucket's last") {
-    val out = Pipeline15.smLengthBuckets(spark, sfDir).collect()
+    val out = Pipeline15.smLengthBuckets(tables).collect()
       .map(r => (r.getLong(2), r.getLong(3)))
     val sizes = out.groupBy(identity).map { case (k, xs) => k -> xs.size }
     sizes.groupBy(_._1._1).foreach { case (bucket, bs) =>

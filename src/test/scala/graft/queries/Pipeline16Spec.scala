@@ -18,7 +18,7 @@ class Pipeline16Spec extends SparkSpec {
       val med = byPrice.find { case (_, w) => cw += w; cw * 2 >= tot }.get._1
       flag -> ((med, tot))
     }
-    val got = Pipeline16.qWeightedMedian(spark, sfDir).collect()
+    val got = Pipeline16.qWeightedMedian(tables).collect()
       .map(r => r.getString(0) -> ((r.getDouble(1), r.getLong(2)))).toMap
     assert(got == expected)
     assert(got.nonEmpty)
@@ -32,7 +32,7 @@ class Pipeline16Spec extends SparkSpec {
       .select(col("l_returnflag"), col("l_extendedprice"),
         col("l_quantity").cast("long"))
       .collect().map(r => (r.getString(0), r.getDouble(1), r.getLong(2)))
-    val got = Pipeline16.qWeightedMedian(spark, sfDir).collect()
+    val got = Pipeline16.qWeightedMedian(tables).collect()
       .map(r => r.getString(0) -> r.getDouble(1)).toMap
     rows.groupBy(_._1).foreach { case (flag, xs) =>
       val tot = xs.map(_._3).sum
@@ -54,7 +54,7 @@ class Pipeline16Spec extends SparkSpec {
         d2 >= d && p2 >= p && (d2 > d || p2 > p)
       }
     }.map(_._1).toSet
-    val got = Pipeline16.qSkyline(spark, sfDir).collect()
+    val got = Pipeline16.qSkyline(tables).collect()
       .map(_.getLong(0)).toSet
     assert(got == expected)
     assert(got.nonEmpty)
@@ -63,7 +63,7 @@ class Pipeline16Spec extends SparkSpec {
   }
 
   test("q_skyline frontier is an antichain with monotone price along date") {
-    val got = Pipeline16.qSkyline(spark, sfDir)
+    val got = Pipeline16.qSkyline(tables)
       .select(col("o_orderdate").cast("timestamp").cast("long"), col("totalprice"))
       .collect().map(r => (r.getLong(0), r.getDouble(1)))
       .sortBy(_._1)
@@ -81,7 +81,7 @@ class Pipeline16Spec extends SparkSpec {
       .collect()
       .filter(r => !r.isNullAt(2))
       .map(r => (r.getString(0), r.getDouble(1), r.getDouble(2)))
-    val got = Pipeline16.qRegression(spark, sfDir).collect()
+    val got = Pipeline16.qRegression(tables).collect()
       .map(r => r.getString(0) ->
         ((r.getDouble(1), r.getDouble(2), r.getDouble(3), r.getLong(4)))).toMap
     pts.groupBy(_._1).foreach { case (et, xs) =>
@@ -101,7 +101,7 @@ class Pipeline16Spec extends SparkSpec {
   }
 
   test("q_benford digits cover observed leading digits and shares sum to ~1") {
-    val got = Pipeline16.qBenford(spark, sfDir).collect()
+    val got = Pipeline16.qBenford(tables).collect()
       .map(r => (r.getString(0), r.getLong(1), r.getDouble(2), r.getDouble(3)))
     val totalN = tables.orders.count()
     assert(got.map(_._2).sum == totalN)
@@ -132,7 +132,7 @@ class Pipeline16Spec extends SparkSpec {
       b._3 -> BigDecimal((math.toDegrees(math.atan2(y, x)) + 360.0) % 360.0)
         .setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
     }.toMap
-    val got = Pipeline16.geoBearing(spark, sfDir)
+    val got = Pipeline16.geoBearing(tables)
       .filter(col("user_id") === uid).collect()
       .map(r => r.getLong(0) -> r.getDouble(2)).toMap
     assert(got.keySet == expected.keySet)
@@ -140,7 +140,7 @@ class Pipeline16Spec extends SparkSpec {
       assert(math.abs(got(eid) - b) < 1e-9, s"event $eid")
     }
     // range invariant over ALL users
-    val all = Pipeline16.geoBearing(spark, sfDir).select(col("bearing_deg")).collect()
+    val all = Pipeline16.geoBearing(tables).select(col("bearing_deg")).collect()
     assert(all.forall(r => r.getDouble(0) >= 0.0 && r.getDouble(0) < 360.0))
   }
 }

@@ -22,7 +22,7 @@ class Pipeline17Spec extends SparkSpec {
         .setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
       if sim >= 0.88
     } yield (a._1, b._1) -> sim).toMap
-    val got = Pipeline17.ddJaroWinkler(spark, sfDir).collect()
+    val got = Pipeline17.ddJaroWinkler(tables).collect()
       .map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
     assert(got == expected)
     assert(got.nonEmpty, "threshold never fires — fixture degenerate")
@@ -51,7 +51,7 @@ class Pipeline17Spec extends SparkSpec {
     val my = pts.map(_._2).sum / n
     val slope = pts.map(p => (p._1 - mx) * (p._2 - my)).sum /
       pts.map(p => (p._1 - mx) * (p._1 - mx)).sum
-    val got = Pipeline17.txZipfSlope(spark, sfDir).collect()
+    val got = Pipeline17.txZipfSlope(tables).collect()
       .map(r => r.getString(0) -> ((r.getDouble(1), r.getLong(3)))).toMap
     assert(math.abs(got(src)._1 - slope) < 1e-3)
     assert(got(src)._2 == freqs.size.toLong)
@@ -70,7 +70,7 @@ class Pipeline17Spec extends SparkSpec {
       val hapax = freqs.count(_ == 1L).toLong
       src -> ((vocab, xs.length.toLong, hapax, hapax * 1000000L / vocab))
     }
-    val got = Pipeline17.txHapaxRatio(spark, sfDir).collect()
+    val got = Pipeline17.txHapaxRatio(tables).collect()
       .map(r => r.getString(0) ->
         ((r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4)))).toMap
     assert(got == expected)
@@ -91,7 +91,7 @@ class Pipeline17Spec extends SparkSpec {
       val lens = islands.map { case (s, e) => e - s }
       uid -> ((islands.size.toLong, lens.sum / 1000000L, lens.max / 1000000L))
     }
-    val got = Pipeline17.qIntervalMerge(spark, sfDir).collect()
+    val got = Pipeline17.qIntervalMerge(tables).collect()
       .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2), r.getLong(3))))
       .toMap
     assert(got == expected)
@@ -108,13 +108,13 @@ class Pipeline17Spec extends SparkSpec {
       val best = counts.minBy { case (t, c) => (-c, t) }
       uid -> ((best._1, best._2))
     }
-    val got = Pipeline17.qMode(spark, sfDir).collect()
+    val got = Pipeline17.qMode(tables).collect()
       .map(r => r.getLong(0) -> ((r.getString(1), r.getLong(2)))).toMap
     assert(got == expected)
   }
 
   test("sm_split_chi2 cells reproduce the contingency and chi2 identities") {
-    val got = Pipeline17.smSplitChi2(spark, sfDir).collect()
+    val got = Pipeline17.smSplitChi2(tables).collect()
       .map(r => (r.getString(0), r.getString(1), r.getLong(2), r.getDouble(3),
         r.getDouble(4)))
     val nDocs = tables.documents.count()

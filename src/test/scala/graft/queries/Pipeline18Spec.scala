@@ -32,7 +32,7 @@ class Pipeline18Spec extends SparkSpec {
     val fT = ntile(base.sortBy(x => (-x._3, x._1)).map(_._1), 4)
     val mT = ntile(base.sortBy(x => (-x._4, x._1)).map(_._1), 4)
 
-    val got = Pipeline18.qRfm(spark, sfDir).collect()
+    val got = Pipeline18.qRfm(tables).collect()
       .map(r => r.getLong(0) ->
         ((r.getLong(1), r.getLong(2), r.getLong(3),
           r.getLong(4), r.getLong(5), r.getLong(6)))).toMap
@@ -70,7 +70,7 @@ class Pipeline18Spec extends SparkSpec {
         Some(tpe -> ((corr, pairs.length.toLong)))
       }
     }
-    val got = Pipeline18.qAutocorr(spark, sfDir).collect()
+    val got = Pipeline18.qAutocorr(tables).collect()
       .map(r => r.getString(0) ->
         ((if (r.isNullAt(1)) None else Some(r.getDouble(1)), r.getLong(2)))).toMap
     assert(got.keySet == expected.keySet)
@@ -102,7 +102,7 @@ class Pipeline18Spec extends SparkSpec {
       }
       u -> ((best, ds.length.toLong))
     }
-    val got = Pipeline18.qStreaks(spark, sfDir).collect()
+    val got = Pipeline18.qStreaks(tables).collect()
       .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2)))).toMap
     assert(got == expected)
     // sanity: a streak never exceeds the active-day count
@@ -122,7 +122,7 @@ class Pipeline18Spec extends SparkSpec {
         k -> ((r4(sorted.head._4), r4(xs.map(_._4).max),
           r4(xs.map(_._4).min), r4(sorted.last._4), xs.length.toLong))
       }
-    val got = Pipeline18.qOhlc(spark, sfDir).collect()
+    val got = Pipeline18.qOhlc(tables).collect()
       .map(r => (r.getString(0), r.getDate(1).toLocalDate) ->
         ((r.getDouble(2), r.getDouble(3), r.getDouble(4), r.getDouble(5),
           r.getLong(6)))).toMap
@@ -155,7 +155,7 @@ class Pipeline18Spec extends SparkSpec {
       (s, b) -> ((cSrc, gbins(b),
         BigDecimal(contrib).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble))
     }).toMap
-    val got = Pipeline18.txJsdDrift(spark, sfDir).collect()
+    val got = Pipeline18.txJsdDrift(tables).collect()
       .map(r => (r.getString(0), r.getInt(1)) ->
         ((r.getLong(2), r.getLong(3), r.getDouble(4)))).toMap
     assert(got.keySet == expected.keySet)

@@ -21,7 +21,7 @@ class Pipeline19Spec extends SparkSpec {
       }.max
       tpe -> ((nt, (BigInt(1000000) * dmax / (BigInt(nt) * n)).toLong))
     }
-    val got = Pipeline19.qKsTest(spark, sfDir).collect()
+    val got = Pipeline19.qKsTest(tables).collect()
       .map(r => r.getString(0) -> ((r.getLong(1), r.getLong(2)))).toMap
     assert(got == expected)
     // a KS distance is a probability-scale sup
@@ -45,7 +45,7 @@ class Pipeline19Spec extends SparkSpec {
     val r1x2 = o.filter(_._1 == "BUILDING").map(x => BigInt(rank2(x._2))).sum
     val u1 = r1x2 - BigInt(n1) * (n1 + 1)
     val u2 = BigInt(2) * n1 * n2 - u1
-    val row = Pipeline19.qMannWhitney(spark, sfDir).collect().head
+    val row = Pipeline19.qMannWhitney(tables).collect().head
     assert(row.getLong(0) == n1 && row.getLong(1) == n2)
     assert(BigInt(row.getLong(2)) == u1 && BigInt(row.getLong(3)) == u2)
     assert(u1 + u2 == BigInt(2) * n1 * n2)
@@ -64,7 +64,7 @@ class Pipeline19Spec extends SparkSpec {
       val s2 = cs.map(x => x * x).sum
       nk -> ((m.size.toLong, (BigInt(1000000) * s2 / (s1 * s1)).toLong))
     }
-    val got = Pipeline19.qHhi(spark, sfDir).collect()
+    val got = Pipeline19.qHhi(tables).collect()
       .map(r => r.getInt(0) -> ((r.getLong(1), r.getLong(2)))).toMap
     assert(got == expected)
     // equal shares floor 1e6/n ≤ HHI ≤ 1e6 (single customer)
@@ -87,7 +87,7 @@ class Pipeline19Spec extends SparkSpec {
     }.filter(_._2 > 0).map { case (d, nr, ne) =>
       java.time.LocalDate.ofEpochDay(d) -> ((nr, ne, 1000000L * ne / nr))
     }.toMap
-    val got = Pipeline19.qKaplanMeier(spark, sfDir).collect()
+    val got = Pipeline19.qKaplanMeier(tables).collect()
       .map(r => r.getDate(0).toLocalDate ->
         ((r.getLong(1), r.getLong(2), r.getLong(3)))).toMap
     assert(got == expected)
@@ -124,18 +124,18 @@ class Pipeline19Spec extends SparkSpec {
           sels.map(_ / 2097152L).min, sels.map(_ / 2097152L).max)))
       }
     }.toMap
-    val got = Pipeline19.txWinnowing(spark, sfDir).collect()
+    val got = Pipeline19.txWinnowing(tables).collect()
       .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2), r.getLong(3)))).toMap
     assert(got == expected)
     assert(expected.nonEmpty)
     // the registered native single-pass form ≡ the composed
     // posexplode + window + distinct formulation
-    val composed = Pipeline19.txWinnowingComposed(spark, sfDir).collect()
+    val composed = Pipeline19.txWinnowingComposed(tables).collect()
       .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2), r.getLong(3)))).toMap
     assert(composed == got)
     // map-only plan: the native form pays zero exchanges
     assert(graft.PlanCheck.exchangeCounts(
-      Pipeline19.txWinnowing(spark, sfDir)) == ((0, 0)))
+      Pipeline19.txWinnowing(tables)) == ((0, 0)))
     // winnowing density: selected ≤ full windows, ≥ grams/w
     docs.foreach { case (id, text) =>
       val nTok = text.split(" ", -1).length

@@ -31,7 +31,7 @@ class Pipeline20Spec extends SparkSpec {
         node -> votes.toSeq.minBy { case (l, c) => (-c, l) }._1
       }
     }
-    val got = Pipeline20.qLabelProp(spark, sfDir).collect()
+    val got = Pipeline20.qLabelProp(tables).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got == lbl)
     // communities are non-trivial: fewer labels than nodes
@@ -65,7 +65,7 @@ class Pipeline20Spec extends SparkSpec {
       val novel = gs.count(g => firstDoc(g) == id).toLong
       id -> ((gs.size.toLong, novel, 1000000L * novel / gs.size))
     }.toMap
-    val got = Pipeline20.txNgramNovelty(spark, sfDir).collect()
+    val got = Pipeline20.txNgramNovelty(tables).collect()
       .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2), r.getLong(3)))).toMap
     assert(got == expected)
     // the earliest doc with grams is fully novel
@@ -90,7 +90,7 @@ class Pipeline20Spec extends SparkSpec {
       src -> ((xs.length.toLong, nc,
         1000000L * nd / nc, 1000000L * ns / nc, 1000000L * np / nc, ctrl))
     }
-    val got = Pipeline20.txCharclassProfile(spark, sfDir).collect()
+    val got = Pipeline20.txCharclassProfile(tables).collect()
       .map(r => r.getString(0) -> ((r.getLong(1), r.getLong(2), r.getLong(3),
         r.getLong(4), r.getLong(5), r.getLong(6)))).toMap
     assert(got == expected)

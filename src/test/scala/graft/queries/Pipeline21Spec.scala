@@ -33,7 +33,7 @@ class Pipeline21Spec extends SparkSpec {
         expected((t, days(i))) = v
       }
     }
-    val got = Pipeline21.qRollingCorr(spark, sfDir).collect()
+    val got = Pipeline21.qRollingCorr(tables).collect()
       .map(r => (r.getString(0), r.getDate(1).toLocalDate.toEpochDay) ->
         (if (r.isNullAt(2)) None else Some(r.getDouble(2)))).toMap
     assert(got.keySet == expected.keySet)
@@ -67,7 +67,7 @@ class Pipeline21Spec extends SparkSpec {
     val tExp = (g1.sum.toDouble / n1 - g2.sum.toDouble / n2) / math.sqrt(v1 + v2)
     val dfExp = math.pow(v1 + v2, 2) /
       (math.pow(v1, 2) / (n1 - 1) + math.pow(v2, 2) / (n2 - 1))
-    val row = Pipeline21.qWelchTtest(spark, sfDir).collect().head
+    val row = Pipeline21.qWelchTtest(tables).collect().head
     assert(row.getLong(0) == n1.toLong && row.getLong(1) == n2.toLong)
     assert(math.abs(row.getDouble(2) - tExp) < 1e-3)
     assert(math.abs(row.getDouble(3) - dfExp) < 1e-2)
@@ -113,7 +113,7 @@ class Pipeline21Spec extends SparkSpec {
             .setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble)))
       }
     }
-    val got = Pipeline21.geoPointAlong(spark, sfDir).collect()
+    val got = Pipeline21.geoPointAlong(tables).collect()
       .map(r => r.getLong(0) -> ((r.getDouble(1), r.getDouble(2)))).toMap
     assert(got.keySet == expected.keySet)
     got.foreach { case (u, (lo, la)) =>
@@ -140,7 +140,7 @@ class Pipeline21Spec extends SparkSpec {
         BigDecimal(xs.map(_._3).sum)
           .setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble))
     } + ("_corrupt" -> ((ev.count(_._1 % 7 == 0).toLong, 0.0)))
-    val got = Pipeline21.srcMalformedJsonl(spark, sfDir).collect()
+    val got = Pipeline21.srcMalformedJsonl(tables).collect()
       .map(r => r.getString(0) -> ((r.getLong(1), r.getDouble(2)))).toMap
     assert(got.keySet == expected.keySet)
     got.foreach { case (t, (n, s)) =>

@@ -21,7 +21,7 @@ class Pipeline22Spec extends SparkSpec {
         (ok, nk) -> ((pr, 1000000L * le / n))
       }
     }.toMap
-    val got = Pipeline22.qPercentRank(spark, sfDir).collect()
+    val got = Pipeline22.qPercentRank(tables).collect()
       .map(r => (r.getLong(0), r.getInt(1)) -> ((r.getLong(2), r.getLong(3)))).toMap
     assert(got == expected)
     // cume_dist is never below percent_rank's implied mass and never 0
@@ -49,7 +49,7 @@ class Pipeline22Spec extends SparkSpec {
         Some(t -> ((base, best, bestDay)))
       }
     }
-    val got = Pipeline22.qCusum(spark, sfDir).collect()
+    val got = Pipeline22.qCusum(tables).collect()
       .map(r => r.getString(0) ->
         ((r.getLong(1), r.getLong(2), r.getDate(3).toLocalDate))).toMap
     assert(got == expected)
@@ -70,7 +70,7 @@ class Pipeline22Spec extends SparkSpec {
       m -> ((n, b, share, targets(m),
         math.min(1000000L, 1000000L * targets(m) / share)))
     }
-    val got = Pipeline22.mmModalityBalance(spark, sfDir).collect()
+    val got = Pipeline22.mmModalityBalance(tables).collect()
       .map(r => r.getString(0) -> ((r.getLong(1), r.getLong(2), r.getLong(3),
         r.getLong(4), r.getLong(5)))).toMap
     assert(got == expected)

@@ -27,7 +27,7 @@ class Pipeline23Spec extends SparkSpec {
       cum += cents
       d -> ((nc, cents, 1000000L * cum / all))
     }.toMap
-    val got = Pipeline23.qLorenz(spark, sfDir).collect()
+    val got = Pipeline23.qLorenz(tables).collect()
       .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2), r.getLong(3)))).toMap
     assert(got == expected)
     // Lorenz curve is convex-ish: cumulative share hits 1e6 at decile 10
@@ -35,7 +35,7 @@ class Pipeline23Spec extends SparkSpec {
   }
 
   test("dd_threshold_curve is monotone and recounts at tau=0.7") {
-    val rows = Pipeline23.ddThresholdCurve(spark, sfDir).collect()
+    val rows = Pipeline23.ddThresholdCurve(tables).collect()
       .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2)))).toMap
     assert(rows.keySet == Set(5000L, 6000L, 7000L, 8000L, 9000L))
     // monotone non-increasing in tau, docs <= 2*pairs
@@ -48,7 +48,7 @@ class Pipeline23Spec extends SparkSpec {
     }
     rows.values.foreach { case (p, d) => assert(d <= 2 * p && d >= 2) }
     // recount one threshold directly from the E4 pair table
-    val pairs = LlmQueries.ngramPairs(spark, sfDir)
+    val pairs = LlmQueries.ngramPairs(tables)
       .select(col("doc_a"), col("doc_b"), col("jaccard")).collect()
       .map(r => (r.getLong(0), r.getLong(1), math.round(r.getDouble(2) * 10000)))
     val at7 = pairs.filter(_._3 >= 7000L)

@@ -26,7 +26,7 @@ class Pipeline24Spec extends SparkSpec {
         }
       }
     }
-    val row = Pipeline24.qFunnelWindowed(spark, sfDir).collect().head
+    val row = Pipeline24.qFunnelWindowed(tables).collect().head
     assert((row.getLong(0), row.getLong(1), row.getLong(2)) == ((nS, nC, nP)))
     assert(row.getLong(3) == 1000000L * nP / nS)
     // funnel is monotone
@@ -34,7 +34,7 @@ class Pipeline24Spec extends SparkSpec {
   }
 
   test("q_prefix_rollup conserves mass at every level") {
-    val got = Pipeline24.qPrefixRollup(spark, sfDir).collect()
+    val got = Pipeline24.qPrefixRollup(tables).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4)))
     val byLevel = got.groupBy(_._1)
     assert(byLevel.keySet == Set(0L, 1L, 2L, 3L))
@@ -89,7 +89,7 @@ class Pipeline24Spec extends SparkSpec {
         (qid, i + 1L) -> ((id, sc))
       }
     }.toMap
-    val got = Pipeline24.simMmr(spark, sfDir).collect()
+    val got = Pipeline24.simMmr(tables).collect()
       .map(r => (r.getLong(0), r.getLong(1)) -> ((r.getLong(2), r.getDouble(3))))
       .toMap
     assert(got.keySet == expected.keySet)

@@ -29,7 +29,7 @@ class Pipeline25Spec extends SparkSpec {
       union(ids((cx, cy)), ids(nb))
     val expected = dense.groupBy { case (k, _) => find(ids(k)) }
       .map { case (root, m) => root -> ((m.size.toLong, m.values.sum)) }
-    val got = Pipeline25.geoGridCluster(spark, sfDir).collect()
+    val got = Pipeline25.geoGridCluster(tables).collect()
       .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2)))).toMap
     assert(got == expected)
     // the density gate keeps a strict subset, and adjacency merges
@@ -57,7 +57,7 @@ class Pipeline25Spec extends SparkSpec {
           z + (if (kind == "res") 1 else 0))
       }
     }
-    val got = Pipeline25.qGrowthAccounting(spark, sfDir).collect()
+    val got = Pipeline25.qGrowthAccounting(tables).collect()
       .map(r => r.getDate(0).toLocalDate.toEpochDay ->
         ((r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4)))).toMap
     assert(got == expected.toMap)

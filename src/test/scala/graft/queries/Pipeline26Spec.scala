@@ -35,7 +35,7 @@ class Pipeline26Spec extends SparkSpec {
         }
       }
     }
-    val got = Pipeline26.qAttribution(spark, sfDir).collect()
+    val got = Pipeline26.qAttribution(tables).collect()
       .map(r => r.getString(0) -> ((r.getLong(1), r.getLong(2)))).toMap
     assert(got == expected.toMap)
     // exact conservation: total credit = 1e6 per user with >=1 touch
@@ -54,7 +54,7 @@ class Pipeline26Spec extends SparkSpec {
     } yield (a, b) -> ((byType(a).size.toLong, byType(b).size.toLong, both,
       1000000L * both / (byType(a).size + byType(b).size - both)))).toMap
     // read columns by name: the final joins reorder the key columns
-    val got2 = Pipeline26.qAudienceOverlap(spark, sfDir).collect()
+    val got2 = Pipeline26.qAudienceOverlap(tables).collect()
       .map { r =>
         val m = r.getValuesMap[Any](Seq("type_a", "type_b", "n_a", "n_b",
           "n_both", "jaccard_fx"))

@@ -21,7 +21,7 @@ class Pipeline27Spec extends SparkSpec {
       }
       t -> ((best, bestUs))
     }
-    val got = Pipeline27.qPeakConcurrency(spark, sfDir).collect()
+    val got = Pipeline27.qPeakConcurrency(tables).collect()
       .map(r => r.getString(0) -> ((r.getLong(1), r.getLong(2)))).toMap
     assert(got == expected)
     // at the peak at least one interval is open
@@ -43,7 +43,7 @@ class Pipeline27Spec extends SparkSpec {
       else if (d <= trainEnd + 3) "embargo"
       else "test"
     }.map { case (s, xs) => s -> ((xs.length.toLong, xs.min, xs.max)) }
-    val got = Pipeline27.smTimeSplit(spark, sfDir).collect()
+    val got = Pipeline27.smTimeSplit(tables).collect()
       .map(r => r.getString(0) -> ((r.getLong(1),
         r.getDate(2).toLocalDate.toEpochDay,
         r.getDate(3).toLocalDate.toEpochDay))).toMap

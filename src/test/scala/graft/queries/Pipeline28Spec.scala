@@ -24,7 +24,7 @@ class Pipeline28Spec extends SparkSpec {
       "orderkey->custkey" -> fd(o), "custkey->nationkey" -> fd(c),
       "orderkey->suppkey" -> fd(l), "pname->brand" -> fd(pn),
       "brand->ptype" -> fd(pb))
-    val got = Pipeline28.qFdCheck(spark, sfDir).collect()
+    val got = Pipeline28.qFdCheck(tables).collect()
       .map(r => r.getString(0) -> ((r.getLong(1), r.getLong(2), r.getLong(3))))
       .toMap
     assert(got.keySet == expected.keySet)
@@ -50,7 +50,7 @@ class Pipeline28Spec extends SparkSpec {
       if neg != d && src(neg) != s
     } yield (d, j, neg, s, src(neg))).toSet
     // read columns by name: the join reorders them
-    val got2 = Pipeline28.smNegativePairs(spark, sfDir).collect().map { r =>
+    val got2 = Pipeline28.smNegativePairs(tables).collect().map { r =>
       val m = r.getValuesMap[Any](Seq("doc_id", "j", "neg_id", "source", "neg_source"))
       (m("doc_id").asInstanceOf[Long], m("j").asInstanceOf[Long],
         m("neg_id").asInstanceOf[Long], m("source").asInstanceOf[String],

@@ -43,7 +43,7 @@ class Pipeline29Spec extends SparkSpec {
         .filterNot(dist.contains)
       frontier.foreach(n => dist(n) = h.toLong)
     }
-    val got = Pipeline29.qKhopBfs(spark, sfDir).collect()
+    val got = Pipeline29.qKhopBfs(tables).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got == dist.toMap)
     assert(got(seed) == 0L)
@@ -84,7 +84,7 @@ class Pipeline29Spec extends SparkSpec {
         .setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
       (a, b, jac)
     }).toSet
-    val got = Pipeline29.ddPrefixFilter(spark, sfDir).collect()
+    val got = Pipeline29.ddPrefixFilter(tables).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     assert(got == expected)
     // non-degenerate: the corpus's duplicate clusters fire pairs

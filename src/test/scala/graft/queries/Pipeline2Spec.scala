@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 class Pipeline2Spec extends SparkSpec {
 
   test("funnel stage counts are monotonically non-increasing") {
-    val rows = Pipeline2.qFunnel(spark, sfDir)
+    val rows = Pipeline2.qFunnel(tables)
       .orderBy("stage").collect().map(_.getLong(2))
     assert(rows.length == 3)
     assert(rows(0) >= rows(1) && rows(1) >= rows(2))
@@ -14,7 +14,7 @@ class Pipeline2Spec extends SparkSpec {
   }
 
   test("scd2 intervals chain per key: valid_to equals next valid_from, one current row") {
-    val rows = Pipeline2.qScd2(spark, sfDir)
+    val rows = Pipeline2.qScd2(tables)
       .select("user_id", "valid_from_us", "valid_to_us")
       .collect()
       .groupBy(_.getLong(0))
@@ -31,7 +31,7 @@ class Pipeline2Spec extends SparkSpec {
     val byUser = tables.events
       .select(col("user_id"), col("event_type"), unix_micros(col("ts")).as("t"), col("event_id"))
       .collect().groupBy(_.getLong(0))
-    val got = Pipeline2.qFirstLastTouch(spark, sfDir).collect()
+    val got = Pipeline2.qFirstLastTouch(tables).collect()
       .map(r => r.getLong(0) -> (r.getString(1), r.getString(2))).toMap
     byUser.foreach { case (u, rs) =>
       val s = rs.sortBy(r => (r.getLong(2), r.getLong(3)))
@@ -49,7 +49,7 @@ class Pipeline2Spec extends SparkSpec {
       col("event_id"), col("value"),
       get_json_object(col("props"), "$.k").cast("double"))
       .collect().map(r => r.getLong(0) -> ((r.getDouble(1), r.getDouble(2)))).toMap
-    val got = Pipeline2.geoNearest(spark, sfDir).collect()
+    val got = Pipeline2.geoNearest(tables).collect()
     assert(got.length == pts.size)
     got.take(200).foreach { r =>
       val (x, y) = pts(r.getLong(0))
@@ -61,7 +61,7 @@ class Pipeline2Spec extends SparkSpec {
   }
 
   test("span dedup keeps first occurrence only and never grows a doc") {
-    val df = Pipeline2.txSpanDedup(spark, sfDir).cache()
+    val df = Pipeline2.txSpanDedup(tables).cache()
     assert(df.filter(col("n_kept") > col("n_spans")).count() == 0)
     // every surviving span is globally unique across the corpus:
     // total kept == number of DISTINCT spans, computed independently
@@ -79,7 +79,7 @@ class Pipeline2Spec extends SparkSpec {
   }
 
   test("MAD outlier counts are bounded and stats positive") {
-    val rows = Pipeline2.qOutlierMad(spark, sfDir).collect()
+    val rows = Pipeline2.qOutlierMad(tables).collect()
     assert(rows.length == 5)
     rows.foreach { r =>
       assert(r.getDouble(1) > 0 && r.getDouble(2) > 0)
@@ -88,7 +88,7 @@ class Pipeline2Spec extends SparkSpec {
   }
 
   test("merge upsert: deletes drop, inserts are fresh negative keys, rest partition the snapshot") {
-    val df = Pipeline2.qMergeUpsert(spark, sfDir).cache()
+    val df = Pipeline2.qMergeUpsert(tables).cache()
     val byStatus = df.groupBy("status").count().collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
     val nCust = tables.customer.count()
@@ -103,7 +103,7 @@ class Pipeline2Spec extends SparkSpec {
   }
 
   test("incremental read pushes the watermark predicate to the parquet scan") {
-    val df = Pipeline2.srcIncremental(spark, sfDir)
+    val df = Pipeline2.srcIncremental(tables)
     val plan = df.queryExecution.executedPlan.toString()
     assert(plan.contains("PushedFilters") && plan.contains("GreaterThanOrEqual(ts"),
       s"watermark filter not pushed:\n$plan")
@@ -113,7 +113,7 @@ class Pipeline2Spec extends SparkSpec {
   }
 
   test("expanding window: final row per user carries the lifetime totals") {
-    val rows = Pipeline2.qExpanding(spark, sfDir).collect().groupBy(_.getLong(1))
+    val rows = Pipeline2.qExpanding(tables).collect().groupBy(_.getLong(1))
     val totals = tables.events.groupBy("user_id")
       .agg(count(lit(1)).as("n"), round(sum("value"), 4).as("v")).collect()
       .map(r => r.getLong(0) -> ((r.getLong(1), r.getDouble(2)))).toMap
@@ -125,13 +125,13 @@ class Pipeline2Spec extends SparkSpec {
   }
 
   test("sketch precision: estimates stay within 0.35 of exact Jaccard on near-dups") {
-    val rows = Pipeline2.ddSketchPrecision(spark, sfDir).collect()
+    val rows = Pipeline2.ddSketchPrecision(tables).collect()
     assert(rows.nonEmpty)
     rows.foreach(r => assert(r.getDouble(4) <= 0.35, s"pair ${r.getLong(0)},${r.getLong(1)} err ${r.getDouble(4)}"))
   }
 
   test("pseudonymization is 1:1 and preserves event counts") {
-    val df = Pipeline2.txPseudonymize(spark, sfDir).cache()
+    val df = Pipeline2.txPseudonymize(tables).cache()
     assert(df.filter(col("n_source_keys") =!= 1).count() == 0)
     assert(df.count() == tables.events.select("user_id").distinct().count())
     assert(df.agg(sum("n_events")).head().getLong(0) == tables.events.count())
@@ -139,7 +139,7 @@ class Pipeline2Spec extends SparkSpec {
   }
 
   test("within-window dedup keeps the earliest event per (user,type,hour)") {
-    val kept = Pipeline2.ddWithinWindow(spark, sfDir).cache()
+    val kept = Pipeline2.ddWithinWindow(tables).cache()
     assert(kept.groupBy("user_id", "event_type", "hour").count()
       .filter(col("count") > 1).count() == 0)
     assert(kept.agg(sum("n_collapsed")).head().getLong(0) == tables.events.count())
@@ -147,7 +147,7 @@ class Pipeline2Spec extends SparkSpec {
   }
 
   test("approx quantiles stay within 1% rank error of exact") {
-    val approx = Pipeline2.qQuantileApproxRaw(spark, sfDir).collect()
+    val approx = Pipeline2.qQuantileApproxRaw(tables).collect()
       .map(r => r.getString(0) -> ((r.getDouble(1), r.getDouble(2)))).toMap
     val exact = tables.events.groupBy("event_type")
       .agg(expr("percentile(value, array(0.49d, 0.51d, 0.94d, 0.96d))").as("e"))
@@ -160,12 +160,12 @@ class Pipeline2Spec extends SparkSpec {
   }
 
   test("oracled sketch gates: every rank-window flag is 1 (the invariant the oracle restates)") {
-    Pipeline2.qQuantileApprox(spark, sfDir).collect().foreach { r =>
+    Pipeline2.qQuantileApprox(tables).collect().foreach { r =>
       assert(r.getLong(1) > 0)
       assert(r.getLong(2) == 1L && r.getLong(3) == 1L && r.getLong(4) == 1L,
         s"quantile rank gate failed for ${r.getString(0)}")
     }
-    Pipeline2.qOutlierMadApprox(spark, sfDir).collect().foreach { r =>
+    Pipeline2.qOutlierMadApprox(tables).collect().foreach { r =>
       assert(r.getLong(1) > 0)
       assert(r.getLong(2) == 1L && r.getLong(3) == 1L,
         s"MAD rank gate failed for ${r.getString(0)}")
@@ -173,7 +173,7 @@ class Pipeline2Spec extends SparkSpec {
   }
 
   test("classifier inference is map-only and scores are proper probabilities") {
-    val df = Pipeline2.txQualityClassifier(spark, sfDir)
+    val df = Pipeline2.txQualityClassifier(tables)
     val plan = df.queryExecution.executedPlan.toString()
     assert(!plan.contains("Exchange"), s"classifier scan should not shuffle:\n$plan")
     val rows = df.collect()
@@ -186,7 +186,7 @@ class Pipeline2Spec extends SparkSpec {
   }
 
   test("mv merge equals a direct full aggregate") {
-    val merged = Pipeline2.qMvMerge(spark, sfDir).collect()
+    val merged = Pipeline2.qMvMerge(tables).collect()
       .map(r => r.getString(0) -> ((r.getLong(1), r.getDouble(2), r.getDouble(3), r.getDouble(4)))).toMap
     val direct = tables.events.groupBy("event_type")
       .agg(count(lit(1)), round(sum("value"), 4), min("value"), max("value"))
@@ -209,7 +209,7 @@ class Pipeline2Spec extends SparkSpec {
   }
 
   test("leakage-safe split never puts one dup-group in two splits") {
-    val df = Pipeline2.smLeakageSafeSplit(spark, sfDir).cache()
+    val df = Pipeline2.smLeakageSafeSplit(tables).cache()
     assert(df.count() == tables.documents.count())
     val straddling = df.groupBy("component")
       .agg(countDistinct("split").as("k")).filter(col("k") > 1).count()
@@ -220,7 +220,7 @@ class Pipeline2Spec extends SparkSpec {
 
   test("nearest-site and repetition scans stay shuffle-free (plan regression)") {
     Seq(
-      Pipeline2.geoNearest(spark, sfDir),
+      Pipeline2.geoNearest(tables),
       graft.operators.TextOps.repetitionMetrics(tables.documents, "text", "doc_id")
     ).foreach { df =>
       val plan = df.queryExecution.executedPlan.toString()
@@ -229,7 +229,7 @@ class Pipeline2Spec extends SparkSpec {
   }
 
   test("radial simplification keeps the first point and never lengthens the line") {
-    val rows = Pipeline2.geoSimplify(spark, sfDir).collect()
+    val rows = Pipeline2.geoSimplify(tables).collect()
     assert(rows.nonEmpty)
     // full polyline length with the SAME (ts, event_id) tiebreak the
     // operator sorts by, so the comparison is order-exact even if a
@@ -253,7 +253,7 @@ class Pipeline2Spec extends SparkSpec {
   }
 
   test("interleave ranks are dense per source and mix keys scale by weight") {
-    val rows = Pipeline2.smInterleave(spark, sfDir).collect()
+    val rows = Pipeline2.smInterleave(tables).collect()
     val bySrc = rows.groupBy(_.getString(1))
     bySrc.foreach { case (src, rs) =>
       val ranks = rs.map(_.getInt(2)).sorted
@@ -266,7 +266,7 @@ class Pipeline2Spec extends SparkSpec {
   }
 
   test("approx MAD medians stay within 1% rank error of exact") {
-    val approx = Pipeline2.qOutlierMadApproxRaw(spark, sfDir).collect()
+    val approx = Pipeline2.qOutlierMadApproxRaw(tables).collect()
       .map(r => r.getString(0) -> ((r.getDouble(1), r.getDouble(2)))).toMap
     // Exact values at the rank-error bounds: approx_percentile with
     // accuracy 10000 guarantees the returned value sits at a rank
@@ -280,15 +280,15 @@ class Pipeline2Spec extends SparkSpec {
       assert(m >= lo - 1e-4 && m <= hi + 1e-4, s"$k median=$m not in [$lo,$hi]")
     }
     // MAD column sanity: non-negative, and n_outliers bounded by n.
-    Pipeline2.qOutlierMadApproxRaw(spark, sfDir).collect().foreach { r =>
+    Pipeline2.qOutlierMadApproxRaw(tables).collect().foreach { r =>
       assert(r.getDouble(2) >= 0.0 && r.getLong(3) <= r.getLong(4))
     }
   }
 
   test("exact-MAD twin agrees with approx within the rank window") {
-    val exact = Pipeline2.qOutlierMad(spark, sfDir).collect()
+    val exact = Pipeline2.qOutlierMad(tables).collect()
       .map(r => r.getString(0) -> r.getDouble(1)).toMap
-    val approx = Pipeline2.qOutlierMadApproxRaw(spark, sfDir).collect()
+    val approx = Pipeline2.qOutlierMadApproxRaw(tables).collect()
       .map(r => r.getString(0) -> r.getDouble(1)).toMap
     val medBounds = graft.operators.Quantiles.exactInterpolated(
         tables.events, "event_type", "value",

@@ -48,7 +48,7 @@ class Pipeline30Spec extends SparkSpec {
       dst <- lst
       if src < dst && knn(dst).contains(src)
     } yield (v(src)._2.toLong, src, dst, r4(cos(v(src)._1, v(dst)._1)))).toSet
-    val got = Pipeline30.simKnnMutual(spark, sfDir).collect()
+    val got = Pipeline30.simKnnMutual(tables).collect()
       .map(r => (r.getInt(0).toLong, r.getLong(1), r.getLong(2), r.getDouble(3)))
       .toSet
     assert(got == expected)
@@ -64,7 +64,7 @@ class Pipeline30Spec extends SparkSpec {
     val knn = knnLists(v)
     val directed = knn.iterator.flatMap { case (s, l) => l.map(d => (s, d)) }
       .map { case (s, d) => (math.min(s, d), math.max(s, d)) }.toSet
-    val mutual = Pipeline30.simKnnMutual(spark, sfDir).collect()
+    val mutual = Pipeline30.simKnnMutual(tables).collect()
       .map(r => (r.getLong(1), r.getLong(2))).toSet
     assert(mutual.subsetOf(directed))
     assert(mutual.size < directed.size,
@@ -73,7 +73,7 @@ class Pipeline30Spec extends SparkSpec {
 
   test("sim_hard_negatives mines cross-label top-3 by cosine") {
     val v = vecs()
-    val got = Pipeline30.simHardNegatives(spark, sfDir).collect()
+    val got = Pipeline30.simHardNegatives(tables).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
         r.getInt(3), r.getInt(4), r.getDouble(5)))
     assert(got.length == 30) // 10 queries x top-3

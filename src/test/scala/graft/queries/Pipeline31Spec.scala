@@ -41,7 +41,7 @@ class Pipeline31Spec extends SparkSpec {
       }
       dist = nxt.toMap
     }
-    val got = Pipeline31.qSsspWeighted(spark, sfDir).collect()
+    val got = Pipeline31.qSsspWeighted(tables).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got == dist)
     assert(got(seed) == 0L)
@@ -75,7 +75,7 @@ class Pipeline31Spec extends SparkSpec {
       val (mid, score) = scored.minBy { case (id, s) => (s, id) }
       label.toLong -> ((mid, score, ms.size))
     }
-    val got = Pipeline31.qMedoid(spark, sfDir).collect()
+    val got = Pipeline31.qMedoid(tables).collect()
       .map(r => r.getInt(0).toLong ->
         ((r.getLong(1), r.getLong(2), r.getDouble(3))))
       .toMap
@@ -91,8 +91,8 @@ class Pipeline31Spec extends SparkSpec {
   }
 
   test("medoid score is partitioning-invariant (exact integer moments)") {
-    val base = Pipeline31.qMedoid(spark, sfDir).collect().toSet
-    val re = Pipeline31.qMedoid(spark, sfDir)
+    val base = Pipeline31.qMedoid(tables).collect().toSet
+    val re = Pipeline31.qMedoid(tables)
     // a different physical layout must not move any score bit
     val shuffled = re.repartition(7).collect().toSet
     assert(base == shuffled)

@@ -39,7 +39,7 @@ class Pipeline32Spec extends SparkSpec {
     for (_ <- 1 to 3) und = peel(und, 2)
     val expected = und.groupBy(_._1)
       .map { case (u, es) => u -> es.size.toLong }
-    val got = Pipeline32.qKcore(spark, sfDir).collect()
+    val got = Pipeline32.qKcore(tables).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got == expected)
   }
@@ -75,7 +75,7 @@ class Pipeline32Spec extends SparkSpec {
     val vs = fxVecs()
     val n = vs.size
     val d = vs.head.length
-    val got = Pipeline32.simCovMatrix(spark, sfDir).collect()
+    val got = Pipeline32.simCovMatrix(tables).collect()
       .map(r => (r.getLong(0), r.getLong(1)) ->
         ((BigInt(r.getString(2)), r.getDouble(3))))
       .toMap

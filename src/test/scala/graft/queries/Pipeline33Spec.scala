@@ -37,7 +37,7 @@ class Pipeline33Spec extends SparkSpec {
 
   test("q_markov_absorption equals a driver-side exact ppm replay") {
     val (p1, p2, p3) = ppmChain()
-    val got = Pipeline33.qMarkovAbsorption(spark, sfDir).collect()
+    val got = Pipeline33.qMarkovAbsorption(tables).collect()
       .map(r => r.getString(0) -> ((r.getLong(1), r.getLong(2), r.getLong(3)))).toMap
     assert(got.keySet == p1.keySet)
     got.foreach { case (s, (a, b, c)) =>
@@ -46,7 +46,7 @@ class Pipeline33Spec extends SparkSpec {
   }
 
   test("absorption probability is monotone in the horizon and <= 1") {
-    val rows = Pipeline33.qMarkovAbsorption(spark, sfDir).collect()
+    val rows = Pipeline33.qMarkovAbsorption(tables).collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
       val (a, b, c) = (r.getLong(1), r.getLong(2), r.getLong(3))

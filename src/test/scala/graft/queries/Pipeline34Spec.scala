@@ -29,7 +29,7 @@ class Pipeline34Spec extends SparkSpec {
     val ssw = qTot - ssbTerms
     val f = (ssb / 4) / (ssw / (n - 5))
     val eta = ssb / (qTot - grand)
-    val got = Pipeline34.qAnova(spark, sfDir).collect()
+    val got = Pipeline34.qAnova(tables).collect()
     assert(got.length == 1)
     assert(got(0).getLong(0) == n)
     assert(math.abs(got(0).getDouble(1) - f) < 1e-3, s"f ${got(0).getDouble(1)} vs $f")
@@ -59,7 +59,7 @@ class Pipeline34Spec extends SparkSpec {
         if (implicitly[Ordering[(Long, Long)]].lt(fa, lb))
           support((a, b)) = support.getOrElse((a, b), 0L) + 1L
     }
-    val got = Pipeline34.qSeqPairs(spark, sfDir).collect()
+    val got = Pipeline34.qSeqPairs(tables).collect()
       .map(r => (r.getString(0), r.getString(1)) -> ((r.getLong(2), r.getLong(3)))).toMap
     assert(got.keySet == support.keySet)
     got.foreach { case (k, (su, ppm)) =>
@@ -82,7 +82,7 @@ class Pipeline34Spec extends SparkSpec {
       tp -> ((daily.length.toLong, slopes.length.toLong,
         BigDecimal(med).setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble))
     }
-    val got = Pipeline34.qTheilSen(spark, sfDir).collect()
+    val got = Pipeline34.qTheilSen(tables).collect()
       .map(r => r.getString(0) -> ((r.getLong(1), r.getLong(2), r.getDouble(3)))).toMap
     assert(got == expected)
   }
@@ -105,7 +105,7 @@ class Pipeline34Spec extends SparkSpec {
       }.sorted
       tp -> ((means(1)._1, means(15)._1, means(30)._1))
     }
-    val got = Pipeline34.qBootstrapCi(spark, sfDir).collect()
+    val got = Pipeline34.qBootstrapCi(tables).collect()
       .map(r => r.getString(0) -> ((r.getDouble(1), r.getDouble(2), r.getDouble(3)))).toMap
     assert(got.keySet == expected.keySet)
     got.foreach { case (tp, (lo, med, hi)) =>

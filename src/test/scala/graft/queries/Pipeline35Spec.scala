@@ -26,7 +26,7 @@ class Pipeline35Spec extends SparkSpec {
   }
 
   test("geo_radius_search: rule-on equals rule-off, and the envelope reaches PushedFilters") {
-    val df = Pipeline35.geoRadiusSearch(spark, sfDir)
+    val df = Pipeline35.geoRadiusSearch(tables)
     val got = df.collect().map(r => r.getString(0) -> ((r.getLong(1), r.getDouble(2)))).toMap
 
     // Twin WITHOUT the rule: drop it from the session, compute the
@@ -155,7 +155,7 @@ class Pipeline35Spec extends SparkSpec {
         expected(part) = ((nMatches, matched, demand.sum, supply.sum))
       }
     }
-    val got = Pipeline35.qFifoAllocation(spark, sfDir).collect()
+    val got = Pipeline35.qFifoAllocation(tables).collect()
       .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2), r.getLong(3),
         r.getLong(4), r.getLong(5)))).toMap
     assert(got.keySet == expected.keySet)
@@ -170,7 +170,7 @@ class Pipeline35Spec extends SparkSpec {
   }
 
   test("q_decile_lift is a valid gains table") {
-    val rows = Pipeline35.qDecileLift(spark, sfDir).collect()
+    val rows = Pipeline35.qDecileLift(tables).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
       .sortBy(_._1)
     assert(rows.map(_._1).toSeq == (1L to 10L))

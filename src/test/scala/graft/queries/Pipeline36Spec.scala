@@ -48,7 +48,7 @@ class Pipeline36Spec extends SparkSpec {
       val (n, s) = expected.getOrElse(best + 1L, (0L, 0L))
       expected(best + 1L) = ((n + 1L, s + sfx))
     }
-    val got = Pipeline36.simSilhouette(spark, sfDir).collect()
+    val got = Pipeline36.simSilhouette(tables).collect()
       .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2)))).toMap
     assert(got.keySet == expected.keySet)
     got.foreach { case (c, (n, ppm)) =>
@@ -99,7 +99,7 @@ class Pipeline36Spec extends SparkSpec {
     val expected = Seq("click", "error", "signup", "view").map { c =>
       c -> reach(step(step(p1, Some(c)), Some(c)), Some(c))
     }.toMap
-    val got = Pipeline36.qMarkovRemoval(spark, sfDir).collect()
+    val got = Pipeline36.qMarkovRemoval(tables).collect()
       .map(r => r.getString(0) -> ((r.getLong(1), r.getLong(2), r.getLong(3)))).toMap
     assert(got.keySet == expected.keySet)
     got.foreach { case (c, (rf, rr, drop)) =>

@@ -27,7 +27,7 @@ class Pipeline37Spec extends SparkSpec {
     val h2 = half(a2, byU = false)
     def top10(m: Map[Long, Long]) =
       m.toSeq.sortBy { case (id, s) => (-s, id) }.take(10)
-    val got = Pipeline37.qHits(spark, sfDir).collect()
+    val got = Pipeline37.qHits(tables).collect()
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
     val gotAuth = got.filter(_._1 == "authority").map(r => (r._2, r._3)).sortBy(r => (-r._2, r._1))
     val gotHub = got.filter(_._1 == "hub").map(r => (r._2, r._3)).sortBy(r => (-r._2, r._1))
@@ -66,7 +66,7 @@ class Pipeline37Spec extends SparkSpec {
       val inter = union.count(k => kmv(a).contains(k) && kmv(b).contains(k)).toLong
       expected((a, b)) = ((kUsed, inter * 1000000L / kUsed))
     }
-    val got = Pipeline37.ddKmvOverlap(spark, sfDir).collect()
+    val got = Pipeline37.ddKmvOverlap(tables).collect()
       .map(r => (r.getString(0), r.getString(1)) -> ((r.getLong(2), r.getLong(3)))).toMap
     assert(got.keySet == expected.keySet)
     got.foreach { case (k, v) => assert(v == expected(k), s"pair $k") }
@@ -83,10 +83,10 @@ class Pipeline37Spec extends SparkSpec {
   }
 
   test("q_asof_join_native runs through AsOfJoinExec and matches the composed operator") {
-    val native = Pipeline37.qAsofJoinNative(spark, sfDir)
+    val native = Pipeline37.qAsofJoinNative(tables)
     val plan = native.queryExecution.executedPlan.toString
     assert(plan.contains("AsOfJoin"), s"custom exec missing:\n${plan.take(1500)}")
-    val composed = Analytic2.qAsofJoin(spark, sfDir)
+    val composed = Analytic2.qAsofJoin(tables)
     def canon(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getLong(1),
         if (r.isNullAt(2)) -1L else r.getLong(2))).sortBy(identity[(Long, Long, Long)])

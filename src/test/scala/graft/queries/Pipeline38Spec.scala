@@ -26,7 +26,7 @@ class Pipeline38Spec extends SparkSpec {
         (tp, b) -> ((vs.length.toLong, r4(vs.max), globalMax(b)))
       }
     }
-    val got = Pipeline38.qQuantileNormalize(spark, sfDir).collect()
+    val got = Pipeline38.qQuantileNormalize(tables).collect()
       .map(r => (r.getString(0), r.getLong(1).toInt) ->
         ((r.getLong(2), r.getDouble(3), r.getDouble(4)))).toMap
     assert(got.keySet.map { case (t, b) => (t, b) } == expected.keySet)
@@ -59,7 +59,7 @@ class Pipeline38Spec extends SparkSpec {
     val expected = pts.groupBy { case (t, x, y) =>
       val (hq, hr) = hex(x, y); (t, hq, hr)
     }.map { case (k, vs) => k -> vs.length.toLong }
-    val got = Pipeline38.geoHexbin(spark, sfDir).collect()
+    val got = Pipeline38.geoHexbin(tables).collect()
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2)) -> r.getLong(3)).toMap
     assert(got.values.sum == pts.length.toLong, "points not conserved")
     assert(got == expected)

@@ -25,7 +25,7 @@ class Pipeline39Spec extends SparkSpec {
         expected((id, dim)) = expected.getOrElse((id, dim), 0L) + sign
       }
     }
-    val got = Pipeline39.txFeatureHashing(spark, sfDir).collect()
+    val got = Pipeline39.txFeatureHashing(tables).collect()
       .map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
     assert(got == expected.toMap)
     // Width bound: at most 64 dims per doc.
@@ -65,7 +65,7 @@ class Pipeline39Spec extends SparkSpec {
       }
       .sortBy { case (a, b, c, _) => (-c, a, b) }
       .take(20)
-    val got = Pipeline39.qLinkPrediction(spark, sfDir).collect()
+    val got = Pipeline39.qLinkPrediction(tables).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
       .sortBy { case (a, b, c, _) => (-c, a, b) }
     assert(got.toSeq == cands)

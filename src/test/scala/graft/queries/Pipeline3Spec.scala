@@ -7,7 +7,7 @@ class Pipeline3Spec extends SparkSpec {
   import spark.implicits._
 
   test("bm25 returns top-k with non-increasing scores and distinct docs") {
-    val rows = Pipeline3.txBm25(spark, sfDir).collect()
+    val rows = Pipeline3.txBm25(tables).collect()
     assert(rows.length == 20)
     assert(rows.map(_.getLong(0)).distinct.length == rows.length)
     val scores = rows.map(_.getDouble(1))
@@ -32,7 +32,7 @@ class Pipeline3Spec extends SparkSpec {
   }
 
   test("bm25 plan is map-only per doc: no doc-keyed exchange, stats broadcast") {
-    val plan = Pipeline3.txBm25(spark, sfDir).queryExecution.executedPlan.toString
+    val plan = Pipeline3.txBm25(tables).queryExecution.executedPlan.toString
     val shuffles = "Exchange".r.findAllIn(plan).length -
       "ReusedExchange".r.findAllIn(plan).length -
       "BroadcastExchange".r.findAllIn(plan).length
@@ -60,7 +60,7 @@ class Pipeline3Spec extends SparkSpec {
   }
 
   test("dup-ngram fraction over sf fixture is bounded and consistent") {
-    val rows = Pipeline3.txDupNgramFrac(spark, sfDir).collect()
+    val rows = Pipeline3.txDupNgramFrac(tables).collect()
     assert(rows.length == tables.documents.count())
     rows.foreach { r =>
       val (n, dup, frac) = (r.getLong(1), r.getLong(2), r.getDouble(3))
@@ -71,7 +71,7 @@ class Pipeline3Spec extends SparkSpec {
   }
 
   test("hybrid rrf fuses bounded candidate lists; two-list docs beat equal-rank one-list docs") {
-    val rows = Pipeline3.simHybridRrf(spark, sfDir).collect()
+    val rows = Pipeline3.simHybridRrf(tables).collect()
     assert(rows.length == 10)
     val scores = rows.map(_.getDouble(1))
     scores.sliding(2).filter(_.length == 2).foreach { case Array(a, b) => assert(a >= b) }
@@ -91,7 +91,7 @@ class Pipeline3Spec extends SparkSpec {
   }
 
   test("curriculum stages honor thresholds and the order key is the shared LCG") {
-    val rows = Pipeline3.smCurriculum(spark, sfDir).collect()
+    val rows = Pipeline3.smCurriculum(tables).collect()
     assert(rows.length == tables.documents.count())
     rows.foreach { r =>
       val (id, n, stage, ord) = (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))
@@ -104,7 +104,7 @@ class Pipeline3Spec extends SparkSpec {
   }
 
   test("curriculum plan is map-only: zero exchanges") {
-    val plan = Pipeline3.smCurriculum(spark, sfDir).queryExecution.executedPlan.toString
+    val plan = Pipeline3.smCurriculum(tables).queryExecution.executedPlan.toString
     assert(!plan.contains("Exchange"), s"curriculum must be map-only:\n$plan")
   }
 }

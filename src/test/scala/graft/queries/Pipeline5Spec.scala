@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 class Pipeline5Spec extends SparkSpec {
 
   test("tx_gopher_rules: keep verdict equals re-derived rule conjunction") {
-    val out = Pipeline5.txGopherRules(spark, sfDir).cache()
+    val out = Pipeline5.txGopherRules(tables).cache()
     try {
       val bad = out.filter(
         col("keep") =!= (col("n_words").between(30L, 1000L) &&
@@ -22,7 +22,7 @@ class Pipeline5Spec extends SparkSpec {
   }
 
   test("tx_gopher_rules: signals are in their defined ranges") {
-    val out = Pipeline5.txGopherRules(spark, sfDir)
+    val out = Pipeline5.txGopherRules(tables)
     val bad = out.filter(
       col("n_words") <= 0 || col("mean_word_len") <= 0.0 ||
         col("stop_hits") < 0 || col("stop_hits") > col("n_words") ||
@@ -60,7 +60,7 @@ class Pipeline5Spec extends SparkSpec {
   }
 
   test("dd_soft_dedup: weights are 1/comp_size and component masses sum to 1") {
-    val out = Pipeline5.ddSoftDedup(spark, sfDir).cache()
+    val out = Pipeline5.ddSoftDedup(tables).cache()
     try {
       assert(out.count() == tables.documents.count())
       val bad = out.filter(
@@ -76,7 +76,7 @@ class Pipeline5Spec extends SparkSpec {
   }
 
   test("dd_soft_dedup: singleton docs get weight exactly 1") {
-    val out = Pipeline5.ddSoftDedup(spark, sfDir)
+    val out = Pipeline5.ddSoftDedup(tables)
     val bad = out.filter(col("comp_size") === 1 && col("weight") =!= 1.0)
     assert(bad.isEmpty)
     assert(!out.filter(col("comp_size") === 1).isEmpty)
@@ -102,14 +102,14 @@ class Pipeline5Spec extends SparkSpec {
   }
 
   test("pipe_curate_corpus: counts are consistent and re-derivable from the parts") {
-    val out = Pipeline5.pipeCurateCorpus(spark, sfDir).cache()
+    val out = Pipeline5.pipeCurateCorpus(tables).cache()
     try {
       assert(out.count() == 20)
       val bad = out.filter(col("n_kept") > col("n_docs") || col("n_docs") <= 0 ||
         col("eff_tokens") < 0.0)
       assert(bad.isEmpty)
       // n_kept per source must equal the G22 row's keep counts.
-      val g = Pipeline5.txGopherRules(spark, sfDir)
+      val g = Pipeline5.txGopherRules(tables)
         .join(tables.documents.select(col("doc_id"), col("source")), Seq("doc_id"))
         .groupBy(col("source"))
         .agg(count(when(col("keep"), 1)).as("nk"))
@@ -117,7 +117,7 @@ class Pipeline5Spec extends SparkSpec {
         .filter(col("n_kept") =!= col("nk"))
       assert(mism.isEmpty)
       // Effective tokens never exceed the raw kept token count.
-      val rawTok = Pipeline5.txGopherRules(spark, sfDir)
+      val rawTok = Pipeline5.txGopherRules(tables)
         .filter(col("keep"))
         .join(tables.documents.select(col("doc_id"), col("source")), Seq("doc_id"))
         .groupBy(col("source")).agg(sum(col("n_words")).as("raw_tok"))
@@ -128,8 +128,8 @@ class Pipeline5Spec extends SparkSpec {
   }
 
   test("sm_importance_resample: deterministic top-k, biased toward high weights") {
-    val a = Pipeline5.smImportanceResample(spark, sfDir)
-    val b = Pipeline5.smImportanceResample(spark, sfDir)
+    val a = Pipeline5.smImportanceResample(tables)
+    val b = Pipeline5.smImportanceResample(tables)
     assert(a.count() == 100)
     assert(a.except(b).isEmpty && b.except(a).isEmpty, "rerun must reproduce the sample")
     // Gumbel-perturbed selection ∝ exp(weight): the sampled docs'
@@ -142,7 +142,7 @@ class Pipeline5Spec extends SparkSpec {
   }
 
   test("src_orc_read: ORC round trip reproduces the parquet aggregate exactly") {
-    val viaOrc = graft.queries.SourceQueries.srcOrcRead(spark, sfDir)
+    val viaOrc = graft.queries.SourceQueries.srcOrcRead(tables)
     val direct = tables.events
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n"), round(sum(col("value")), 4).as("total_value"))

@@ -19,7 +19,7 @@ class Pipeline6Spec extends SparkSpec {
       .agg(count(lit(1)).as("n"), countDistinct($"l_orderkey").as("n_orders"),
         round(sum($"l_quantity".cast("decimal(18,2)")).cast("double"), 4).as("sum_qty"))
       .collect().map(_.toSeq).sortBy(_.mkString("|"))
-    val bloomed = Pipeline6.qBloomJoin(spark, sfDir)
+    val bloomed = Pipeline6.qBloomJoin(tables)
       .collect().map(_.toSeq).sortBy(_.mkString("|"))
     assert(bloomed.toSeq == plain.toSeq)
   }
@@ -60,7 +60,7 @@ class Pipeline6Spec extends SparkSpec {
       .filter(col("n") >= threshold)
       .withColumn("frac", round(col("n").cast("double") / total.toDouble, 4))
       .collect().map(_.toSeq).sortBy(_.mkString("|"))
-    val sketched = Pipeline6.qHeavyHitters(spark, sfDir)
+    val sketched = Pipeline6.qHeavyHitters(tables)
       .collect().map(_.toSeq).sortBy(_.mkString("|"))
     assert(sketched.toSeq == brute.toSeq)
     assert(sketched.nonEmpty, "threshold selects nothing — the query tests nothing")
@@ -112,7 +112,7 @@ class Pipeline6Spec extends SparkSpec {
 
   test("dd_url_dedup: partitions the corpus (mass conserved, collapse non-trivial)") {
     val docs = tables.documents
-    val out = Pipeline6.ddUrlDedup(spark, sfDir).cache()
+    val out = Pipeline6.ddUrlDedup(tables).cache()
     try {
       val total = docs.count()
       val mass = out.agg(sum(col("n_dups"))).collect()(0).getLong(0)
@@ -149,7 +149,7 @@ class Pipeline6Spec extends SparkSpec {
   }
 
   test("geo_geohash: one key per event, prefix is the bucket") {
-    val out = Pipeline6.geoGeohash(spark, sfDir).cache()
+    val out = Pipeline6.geoGeohash(tables).cache()
     try {
       assert(out.count() == tables.events.count())
       val bad = out.filter(length(col("gh")) =!= 8 ||
@@ -173,7 +173,7 @@ class Pipeline6Spec extends SparkSpec {
   }
 
   test("tx_readability: derived columns re-derive from the counts") {
-    val out = Pipeline6.txReadability(spark, sfDir)
+    val out = Pipeline6.txReadability(tables)
     val bad = out.filter(
       col("wps") =!= round(col("n_words").cast("double") / col("n_sents").cast("double"), 4) ||
         col("spw") =!= round(col("n_syll").cast("double") / col("n_words").cast("double"), 4) ||

@@ -70,7 +70,7 @@ class Pipeline72Spec extends SparkSpec {
   }
 
   test("mm_phash_neardup: every staged pair within the gate; ids replay the metadata") {
-    val out = Pipeline72.mmPhashNeardup(spark, sfDir).collect()
+    val out = Pipeline72.mmPhashNeardup(tables).collect()
     val nDocs = tables.documents.count()
     assert(out.length == 3 * nDocs)
     out.foreach { r =>
@@ -81,7 +81,7 @@ class Pipeline72Spec extends SparkSpec {
   }
 
   test("mm_phash_eval: all gates pass and banding finds exactly the brute-force pairs") {
-    val eval = Pipeline72.mmPhashEval(spark, sfDir).collect()(0)
+    val eval = Pipeline72.mmPhashEval(tables).collect()(0)
     assert(eval.getLong(0) == 3 * tables.documents.count())
     assert(eval.getLong(1) == 1L && eval.getLong(2) == 1L && eval.getLong(3) == 1L)
 

@@ -12,7 +12,7 @@ class Pipeline7Spec extends SparkSpec {
   // ---- tx_bpe_pair_stats ----
 
   test("tx_bpe_pair_stats: 50 distinct pairs, counts non-increasing, top pair verified") {
-    val out = Pipeline7.txBpePairStats(spark, sfDir).collect()
+    val out = Pipeline7.txBpePairStats(tables).collect()
     assert(out.length == 50)
     assert(out.map(_.getString(0)).distinct.length == 50)
     val counts = out.map(_.getLong(1))
@@ -56,7 +56,7 @@ class Pipeline7Spec extends SparkSpec {
   // ---- q_skew_report ----
 
   test("q_skew_report: the engineered hot key reads as skewed, natural keys as uniform") {
-    val rows = Pipeline7.qSkewReport(spark, sfDir).collect()
+    val rows = Pipeline7.qSkewReport(tables).collect()
       .map(r => r.getString(0) -> r).toMap
     assert(rows.keySet == Set("l_partkey", "l_suppkey", "hot_key"))
     val part = rows("l_partkey")
@@ -72,7 +72,7 @@ class Pipeline7Spec extends SparkSpec {
   // ---- st_cdc_apply ----
 
   test("st_cdc_apply: converges to latest-wins state with tombstones dropped") {
-    val out = StreamQueries.stCdcApply(spark, sfDir)
+    val out = StreamQueries.stCdcApply(tables)
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
     val expected = {
       val w = org.apache.spark.sql.expressions.Window
@@ -91,28 +91,5 @@ class Pipeline7Spec extends SparkSpec {
       .collect()(0).getLong(0)
     assert(out.size < allUsers,
       "no user ends on a tombstone — the delete path is untested")
-  }
-
-  // ---- Exporter.writeZOrdered ----
-
-  test("writeZOrdered: per-file z-ranges are pairwise disjoint (the pruning precondition)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_zorder_")
-    try {
-      val pts = tables.events.select(
-        col("event_id"), col("value").as("x"),
-        get_json_object(col("props"), "$.k").cast("double").as("y"))
-      graft.`export`.Exporter.writeZOrdered(
-        pts, dir.toString, col("x"), col("y"), 0.0, 0.0, 500.0, 100.0, partitions = 8)
-      val back = spark.read.parquet(dir.toString)
-      assert(back.count() == pts.count())
-      val ranges = back
-        .groupBy(input_file_name().as("f"))
-        .agg(min(col("zkey")).as("lo"), max(col("zkey")).as("hi"))
-        .collect().map(r => (r.getLong(1), r.getLong(2)))
-        .sortBy(_._1)
-      assert(ranges.length > 1, "need multiple files to prove clustering")
-      val overlaps = ranges.zip(ranges.tail).filter { case ((_, hi), (lo, _)) => lo <= hi }
-      assert(overlaps.isEmpty, s"overlapping z-ranges: $overlaps")
-    } finally graft.util.Fs.deleteRecursively(dir)
   }
 }

@@ -59,7 +59,7 @@ class Pipeline9Spec extends SparkSpec {
   }
 
   test("q_pagerank: nation ranks are positive, complete, and mass-conserving") {
-    val out = Pipeline9.qPagerank(spark, sfDir).collect()
+    val out = Pipeline9.qPagerank(tables).collect()
     assert(out.length > 5, "trade graph should cover most nations")
     assert(out.map(_.getString(0)).distinct.length == out.length)
     val total = out.map(_.getLong(1)).sum
@@ -77,7 +77,7 @@ class Pipeline9Spec extends SparkSpec {
           .as(Seq("dim", "proj_fx")))
       .collect()
       .map(r => (r.getLong(0), r.getInt(1).toLong) -> r.getLong(2)).toMap
-    val viaQuery = Pipeline9.simRpProject(spark, sfDir)
+    val viaQuery = Pipeline9.simRpProject(tables)
       .collect()
       .map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
     assert(viaHof == viaQuery)
@@ -89,7 +89,7 @@ class Pipeline9Spec extends SparkSpec {
       .collect()
       .map(r => r.getLong(0) -> r.getSeq[Float](1).map(_.toDouble).toArray)
       .toMap
-    val projRows = Pipeline9.simRpProject(spark, sfDir).collect()
+    val projRows = Pipeline9.simRpProject(tables).collect()
     val proj = projRows.groupBy(_.getLong(0)).map { case (id, rows) =>
       id -> rows.sortBy(_.getLong(1)).map(_.getLong(2).toDouble / 1e6)
     }
@@ -133,7 +133,7 @@ class Pipeline9Spec extends SparkSpec {
         .take(3).zipWithIndex
         .map { case ((day, sh), i) => (et, day, sh, i + 1L) }
     }.toSet
-    val got = Pipeline9.qChangeDetect(spark, sfDir).collect()
+    val got = Pipeline9.qChangeDetect(tables).collect()
       .map(r => (r.getString(0), r.getDate(1).toString, r.getDouble(2), r.getLong(3)))
       .toSet
     assert(got == expected)

@@ -48,7 +48,7 @@ class StreamQueriesSpec extends SparkSpec {
   test("every st_* registry row keeps its pinned count and content hash") {
     val rows = Registry.all.filter(_.name.startsWith("st_"))
     assert(rows.size == 15)
-    val got = rows.map(q => q.name -> contentHash(q.fn(spark, sfDir))).toMap
+    val got = rows.map(q => q.name -> contentHash(q.fn(tables))).toMap
     val diff = got.filter { case (n, v) => !pinned.get(n).contains(v) }
     assert(diff.isEmpty, diff.toSeq.sortBy(_._1)
       .map { case (n, (c, h)) => s"""    "$n" -> (($c""" + s"""L, "$h")),""" }.mkString("\n", "\n", ""))

@@ -68,8 +68,8 @@ class DumpStoreSpec extends SparkSpec {
   test("an ensured release dir serves ref_* queries as an sf dir") {
     val store = new DumpStore(spark, tmp())
     store.ensure(Rel, "part", At)(tables.table("part"))
-    val fromDump = graft.queries.RefQueries.refRoads(spark, store.releaseDir(Rel))
-    val fromLake = graft.queries.RefQueries.refRoads(spark, sfDir)
+    val fromDump = graft.queries.RefQueries.refRoads(Tables(spark, store.releaseDir(Rel)))
+    val fromLake = graft.queries.RefQueries.refRoads(tables)
     assert(fromDump.except(fromLake).isEmpty && fromLake.except(fromDump).isEmpty)
   }
 

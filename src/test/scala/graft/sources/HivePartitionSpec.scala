@@ -42,7 +42,7 @@ class HivePartitionSpec extends SparkSpec {
   }
 
   test("registered query reads only the two filtered event types") {
-    val df = SourceQueries.srcHivePartitioned(spark, sfDir)
+    val df = SourceQueries.srcHivePartitioned(tables)
     val scan = scanOf(df)
     assert(scan.selectedPartitions.partitionCount == 2) // of 5 event types
     val types = df.select("event_type").distinct()

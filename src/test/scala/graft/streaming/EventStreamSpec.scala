@@ -93,7 +93,7 @@ class EventStreamSpec extends SparkSpec {
 
   test("st_dedup_stream collapses double delivery to the batch aggregate") {
     import org.apache.spark.sql.functions._
-    val got = graft.queries.StreamQueries.stDedupStream(spark, sfDir)
+    val got = graft.queries.StreamQueries.stDedupStream(tables)
       .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getDouble(2))).toMap
     val want = tables.events
       .groupBy(col("user_id"))

@@ -3,7 +3,7 @@ package graft.util
 import java.nio.file.{Files, Path, Paths}
 import java.util.concurrent.atomic.AtomicInteger
 import scala.jdk.CollectionConverters._
-import graft.SparkSpec
+import graft.{SparkSpec, Tables}
 
 class SessionStageSpec extends SparkSpec {
 
@@ -21,7 +21,7 @@ class SessionStageSpec extends SparkSpec {
     val calls = new AtomicInteger(0)
     val threads = (1 to 16).map { _ =>
       new Thread(() => {
-        val v = SessionStage.value(spark, dir, "once") {
+        val v = SessionStage.value(Tables(spark, dir), "once") {
           Thread.sleep(10) // widen the race window
           calls.incrementAndGet()
         }
@@ -31,23 +31,23 @@ class SessionStageSpec extends SparkSpec {
     threads.foreach(_.start())
     threads.foreach(_.join())
     assert(calls.get() == 1)
-    assert(SessionStage.value(spark, dir, "once")(calls.incrementAndGet()) == 1)
+    assert(SessionStage.value(Tables(spark, dir), "once")(calls.incrementAndGet()) == 1)
     assert(calls.get() == 1)
   }
 
   test("distinct keys build independently") {
     val (d1, d2) = (key(), key())
-    assert(SessionStage.value(spark, d1, "v")("a") == "a")
-    assert(SessionStage.value(spark, d2, "v")("b") == "b")
-    assert(SessionStage.value(spark, d1, "w")("c") == "c")
-    assert(SessionStage.value(spark, d1, "v")("d") == "a")
+    assert(SessionStage.value(Tables(spark, d1), "v")("a") == "a")
+    assert(SessionStage.value(Tables(spark, d2), "v")("b") == "b")
+    assert(SessionStage.value(Tables(spark, d1), "w")("c") == "c")
+    assert(SessionStage.value(Tables(spark, d1), "v")("d") == "a")
   }
 
   test("one session stages one dir; two sessions stage two") {
     val dir = key()
     val writes = new AtomicInteger(0)
     def stage(s: org.apache.spark.sql.SparkSession): Path =
-      SessionStage.dir(s, dir, "spec_sessions") { p =>
+      SessionStage.dir(Tables(s, dir), "spec_sessions") { p =>
         writes.incrementAndGet()
         Files.writeString(p.resolve("part"), "x")
       }
@@ -67,14 +67,14 @@ class SessionStageSpec extends SparkSpec {
   test("a write that throws leaves no dir, and the next call rebuilds") {
     val (dir, name) = (key(), "spec_fail_" + System.nanoTime())
     val e = intercept[IllegalStateException] {
-      SessionStage.dir(spark, dir, name) { p =>
+      SessionStage.dir(Tables(spark, dir), name) { p =>
         Files.writeString(p.resolve("partial"), "half")
         throw new IllegalStateException("write failed")
       }
     }
     assert(e.getMessage == "write failed")
     assert(onDisk(name).isEmpty)
-    val p = SessionStage.dir(spark, dir, name)(p => Files.writeString(p.resolve("part"), "ok"))
+    val p = SessionStage.dir(Tables(spark, dir), name)(p => Files.writeString(p.resolve("part"), "ok"))
     assert(Files.readString(p.resolve("part")) == "ok")
     assert(onDisk(name) == Seq(p))
   }
@@ -83,15 +83,15 @@ class SessionStageSpec extends SparkSpec {
     val dir = key()
     val name = "spec_release_session_" + System.nanoTime()
     val (a, b) = (spark.newSession(), spark.newSession())
-    val pa = SessionStage.dir(a, dir, name)(p => Files.writeString(p.resolve("part"), "a"))
-    val pb = SessionStage.dir(b, dir, name)(p => Files.writeString(p.resolve("part"), "b"))
-    assert(SessionStage.value(a, dir, "v")(1) == 1 && SessionStage.value(b, dir, "v")(1) == 1)
+    val pa = SessionStage.dir(Tables(a, dir), name)(p => Files.writeString(p.resolve("part"), "a"))
+    val pb = SessionStage.dir(Tables(b, dir), name)(p => Files.writeString(p.resolve("part"), "b"))
+    assert(SessionStage.value(Tables(a, dir), "v")(1) == 1 && SessionStage.value(Tables(b, dir), "v")(1) == 1)
     SessionStage.release(a)
     assert(!Files.exists(pa))
     assert(onDisk(name) == Seq(pb))
-    assert(SessionStage.value(a, dir, "v")(2) == 2)
-    assert(SessionStage.value(b, dir, "v")(2) == 1)
-    assert(SessionStage.dir(b, dir, name)(_ => ()) == pb)
+    assert(SessionStage.value(Tables(a, dir), "v")(2) == 2)
+    assert(SessionStage.value(Tables(b, dir), "v")(2) == 1)
+    assert(SessionStage.dir(Tables(b, dir), name)(_ => ()) == pb)
     SessionStage.release(b)
     assert(onDisk(name).isEmpty)
   }
